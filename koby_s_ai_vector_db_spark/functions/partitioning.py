@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 # The ``df.rdd.getNumPartitions()`` probe costs ~45 ms of driver work per
 # call (it plans the RDD lineage through py4j), and the registry rebuilds
@@ -59,10 +59,7 @@ def spread(df: DataFrame, bytes_per_task: int | None = None) -> DataFrame:
         bkey = (sc.applicationId, df._jdf.semanticHash(), "bytes")
         nbytes = _WIDTH_MEMO.get(bkey)
         if nbytes is None:
-            nbytes = _total_bytes(
-                f[len("file:"):] if f.startswith("file:") else f
-                for f in df.inputFiles()
-            )
+            nbytes = _total_bytes(df.inputFiles())
             _WIDTH_MEMO[bkey] = nbytes
         if nbytes:  # non-file-backed frames keep the full fan-out
             target = min(target, max(1, nbytes // bytes_per_task))
@@ -75,6 +72,7 @@ def spread(df: DataFrame, bytes_per_task: int | None = None) -> DataFrame:
 
 
 def input_sized_partitions(
+    spark: SparkSession,
     paths: list[str] | tuple[str, ...],
     bytes_per_partition: int = 32 * 1024 * 1024,
 ) -> int:
@@ -94,15 +92,22 @@ def input_sized_partitions(
     the co-partitioning guarantee is the point.
 
     The probe is driver-side os.stat/os.walk only — no Spark job, so
-    query construction stays action-free. Missing paths count 0 bytes
-    (the subsequent scan will fail loudly on its own)."""
-    return max(1, _total_bytes(paths) // bytes_per_partition)
+    query construction stays action-free. ``file:`` URIs are measured as
+    local paths. An unknown size (0 bytes: missing, remote or empty
+    inputs) fails safe to the session's shuffle width — the full fan-out
+    a bare `repartition(key)` would use — never to a single partition."""
+    nbytes = _total_bytes(paths)
+    if not nbytes:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(1, nbytes // bytes_per_partition)
 
 
 def _total_bytes(paths) -> int:
-    """Driver-side on-disk byte total over files/directories (no job)."""
+    """Driver-side on-disk byte total over files/directories (no job).
+    A ``file:`` URI prefix is stripped; other schemes count 0 bytes."""
     total = 0
     for p in paths:
+        p = p[len("file:"):] if p.startswith("file:") else p
         if os.path.isdir(p):
             for root, _dirs, files in os.walk(p):
                 total += sum(

@@ -128,7 +128,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ed_width = input_sized_partitions(
-        [f"{sf_dir}/orders.parquet", f"{sf_dir}/lineitem.parquet"]
+        spark, [f"{sf_dir}/orders.parquet", f"{sf_dir}/lineitem.parquet"]
     )
     edges = memo_persist(spark, ("pagerank_edges", sf_dir), build_edges)
     # deg gets the same size-aware src layout as ed below: the |V|-row

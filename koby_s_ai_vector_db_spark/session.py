@@ -49,6 +49,8 @@ def get_spark(app_name: str = "koby-spark-engine", shuffle_partitions: int | Non
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # zstd, not snappy: persisted indexes and chunk tables ~30% smaller.
+        .config("spark.sql.parquet.compression.codec", "zstd")
         # Floor the scan split count at the core count: small inputs (few
         # row groups) must not cap parallelism of CPU-bound maps. At scale
         # this is a no-op (splits >> cores); maxPartitionBytes still bounds

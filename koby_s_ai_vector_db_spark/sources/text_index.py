@@ -13,7 +13,13 @@ indexes (sources/ivf.py, sources/pq_index.py):
   build (once)    ``{path}/postings``: (term, id, tf, dl) — document
                   length DENORMALIZED into each posting so search never
                   joins a doc-length table — PARTITIONED BY
-                  ``bucket = hash(term) % n_buckets``;
+                  ``bucket = hash(term) % n_buckets`` and written
+                  id-major, sorted by (id, term) within each bucket: a
+                  doc's postings sit together, so parquet run-length
+                  encodes the repeated ``id`` and ``dl`` columns. On the
+                  lifebench corpus (seed 101, 16 buckets, zstd) postings
+                  take 230 KB id-major, 347 KB term-major (term, id) and
+                  373 KB in unsorted shuffle order;
                   ``{path}/terms``: (term, df) with the same bucketing;
                   ``{path}/stats``: one row (n_docs, avgdl).
   search (often)  hash the query's terms with the same function → the
@@ -79,6 +85,22 @@ def _bucket(term_col: str, n_buckets: int) -> F.Column:
     return F.pmod(F.hash(F.col(term_col)), F.lit(n_buckets)).cast("int")
 
 
+def _write_postings(postings: DataFrame, dest: str, mode: str) -> None:
+    """The one postings writer (build, append, streaming appends and
+    compaction): one writer task per bucket, so a probed partition is
+    O(1) files, and rows sorted id-major within it (module docstring).
+    ``bucket`` must lead the sort key: the partitioned write requires
+    bucket order and would otherwise re-sort on bucket alone, discarding
+    the (id, term) order."""
+    (
+        postings.repartition("bucket")
+        .sortWithinPartitions("bucket", "id", "term")
+        .write.mode(mode)
+        .partitionBy("bucket")
+        .parquet(dest)
+    )
+
+
 def build_text_index(
     docs: DataFrame,
     path: str,
@@ -131,10 +153,7 @@ def _write_segment(
                 F.lit(seg).cast("int").alias("seg"),
             )
         )
-        # One writer task per bucket: a probed partition is O(1) files.
-        postings.repartition("bucket").write.mode(mode).partitionBy(
-            "bucket"
-        ).parquet(f"{path}/{POSTINGS_SUBDIR}")
+        _write_postings(postings, f"{path}/{POSTINGS_SUBDIR}", mode)
 
         terms = (
             post.groupBy("term")
@@ -419,9 +438,7 @@ def compact_text_index(spark: SparkSession, path: str) -> dict:
     tmp = f"{path}/.compact_tmp"
     shutil.rmtree(tmp, ignore_errors=True)
     # Materialize the new segment fully before touching the old one.
-    postings.repartition("bucket").write.partitionBy("bucket").parquet(
-        f"{tmp}/{POSTINGS_SUBDIR}"
-    )
+    _write_postings(postings, f"{tmp}/{POSTINGS_SUBDIR}", "errorifexists")
     merged_terms.repartition("bucket").write.partitionBy("bucket").parquet(
         f"{tmp}/{TERMS_SUBDIR}"
     )

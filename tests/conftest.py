@@ -87,3 +87,22 @@ def assert_matches_oracle(spark_df, con, sql, check_rows=True):
     s_rows, o_rows = rows(sdf), rows(odf)
     mismatches = [(a, b) for a, b in zip(s_rows, o_rows) if a != b]
     assert not mismatches, f"value mismatch ({len(mismatches)} rows), first: {mismatches[:3]}"
+
+
+def assert_all_zstd(path: str) -> None:
+    """Every column chunk of every parquet file under ``path`` is
+    zstd-compressed (the session's codec, session.get_spark)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    files = glob.glob(f"{path}/**/*.parquet", recursive=True)
+    assert files, path
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        codecs = {
+            md.row_group(g).column(c).compression
+            for g in range(md.num_row_groups)
+            for c in range(md.num_columns)
+        }
+        assert codecs <= {"ZSTD"}, (f, codecs)

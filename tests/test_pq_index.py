@@ -17,7 +17,7 @@ from koby_s_ai_vector_db_spark.sources.pq_index import (
     pq_index_search,
 )
 from koby_s_ai_vector_db_spark.sources.tables import load_table
-from tests.conftest import SF_DIRS
+from tests.conftest import SF_DIRS, assert_all_zstd
 
 SF_DIR = SF_DIRS["t2"]
 K = 10
@@ -79,6 +79,11 @@ def test_ivfpq_index_matches_inline_operator(spark, ivfpq_path, prune):
         k=K, n_probe_labels=N_PROBE, shortlist=SHORTLIST,
     )
     assert _rows(idx) == _rows(inline)
+
+
+def test_index_files_are_zstd(pq_path, ivfpq_path):
+    assert_all_zstd(pq_path)
+    assert_all_zstd(ivfpq_path)
 
 
 def _scan_lines(df):

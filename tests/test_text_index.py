@@ -14,7 +14,7 @@ from koby_s_ai_vector_db_spark.sources.text_index import (
     search_text_index,
 )
 from koby_s_ai_vector_db_spark.sources.tables import load_table
-from tests.conftest import SF_DIRS
+from tests.conftest import SF_DIRS, assert_all_zstd
 
 SF_DIR = SF_DIRS["t2"]
 
@@ -138,3 +138,43 @@ def test_compaction_preserves_search_and_merges_segments(spark, tmp_path_factory
     assert terms.groupBy("bucket", "term").count().filter("count > 1").count() == 0
     files_after = len(_glob.glob(f"{path}/postings/bucket=*/*.parquet"))
     assert files_after <= files_before
+
+
+def _assert_postings_id_major(path):
+    """Every postings file holds its rows in (id, term) order — the
+    layout that lets parquet run-length encode id and dl."""
+    import glob as _glob
+
+    import pyarrow.parquet as pq
+
+    files = _glob.glob(f"{path}/postings/bucket=*/*.parquet")
+    assert files
+    for f in files:
+        t = pq.read_table(f, columns=["id", "term"])
+        keys = list(zip(t.column("id").to_pylist(), t.column("term").to_pylist()))
+        assert keys == sorted(keys), f
+
+
+def test_postings_id_major_and_zstd_through_segment_lifecycle(spark, tmp_path_factory):
+    """The on-disk layout survives every postings writer: build, a second
+    appended segment, and compaction all leave id-major postings files,
+    and every parquet file the index holds is zstd-compressed."""
+    from koby_s_ai_vector_db_spark.sources.text_index import (
+        append_to_text_index,
+        compact_text_index,
+    )
+
+    path = str(tmp_path_factory.mktemp("textidx_layout") / "index")
+    docs = load_table(spark, SF_DIR, "documents")
+    build_text_index(docs.filter(F.col("doc_id") % 2 == 0), path, n_buckets=8)
+    _assert_postings_id_major(path)
+    assert_all_zstd(path)
+
+    append_to_text_index(docs.filter(F.col("doc_id") % 2 == 1), path)
+    assert spark.read.parquet(f"{path}/stats").count() == 2
+    _assert_postings_id_major(path)
+    assert_all_zstd(path)
+
+    compact_text_index(spark, path)
+    _assert_postings_id_major(path)
+    assert_all_zstd(path)
