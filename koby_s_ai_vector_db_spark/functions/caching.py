@@ -1,19 +1,23 @@
-"""Session-scoped memoized persists.
+"""The engine's one memo store, scoped to the current Spark application.
 
 Registered queries are plain functions `(spark, sf_dir) -> DataFrame`; a
 long-lived engine (bench harness, driver, notebook) calls them repeatedly.
-A bare ``.persist()`` inside a query builder therefore creates a NEW cached
-DataFrame per call — the block manager accumulates dozens of copies of the
-same logical subtree and churns evictions (measured: a full warm-up pass
-over all 70 queries made a later map-only query 10× slower purely from
-cache churn).
+Anything a query build derives once — fixture-table plans, literal
+DataFrames, collected control values, spread() width probes, learned
+models, scratch indexes, persisted subtrees — lives in this store, so the
+first call builds it and every later call (including across the bench's
+warm-up and timed passes) returns the SAME object. A bare ``.persist()``
+inside a query builder would instead create a NEW cached DataFrame per
+call: the block manager accumulates dozens of copies of the same logical
+subtree and churns evictions (measured: a full warm-up pass over all 70
+queries made a later map-only query 10× slower purely from cache churn).
 
-`memo_persist` keys the persisted DataFrame by (Spark application id,
-caller-supplied key): the first call builds + persists, every later call —
-including across the bench's warm-up and timed passes — returns the SAME
-cached DataFrame, so the block manager holds exactly one copy per distinct
-subtree. Keying by application id means a fresh SparkSession (new tests,
-new process) never sees stale entries.
+Entries belong to one Spark application. A Python process has one active
+SparkContext, so the store holds one application at a time: the first
+use under a new ``applicationId`` drops everything it holds and rebinds,
+and a fresh SparkSession (new tests, new process) never sees stale
+entries. Keys are therefore caller-chosen tuples with no application
+prefix. `evict_application` is the only eviction path.
 
 This mirrors what the reference does between request steps: it holds the
 FAISS search results in Python lists for the life of the request
@@ -22,11 +26,35 @@ FAISS search results in Python lists for the life of the request
 
 from __future__ import annotations
 
-from typing import Callable, Hashable
+import atexit
+import shutil
+import tempfile
+from typing import Callable, Hashable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
-_CACHE: dict[tuple, DataFrame] = {}
+T = TypeVar("T")
+
+_STORE: dict[Hashable, object] = {}
+_app_id: str | None = None
+
+
+def memo(spark: SparkSession, key: Hashable, builder: Callable[[], T]) -> T:
+    """Build once per (application, key); later calls return the stored
+    object. Use for plan objects (small literal DataFrames cost ~130 ms of
+    driver/py4j work per ``createDataFrame``) and for bounded collects
+    that would otherwise run a Spark job on EVERY query build (the
+    steady-state construction-is-action-free invariant,
+    tests/test_round9_ops.py). Thread-unsafe by design (queries run on
+    the driver thread); worst case a race builds twice."""
+    global _app_id
+    app = spark.sparkContext.applicationId
+    if app != _app_id:
+        evict_application(spark)
+        _app_id = app
+    if key not in _STORE:
+        _STORE[key] = builder()
+    return _STORE[key]
 
 
 def memo_persist(
@@ -35,81 +63,56 @@ def memo_persist(
     builder: Callable[[], DataFrame],
     storage_level=None,
 ) -> DataFrame:
-    """Build-once, persist-once per (application, key). Thread-unsafe by
-    design (queries run on the driver thread); worst case a race persists
-    twice, which is exactly the status quo ante."""
+    """`memo` of a persisted DataFrame: build-once, persist-once per
+    (application, key), so the block manager holds exactly one copy per
+    distinct subtree."""
     from pyspark import StorageLevel
 
-    full_key = (spark.sparkContext.applicationId, key)
-    df = _CACHE.get(full_key)
-    if df is None:
-        df = builder().persist(storage_level or StorageLevel.MEMORY_AND_DISK)
-        _CACHE[full_key] = df
-    return df
+    return memo(
+        spark,
+        key,
+        lambda: builder().persist(storage_level or StorageLevel.MEMORY_AND_DISK),
+    )
 
 
-_SCALARS: dict[tuple, object] = {}
+def scratch_index(
+    spark: SparkSession, kind: str, sf_dir: str, build: Callable[[str], object]
+) -> str:
+    """Build-once scratch index per (application, kind, sf_dir): ``build``
+    writes the index to the returned path, which later calls reuse. The
+    scratch directory dies with the process — without that, every run
+    leaves a full copy of the indexed corpus in the temp dir."""
 
-_PLANS: dict[tuple, DataFrame] = {}
+    def _build() -> str:
+        scratch = tempfile.mkdtemp(prefix=f"koby_{kind}_")
+        atexit.register(shutil.rmtree, scratch, ignore_errors=True)
+        path = scratch + "/index"
+        build(path)
+        return path
 
-
-def memo_df(spark: SparkSession, key: Hashable, builder: Callable[[], DataFrame]) -> DataFrame:
-    """Plan-object memo for SMALL CONSTANT DataFrames (literal query sets,
-    label tables, quantile lists) keyed by application id. No ``.persist()``
-    — nothing is cached but the DataFrame plan itself, exactly like the
-    fixture-table memo in sources/tables.py. Motivation (round-13 profile,
-    guide §1): ``spark.createDataFrame`` on a 4-row literal costs ~130 ms
-    of driver/py4j work, and the fusion/sketch/lexical families rebuild the
-    same literal frame on every query construction — ~0.1-0.4 s of every
-    bench-loop call that computes nothing."""
-    full_key = (spark.sparkContext.applicationId, key)
-    df = _PLANS.get(full_key)
-    if df is None:
-        df = builder()
-        _PLANS[full_key] = df
-    return df
+    return memo(spark, ("scratch_index", kind, sf_dir), _build)
 
 
-def memo_scalar(spark: SparkSession, key: Hashable, builder: Callable[[], object]):
-    """Driver-side memo for small collected control values (probe lists,
-    bucket ids, boundary rows) keyed by application id — the scalar
-    analogue of memo_persist. Use for bounded collects that would
-    otherwise run a Spark job on EVERY query build (the steady-state
-    construction-is-action-free invariant, tests/test_round9_ops.py)."""
-    full_key = (spark.sparkContext.applicationId, key)
-    if full_key not in _SCALARS:
-        _SCALARS[full_key] = builder()
-    return _SCALARS[full_key]
+def memo_keys(spark: SparkSession) -> list[Hashable]:
+    """The keys held for ``spark``'s application (none if the store is
+    bound to another one) — what the memos hold, for tests and probes."""
+    return list(_STORE) if spark.sparkContext.applicationId == _app_id else []
 
 
 def evict_application(spark: SparkSession) -> None:
-    """Drop (and unpersist) every memo entry of the given session — test
-    hygiene hook; production sessions let the entries live as long as the
-    application, which is the point."""
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _CACHE if k[0] == app]:
-        try:
-            _CACHE.pop(k).unpersist()
-        except Exception:  # session already stopped — nothing to release
-            pass
-    for k in [k for k in _SCALARS if k[0] == app]:
-        _SCALARS.pop(k, None)
-    for k in [k for k in _PLANS if k[0] == app]:
-        _PLANS.pop(k, None)
-    # The fixture-table plan memo (sources/tables.py) is keyed by the
-    # same application id — drop it too, so a test that rewrites a
-    # fixture dir after evicting never gets a stale file listing served
-    # from the cached plan (ADVICE r09).
-    from koby_s_ai_vector_db_spark.sources import tables as _tables
-
-    for k in [k for k in _tables._TABLE_MEMO if k[0] == app]:
-        _tables._TABLE_MEMO.pop(k, None)
-    # And the spread() width-probe memo (functions/partitioning.py) — a
-    # stale width after a fixture rewrite would mis-decide repartition
-    # (perf, not values), and entries otherwise accumulate for the life
-    # of the process (ADVICE r13).
-    from koby_s_ai_vector_db_spark.functions.partitioning import (
-        evict_width_memo,
-    )
-
-    evict_width_memo(app)
+    """Drop every memo entry and unpersist what `memo_persist` persisted;
+    later builds re-run their builders, scratch indexes included. The
+    store only ever holds one application's entries (``spark``'s, or
+    those of the one it is replacing), so this clears it all. Called on
+    every application change, and by tests between passes; production
+    sessions let the entries live as long as the application, which is
+    the point."""
+    for value in _STORE.values():
+        # is_cached is set by .persist() on exactly the objects
+        # memo_persist built; plain plan memos are never unpersisted.
+        if isinstance(value, DataFrame) and value.is_cached:
+            try:
+                value.unpersist()
+            except Exception:  # session already stopped — nothing to release
+                pass
+    _STORE.clear()

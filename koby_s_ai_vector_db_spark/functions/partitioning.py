@@ -16,6 +16,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from koby_s_ai_vector_db_spark.functions.caching import memo
+
 # The ``df.rdd.getNumPartitions()`` probe costs ~45 ms of driver work per
 # call (it plans the RDD lineage through py4j), and the registry rebuilds
 # the same spread() inputs on every query construction — ~0.1 s of every
@@ -23,8 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 # of a plan is a pure function of (application, canonicalized logical
 # plan): file listings are memoized per application (sources/tables.py)
 # and session confs that shape splits don't change mid-application — so
-# the probe result is memoized on the JVM plan's semanticHash.
-_WIDTH_MEMO: dict[tuple, int] = {}
+# the probe results go into the application's memo store
+# (functions/caching.py), keyed on the JVM plan's semanticHash.
 
 # bytes_per_task for spread() call sites whose downstream map is CHEAP
 # per byte (Arrow embed hop, tokenize+hash projections). Measured round
@@ -53,21 +55,18 @@ def spread(df: DataFrame, bytes_per_task: int | None = None) -> DataFrame:
     byte-identical to the uncapped form; callers whose downstream map is
     expensive per byte (md5 signature builds) keep the default full
     fan-out."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
+    spark = df.sparkSession
+    target = spark.sparkContext.defaultParallelism
+    plan = df._jdf.semanticHash()
     if bytes_per_task:
-        bkey = (sc.applicationId, df._jdf.semanticHash(), "bytes")
-        nbytes = _WIDTH_MEMO.get(bkey)
-        if nbytes is None:
-            nbytes = _total_bytes(df.inputFiles())
-            _WIDTH_MEMO[bkey] = nbytes
+        nbytes = memo(
+            spark, ("spread_bytes", plan), lambda: _total_bytes(df.inputFiles())
+        )
         if nbytes:  # non-file-backed frames keep the full fan-out
             target = min(target, max(1, nbytes // bytes_per_task))
-    key = (sc.applicationId, df._jdf.semanticHash(), target)
-    width = _WIDTH_MEMO.get(key)
-    if width is None:
-        width = df.rdd.getNumPartitions()
-        _WIDTH_MEMO[key] = width
+    width = memo(
+        spark, ("spread_width", plan, target), lambda: df.rdd.getNumPartitions()
+    )
     return df.repartition(target) if width < target else df
 
 
@@ -117,11 +116,3 @@ def _total_bytes(paths) -> int:
             total += os.path.getsize(p)
     return total
 
-
-def evict_width_memo(app_id: str) -> None:
-    """Drop one application's width-probe entries — called from
-    caching.evict_application so the rewrite-fixture-after-evict test
-    scenario cannot be served a stale width, and entries don't accumulate
-    across applications for the life of the process (ADVICE r13)."""
-    for k in [k for k in _WIDTH_MEMO if k[0] == app_id]:
-        _WIDTH_MEMO.pop(k, None)

@@ -360,9 +360,9 @@ def qh_quantiles(
     c = cells.withColumn("cum", F.sum("cnt").over(w_cum)).withColumn(
         "n", F.sum("cnt").over(w_all)
     )
-    from koby_s_ai_vector_db_spark.functions.caching import memo_df
+    from koby_s_ai_vector_db_spark.functions.caching import memo
 
-    qdf = memo_df(
+    qdf = memo(
         spark,
         ("qh_quantiles_qdf", tuple(qs)),
         lambda: spark.createDataFrame([(float(q),) for q in qs], "q double"),

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from koby_s_ai_vector_db_spark.functions.caching import memo, memo_persist, scratch_index
 from koby_s_ai_vector_db_spark.functions.hashing import sql_hash32
 from koby_s_ai_vector_db_spark.operators.corpus import (
     ZIPF_ORACLE,
@@ -54,10 +55,8 @@ SELECT CAST(query_id AS BIGINT) AS query_id, doc_id, score, rank FROM base
 def bm25_queries_df(spark: SparkSession) -> DataFrame:
     """The 4-row literal BM25 query table, plan-memoized per application:
     five query families rebuild it per call and `createDataFrame` on a
-    literal costs ~130 ms of driver work (functions/caching.memo_df)."""
-    from koby_s_ai_vector_db_spark.functions.caching import memo_df
-
-    return memo_df(
+    literal costs ~130 ms of driver work (functions/caching.memo)."""
+    return memo(
         spark,
         "bm25_queries_df",
         lambda: spark.createDataFrame(
@@ -75,31 +74,17 @@ def bm25_rank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bm25_rank(docs, bm25_queries_df(spark), k=BM25_K)
 
 
-# Build-once scratch paths per (session, sf_dir) — same convention as the
-# persisted PQ index queries (queries/vector_q.py::_index_path).
-_TEXT_IDX_PATHS: dict[tuple, str] = {}
-
-
 def text_index_path(spark: SparkSession, sf_dir: str) -> str:
     """Build-once scratch inverted index over `documents` for this
-    (session, sf_dir); shared by every index-backed lexical consumer
+    (application, sf_dir); shared by every index-backed lexical consumer
     (bm25_rank_idx, hybrid_rrf's lex arm) so the corpus is indexed at
-    most once per session."""
+    most once per application."""
     from koby_s_ai_vector_db_spark.sources.text_index import build_text_index
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _TEXT_IDX_PATHS.get(key)
-    if path is None:
-        import atexit
-        import shutil
-        import tempfile
-
-        scratch = tempfile.mkdtemp(prefix="koby_textidx_")
-        atexit.register(shutil.rmtree, scratch, ignore_errors=True)
-        path = scratch + "/index"
-        build_text_index(load_table(spark, sf_dir, "documents"), path)
-        _TEXT_IDX_PATHS[key] = path
-    return path
+    return scratch_index(
+        spark, "textidx", sf_dir,
+        lambda p: build_text_index(load_table(spark, sf_dir, "documents"), p),
+    )
 
 
 @register("bm25_rank_idx", _BM25_ORACLE)
@@ -266,7 +251,6 @@ def curate_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     benchmark text per call; the deduped side tokenizes inline (its
     rows are the sample's survivors, not raw corpus rows the memo
     covers)."""
-    from koby_s_ai_vector_db_spark.functions.caching import memo_persist
     from koby_s_ai_vector_db_spark.functions.partitioning import spread
     from koby_s_ai_vector_db_spark.operators.dedup import words_expr
 
@@ -582,8 +566,6 @@ def ta_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # subtrees non-identical, so ReuseExchange cannot dedupe them and the
     # 5-gram explode ran TWICE per call (plan audit, guide §2.4). Same
     # convention as the tfidf weight-table memo (operators/corpus.py).
-    from koby_s_ai_vector_db_spark.functions.caching import memo_persist
-
     dg = memo_persist(
         spark,
         ("boiler_dg", sf_dir),
@@ -680,7 +662,6 @@ def ta_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is itself memo-persisted because the final result consumes it
     TWICE (the tok1 and tok2 joins): without the persist the
     corpus-sized explode+groupBy subtree is replayed per consumer."""
-    from koby_s_ai_vector_db_spark.functions.caching import memo_persist
     from koby_s_ai_vector_db_spark.operators.dedup import (
         shingles_from_words_expr,
     )
@@ -775,7 +756,6 @@ def _tokenized_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     r09 item 4) and the PMI collocation aggregates. memo-persisted per
     (application, sf_dir), the minhash_near_dup_pairs pattern;
     construction stays action-free (persist is lazy)."""
-    from koby_s_ai_vector_db_spark.functions.caching import memo_persist
     from koby_s_ai_vector_db_spark.functions.partitioning import spread
     from koby_s_ai_vector_db_spark.operators.dedup import words_expr
 

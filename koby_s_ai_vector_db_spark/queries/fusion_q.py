@@ -62,11 +62,11 @@ def _inputs(spark: SparkSession, sf_dir: str):
     (the round-2 leak: 16+ live persists per bench pass). The arms are
     k·|queries| rows — the per-request working set, exactly what the
     reference holds in Python lists between enhanced_search steps."""
-    from koby_s_ai_vector_db_spark.functions.caching import memo_df, memo_persist
+    from koby_s_ai_vector_db_spark.functions.caching import memo, memo_persist
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     docs = load_table(spark, sf_dir, "documents")
-    qtext = memo_df(
+    qtext = memo(
         spark,
         "fusion_qtext",
         lambda: spark.createDataFrame(

@@ -194,9 +194,9 @@ def a20_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("rn"),
         F.count("*").over(Window.partitionBy("event_type")).alias("n"),
     )
-    from koby_s_ai_vector_db_spark.functions.caching import memo_df
+    from koby_s_ai_vector_db_spark.functions.caching import memo
 
-    qdf = memo_df(
+    qdf = memo(
         spark,
         ("qh_qdf", tuple(QH_QS)),
         lambda: spark.createDataFrame([(float(q),) for q in QH_QS], "q double"),
@@ -319,9 +319,9 @@ def a22_hll_daily_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_day = ev.groupBy(day.alias("grp")).agg(
         F.countDistinct("user_id").alias("exact_distinct")
     )
-    from koby_s_ai_vector_db_spark.functions.caching import memo_df
+    from koby_s_ai_vector_db_spark.functions.caching import memo
 
-    labels = memo_df(
+    labels = memo(
         spark,
         "a22_labels",
         lambda: spark.createDataFrame([("MERGED",), ("GLOBAL",)], "grp string"),

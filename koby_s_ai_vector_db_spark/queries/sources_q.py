@@ -40,7 +40,7 @@ def s1_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from koby_s_ai_vector_db_spark.functions.caching import memo_scalar
+    from koby_s_ai_vector_db_spark.functions.caching import memo
 
     import hashlib
 
@@ -62,7 +62,7 @@ def s1_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Recreate from scratch: stale files from a previous run against a
         # different fixture revision would enter the binaryFile scan and
         # break oracle parity in a machine-state-dependent way. Once per
-        # session suffices (memo_scalar) — the fixture tables are
+        # session suffices (memo) — the fixture tables are
         # write-once, so per-build re-materialization was pure overhead
         # (one toLocalIterator job per build).
         shutil.rmtree(root, ignore_errors=True)
@@ -76,7 +76,7 @@ def s1_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f.write(b"not a pdf")
         return root
 
-    memo_scalar(spark, ("s1_fixture", sf_dir), _materialize)
+    memo(spark, ("s1_fixture", sf_dir), _materialize)
     scan = scan_binary_dir(spark, root, glob="*.[pP][dD][fF]")
     return scan.select(
         F.element_at(F.split("path", "/"), -1).alias("filename"),

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from koby_s_ai_vector_db_spark.functions.caching import memo, memo_persist, scratch_index
 from koby_s_ai_vector_db_spark.functions.vectors import l2_normalize, sql_normalize
 from koby_s_ai_vector_db_spark.operators.similarity import ivf_topk, knn_self_join, topk_cosine
 from koby_s_ai_vector_db_spark.registry import register
@@ -375,26 +376,6 @@ def q2_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 # inline q2_ann_pq/q2_ann_ivfpq tiers pay. Results are row-identical to the
 # inline operators (tests/test_pq_index.py), so they share their oracles.
 
-_IDX_PATHS: dict[tuple, str] = {}
-
-
-def _index_path(spark: SparkSession, sf_dir: str, kind: str, builder) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    path = _IDX_PATHS.get(key)
-    if path is None:
-        import atexit
-        import shutil
-        import tempfile
-
-        scratch = tempfile.mkdtemp(prefix=f"koby_{kind}_")
-        # Scratch indexes die with the process — without this, every run
-        # leaves a full vectors+codes copy of the corpus in the temp dir.
-        atexit.register(shutil.rmtree, scratch, ignore_errors=True)
-        path = scratch + "/index"
-        builder(path)
-        _IDX_PATHS[key] = path
-    return path
-
 
 @register("q2_ann_pq_idx", _pq_oracle())
 def q2_ann_pq_idx(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -408,8 +389,8 @@ def q2_ann_pq_idx(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    path = _index_path(
-        spark, sf_dir, "pq",
+    path = scratch_index(
+        spark, "pq", sf_dir,
         lambda p: build_pq_index(emb.select("vec_id", "embedding"), p),
     )
     queries = emb.filter(F.col("vec_id") < NQ).select(
@@ -433,8 +414,8 @@ def q2_ann_ivfpq_idx(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    path = _index_path(
-        spark, sf_dir, "ivfpq",
+    path = scratch_index(
+        spark, "ivfpq", sf_dir,
         lambda p: build_ivfpq_index(
             emb.select("vec_id", "label", "embedding"), p, list_col="label"
         ),
@@ -464,8 +445,8 @@ def q2_ann_ivf_idx(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    path = _index_path(
-        spark, sf_dir, "ivf",
+    path = scratch_index(
+        spark, "ivf", sf_dir,
         lambda p: build_ivf_index(emb.select("vec_id", "embedding"), p, n_lists=10),
     )
     queries = emb.filter(F.col("vec_id") < NQ).select(
@@ -537,26 +518,18 @@ def q16_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PCA_K = 8
 
-# Model memoized per (application, sf_dir): the fit is ONE corpus pass
-# (same convention as the persisted-index builds). Entries of OTHER
-# applications are dropped on each fit so numpy models don't accumulate
-# across Spark apps in a long-lived process — test runners, notebook
-# servers (ADVICE r06).
-_PCA_MODELS: dict[tuple, object] = {}
+# Model memoized per sf_dir in the application's memo store: the fit is
+# ONE corpus pass (same convention as the persisted-index builds).
 
 
 def _pca_model(spark: SparkSession, sf_dir: str):
     from koby_s_ai_vector_db_spark.operators.pca import fit_pca
 
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    if key not in _PCA_MODELS:
-        for k in [k for k in _PCA_MODELS if k[0] != app]:
-            del _PCA_MODELS[k]
-        _PCA_MODELS[key] = fit_pca(
-            load_table(spark, sf_dir, "embeddings"), k=PCA_K
-        )
-    return _PCA_MODELS[key]
+    return memo(
+        spark,
+        ("pca_model", sf_dir),
+        lambda: fit_pca(load_table(spark, sf_dir, "embeddings"), k=PCA_K),
+    )
 
 
 @register("emb_pca_project")  # rows-only: eigendecomposition is not SQL
@@ -1120,8 +1093,6 @@ def q18_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     disabled; ivf_topk at the q2 settings); the comparison itself is one
     id-key join of two K·|queries|-row tables — the corpus cost is the
     two search arms, each already probed at scale."""
-    from koby_s_ai_vector_db_spark.functions.caching import memo_persist
-
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < NQ).select(
         F.col("vec_id").alias("query_id"),

@@ -144,9 +144,9 @@ def ivf_index_search(
         if probe_memo_key is None:
             probed = _probed()
         else:
-            from koby_s_ai_vector_db_spark.functions.caching import memo_scalar
+            from koby_s_ai_vector_db_spark.functions.caching import memo
 
-            probed = memo_scalar(spark, ("ivf_probed", probe_memo_key), _probed)
+            probed = memo(spark, ("ivf_probed", probe_memo_key), _probed)
         lists = lists.filter(F.col("list").isin(probed))
     scored = lists.join(F.broadcast(probes), on="list").withColumn(
         "sim", dot(vec_col, query_vec_col)

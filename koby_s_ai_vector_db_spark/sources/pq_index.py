@@ -433,9 +433,9 @@ def ivfpq_index_search(
         if probe_memo_key is None:
             probed = _probed()
         else:
-            from koby_s_ai_vector_db_spark.functions.caching import memo_scalar
+            from koby_s_ai_vector_db_spark.functions.caching import memo
 
-            probed = memo_scalar(
+            probed = memo(
                 spark, ("ivfpq_probed", probe_memo_key), _probed
             )
         scan = scan.filter(F.col("list").isin(probed))

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from koby_s_ai_vector_db_spark.functions.caching import memo
+
 TABLES = (
     "region",
     "nation",
@@ -32,18 +34,6 @@ TABLES = (
 NOW_TS = "2024-01-25 12:00:00"
 
 
-# DataFrame memo per (application, sf_dir, name): every spark.read.parquet
-# call re-lists files and re-infers schema (a driver-side "parquet at"
-# job per call), and a full registry build touches the same ten fixture
-# tables hundreds of times. Fixture dirs are write-once (driver fixtures
-# are read-only; test tmp dirs are written once before first load), so
-# the cached DataFrame's file listing never goes stale. Keyed by
-# application id like functions/caching.py, so a fresh session never
-# sees entries from a stopped one. No .persist() — this caches the plan
-# object, not data.
-_TABLE_MEMO: dict[tuple, DataFrame] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table. Parquet → pushdown/pruning-capable scan.
 
@@ -55,13 +45,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     coercion DuckDB applies, so both engines see identical values either
     way. The conf is runtime-settable, so this works under the driver's
     own SparkSession too.
+
+    The DataFrame is memoized per (sf_dir, name) in the application's memo
+    store (functions/caching.py): every spark.read.parquet call re-lists
+    files and re-infers schema (a driver-side "parquet at" job per call),
+    and a full registry build touches the same ten fixture tables
+    hundreds of times. Fixture dirs are write-once (driver fixtures are
+    read-only; test tmp dirs are written once before first load), so the
+    memoized file listing never goes stale. No .persist() — this caches
+    the plan object, not data.
     """
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    memo = _TABLE_MEMO.get(key)
-    if memo is not None:
-        return memo
-    _TABLE_MEMO[key] = df = _read_table(spark, sf_dir, name)
-    return df
+    return memo(
+        spark, ("table", sf_dir, name), lambda: _read_table(spark, sf_dir, name)
+    )
 
 
 def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

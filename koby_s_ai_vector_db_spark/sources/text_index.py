@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from koby_s_ai_vector_db_spark.functions.caching import memo
 from koby_s_ai_vector_db_spark.operators.corpus import (
     BM25_B,
     BM25_K1,
@@ -305,15 +306,15 @@ def search_text_index(
             f"{path}/{STATS_SUBDIR} has no n_buckets column — index built "
             "by an older build_text_index; rebuild it"
         )
-    # n_buckets defines the immutable partition layout of THIS index path
-    # (append/delete never change it), so the 1-row read memoizes per
-    # (application, path) — a per-build head() was a Spark job per query
-    # construction (the construction-is-action-free invariant).
-    from koby_s_ai_vector_db_spark.functions.caching import memo_scalar
-
-    n_buckets = memo_scalar(
+    # The 1-row n_buckets read is memoized on the stats sidecar's file
+    # list — a per-build head() was a Spark job per query construction
+    # (the construction-is-action-free invariant). spark.read.parquet has
+    # already listed those files, and any rewrite of the index (a rebuild
+    # with another n_buckets, an append, a compaction) changes the list,
+    # so a memo can never serve the bucket count of an older layout.
+    n_buckets = memo(
         spark,
-        ("textidx_n_buckets", path),
+        ("textidx_n_buckets", tuple(sorted(seg_stats.inputFiles()))),
         lambda: int(seg_stats.head()["n_buckets"]),
     )
     # Segments are additive: N = Σ n_docs, avgdl = Σ sum_dl / N.
@@ -343,10 +344,10 @@ def search_text_index(
         if probe_memo_key is None:
             buckets = _buckets()
         else:
-            from koby_s_ai_vector_db_spark.functions.caching import memo_scalar
-
-            buckets = memo_scalar(
-                spark, ("textidx_buckets", probe_memo_key), _buckets
+            # n_buckets joins the key: the same query set hashes to other
+            # buckets once the path is rebuilt with another bucket count.
+            buckets = memo(
+                spark, ("textidx_buckets", probe_memo_key, n_buckets), _buckets
             )
         postings = postings.filter(F.col("bucket").isin(buckets))
         terms = terms.filter(F.col("bucket").isin(buckets))

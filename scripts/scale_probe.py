@@ -411,8 +411,8 @@ def time_queries(
     # Drop the previous scale's memoized persists: the probe runs both
     # scales in ONE local JVM, and carrying sf0.1's cached signature
     # tables into the sf1 pass both skews memory and measures nothing.
-    # evict_application (not catalog.clearCache) so the memo DICT clears
-    # too — a bare clearCache leaves _CACHE returning unpersisted
+    # evict_application (not catalog.clearCache) so the memo store clears
+    # too — a bare clearCache leaves the store returning unpersisted
     # DataFrames, and every consumer then recomputes the subtree, which
     # measures a state production never runs in.
     from koby_s_ai_vector_db_spark.functions.caching import evict_application

@@ -9,9 +9,10 @@ and fail the driver nondeterministically. This test runs a float-heavy /
 rank-heavy sample of the registry at 8 and again at 3 shuffle
 partitions and requires bit-identical collected rows.
 
-Memoized persists are evicted between passes (functions/caching.py
-::evict_application) so the second pass genuinely recomputes under the
-new parallelism instead of reading the first pass's cache.
+Every memo is evicted between passes (functions/caching.py
+::evict_application) — persists, learned state and scratch indexes alike
+— so the second pass genuinely rebuilds under the new parallelism instead
+of reading state the first pass built.
 """
 
 from __future__ import annotations

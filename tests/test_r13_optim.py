@@ -7,71 +7,71 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from koby_s_ai_vector_db_spark.functions.caching import memo_df
-from koby_s_ai_vector_db_spark.functions.partitioning import _WIDTH_MEMO, spread
+from koby_s_ai_vector_db_spark.functions.caching import (
+    evict_application,
+    memo,
+    memo_keys,
+)
+from koby_s_ai_vector_db_spark.functions.partitioning import spread
 from tests.conftest import SF_DIRS
 
 SF_DIR = SF_DIRS["t2"]
 
 
-def test_memo_df_returns_same_plan_object(spark):
+def test_memo_returns_same_plan_object(spark):
     built = []
 
     def builder():
         built.append(1)
         return spark.createDataFrame([(1, "a")], "id bigint, s string")
 
-    a = memo_df(spark, ("t_r13", "memo_df"), builder)
-    b = memo_df(spark, ("t_r13", "memo_df"), builder)
-    assert a is b, "memo_df must return the identical DataFrame object"
+    a = memo(spark, ("t_r13", "memo"), builder)
+    b = memo(spark, ("t_r13", "memo"), builder)
+    assert a is b, "memo must return the identical DataFrame object"
     assert built == [1], "builder must run exactly once per key"
     # distinct key -> fresh build
-    c = memo_df(spark, ("t_r13", "memo_df", 2), builder)
+    c = memo(spark, ("t_r13", "memo", 2), builder)
     assert c is not a and built == [1, 1]
 
 
 def test_spread_width_memo_consistent_and_cached(spark):
-    df = spark.range(0, 1000)
-    before = dict(_WIDTH_MEMO)
+    # One input partition: an honest probe would repartition it, so only a
+    # memo read of the poisoned width below keeps it at one.
+    df = spark.range(0, 1000, 1, 1)
+    evict_application(spark)
     s1 = spread(df)
-    key_added = [k for k in _WIDTH_MEMO if k not in before]
+    key_added = memo_keys(spark)
     # The probe result must actually be STORED under the plan's key
     # (ADVICE r13: the old <=1 assertion also held with memoization
     # completely broken).
     assert len(key_added) == 1, "first spread() must add exactly one entry"
+    assert s1.rdd.getNumPartitions() > 1, "the honest probe repartitions"
     # Poison the memo: if the second call re-probed instead of hitting
     # the memo, it would see the true width and make the true decision —
     # with the poisoned width >= defaultParallelism it must NOT
     # repartition, proving the stored value was read, not recomputed.
     sc = df.sparkSession.sparkContext
-    _WIDTH_MEMO[key_added[0]] = sc.defaultParallelism + 1000
+    evict_application(spark)
+    memo(spark, key_added[0], lambda: sc.defaultParallelism + 1000)
     try:
-        s2 = spread(spark.range(0, 1000))  # semantically identical plan
+        s2 = spread(spark.range(0, 1000, 1, 1))  # semantically identical plan
         assert s2.rdd.getNumPartitions() == df.rdd.getNumPartitions(), (
             "second spread() must consume the memoized width (no re-probe)"
         )
     finally:
-        _WIDTH_MEMO.pop(key_added[0], None)
-    # Restore the honest entry and confirm the decision is consistent.
-    s1b = spread(spark.range(0, 1000))
+        evict_application(spark)
+    # Re-probe the honest width and confirm the decision is consistent.
+    s1b = spread(spark.range(0, 1000, 1, 1))
     assert s1.rdd.getNumPartitions() == s1b.rdd.getNumPartitions()
 
 
 def test_evict_application_clears_width_memo(spark):
-    """evict_application must drop this app's width entries alongside
-    _PLANS/_SCALARS/_TABLE_MEMO (ADVICE r13) — and only this app's."""
-    from koby_s_ai_vector_db_spark.functions.caching import evict_application
-
-    spread(spark.range(0, 2000))  # ensure at least one entry for this app
-    app = spark.sparkContext.applicationId
-    _WIDTH_MEMO[("other-app", 12345)] = 7
-    try:
-        assert any(k[0] == app for k in _WIDTH_MEMO)
-        evict_application(spark)
-        assert not any(k[0] == app for k in _WIDTH_MEMO)
-        assert ("other-app", 12345) in _WIDTH_MEMO  # foreign apps untouched
-    finally:
-        _WIDTH_MEMO.pop(("other-app", 12345), None)
+    """evict_application must drop the width entries along with every
+    other memo (ADVICE r13)."""
+    spread(spark.range(0, 2000))  # ensure at least one width entry
+    assert any(k[0] == "spread_width" for k in memo_keys(spark))
+    evict_application(spark)
+    assert memo_keys(spark) == []
 
 
 def test_gopher_top_frac_fold_equals_brute(spark):

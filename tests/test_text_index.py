@@ -95,6 +95,35 @@ def test_incremental_append_equals_full_build(spark, tmp_path_factory):
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
+@pytest.mark.parametrize("probe_memo_key", [None, ("rebuilt",)])
+def test_rebuild_with_other_bucket_count_not_served_stale(
+    spark, tmp_path_factory, probe_memo_key
+):
+    """Rebuilding a path with another n_buckets in the same session must
+    not leave search hashing query terms with the old count — that opens
+    the wrong partitions and silently drops rows. The search after the
+    rebuild must equal one with every memo evicted (a fresh session)."""
+    from koby_s_ai_vector_db_spark.functions.caching import evict_application
+
+    path = str(tmp_path_factory.mktemp("textidx_rebuild") / "index")
+    docs = load_table(spark, SF_DIRS["t1"], "documents")
+
+    def search():
+        df = search_text_index(
+            spark, path, _queries(spark), k=5, probe_memo_key=probe_memo_key
+        )
+        return sorted(map(tuple, df.collect()))
+
+    build_text_index(docs, path, n_buckets=16)
+    search()
+    build_text_index(docs, path, n_buckets=4)
+    rebuilt = search()
+    evict_application(spark)
+    assert rebuilt == search()
+    inline = bm25_rank(docs, _queries(spark), k=5)
+    assert rebuilt == sorted(map(tuple, inline.collect()))
+
+
 def test_unindexed_terms_return_nothing(spark, idx_path):
     oov = spark.createDataFrame(
         [(9, "qqqz zzzq xyzzy")], "query_id bigint, query_text string"
