@@ -13,7 +13,7 @@ Every operator here follows the same shape:
   1. per-row signature, map-only, JVM-side (md5-based portable hashes so
      the DuckDB oracle computes bit-identical values — functions/hashing.py)
   2. candidate generation by *blocking*: rows sharing an LSH band bucket
-     (MinHash) or a signature byte-block (SimHash) — shuffle keyed on the
+     (MinHash) or a pair of signature blocks (SimHash) — shuffle keyed on the
      bucket, bucket sizes bounded w.h.p., and high-entropy bucket
      families capped at BUCKET_CAP (chain fallback) so even adversarial
      identical-content floods stay O(N).
@@ -23,6 +23,15 @@ Every operator here follows the same shape:
      (near_dup_groups): O(log n) rounds independent of component
      diameter, per-round lineage truncation, loud failure over silently
      wrong groups.
+
+Steps 2-3 for banded LSH are ONE primitive, `lsh_verified_pairs`:
+MinHash (bands from `minhash_bands`) and hyperplane LSH are each
+"signature → band keys → primitive". Three schemes keep their own joins:
+SimHash (`_simhash_rep_pairs`), because a bucket cap would break its
+pigeonhole completeness; PassJoin (operators/fuzzy.py), whose
+segment/probe join is asymmetric and filters on position; and
+incremental MinHash, which probes the capped base bucket members and
+leaves the verify join strategy to AQE.
 
 The expensive O(N²) scan never happens; the only shuffles are the bucket
 group-join and the pair-verify join. The exact brute-force variants
@@ -168,13 +177,19 @@ def minhash_sig_expr(hashes_col: str) -> Column:
     return F.expr(f"array({mins})")
 
 
-def band_keys_expr(sig_col: str) -> Column:
-    """BANDS strings, each joining ROWS consecutive signature values."""
-    return F.expr(
+def minhash_bands(grams: DataFrame) -> DataFrame:
+    """(_id, band_id, band_key) LSH bands of a (_id, g) shingle table:
+    MinHash signature, then BANDS strings each joining ROWS consecutive
+    signature values."""
+    sigs = grams.withColumn("_h", shingle_hashes_expr("g")).withColumn(
+        "sig", minhash_sig_expr("_h")
+    )
+    keys = F.expr(
         f"transform(sequence(0, {BANDS - 1}), j ->"
-        f" concat_ws(',', transform(slice({sig_col}, j * {ROWS} + 1, {ROWS}),"
+        f" concat_ws(',', transform(slice(sig, j * {ROWS} + 1, {ROWS}),"
         f" v -> CAST(v AS STRING))))"
     )
+    return sigs.select("_id", F.posexplode(keys).alias("band_id", "band_key"))
 
 
 # LSH bucket-size cap: a bucket holding N rows explodes into N(N-1)/2
@@ -192,19 +207,47 @@ def band_keys_expr(sig_col: str) -> Column:
 BUCKET_CAP = 32
 
 
-def capped_bucket_pairs_expr(ids: str, cap: int = BUCKET_CAP) -> Column:
-    """Candidate pairs from a sorted-id array: all pairs up to `cap`,
-    consecutive-chain pairs beyond. Returns array<struct<ai,bi>>."""
+def lsh_verified_pairs(
+    bands: DataFrame, rows: DataFrame, score, threshold: float
+) -> DataFrame:
+    """The banded-LSH blocking step: `bands` (_id, band_id, band_key) →
+    sorted-id buckets → candidate pairs (all pairs up to BUCKET_CAP, the
+    consecutive chain beyond) → exact `score(xa, xb)` over `rows`
+    (_id, x). Returns (ai, bi, score), ai < bi, score >= threshold;
+    `ai < bi` also drops the self-pair of an id that appears twice."""
+    buckets = (
+        bands.groupBy("band_id", "band_key")
+        .agg(F.sort_array(F.collect_list("_id")).alias("ids"))
+        .filter(F.size("ids") > 1)
+    )
     all_pairs = (
-        f"flatten(transform(sequence(1, size({ids}) - 1),"
-        f" i -> transform(slice({ids}, i + 1, size({ids}) - i),"
-        f" b -> struct({ids}[i-1] AS ai, b AS bi))))"
+        "flatten(transform(sequence(1, size(ids) - 1),"
+        " i -> transform(slice(ids, i + 1, size(ids) - i),"
+        " b -> struct(ids[i-1] AS ai, b AS bi))))"
     )
     chain = (
-        f"transform(sequence(1, size({ids}) - 1),"
-        f" i -> struct({ids}[i-1] AS ai, {ids}[i] AS bi))"
+        "transform(sequence(1, size(ids) - 1),"
+        " i -> struct(ids[i-1] AS ai, ids[i] AS bi))"
     )
-    return F.expr(f"IF(size({ids}) <= {cap}, {all_pairs}, {chain})")
+    capped = F.expr(f"IF(size(ids) <= {BUCKET_CAP}, {all_pairs}, {chain})")
+    cand = (
+        buckets.select(F.explode(capped).alias("p"))
+        .select("p.ai", "p.bi")
+        .filter(F.col("ai") < F.col("bi"))
+        .distinct()
+    )
+    xa = rows.select(F.col("_id").alias("ai"), F.col("x").alias("xa"))
+    xb = rows.select(F.col("_id").alias("bi"), F.col("x").alias("xb"))
+    # cand is tiny relative to the corpus (bounded by true near-dup pairs +
+    # LSH false positives) — broadcast it so the row payloads never shuffle.
+    return (
+        F.broadcast(cand)
+        .join(xa, "ai")
+        .join(xb, "bi")
+        .withColumn("score", score("xa", "xb"))
+        .filter(F.col("score") >= threshold)
+        .select("ai", "bi", "score")
+    )
 
 
 def jaccard(a: str, b: str) -> Column:
@@ -280,52 +323,19 @@ def minhash_near_dup_pairs(
     calls AND across operators in the same session — the pair query, the
     groups query, and the n-gram Jaccard query all read one copy.
     """
-    # Signatures are computed ONCE and reused by four consumers (both sides
-    # of the band self-join, both arms of the pair verify). At cluster
-    # scale this is a materialized signature table (write once, read per
-    # stage); in-session the analogue is the persisted/memoized
-    # _shingle_table — without it the shingle+md5 pipeline re-executes
-    # per branch.
+    # Signatures are computed ONCE and reused by three consumers (the
+    # bands and both arms of the pair verify). At cluster scale this is a
+    # materialized signature table (write once, read per stage);
+    # in-session the analogue is the persisted/memoized _shingle_table —
+    # without it the shingle+md5 pipeline re-executes per branch.
     grams = _shingle_table(docs, id_col, text_col, cache_key)
-    sigs = grams.withColumn("_h", shingle_hashes_expr("g")).withColumn(
-        "sig", minhash_sig_expr("_h")
-    )
-    bands = sigs.select(
-        "_id", F.posexplode(band_keys_expr("sig")).alias("band_id", "band_key")
-    )
-    # Candidate pairs come from a single shuffle: group by bucket, then
-    # explode the in-bucket pairs from the sorted id list (ai < bi by
-    # construction). A bucket self-join computes the same set but
-    # exchanges + sorts the bands table twice; at fixture scale the two
-    # are within measurement noise (first-run cost is dominated by plan
-    # compilation), the single exchange is the scale argument.
-    # Buckets above BUCKET_CAP emit the consecutive chain instead of all
-    # pairs — see the cap rationale above `capped_bucket_pairs_expr`.
-    buckets = (
-        bands.groupBy("band_id", "band_key")
-        .agg(F.sort_array(F.collect_list("_id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-    cand = (
-        buckets.select(F.explode(capped_bucket_pairs_expr("ids")).alias("p"))
-        .select("p.ai", "p.bi")
-        .distinct()
-    )
-    ga = grams.select(F.col("_id").alias("ai"), F.col("g").alias("ga"))
-    gb = grams.select(F.col("_id").alias("bi"), F.col("g").alias("gb"))
-    # cand is tiny relative to the corpus (bounded by true near-dup pairs +
-    # LSH false positives) — broadcast it so the gram arrays never shuffle.
-    out = (
-        F.broadcast(cand)
-        .join(ga, "ai")
-        .join(gb, "bi")
-        .withColumn("jaccard", jaccard("ga", "gb"))
-        .filter(F.col("jaccard") >= threshold)
-        .select(
-            F.col("ai").alias("doc_id_a"),
-            F.col("bi").alias("doc_id_b"),
-            F.round("jaccard", 6).alias("jaccard"),
-        )
+    out = lsh_verified_pairs(
+        minhash_bands(grams), grams.select("_id", F.col("g").alias("x")),
+        jaccard, threshold,
+    ).select(
+        F.col("ai").alias("doc_id_a"),
+        F.col("bi").alias("doc_id_b"),
+        F.round("score", 6).alias("jaccard"),
     )
     if cache_key is None:
         return out
@@ -433,17 +443,18 @@ def simhash_near_dup_pairs(
     cache_key=None,
     bits: int = 60,
 ) -> DataFrame:
-    """SimHash blocking: (max_hamming + 1) equal blocks per signature; any
+    """SimHash blocking: (max_hamming + 2) equal blocks per signature; any
     pair within Hamming distance max_hamming shares at least one identical
-    block (pigeonhole), so blocking loses nothing.
+    PAIR of blocks (pigeonhole), so blocking loses nothing. ``bits`` must
+    divide into those blocks (ValueError otherwise).
     Returns (doc_id_a, doc_id_b, hamming), a < b.
 
-    ``bits`` defaults to 60 (15-bit blocks at max_hamming=3): the r5 sf1
-    scale probe showed the original 32-bit sketch's 8-bit blocks are a
-    SCALE BUG — 256-value keys make co-bucketed candidates grow as
-    N²/256 (10× data → ~100× pairs; the probe's sf1 run sat in the
-    candidate explode for minutes). 15-bit blocks give 32768-value keys
-    (128× fewer candidates at equal N) with the identical pigeonhole
+    ``bits`` defaults to 60 (five 12-bit blocks, 24-bit pair keys at
+    max_hamming=3): the r5 sf1 scale probe showed the original 32-bit
+    sketch's 8-bit blocks are a SCALE BUG — 256-value keys make
+    co-bucketed candidates grow as N²/256 (10× data → ~100× pairs; the
+    probe's sf1 run sat in the candidate explode for minutes). Wider
+    keys cut candidates at equal N with the identical pigeonhole
     guarantee, and the wider sketch also sharpens hamming≤3 into a
     true near-duplicate criterion (60 agreeing majority votes, not 32).
 
@@ -462,13 +473,10 @@ def simhash_near_dup_pairs(
     moved together in round 11."""
     from koby_s_ai_vector_db_spark.functions.caching import memo_persist
 
-    # Valid under either blocking scheme (_simhash_rep_pairs): pairs of
-    # (max_hamming + 2) blocks when that divides bits, single clean
-    # block of (max_hamming + 1) otherwise.
-    if bits % (max_hamming + 2) and bits % (max_hamming + 1):
+    # _simhash_rep_pairs keys on pairs of (max_hamming + 2) equal blocks.
+    if bits % (max_hamming + 2):
         raise ValueError(
-            f"bits={bits} not divisible into {max_hamming + 2} or "
-            f"{max_hamming + 1} blocks"
+            f"bits={bits} not divisible into {max_hamming + 2} blocks"
         )
 
     def _sigs():
@@ -545,50 +553,35 @@ def _simhash_rep_pairs(
     depend only on the number of DISTINCT sketches, never on group
     sizes.
 
-    Blocking scheme (round 14, VERDICT r13 item 3): when bits divides
-    into (max_hamming + 2) blocks, the join keys on PAIRS of blocks —
+    Blocking scheme (round 14, VERDICT r13 item 3): bits splits into
+    (max_hamming + 2) blocks and the join keys on PAIRS of blocks —
     ≤ max_hamming errors dirty at most max_hamming of the max_hamming+2
     blocks, so at least TWO blocks are clean and some clean pair matches
-    (pigeonhole, same completeness as the single-clean-block scheme; the
-    exact hamming filter below is unchanged either way). The pair key
-    carries 2× the bits (24 vs 15 at bits=60/max_hamming=3), which is
+    (pigeonhole, the same completeness as keying on one clean block of
+    max_hamming + 1; the exact hamming filter below then decides). The
+    pair key carries 2× the bits (24 vs 15 at bits=60/max_hamming=3), which is
     what breaks up the crowded buckets a narrow-vocabulary corpus piles
     onto low-entropy 15-bit values: measured at the sf1 probe corpus,
     Σ(bucket²) candidate mass 65.1M → 8.8M (7.4×), max bucket 3040 →
     625, C(5,2)=10 keys/sketch vs 4. At high sketch entropy both schemes
     have ~empty buckets and the extra keys cost one slightly larger
-    (2.5×) exchange of the DISTINCT-sketch table only. Falls back to
-    single-clean-block when (max_hamming + 2) does not divide bits."""
-    if bits % (max_hamming + 2) == 0:
-        from itertools import combinations
+    (2.5×) exchange of the DISTINCT-sketch table only."""
+    from itertools import combinations
 
-        n_blocks = max_hamming + 2
-        block_bits = bits // n_blocks
-        block_mask = (1 << block_bits) - 1
-        key_exprs = ", ".join(
-            f"struct({pid} AS block_id,"
-            f" (shiftright(sh, {i * block_bits}) & {block_mask}L)"
-            f" * {block_mask + 1}L"
-            f" + (shiftright(sh, {j * block_bits}) & {block_mask}L)"
-            f" AS block_val)"
-            for pid, (i, j) in enumerate(combinations(range(n_blocks), 2))
-        )
-        blocks = sigs.select("sh").distinct().select(
-            "sh", F.explode(F.expr(f"array({key_exprs})")).alias("_k")
-        ).select("sh", "_k.block_id", "_k.block_val")
-    else:
-        n_blocks = max_hamming + 1
-        block_bits = bits // n_blocks
-        block_mask = (1 << block_bits) - 1
-        blocks = sigs.select("sh").distinct().select(
-            "sh",
-            F.posexplode(
-                F.expr(
-                    f"transform(sequence(0, {n_blocks - 1}),"
-                    f" j -> (sh >> (j * {block_bits})) & {block_mask}L)"
-                )
-            ).alias("block_id", "block_val"),
-        )
+    n_blocks = max_hamming + 2
+    block_bits = bits // n_blocks
+    block_mask = (1 << block_bits) - 1
+    key_exprs = ", ".join(
+        f"struct({pid} AS block_id,"
+        f" (shiftright(sh, {i * block_bits}) & {block_mask}L)"
+        f" * {block_mask + 1}L"
+        f" + (shiftright(sh, {j * block_bits}) & {block_mask}L)"
+        f" AS block_val)"
+        for pid, (i, j) in enumerate(combinations(range(n_blocks), 2))
+    )
+    blocks = sigs.select("sh").distinct().select(
+        "sh", F.explode(F.expr(f"array({key_exprs})")).alias("_k")
+    ).select("sh", "_k.block_id", "_k.block_val")
     # Unlike the MinHash path's collect_list + array-explode buckets, pair
     # generation here is a streaming SELF-JOIN on the block key: a
     # narrow-vocabulary corpus crowds thousands of DISTINCT sketches into
@@ -604,7 +597,7 @@ def _simhash_rep_pairs(
     # max_hamming shares a block). The scale knobs for SimHash are key
     # ENTROPY (bits / block_bits above) and the distinct-sketch collapse —
     # whereas MinHash bands and hyperplane sketches already have
-    # high-entropy keys and get the cap (capped_bucket_pairs_expr).
+    # high-entropy keys and get the cap (lsh_verified_pairs).
     a, b = blocks.alias("a"), blocks.alias("b")
     return (
         a.join(
@@ -708,8 +701,13 @@ def hyperplane_lsh_pairs(
     Returns (vec_id_a, vec_id_b, sim), a < b, sim >= threshold."""
     from koby_s_ai_vector_db_spark.functions.vectors import dot, l2_normalize
 
+    if n_planes % band_bits:
+        raise ValueError(
+            f"n_planes={n_planes} not divisible into band_bits={band_bits} bands"
+        )
+    if dim > 64:
+        raise ValueError(f"dim={dim} > 64: one 64-bit sign mask per plane")
     n_bands = n_planes // band_bits
-    assert n_bands * band_bits == n_planes
 
     # The whole n_planes-bit sketch is computed MAP-SIDE in one expression:
     # the planes are md5-derived ±1 constants, so each plane packs into one
@@ -731,7 +729,6 @@ def hyperplane_lsh_pairs(
     # allocates nothing per step), which empirically beats straight-line
     # codegen at this width. Reverted; the probe rows live in BASELINE.md
     # round-11.
-    assert dim <= 64, "one 64-bit sign mask per plane"
     masks = []
     for pid in range(n_planes):
         m = 0
@@ -745,12 +742,12 @@ def hyperplane_lsh_pairs(
         f"concat_ws('', transform({masks_sql}, m ->"
         f" IF(aggregate(sequence(0, {dim - 1}), CAST(0.0 AS DOUBLE),"
         f" (a, i) -> a + IF(shiftright(m, i) & 1 = 1,"
-        f" element_at(v, i + 1), -element_at(v, i + 1))) > 0, '1', '0')))"
+        f" element_at(x, i + 1), -element_at(x, i + 1))) > 0, '1', '0')))"
     )
 
     c = (
         _spread(embeddings)
-        .select(F.col(id_col).alias("_id"), l2_normalize(vec_col).alias("v"))
+        .select(F.col(id_col).alias("_id"), l2_normalize(vec_col).alias("x"))
     )
     bands = c.withColumn("bits", sketch).select(
         "_id",
@@ -761,29 +758,10 @@ def hyperplane_lsh_pairs(
             )
         ).alias("band_id", "band_key"),
     )
-    buckets = (
-        bands.groupBy("band_id", "band_key")
-        .agg(F.sort_array(F.collect_list("_id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-    cand = (
-        buckets.select(F.explode(capped_bucket_pairs_expr("ids")).alias("p"))
-        .select("p.ai", "p.bi")
-        .distinct()
-    )
-    va = c.select(F.col("_id").alias("ai"), F.col("v").alias("va"))
-    vb = c.select(F.col("_id").alias("bi"), F.col("v").alias("vb"))
-    return (
-        F.broadcast(cand)
-        .join(va, "ai")
-        .join(vb, "bi")
-        .withColumn("sim", dot("va", "vb"))
-        .filter(F.col("sim") >= threshold)
-        .select(
-            F.col("ai").alias("vec_id_a"),
-            F.col("bi").alias("vec_id_b"),
-            F.round("sim", round_to).alias("sim"),
-        )
+    return lsh_verified_pairs(bands, c, dot, threshold).select(
+        F.col("ai").alias("vec_id_a"),
+        F.col("bi").alias("vec_id_b"),
+        F.round("score", round_to).alias("sim"),
     )
 
 
@@ -952,17 +930,9 @@ def incremental_minhash_dedup(
         persist_uncached=cache_key is None,
     )
 
-    def _bands(grams: DataFrame) -> DataFrame:
-        sigs = grams.withColumn("_h", shingle_hashes_expr("g")).withColumn(
-            "sig", minhash_sig_expr("_h")
-        )
-        return sigs.select(
-            "_id", F.posexplode(band_keys_expr("sig")).alias("band_id", "band_key")
-        )
-
     def _base_members() -> DataFrame:
         return (
-            _bands(bg)
+            minhash_bands(bg)
             .groupBy("band_id", "band_key")
             .agg(
                 F.slice(
@@ -990,7 +960,7 @@ def incremental_minhash_dedup(
     else:
         base_members = _base_members()
     cand = (
-        _bands(ng)
+        minhash_bands(ng)
         .join(base_members, ["band_id", "band_key"])
         .select(F.col("_id").alias("new_id"), F.explode("ids").alias("base_id"))
         .distinct()

@@ -261,165 +261,3 @@ FROM cand JOIN d_all da ON da.id = a JOIN d_all db ON db.id = b
 WHERE levenshtein(da.txt, db.txt) <= {t}
 ORDER BY doc_id_a, doc_id_b
 """
-
-
-# --- block-pair SimHash blocking: the measured alternative candidate path ----
-# PassJoin's candidate keys are SUBSTRING CONTENT, so their entropy is
-# whatever the corpus vocabulary gives: on the driver fixture's 31-word
-# vocabulary the sf0.1→sf1 probe crowded to 13.3–17.5× on 10× data
-# (BASELINE.md), against ~7× on natural text. This variant swaps the
-# candidate generator for one whose key entropy comes from the HASH, not
-# the text: a 60-bit character-4-gram SimHash per doc, split into 6
-# ten-bit blocks, keyed on all C(6,2)=15 ordered block PAIRS (20-bit
-# values). Pigeonhole: sketches within Hamming ≤ 4 differ in ≤ 4 blocks,
-# so ≥ 2 blocks agree, so the pair shares ≥ 1 block-pair key — the
-# hamming≤4 → candidate guarantee is exact (no bucket cap, the
-# simhash_near_dup_pairs precedent). The edit→hamming step is the
-# approximate one, recall-measured in tests/test_fuzzy_edit.py (0.97 on
-# the sf0.1 fixture, strict subset of the exact tier).
-#
-# MEASURED OUTCOME (round 8, BASELINE.md): on the adversarial fixture
-# this does NOT beat PassJoin — 27.5× vs 17.5× at the sf1 probe.
-# Same-vocabulary random texts produce CORRELATED sketches, so 20-bit
-# block-pair keys crowd exactly like substring keys do, and the bucket
-# pair explode pays the quadratic before the hamming prefilter can
-# discard it; meanwhile the true-pair count actually SHRINKS at sf1
-# (255→80), proving the exact tier's ratio is candidate-crowding, not
-# output growth. Conclusion: PassJoin stays the production tier —
-# low-entropy CONTENT defeats any content-derived key, hashed or not.
-# Kept as a tested, documented alternative for the regime it measurably
-# fits (long documents with small edits — OCR-noise dedup — where the
-# per-doc sketch is O(chars) once vs PassJoin's O(3·len) probe rows),
-# and as the recorded answer to the round-7 watch item.
-
-
-def char_simhash_expr(text_col: str, bits: int = 60, n: int = 4) -> F.Column:
-    """60-bit SimHash over character n-grams (with multiplicity), one
-    map-only aggregate expression per doc — the character-level analogue
-    of operators/dedup.simhash_expr (word tokens). Lowercased so case
-    drift lands near, like the normalized-dedup tier."""
-    if bits % 4 or not 0 < bits <= 60:
-        raise ValueError(f"bits must be a multiple of 4 in (0, 60], got {bits}")
-    grams = (
-        f"transform(sequence(1, greatest(1, length({text_col}) - {n - 1})),"
-        f" i -> substring(lower({text_col}), i, {n}))"
-    )
-    th = (
-        f"transform({grams}, t -> CAST(conv(substr(md5(t), 1, {bits // 4}),"
-        f" 16, 10) AS BIGINT))"
-    )
-    # Fused per-gram vote (one zip_with, no per-gram temp array) — same
-    # round-13 rewrite as operators/dedup.simhash_expr; bit-identical.
-    return F.expr(
-        f"aggregate({th}, array_repeat(0L, {bits}),"
-        f" (acc, h) -> zip_with(acc, sequence(0, {bits - 1}),"
-        "   (a, b) -> a + IF(((h >> b) & 1) = 1, 1L, -1L)),"
-        f" acc -> aggregate(zip_with(acc, sequence(0, {bits - 1}),"
-        "   (s, b) -> IF(s > 0, shiftleft(1L, b), 0L)), 0L, (a, x) -> a + x))"
-    )
-
-
-def fuzzy_edit_pairs_blocked(
-    docs: DataFrame,
-    t: int = EDIT_T,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 60,
-    n_blocks: int = 6,
-    gram_n: int = 4,
-    max_hamming: int = 10,
-) -> DataFrame:
-    """Approximate near-dup pairs (levenshtein <= t) via block-pair
-    SimHash candidate generation + exact verify. Returns
-    (doc_id_a, doc_id_b, dist) ordered, a subset of fuzzy_edit_pairs'
-    rows (verify is exact; only candidate RECALL is approximate).
-
-    The hamming prefilter (``max_hamming``) is the FP throttle: on the
-    adversarial 31-word fixture, unrelated docs agree on 20-bit block
-    pairs often enough to emit ~210k candidate pairs from 5k docs, but
-    their sketch hamming concentrates at 16-19 bits while true edit<=8
-    pairs measured <=9 (sf0.1, both distributions) — filtering
-    bit_count(sha^shb) <= 10 before the text join kills >95% of FPs at
-    integer cost, leaving the levenshtein verify output-bound."""
-    if bits % n_blocks:
-        raise ValueError(f"bits={bits} not divisible into {n_blocks} blocks")
-    block_bits = bits // n_blocks
-    block_mask = (1 << block_bits) - 1
-
-    from koby_s_ai_vector_db_spark.functions.partitioning import spread
-
-    d_all = docs.select(
-        F.col(id_col).alias("id"),
-        F.col(text_col).alias("txt"),
-    )
-    # The sketch fold is the CPU-bound map stage (O(chars × bits) per
-    # doc) and runs BEFORE any shuffle — a single-file parquet source
-    # would pin it to one task without the spread (the topk_cosine
-    # precedent; measured: the unspread sf0.1 warm pass sat >10 min on
-    # one core).
-    sigs = spread(d_all).select(
-        "id", char_simhash_expr("txt", bits=bits, n=gram_n).alias("sh")
-    )
-    # C(n_blocks, 2) pair keys: key_id = i*n_blocks + j (i < j),
-    # key_val = (block_i << block_bits) | block_j — 2*block_bits-entropy
-    # values regardless of corpus vocabulary.
-    pair_keys = (
-        f"flatten(transform(sequence(0, {n_blocks - 2}), i ->"
-        f" transform(sequence(i + 1, {n_blocks - 1}), j -> named_struct("
-        f"   'key_id', i * {n_blocks} + j,"
-        f"   'key_val', (((sh >> (i * {block_bits})) & {block_mask}L)"
-        f"     << {block_bits}) | ((sh >> (j * {block_bits})) & {block_mask}L)))))"
-    )
-    keyed = sigs.select(
-        "id", "sh", F.explode(F.expr(pair_keys)).alias("k")
-    ).select(
-        "id", "sh",
-        F.col("k.key_id").alias("key_id"),
-        F.col("k.key_val").alias("key_val"),
-    )
-    # Signatures ride through the buckets (the simhash_near_dup_pairs
-    # pattern) so the hamming prefilter needs no re-join.
-    buckets = (
-        keyed.groupBy("key_id", "key_val")
-        .agg(F.sort_array(F.collect_list(F.struct("id", "sh"))).alias("m"))
-        .filter(F.size("m") > 1)
-    )
-    cand = (
-        buckets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(sequence(1, size(m) - 1),"
-                    " i -> transform(slice(m, i + 1, size(m) - i),"
-                    " b -> struct(m[i-1].id AS a, b.id AS b,"
-                    " m[i-1].sh AS sha, b.sh AS shb))))"
-                )
-            ).alias("p")
-        )
-        .where(
-            F.bit_count(F.col("p.sha").bitwiseXOR(F.col("p.shb")))
-            <= max_hamming
-        )
-        .select("p.a", "p.b")
-        .distinct()
-    )
-    # cand is hamming-filtered (bounded by true near-dups + residual
-    # FPs), so it broadcasts; BOTH text sides are spread (ADVICE r08):
-    # the bounded cand⋈da result is small enough that AQE may broadcast
-    # it, which would make db the stream side of the second join — and
-    # an unspread single-file db would then run the levenshtein verify
-    # in one task. Spreading db keeps the verify distributed whichever
-    # side AQE picks.
-    da = spread(d_all).select(F.col("id").alias("a"), F.col("txt").alias("ta"))
-    db = spread(d_all).select(F.col("id").alias("b"), F.col("txt").alias("tb"))
-    return (
-        F.broadcast(cand)
-        .join(da, "a")
-        .join(db, "b")
-        .select(
-            F.col("a").alias("doc_id_a"),
-            F.col("b").alias("doc_id_b"),
-            F.levenshtein("ta", "tb").cast("int").alias("dist"),
-        )
-        .where(F.col("dist") <= F.lit(t))
-        .orderBy("doc_id_a", "doc_id_b")
-    )

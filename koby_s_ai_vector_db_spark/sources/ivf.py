@@ -135,7 +135,9 @@ def ivf_index_search(
     if prune == "static":
         # Bounded control collect; callers with a FIXED query set pass
         # probe_memo_key so it runs once per session, not per query build
-        # (the construction-is-action-free invariant).
+        # (the construction-is-action-free invariant). The memo key also
+        # carries n_probe and the centroid files, so another n_probe or a
+        # same-path rebuild re-probes instead of reusing a stale list set.
         def _probed():
             return sorted(
                 {r["list"] for r in probes.select("list").distinct().collect()}
@@ -146,7 +148,12 @@ def ivf_index_search(
         else:
             from koby_s_ai_vector_db_spark.functions.caching import memo
 
-            probed = memo(spark, ("ivf_probed", probe_memo_key), _probed)
+            probed = memo(
+                spark,
+                ("ivf_probed", probe_memo_key, n_probe,
+                 tuple(sorted(centroids.inputFiles()))),
+                _probed,
+            )
         lists = lists.filter(F.col("list").isin(probed))
     scored = lists.join(F.broadcast(probes), on="list").withColumn(
         "sim", dot(vec_col, query_vec_col)

@@ -424,7 +424,8 @@ def ivfpq_index_search(
     if prune == "static":
         # Bounded control collect; callers with a FIXED query set pass
         # probe_memo_key so it runs once per session, not per query build
-        # (the construction-is-action-free invariant).
+        # (the construction-is-action-free invariant). Keyed like
+        # sources/ivf.py: n_probe and the centroid files ride along.
         def _probed():
             return sorted(
                 {r["list"] for r in probes.select("list").distinct().collect()}
@@ -436,7 +437,10 @@ def ivfpq_index_search(
             from koby_s_ai_vector_db_spark.functions.caching import memo
 
             probed = memo(
-                spark, ("ivfpq_probed", probe_memo_key), _probed
+                spark,
+                ("ivfpq_probed", probe_memo_key, n_probe,
+                 tuple(sorted(centroids.inputFiles()))),
+                _probed,
             )
         scan = scan.filter(F.col("list").isin(probed))
 

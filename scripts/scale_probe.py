@@ -315,17 +315,10 @@ def generate(out_dir: str, wide_vocab: int = 0) -> None:
 # Non-registered operators probed alongside the registry queries (the
 # registry is the driver surface; these are documented scale-path
 # variants). Each entry: name -> fn(spark, sf_dir) -> DataFrame.
-def _blocked_fuzzy(spark, sf_dir):
-    from koby_s_ai_vector_db_spark.operators.fuzzy import fuzzy_edit_pairs_blocked
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return fuzzy_edit_pairs_blocked(docs, t=8)
-
-
 def _exact_fuzzy(spark, sf_dir):
     # The OPERATOR, not the registered query: dedup_fuzzy_edit memoizes
     # its pair table, so its timed pass reads a persisted result — this
-    # probes the actual PassJoin plan for a fair blocked-vs-exact pair.
+    # probes the actual PassJoin plan.
     from koby_s_ai_vector_db_spark.operators.fuzzy import fuzzy_edit_pairs
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -389,7 +382,6 @@ def _tfidf_hash128(spark, sf_dir):
 
 
 EXTRA_PROBES = {
-    "fuzzy_edit_blocked": _blocked_fuzzy,  # round 8: BASELINE fuzzy watch item
     "fuzzy_edit_exact": _exact_fuzzy,
     "rel_ship_prio_shuffle": _q3_shuffle,
     "dedup_substring_hashkey": _substring_hashkey,

@@ -89,6 +89,31 @@ def assert_matches_oracle(spark_df, con, sql, check_rows=True):
     assert not mismatches, f"value mismatch ({len(mismatches)} rows), first: {mismatches[:3]}"
 
 
+def _q(name):
+    """The registered query builder `name`."""
+    from koby_s_ai_vector_db_spark import registry
+
+    return registry.queries()[name]
+
+
+def _write_docs(tmpdir, rows):
+    """rows: list of (doc_id, text, lang, source)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pa.table(
+        {
+            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
+            "text": pa.array([r[1] for r in rows]),
+            "lang": pa.array([r[2] for r in rows]),
+            "source": pa.array([r[3] for r in rows]),
+            "n_chars": pa.array([len(r[1]) for r in rows], pa.int64()),
+        }
+    )
+    pq.write_table(t, f"{tmpdir}/documents.parquet")
+    return str(tmpdir)
+
+
 def assert_all_zstd(path: str) -> None:
     """Every column chunk of every parquet file under ``path`` is
     zstd-compressed (the session's codec, session.get_spark)."""

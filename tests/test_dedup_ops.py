@@ -1,7 +1,9 @@
-"""Dedup-operator scale guards: star-contraction CC and the LSH bucket cap.
+"""Dedup-family tests, by operator: exact/normalized/soft dedup, MinHash and
+hyperplane LSH, SimHash, star-contraction groups, TF-IDF cosine and
+incremental MinHash (the oracle suite already value-checks the registered
+queries; these pin what it can't express).
 
-These pin the two round-3 scale fixes at the OPERATOR level (the oracle
-suite already value-checks the registered queries):
+The two round-3 scale guards at the OPERATOR level:
 
   - `near_dup_groups` must be diameter-independent: a planted chain of
     diameter 40 converges where the retired min-label propagation (bounded
@@ -17,9 +19,13 @@ import pyspark.sql.functions as F
 
 from koby_s_ai_vector_db_spark.operators.dedup import (
     BUCKET_CAP,
+    hyperplane_lsh_pairs,
     minhash_near_dup_pairs,
     near_dup_groups,
 )
+from tests.conftest import SF_DIRS, _q, _write_docs
+
+SF = SF_DIRS["t1"]
 
 
 def test_star_contraction_handles_long_chains(spark):
@@ -72,9 +78,38 @@ def test_small_buckets_keep_all_pairs_semantics(spark):
     assert pairs.count() == n * (n - 1) // 2
 
 
+def test_duplicated_ids_emit_no_self_pairs(spark):
+    """Two rows that share one id share every LSH bucket, but they are
+    not a pair: both banded-LSH tiers keep the documented a < b contract
+    (the DuckDB oracles join on a.id < b.id and return nothing here)."""
+    t = "one two three four five six seven eight"
+    docs = spark.createDataFrame([(1, t), (1, t)], "doc_id long, text string")
+    assert minhash_near_dup_pairs(docs).collect() == []
+    v = [float(i % 7) - 3.0 for i in range(64)]
+    emb = spark.createDataFrame(
+        [(10, v), (10, v)], "vec_id long, embedding array<float>"
+    )
+    assert hyperplane_lsh_pairs(emb).collect() == []
+
+
+def test_hyperplane_lsh_rejects_bad_shapes(spark):
+    """Band widths must tile the sketch, and one 64-bit sign mask per
+    plane caps dim at 64 — both are named errors, not asserts that
+    vanish under python -O (a dim > 64 sketch would reuse mask bits)."""
+    import pytest
+
+    emb = spark.createDataFrame(
+        [(1, [1.0] * 65)], "vec_id long, embedding array<float>"
+    )
+    with pytest.raises(ValueError, match="band_bits"):
+        hyperplane_lsh_pairs(emb, n_planes=60, band_bits=8)
+    with pytest.raises(ValueError, match="dim"):
+        hyperplane_lsh_pairs(emb, dim=65)
+
+
 def test_simhash60_finds_exact_copy_and_rejects_bad_bits(spark):
     """60-bit sketch: an exact copy is hamming 0; an unrelated doc is not
-    paired; bits must divide into (max_hamming + 1) blocks and fit a
+    paired; bits must divide into (max_hamming + 2) blocks and fit a
     signed BIGINT."""
     import pytest
 
@@ -97,32 +132,6 @@ def test_simhash60_finds_exact_copy_and_rejects_bad_bits(spark):
         simhash_expr("text", bits=64)  # > 60: sign-bit overflow risk
     with pytest.raises(ValueError):
         simhash_near_dup_pairs(docs, bits=58)  # no valid block split
-
-
-def test_simhash_rep_pairs_fallback_scheme_equals_bruteforce(spark):
-    """_simhash_rep_pairs uses single-clean-block keying when
-    (max_hamming + 2) does not divide bits (e.g. bits=32, max_hamming=3:
-    32 % 5 != 0, 32 % 4 == 0) — the fallback must still emit exactly the
-    hamming<=max_hamming sketch pairs (sha <= shb, diagonal included).
-    The primary pair-of-blocks scheme is covered at bits=60 by
-    tests/test_properties.py::test_simhash_blocked_pairs_equal_bruteforce."""
-    from koby_s_ai_vector_db_spark.operators.dedup import _simhash_rep_pairs
-
-    shs = [0b1011, 0b1010, 0b1011 | (1 << 20) | (1 << 30), 0, 1 << 31]
-    sigs = spark.createDataFrame(
-        [(i, s) for i, s in enumerate(shs)], "_id long, sh long"
-    )
-    expected = sorted(
-        (min(a, b), max(a, b), bin(a ^ b).count("1"))
-        for i, a in enumerate(shs)
-        for b in shs[i:]
-        if bin(a ^ b).count("1") <= 3
-    )
-    got = sorted(
-        (r.sha, r.shb, r.hamming)
-        for r in _simhash_rep_pairs(sigs, 3, 32).collect()
-    )
-    assert got == expected
 
 
 def test_simhash_table_equals_hof_expr(spark):
@@ -212,6 +221,87 @@ def test_simhash_viral_group_stays_rep_bounded(spark):
     assert (n + 1) not in {
         r.doc_id_b for r in pairs.select("doc_id_b").distinct().collect()
     }
+
+
+# --- registered dedup queries: semantics the oracle comparison can't express
+
+
+def test_source_matrix_totals_match_pair_table(spark):
+    from koby_s_ai_vector_db_spark.queries.dedup_q import _docs_dd
+    from koby_s_ai_vector_db_spark.operators.dedup import minhash_near_dup_pairs
+
+    matrix = _q("dedup_source_matrix")(spark, SF).collect()
+    n_pairs_total = sum(r.n_pairs for r in matrix)
+    pairs = minhash_near_dup_pairs(
+        _docs_dd(spark, SF), threshold=0.5, cache_key=("docs_dd", SF)
+    ).count()
+    assert n_pairs_total == pairs > 0
+    for r in matrix:
+        assert r.source_a <= r.source_b
+        assert 0 < r.sum_jac_q6 <= r.n_pairs * 1_000_000
+
+
+def test_dedup_normalized_folds_case_variants(spark):
+    """The planted uppercased+padded copies are invisible to exact
+    dedup but must fold here: at least one group absorbs >1 raw
+    variant, and every group has n_raw_variants <= n_copies."""
+    rows = _q("dedup_normalized")(spark, SF).collect()
+    assert rows
+    assert any(r.n_raw_variants > 1 for r in rows)
+    for r in rows:
+        assert 1 <= r.n_raw_variants <= r.n_copies, r
+
+
+def test_dedup_normalized_excludes_empty_canonical_form(spark):
+    """Symbol-only docs normalize to '' — they are NOT copies of each
+    other and must not fuse into one spurious group."""
+    import unittest.mock as _m
+
+    from koby_s_ai_vector_db_spark.queries import dedup_q
+
+    planted = spark.createDataFrame(
+        [(1, "!!!"), (2, "???"), (3, "Same text."), (4, "same TEXT")],
+        "doc_id long, text string",
+    )
+    with _m.patch.object(dedup_q, "_docs_nn", return_value=planted):
+        rows = dedup_q.dedup_normalized(spark, "ignored").collect()
+    assert len(rows) == 1 and rows[0].canonical_id == 3, rows
+    assert rows[0].n_copies == 2 and rows[0].n_raw_variants == 2
+
+
+def test_softdedup_weights_mass_conservation(spark):
+    """Each exact-dup group's weights sum to 1, so total weight equals
+    the number of DISTINCT texts; unique docs carry weight 1.0."""
+    import collections
+
+    rows = _q("softdedup_weights")(spark, SF).collect()
+    by_copies = collections.Counter(r.n_copies for r in rows)
+    n_groups = sum(cnt // k for k, cnt in by_copies.items())
+    assert abs(sum(r.weight for r in rows) - n_groups) < 1e-3
+    for r in rows:
+        assert abs(r.weight * r.n_copies - 1.0) < 1e-5, r
+        if r.n_copies == 1:
+            assert r.weight == 1.0 and r.eff_tokens == r.n_tokens, r
+
+
+def test_src_overlap_disjoint_sources_emit_no_pair(spark, tmp_path):
+    """Sources with zero shared 3-grams must be ABSENT from the matrix
+    (pairs exist only via the postings join), and identical sources must
+    score jaccard_q6 == 1_000_000."""
+    from koby_s_ai_vector_db_spark.queries.dedup_q import src_overlap_matrix
+
+    rows = [
+        (0, "alpha beta gamma delta", "en", "srcA"),
+        (1, "alpha beta gamma delta", "en", "srcB"),  # identical to srcA
+        (2, "one two three four five", "en", "srcC"),  # disjoint
+    ]
+    sf = _write_docs(tmp_path, rows)
+    out = {
+        (r["src_a"], r["src_b"]): r
+        for r in src_overlap_matrix(spark, sf).collect()
+    }
+    assert set(out) == {("srcA", "srcB")}
+    assert out[("srcA", "srcB")]["jaccard_q6"] == 1_000_000
 
 
 class TestTfidfCosine:

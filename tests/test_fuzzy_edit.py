@@ -146,53 +146,3 @@ def test_oracle_mirrors_blocking(duck):
     for a, b, d in blocked:
         assert _levenshtein(texts[a], texts[b]) == d <= t
     assert len(blocked) > 0
-
-
-# --- block-pair SimHash blocked variant (round 8, the adversarial-
-# vocabulary scale path; BASELINE.md fuzzy watch item) -----------------------
-
-
-def test_blocked_variant_subset_and_recall(spark):
-    """The blocked tier verifies with exact levenshtein, so its output
-    must be a SUBSET of the exact PassJoin tier's pairs; on the fixture
-    corpus its candidate recall must stay high (measured 1.0 at
-    sf0.001 — pin a 0.9 floor so a sketch regression is loud)."""
-    from koby_s_ai_vector_db_spark.operators.fuzzy import fuzzy_edit_pairs_blocked
-
-    docs = spark.read.parquet(SF_DIRS["t1"] + "/documents.parquet")
-    exact = {
-        (r.doc_id_a, r.doc_id_b): r.dist
-        for r in fuzzy_edit_pairs(docs, t=8).collect()
-    }
-    blocked = {
-        (r.doc_id_a, r.doc_id_b): r.dist
-        for r in fuzzy_edit_pairs_blocked(docs, t=8).collect()
-    }
-    assert set(blocked) <= set(exact)
-    assert all(blocked[p] == exact[p] for p in blocked)
-    assert len(blocked) >= 0.9 * len(exact), (len(blocked), len(exact))
-
-
-def test_blocked_variant_long_text_edits(spark):
-    """The edit→hamming step is the approximate link: b char edits flip
-    few majority votes on LONG texts. Pin the regime the tier is for —
-    small edits on medium/long texts must be found; identical texts are
-    always found (hamming 0)."""
-    from koby_s_ai_vector_db_spark.operators.fuzzy import fuzzy_edit_pairs_blocked
-
-    base = "the quick brown fox jumps over the lazy dog " * 6  # ~264 chars
-    rows = [
-        (1, base),
-        (2, base[:100] + "X" + base[101:]),          # 1 substitution
-        (3, base.replace("jumps", "vaults", 1)),     # ~5 char edits
-        (4, base),                                   # exact duplicate
-        (5, "completely different content about spark and parquet files"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    got = {
-        (r.doc_id_a, r.doc_id_b)
-        for r in fuzzy_edit_pairs_blocked(df, t=8).collect()
-    }
-    assert (1, 2) in got and (1, 4) in got and (2, 4) in got
-    assert (1, 3) in got
-    assert not any(5 in p for p in got)

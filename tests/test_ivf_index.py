@@ -93,3 +93,37 @@ def test_partition_pruning_in_plan(spark, index_path):
     dyn = ivf_index_search(spark, index_path, q2, k=K, n_probe=2, prune="dynamic")
     dplan = dyn._jdf.queryExecution().executedPlan().toString()
     assert "dynamicpruning" in dplan.lower()
+
+
+def test_probe_memo_keyed_on_n_probe(spark, index_path):
+    """A memoized static probe list must not be served to a search with
+    another n_probe: the second, all-lists search equals the unmemoized
+    one (a stale two-probe list set would drop most lists)."""
+    key = ("memo_n_probe_test", index_path)
+    ivf_index_search(
+        spark, index_path, _queries(spark, 8), k=K, n_probe=2, probe_memo_key=key
+    ).collect()
+    memoized = ivf_index_search(
+        spark, index_path, _queries(spark, 8), k=K, n_probe=N_LISTS,
+        probe_memo_key=key,
+    )
+    plain = ivf_index_search(spark, index_path, _queries(spark, 8), k=K, n_probe=N_LISTS)
+    assert sorted(map(tuple, memoized.collect())) == sorted(map(tuple, plain.collect()))
+
+
+def test_probe_memo_not_served_across_rebuild(spark, tmp_path):
+    """A same-path rebuild with other lists must re-probe: the memo key
+    carries the centroid files, so the four-list build's probe set (all
+    of 0..3) is not reused by the eight-list build at the same n_probe."""
+    emb = load_table(spark, SF_DIRS["t1"], "embeddings").select("vec_id", "embedding")
+    path, key = str(tmp_path / "ivf"), ("memo_rebuild_test", str(tmp_path))
+    build_ivf_index(emb, path, n_lists=4, max_iter=3)
+    ivf_index_search(
+        spark, path, _queries(spark, 8), k=K, n_probe=4, probe_memo_key=key
+    ).collect()
+    build_ivf_index(emb, path, n_lists=N_LISTS, max_iter=3)
+    memoized = ivf_index_search(
+        spark, path, _queries(spark, 8), k=K, n_probe=4, probe_memo_key=key
+    )
+    plain = ivf_index_search(spark, path, _queries(spark, 8), k=K, n_probe=4)
+    assert sorted(map(tuple, memoized.collect())) == sorted(map(tuple, plain.collect()))

@@ -81,6 +81,24 @@ def test_ivfpq_index_matches_inline_operator(spark, ivfpq_path, prune):
     assert _rows(idx) == _rows(inline)
 
 
+def test_ivfpq_probe_memo_keyed_on_n_probe(spark, ivfpq_path):
+    """A memoized static probe list must not be served to a search with
+    another n_probe: the all-lists search equals the unmemoized one."""
+    key = ("memo_n_probe_test", ivfpq_path)
+    ivfpq_index_search(
+        spark, ivfpq_path, _queries(spark), k=K, n_probe=N_PROBE,
+        shortlist=SHORTLIST, probe_memo_key=key,
+    ).collect()
+    memoized = ivfpq_index_search(
+        spark, ivfpq_path, _queries(spark), k=K, n_probe=10,
+        shortlist=SHORTLIST, probe_memo_key=key,
+    )
+    plain = ivfpq_index_search(
+        spark, ivfpq_path, _queries(spark), k=K, n_probe=10, shortlist=SHORTLIST
+    )
+    assert _rows(memoized) == _rows(plain)
+
+
 def test_index_files_are_zstd(pq_path, ivfpq_path):
     assert_all_zstd(pq_path)
     assert_all_zstd(ivfpq_path)

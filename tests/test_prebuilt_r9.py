@@ -8,7 +8,7 @@ edge cases the fixture data can't exercise."""
 
 from __future__ import annotations
 
-from tests.conftest import SF_DIRS
+from tests.conftest import SF_DIRS, _write_docs
 
 SF_DIR = SF_DIRS["t2"]
 
@@ -67,24 +67,6 @@ def test_tok_source_budget_invariants(spark):
 
 
 # --- synthetic-input edge cases (fixture data can't exercise these) ----------
-
-
-def _write_docs(tmpdir, rows):
-    """rows: list of (doc_id, text, lang, source)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    t = pa.table(
-        {
-            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-            "text": pa.array([r[1] for r in rows]),
-            "lang": pa.array([r[2] for r in rows]),
-            "source": pa.array([r[3] for r in rows]),
-            "n_chars": pa.array([len(r[1]) for r in rows], pa.int64()),
-        }
-    )
-    pq.write_table(t, f"{tmpdir}/documents.parquet")
-    return str(tmpdir)
 
 
 def test_tok_source_budget_matches_bruteforce(spark, tmp_path):
@@ -196,26 +178,6 @@ def test_a27_constant_values_zero_mad(spark, tmp_path):
     assert row["mad_q6"] == 0
     assert row["n_anomalies"] == 0
     assert row["max_dev_q6"] == 0
-
-
-def test_src_overlap_disjoint_sources_emit_no_pair(spark, tmp_path):
-    """Sources with zero shared 3-grams must be ABSENT from the matrix
-    (pairs exist only via the postings join), and identical sources must
-    score jaccard_q6 == 1_000_000."""
-    from koby_s_ai_vector_db_spark.queries.dedup_q import src_overlap_matrix
-
-    rows = [
-        (0, "alpha beta gamma delta", "en", "srcA"),
-        (1, "alpha beta gamma delta", "en", "srcB"),  # identical to srcA
-        (2, "one two three four five", "en", "srcC"),  # disjoint
-    ]
-    sf = _write_docs(tmp_path, rows)
-    out = {
-        (r["src_a"], r["src_b"]): r
-        for r in src_overlap_matrix(spark, sf).collect()
-    }
-    assert set(out) == {("srcA", "srcB")}
-    assert out[("srcA", "srcB")]["jaccard_q6"] == 1_000_000
 
 
 def test_graph_pagerank_matches_bruteforce(spark, tmp_path):

@@ -254,9 +254,9 @@ def test_norm_text_expr_idempotent(spark, texts_):
 
 # --- simhash blocking completeness --------------------------------------------
 # The claim simhash_near_dup_pairs rests on (operators/dedup.py): splitting a
-# ``bits``-bit signature into (max_hamming + 1) equal blocks loses NOTHING —
+# ``bits``-bit signature into (max_hamming + 2) equal blocks loses NOTHING —
 # any pair within Hamming distance max_hamming agrees on at least one whole
-# block (pigeonhole), so the blocked output must EQUAL the all-pairs brute
+# PAIR of blocks (pigeonhole), so the blocked output must EQUAL the all-pairs brute
 # force over the same signature table, not merely approximate it. Random
 # corpora alone almost never produce near-dups, so the strategy plants
 # exact copies and small token edits on top of random narrow-vocab docs;

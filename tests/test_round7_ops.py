@@ -8,14 +8,9 @@ import math
 
 from pyspark.sql import functions as F
 
-from koby_s_ai_vector_db_spark import registry
-from tests.conftest import SF_DIRS
+from tests.conftest import SF_DIRS, _q
 
 SF = SF_DIRS["t1"]
-
-
-def _q(name):
-    return registry.queries()[name]
 
 
 def test_quality_gate_keeps_top_80pct_per_lang(spark):
@@ -124,21 +119,6 @@ def test_pca_audit_invariants(spark):
         assert math.copysign(1.0, vals[m]) == 1.0, f"{m} is -0.0"
     assert vals["total_variance"] > 0
     assert 0 <= vals["mean_sq_norm"] <= vals["total_variance"] * 100
-
-
-def test_source_matrix_totals_match_pair_table(spark):
-    from koby_s_ai_vector_db_spark.queries.dedup_q import _docs_dd
-    from koby_s_ai_vector_db_spark.operators.dedup import minhash_near_dup_pairs
-
-    matrix = _q("dedup_source_matrix")(spark, SF).collect()
-    n_pairs_total = sum(r.n_pairs for r in matrix)
-    pairs = minhash_near_dup_pairs(
-        _docs_dd(spark, SF), threshold=0.5, cache_key=("docs_dd", SF)
-    ).count()
-    assert n_pairs_total == pairs > 0
-    for r in matrix:
-        assert r.source_a <= r.source_b
-        assert 0 < r.sum_jac_q6 <= r.n_pairs * 1_000_000
 
 
 def test_hard_negative_triplets(spark):

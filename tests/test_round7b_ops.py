@@ -7,14 +7,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from koby_s_ai_vector_db_spark import registry
-from tests.conftest import SF_DIRS
+from tests.conftest import SF_DIRS, _q
 
 SF = SF_DIRS["t1"]
-
-
-def _q(name):
-    return registry.queries()[name]
 
 
 # --- KMV theta sketch --------------------------------------------------------
@@ -167,49 +162,6 @@ def test_split_assign_shares_and_stability(spark):
 
 
 # --- normalization dedup & soft dedup -------------------------------------
-
-
-def test_dedup_normalized_folds_case_variants(spark):
-    """The planted uppercased+padded copies are invisible to exact
-    dedup but must fold here: at least one group absorbs >1 raw
-    variant, and every group has n_raw_variants <= n_copies."""
-    rows = _q("dedup_normalized")(spark, SF).collect()
-    assert rows
-    assert any(r.n_raw_variants > 1 for r in rows)
-    for r in rows:
-        assert 1 <= r.n_raw_variants <= r.n_copies, r
-
-
-def test_dedup_normalized_excludes_empty_canonical_form(spark):
-    """Symbol-only docs normalize to '' — they are NOT copies of each
-    other and must not fuse into one spurious group."""
-    import unittest.mock as _m
-
-    from koby_s_ai_vector_db_spark.queries import dedup_q
-
-    planted = spark.createDataFrame(
-        [(1, "!!!"), (2, "???"), (3, "Same text."), (4, "same TEXT")],
-        "doc_id long, text string",
-    )
-    with _m.patch.object(dedup_q, "_docs_nn", return_value=planted):
-        rows = dedup_q.dedup_normalized(spark, "ignored").collect()
-    assert len(rows) == 1 and rows[0].canonical_id == 3, rows
-    assert rows[0].n_copies == 2 and rows[0].n_raw_variants == 2
-
-
-def test_softdedup_weights_mass_conservation(spark):
-    """Each exact-dup group's weights sum to 1, so total weight equals
-    the number of DISTINCT texts; unique docs carry weight 1.0."""
-    import collections
-
-    rows = _q("softdedup_weights")(spark, SF).collect()
-    by_copies = collections.Counter(r.n_copies for r in rows)
-    n_groups = sum(cnt // k for k, cnt in by_copies.items())
-    assert abs(sum(r.weight for r in rows) - n_groups) < 1e-3
-    for r in rows:
-        assert abs(r.weight * r.n_copies - 1.0) < 1e-5, r
-        if r.n_copies == 1:
-            assert r.weight == 1.0 and r.eff_tokens == r.n_tokens, r
 
 
 # --- temperature mixing --------------------------------------------------

@@ -11,13 +11,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from koby_s_ai_vector_db_spark import registry
-from tests.conftest import SF_DIRS
+from tests.conftest import SF_DIRS, _q
 
 SF = SF_DIRS["t1"]
-
-
-def _q(name):
-    return registry.queries()[name]
 
 
 def test_source_matrix_builds_lazily(spark):
