@@ -4,13 +4,14 @@ Registered queries are plain functions `(spark, sf_dir) -> DataFrame`; a
 long-lived engine (bench harness, driver, notebook) calls them repeatedly.
 Anything a query build derives once — fixture-table plans, literal
 DataFrames, collected control values, spread() width probes, learned
-models, scratch indexes, persisted subtrees — lives in this store, so the
-first call builds it and every later call (including across the bench's
-warm-up and timed passes) returns the SAME object. A bare ``.persist()``
-inside a query builder would instead create a NEW cached DataFrame per
-call: the block manager accumulates dozens of copies of the same logical
-subtree and churns evictions (measured: a full warm-up pass over all 70
-queries made a later map-only query 10× slower purely from cache churn).
+models, scratch indexes, index search plans, persisted subtrees — lives
+in this store, so the first call builds it and every later call
+(including across the bench's warm-up and timed passes) returns the SAME
+object. A bare ``.persist()`` inside a query builder would instead create
+a NEW cached DataFrame per call: the block manager accumulates dozens of
+copies of the same logical subtree and churns evictions (measured: a full
+warm-up pass over all 70 queries made a later map-only query 10× slower
+purely from cache churn).
 
 Entries belong to one Spark application. A Python process has one active
 SparkContext, so the store holds one application at a time: the first
@@ -45,8 +46,12 @@ def memo(spark: SparkSession, key: Hashable, builder: Callable[[], T]) -> T:
     driver/py4j work per ``createDataFrame``) and for bounded collects
     that would otherwise run a Spark job on EVERY query build (the
     steady-state construction-is-action-free invariant,
-    tests/test_round9_ops.py). Thread-unsafe by design (queries run on
-    the driver thread); worst case a race builds twice."""
+    tests/test_round9_ops.py). The index sources (sources/ivf.py,
+    pq_index.py, text_index.py) collect their probe ids while building a
+    search, so a caller with a fixed query set over an index it never
+    rebuilds memoizes the returned search plan, keyed on its own name and
+    the index path. Thread-unsafe by design (queries run on the driver
+    thread); worst case a race builds twice."""
     global _app_id
     app = spark.sparkContext.applicationId
     if app != _app_id:

@@ -97,8 +97,11 @@ def bm25_rank_idx_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koby_s_ai_vector_db_spark.sources.text_index import search_text_index
 
     path = text_index_path(spark, sf_dir)
-    return search_text_index(
-        spark, path, bm25_queries_df(spark), k=BM25_K, probe_memo_key=(path,)
+    # A fixed query set over a never-rebuilt scratch index: memoize the
+    # plan, so a steady-state build runs no bucket collect.
+    return memo(
+        spark, ("bm25_rank_idx", path),
+        lambda: search_text_index(spark, path, bm25_queries_df(spark), k=BM25_K),
     )
 
 

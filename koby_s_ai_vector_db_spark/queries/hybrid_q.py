@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from koby_s_ai_vector_db_spark.functions.caching import memo
 from koby_s_ai_vector_db_spark.functions.vectors import sql_normalize
 from koby_s_ai_vector_db_spark.operators.corpus import bm25_oracle_sql
 from koby_s_ai_vector_db_spark.operators.similarity import topk_cosine
@@ -93,8 +94,9 @@ def hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     path = text_index_path(spark, sf_dir)
-    lex = search_text_index(
-        spark, path, qtext, k=POOL, probe_memo_key=(path, "hybrid", POOL)
+    lex = memo(  # fixed query set: memoized like bm25_rank_idx
+        spark, ("hybrid_rrf", path),
+        lambda: search_text_index(spark, path, qtext, k=POOL),
     ).select(
         "query_id", F.col("doc_id").alias("id"), F.col("rank").alias("r_lex")
     )

@@ -53,31 +53,32 @@ def register(name: str, oracle: str | None = None):
 # Window history: the round-11 window was the 48 r08-displaced names
 # plus the two pre-earned prebuilds (tok_fertility_report,
 # rel_bloom_semijoin); CORRECTNESS_r11 recorded all 50 green. The
-# current (round-12) window is documented on _PRIORITY below.
+# current (round-15) window is documented on _PRIORITY below.
 WINDOW = 50
 
 _PRIORITY: list[str] = [
-    # Round-14 window: with CORRECTNESS_r13 landed (committed in 3f6858f),
-    # the union checked this round is r12 ∪ r13 (100 distinct names),
-    # which displaces the entire r11 record at once. These 50 names are
-    # EXACTLY the CORRECTNESS_r11 record — all MANDATORY, zero free slots
-    # (the round-13 rotation forcing function listed the same 50; VERDICT
-    # r13 item 10 ordered this exact rotation).
-    "a10_recent_users", "a11_active_sessions", "a1_doc_summary",
-    "a25_kmv_synopsis", "a2_contribution_analytics", "a3_top_rated",
-    "a4_recent_qa", "a5_sliding_live_users", "a6_session_stats",
-    "a6_session_windows", "a9_pending_count", "curate_corpus",
-    "dedup_groups", "dedup_minhash_lsh", "emb_decontaminate",
-    "emb_quality_report", "knn_self_join", "m4_terminate_session",
-    "m5_gc_sessions", "m6_flip_catalog_status", "m7_sessions_from_events",
-    "pack_bestfit_audit", "q15_image_search", "q1_topk_cosine", "q2_ann",
-    "q3_contribution_search", "q4_keyword_search", "q5_ilike_pagination",
-    "q6_session_search", "rel_bloom_semijoin", "rel_pricing_summary",
-    "rel_revenue_by_nation", "rel_top_parts_by_brand", "rollup_events",
-    "s1_scan", "s2_extract_join", "s3_extract_pages", "s6_upload_catalog",
-    "s8_ingest", "s9_upsert_users", "t2_embed", "t3_normalize", "t5_preview",
-    "t6_validate", "t7_sanitize", "ta_lang_id", "ta_quality_score",
-    "tok_fertility_report", "u2_nokey_answer", "u4_image_answer",
+    # Round-15 window: the r12 window that VERDICT r14 Next #3 forces. With
+    # CORRECTNESS_r14 committed, the union checked is r13 ∪ r14, which
+    # displaces the whole r12 record at once. These 50 names are EXACTLY
+    # the CORRECTNESS_r12 record, none of them in that union, so all are
+    # MANDATORY with zero free slots. graph_pagerank (changed in round 14) therefore keeps
+    # only its r13 row; it cannot jump the queue without pushing a
+    # mandatory name past the two-record bound.
+    "a14_value_quantiles", "a15_funnel", "a16_retention", "a17_hll_distinct",
+    "a18_heavy_hitters", "a19_click_attribution", "a21_zorder_stats",
+    "a26_props_profile", "a27_value_mad", "asof_enrich_events", "bm25_rank",
+    "bm25_rank_idx", "bpe_audit", "bpe_encode", "bpe_train",
+    "ccnet_ppl_buckets", "curate_corpus_bm25", "dedup_incremental",
+    "dedup_simhash", "dedup_sketch_stream", "dedup_substring",
+    "dedup_tfidf_cosine", "dsir_sample", "dsir_score", "emb_label_centroids",
+    "emb_pca_project", "hybrid_rrf", "m11_contamination_diff",
+    "m8_snapshot_diff", "m9_snapshot_drift", "ngram_contamination_both",
+    "pack_sequences", "q12_context_assembly", "q16_mmr_rerank",
+    "q2_ann_ivf_idx", "q2_ann_ivfpq_idx", "q2_ann_pq_idx",
+    "range_session_assign", "rel_shipping_priority", "sample_fixed_k",
+    "sample_weighted_k", "src_overlap_matrix", "stratified_sample",
+    "t1_chunker", "ta_gopher_repetition", "ta_pii_scrub", "tok_source_budget",
+    "ts_gapfill", "vocab_stats", "vocab_zipf",
 ]
 
 

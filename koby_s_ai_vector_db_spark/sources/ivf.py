@@ -14,12 +14,10 @@ Spark-first, the index IS a storage layout:
                  centroid sidecar table — the analogue of the .bin/.json
                  pair, but splittable, schema'd, and readable by any
                  engine.
-  search (often) rank centroids per query (broadcast, tiny), then scan
-                 ONLY the probed list partitions: either Spark's dynamic
-                 partition pruning (the broadcast probe join injects a
-                 partition filter at runtime) or an explicit static IN
-                 filter from the collected probe set (bounded by
-                 |queries| x n_probe ids — NOT a data collect).
+  search (often) rank centroids per query (broadcast, tiny), collect the
+                 probed list ids (bounded by |queries| x n_probe ints —
+                 NOT a data collect) and scan ONLY those list partitions
+                 through a static `list IN (...)` partition filter.
 
 At 100 TB the win is exactly the pgvector one: a probe touches
 n_probe/n_lists of the corpus, and the partition filter means those bytes
@@ -99,26 +97,18 @@ def ivf_index_search(
     query_vec_col: str = "query_vec",
     corpus_id: str = "vec_id",
     vec_col: str = "embedding",
-    prune: str = "static",
     round_to: int | None = 6,
-    probe_memo_key=None,
 ) -> DataFrame:
     """Probe a persisted IVF index: top-`n_probe` centroid lists per query,
     exact rank-then-filter cosine search inside probed lists only
     (the reference's ivfflat query, supabase_schema.sql:144-171).
 
-    prune="static"  collect the probed list ids (a bounded id set,
-                    <= |queries| x n_probe ints — not a data collect) and
-                    push `list IN (...)` into the scan: guaranteed
-                    PartitionFilters, partitions never read.
-    prune="dynamic" no collect; the broadcast probe join lets Spark inject
-                    a dynamic-partition-pruning filter at runtime. Same
-                    I/O win, fully lazy — preferred inside larger plans
-                    where an eager collect would split the job.
+    The probed list ids are collected (a bounded id set, <= |queries| x
+    n_probe ints — not a data collect) and pushed into the scan as
+    `list IN (...)`: unprobed partitions are never read. Building the
+    search therefore runs one small job; callers with a fixed query set
+    memoize the returned plan (functions/caching.py).
     Returns (query_id, corpus_id, sim, rank)."""
-    if prune not in ("static", "dynamic"):
-        raise ValueError(f"prune must be 'static' or 'dynamic', got {prune!r}")
-
     centroids = spark.read.parquet(f"{path}/{CENTROIDS_SUBDIR}")
     q = queries.withColumn(query_vec_col, l2_normalize(query_vec_col))
 
@@ -131,30 +121,10 @@ def ivf_index_search(
         .select(query_id, query_vec_col, "list")
     )
 
-    lists = spark.read.parquet(f"{path}/{LISTS_SUBDIR}")
-    if prune == "static":
-        # Bounded control collect; callers with a FIXED query set pass
-        # probe_memo_key so it runs once per session, not per query build
-        # (the construction-is-action-free invariant). The memo key also
-        # carries n_probe and the centroid files, so another n_probe or a
-        # same-path rebuild re-probes instead of reusing a stale list set.
-        def _probed():
-            return sorted(
-                {r["list"] for r in probes.select("list").distinct().collect()}
-            )
-
-        if probe_memo_key is None:
-            probed = _probed()
-        else:
-            from koby_s_ai_vector_db_spark.functions.caching import memo
-
-            probed = memo(
-                spark,
-                ("ivf_probed", probe_memo_key, n_probe,
-                 tuple(sorted(centroids.inputFiles()))),
-                _probed,
-            )
-        lists = lists.filter(F.col("list").isin(probed))
+    probed = sorted(r["list"] for r in probes.select("list").distinct().collect())
+    lists = spark.read.parquet(f"{path}/{LISTS_SUBDIR}").filter(
+        F.col("list").isin(probed)
+    )
     scored = lists.join(F.broadcast(probes), on="list").withColumn(
         "sim", dot(vec_col, query_vec_col)
     )

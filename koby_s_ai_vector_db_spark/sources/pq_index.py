@@ -19,8 +19,9 @@ same stance as the IVF index (sources/ivf.py):
                   COLUMN pruning means the 256-byte vec bytes are never
                   read during the hot scan — the 64× smaller read is now
                   real I/O, not a projection after a full-width read.
-                  IVFPQ adds PARTITION pruning: unprobed lists' files are
-                  never opened (same static/dynamic choice as ivf.py).
+                  IVFPQ adds PARTITION pruning: the probed list ids are
+                  collected and pushed into the scan as ``list IN (...)``,
+                  so unprobed lists' files are never opened (as ivf.py).
                   The exact re-rank then re-reads ``data`` for the
                   |queries|·shortlist shortlist rows only, selecting
                   (id, vec).
@@ -36,8 +37,8 @@ ProductQuantizer training) drops in without touching the search path.
 
 Checked by tests/test_pq_index.py: search over the persisted index is
 row-identical to the inline `pq_topk`/`ivfpq_topk` operators (same
-codebook, same tie-breaks), and the ADC scan's parquet schema/partition
-filters are plan-asserted.
+codebook, same tie-breaks), the ADC scan's parquet schema is
+plan-asserted, and its partitions read are counted from scan metrics.
 """
 
 from __future__ import annotations
@@ -60,12 +61,20 @@ CENTROIDS_SUBDIR = "centroids"
 TOMBSTONES_SUBDIR = "tombstones"
 
 
-def _tombstones(spark: SparkSession, path: str) -> DataFrame | None:
-    """The deleted-id table, or None if nothing was ever deleted."""
+def read_tombstones(spark: SparkSession, path: str) -> DataFrame | None:
+    """The deleted-id table of the PQ or text index at ``path``, or None
+    if nothing was ever deleted. The subdir exists only after a delete
+    wrote ids (compaction removes it), so only its absence means "no
+    deletes": any other read error propagates rather than silently
+    bringing every deleted id back into search results."""
+    from pyspark.errors import AnalysisException
+
     try:
         return spark.read.parquet(f"{path}/{TOMBSTONES_SUBDIR}")
-    except Exception:
-        return None
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
 
 
 def _read_data(spark: SparkSession, path: str, corpus_id: str) -> DataFrame:
@@ -73,7 +82,7 @@ def _read_data(spark: SparkSession, path: str, corpus_id: str) -> DataFrame:
     `remove_ids` semantics — centroids and codebook stay frozen; a
     deleted vector simply stops being a candidate)."""
     data = spark.read.parquet(f"{path}/{DATA_SUBDIR}")
-    tomb = _tombstones(spark, path)
+    tomb = read_tombstones(spark, path)
     if tomb is not None:
         data = data.join(
             F.broadcast(tomb.withColumnRenamed("id", corpus_id)),
@@ -97,7 +106,7 @@ def delete_from_index(
     `compact_index` reclaims the rows physically. Repeated deletes are
     idempotent. Returns {"n_deleted", "path"}."""
     del_ids = ids.select(F.col(corpus_id).alias("id")).distinct()
-    prior = _tombstones(spark, path)
+    prior = read_tombstones(spark, path)
     if prior is not None:
         del_ids = del_ids.join(prior, "id", "left_anti")
     # Only ids actually in the index become tombstones (bounded table).
@@ -124,7 +133,7 @@ def compact_index(
     import shutil
 
     data = spark.read.parquet(f"{path}/{DATA_SUBDIR}")
-    tomb = _tombstones(spark, path)
+    tomb = read_tombstones(spark, path)
     if tomb is None:
         return {"n_vectors": data.count(), "path": path}
     live = data.join(
@@ -393,19 +402,13 @@ def ivfpq_index_search(
     corpus_id: str = "vec_id",
     query_id: str = "query_id",
     query_vec_col: str = "query_vec",
-    prune: str = "static",
     round_to: int | None = 6,
-    probe_memo_key=None,
 ) -> DataFrame:
     """Search an IVF+PQ index: centroid probe → PARTITION-pruned,
     column-pruned ADC scan of probed lists' codes → shortlist → exact
-    re-rank. ``prune`` as in sources/ivf.py: "static" collects the bounded
-    probe-id set and pushes ``list IN (...)`` into the scan (guaranteed
-    PartitionFilters); "dynamic" keeps the plan lazy and relies on
-    dynamic partition pruning from the broadcast probe join."""
-    if prune not in ("static", "dynamic"):
-        raise ValueError(f"prune must be 'static' or 'dynamic', got {prune!r}")
-
+    re-rank. As in sources/ivf.py, the bounded probe-id set is collected
+    and pushed into the scan as ``list IN (...)``; callers with a fixed
+    query set memoize the returned plan."""
     cbdf = spark.read.parquet(f"{path}/{CODEBOOK_SUBDIR}")
     centroids = spark.read.parquet(f"{path}/{CENTROIDS_SUBDIR}")
     data = _read_data(spark, path, corpus_id)
@@ -420,29 +423,8 @@ def ivfpq_index_search(
         .select(query_id, "list")
     )
 
-    scan = data
-    if prune == "static":
-        # Bounded control collect; callers with a FIXED query set pass
-        # probe_memo_key so it runs once per session, not per query build
-        # (the construction-is-action-free invariant). Keyed like
-        # sources/ivf.py: n_probe and the centroid files ride along.
-        def _probed():
-            return sorted(
-                {r["list"] for r in probes.select("list").distinct().collect()}
-            )
-
-        if probe_memo_key is None:
-            probed = _probed()
-        else:
-            from koby_s_ai_vector_db_spark.functions.caching import memo
-
-            probed = memo(
-                spark,
-                ("ivfpq_probed", probe_memo_key, n_probe,
-                 tuple(sorted(centroids.inputFiles()))),
-                _probed,
-            )
-        scan = scan.filter(F.col("list").isin(probed))
+    probed = sorted(r["list"] for r in probes.select("list").distinct().collect())
+    scan = data.filter(F.col("list").isin(probed))
 
     dtab = q.join(F.broadcast(cbdf)).select(
         query_id, pq_distance_table("qv").alias("dtab")

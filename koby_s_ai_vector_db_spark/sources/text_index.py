@@ -22,7 +22,8 @@ indexes (sources/ivf.py, sources/pq_index.py):
                   373 KB in unsorted shuffle order;
                   ``{path}/terms``: (term, df) with the same bucketing;
                   ``{path}/stats``: one row (n_docs, avgdl).
-  search (often)  hash the query's terms with the same function → the
+  search (often)  hash the query's terms with the same function, collect
+                  their bucket ids and filter both scans on them → the
                   probe touches only those buckets' partitions (files of
                   unprobed buckets are never opened); query terms and
                   their df are broadcast; the only full shuffle is the
@@ -50,28 +51,22 @@ from koby_s_ai_vector_db_spark.operators.corpus import (
     term_postings,
 )
 from koby_s_ai_vector_db_spark.operators.dedup import words_expr
+from koby_s_ai_vector_db_spark.sources.pq_index import (
+    TOMBSTONES_SUBDIR,
+    read_tombstones,
+)
 
 POSTINGS_SUBDIR = "postings"
 TERMS_SUBDIR = "terms"
 STATS_SUBDIR = "stats"
-TOMBSTONES_SUBDIR = "tombstones"
 DEFAULT_BUCKETS = 64
 
 
-def _tombstones(spark: SparkSession, path: str) -> DataFrame | None:
-    """The (id, up_to_seg) table of deletions, or None if nothing was
-    ever deleted (the subdir only exists after a delete). A row hides an
-    id's postings in generations <= up_to_seg — generations written
-    AFTER the delete (an upsert's re-add) are visible again."""
-    try:
-        return spark.read.parquet(f"{path}/{TOMBSTONES_SUBDIR}")
-    except Exception:
-        return None
-
-
 def _live(postings: DataFrame, tomb: DataFrame | None) -> DataFrame:
-    """Postings minus tombstoned generations: keep a row unless a
-    tombstone for its id covers its segment."""
+    """Postings minus tombstoned generations. ``tomb`` is the index's
+    (id, up_to_seg) deletion table (`read_tombstones`): a row hides an
+    id's postings in generations <= up_to_seg, so generations written
+    AFTER the delete (an upsert's re-add) are visible again."""
     if tomb is None:
         return postings
     t = tomb.groupBy("id").agg(F.max("up_to_seg").alias("up_to_seg"))
@@ -239,7 +234,7 @@ def delete_from_text_index(
     # so repeated deletes never double-subtract; an id re-added since an
     # earlier delete has live rows again and is deleted afresh.
     postings = spark.read.parquet(f"{path}/{POSTINGS_SUBDIR}")
-    live = _live(postings, _tombstones(spark, path))
+    live = _live(postings, read_tombstones(spark, path))
     deleted_post = live.join(F.broadcast(del_ids), "id").persist()
     try:
         n_deleted = deleted_post.select("id").distinct().count()
@@ -285,21 +280,16 @@ def search_text_index(
     k1: float = BM25_K1,
     b: float = BM25_B,
     round_to: int = 6,
-    prune: str = "static",
-    probe_memo_key=None,
 ) -> DataFrame:
     """BM25 top-k per query over the persisted index. The bucket count is
     read from the index's stats sidecar (it defines the partition layout —
     never caller-supplied at search time).
 
-    ``prune="static"`` collects the query terms' bucket ids (bounded by the
-    number of distinct query terms — not a data collect) and pushes
-    ``bucket IN (...)`` into both scans: partitions of unprobed buckets are
-    never opened. ``prune="dynamic"`` stays lazy and relies on the
-    broadcast join for runtime partition pruning."""
-    if prune not in ("static", "dynamic"):
-        raise ValueError(f"prune must be 'static' or 'dynamic', got {prune!r}")
-
+    The query terms' bucket ids are collected (bounded by the number of
+    distinct query terms — not a data collect) and pushed into the
+    postings and terms scans as ``bucket IN (...)``: partitions of
+    unprobed buckets are never opened. Callers with a fixed query set
+    memoize the returned plan (functions/caching.py)."""
     seg_stats = spark.read.parquet(f"{path}/{STATS_SUBDIR}")
     if "n_buckets" not in seg_stats.columns:
         raise ValueError(
@@ -328,33 +318,19 @@ def search_text_index(
         F.explode(F.array_distinct(words_expr(query_text))).alias("term"),
     ).withColumn("bucket", _bucket("term", n_buckets))
 
-    postings = spark.read.parquet(f"{path}/{POSTINGS_SUBDIR}")
-    terms = spark.read.parquet(f"{path}/{TERMS_SUBDIR}")
-    if prune == "static":
-        # Bounded control collect (distinct query-term buckets). Callers
-        # with a FIXED query set pass probe_memo_key so the collect runs
-        # once per session instead of on every query build (the
-        # construction-is-action-free invariant); ad-hoc callers leave it
-        # None and pay the collect per call.
-        def _buckets():
-            return sorted(
-                {r["bucket"] for r in qterms.select("bucket").distinct().collect()}
-            )
-
-        if probe_memo_key is None:
-            buckets = _buckets()
-        else:
-            # n_buckets joins the key: the same query set hashes to other
-            # buckets once the path is rebuilt with another bucket count.
-            buckets = memo(
-                spark, ("textidx_buckets", probe_memo_key, n_buckets), _buckets
-            )
-        postings = postings.filter(F.col("bucket").isin(buckets))
-        terms = terms.filter(F.col("bucket").isin(buckets))
+    buckets = sorted(
+        r["bucket"] for r in qterms.select("bucket").distinct().collect()
+    )
+    postings = spark.read.parquet(f"{path}/{POSTINGS_SUBDIR}").filter(
+        F.col("bucket").isin(buckets)
+    )
+    terms = spark.read.parquet(f"{path}/{TERMS_SUBDIR}").filter(
+        F.col("bucket").isin(buckets)
+    )
     # Deleted docs: the generation-scoped tombstone filter hides their
     # postings; the df/N/avgdl corrections already arrived through the
     # negative segments' additive sums above (delete_from_text_index).
-    postings = _live(postings, _tombstones(spark, path))
+    postings = _live(postings, read_tombstones(spark, path))
 
     # df per query term, summed across segments: both sides of this join
     # are tiny after pruning; the result (≤ distinct query terms rows) is
@@ -433,7 +409,7 @@ def compact_text_index(spark: SparkSession, path: str) -> dict:
     # every surviving row restarts at generation 0.
     postings = _live(
         spark.read.parquet(f"{path}/{POSTINGS_SUBDIR}"),
-        _tombstones(spark, path),
+        read_tombstones(spark, path),
     ).withColumn("seg", F.lit(0).cast("int"))
 
     tmp = f"{path}/.compact_tmp"

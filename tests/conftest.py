@@ -131,3 +131,37 @@ def assert_all_zstd(path: str) -> None:
             for c in range(md.num_columns)
         }
         assert codecs <= {"ZSTD"}, (f, codecs)
+
+
+def partitions_read(df) -> dict[tuple[str, tuple[str, ...]], int]:
+    """Collect ``df``, then count the partitions each partitioned parquet
+    scan actually read, from the scans' ``numPartitions`` driver metric in
+    the AQE *final* plan. Keys are (scan root dir, sorted read columns):
+    one directory can be scanned twice with different columns (the
+    IVF+PQ ADC scan reads codes, its re-rank fetch reads vectors).
+
+    Checking pruning this way, not by plan strings, matters: under AQE,
+    ``executedPlan().toString()`` also prints the initial plan, whose
+    filters may never reach the scan that runs."""
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    def walk(node, out):
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan(), out)
+        if name.endswith("QueryStageExec"):
+            return walk(node.plan(), out)
+        metrics = node.metrics()
+        if name == "FileSourceScanExec" and metrics.contains("numPartitions"):
+            root = node.relation().location().rootPaths().head().toUri().getPath()
+            cols = tuple(sorted(a.name() for a in seq(node.output())))
+            n = metrics.apply("numPartitions").value()
+            out[(root, cols)] = max(n, out.get((root, cols), 0))
+        for child in seq(node.children()):
+            walk(child, out)
+        return out
+
+    df.collect()
+    return walk(df._jdf.queryExecution().executedPlan(), {})

@@ -121,6 +121,34 @@ class TestTextIndexDelete:
         }
         assert not any(i % 4 == 0 for i in ids)
 
+    def test_unreadable_tombstones_fail_search(self, spark, tmp_path):
+        """Only a missing tombstones dir means "nothing deleted". A dir
+        Spark cannot read (a failed write's leftover ``_temporary/``, a
+        corrupt file) must fail the search, not bring every deleted id
+        back into the results."""
+        import os
+
+        import pytest
+        from py4j.protocol import Py4JJavaError
+        from pyspark.errors import AnalysisException
+
+        from koby_s_ai_vector_db_spark.sources.text_index import (
+            TOMBSTONES_SUBDIR,
+            build_text_index,
+            search_text_index,
+        )
+
+        path = str(tmp_path / "idx")
+        build_text_index(load_table(spark, SF_DIR, "documents"), path)
+        tomb = f"{path}/{TOMBSTONES_SUBDIR}"
+        os.makedirs(f"{tomb}/_temporary")
+        with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
+            search_text_index(spark, path, self._queries(spark)).collect()
+        with open(f"{tomb}/part-00000.parquet", "wb") as fh:
+            fh.write(b"not a parquet file")
+        with pytest.raises(Py4JJavaError):
+            search_text_index(spark, path, self._queries(spark)).collect()
+
     def test_delete_then_append_matches_fresh_build(self, spark, tmp_path):
         from koby_s_ai_vector_db_spark.sources.text_index import (
             append_to_text_index,

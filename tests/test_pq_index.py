@@ -1,7 +1,8 @@
 """Persisted PQ / IVF+PQ index: build-once search must be row-identical to
 the inline operators (same codebook, same tie-breaks), and the search plans
 must show the two prunings the layout exists for — column pruning on the
-ADC scan (codes read, vectors not) and partition pruning on probed lists."""
+ADC scan (codes read, vectors not) and partition pruning on probed lists
+(counted as partitions read)."""
 
 from __future__ import annotations
 
@@ -17,12 +18,13 @@ from koby_s_ai_vector_db_spark.sources.pq_index import (
     pq_index_search,
 )
 from koby_s_ai_vector_db_spark.sources.tables import load_table
-from tests.conftest import SF_DIRS, assert_all_zstd
+from tests.conftest import SF_DIRS, assert_all_zstd, partitions_read
 
 SF_DIR = SF_DIRS["t2"]
 K = 10
 SHORTLIST = 64
 N_PROBE = 2
+N_LISTS = 10  # the fixture's label lists
 
 
 def _emb(spark):
@@ -53,7 +55,7 @@ def ivfpq_path(spark, tmp_path_factory):
     info = build_ivfpq_index(
         _emb(spark).select("vec_id", "label", "embedding"), path, list_col="label"
     )
-    assert info["n_lists"] == 10
+    assert info["n_lists"] == N_LISTS
     return path
 
 
@@ -68,35 +70,16 @@ def test_pq_index_matches_inline_operator(spark, pq_path):
     assert _rows(idx) == _rows(inline)
 
 
-@pytest.mark.parametrize("prune", ["static", "dynamic"])
-def test_ivfpq_index_matches_inline_operator(spark, ivfpq_path, prune):
+def test_ivfpq_index_matches_inline_operator(spark, ivfpq_path):
     idx = ivfpq_index_search(
         spark, ivfpq_path, _queries(spark),
-        k=K, n_probe=N_PROBE, shortlist=SHORTLIST, prune=prune,
+        k=K, n_probe=N_PROBE, shortlist=SHORTLIST,
     )
     inline = ivfpq_topk(
         _emb(spark).select("vec_id", "label", "embedding"), _queries(spark),
         k=K, n_probe_labels=N_PROBE, shortlist=SHORTLIST,
     )
     assert _rows(idx) == _rows(inline)
-
-
-def test_ivfpq_probe_memo_keyed_on_n_probe(spark, ivfpq_path):
-    """A memoized static probe list must not be served to a search with
-    another n_probe: the all-lists search equals the unmemoized one."""
-    key = ("memo_n_probe_test", ivfpq_path)
-    ivfpq_index_search(
-        spark, ivfpq_path, _queries(spark), k=K, n_probe=N_PROBE,
-        shortlist=SHORTLIST, probe_memo_key=key,
-    ).collect()
-    memoized = ivfpq_index_search(
-        spark, ivfpq_path, _queries(spark), k=K, n_probe=10,
-        shortlist=SHORTLIST, probe_memo_key=key,
-    )
-    plain = ivfpq_index_search(
-        spark, ivfpq_path, _queries(spark), k=K, n_probe=10, shortlist=SHORTLIST
-    )
-    assert _rows(memoized) == _rows(plain)
 
 
 def test_index_files_are_zstd(pq_path, ivfpq_path):
@@ -121,18 +104,18 @@ def test_adc_scan_prunes_vector_column(spark, pq_path):
 
 
 def test_ivfpq_static_prune_reaches_partition_filters(spark, ivfpq_path):
-    """Static probe must land as PartitionFilters on the codes scan:
-    unprobed list partitions are never opened, not filtered post-read."""
+    """The probe must prune the ADC codes scan: unprobed list partitions
+    are never opened, not filtered post-read. The re-rank fetch by id
+    reads every partition (shortlist rows only) and is not counted."""
     df = ivfpq_index_search(
-        spark, ivfpq_path, _queries(spark),
-        k=K, n_probe=N_PROBE, shortlist=SHORTLIST, prune="static",
+        spark, ivfpq_path, _queries(spark), k=K, n_probe=N_PROBE, shortlist=SHORTLIST
     )
-    plan, scans = _scan_lines(df)
-    pruned = [
-        ln for ln in scans
-        if "codes" in ln and "PartitionFilters" in ln and "list" in ln.split("PartitionFilters")[1]
+    parts = partitions_read(df)
+    adc = [
+        n for (root, cols), n in parts.items()
+        if root.endswith("/data") and "codes" in cols
     ]
-    assert any("IN (" in ln.split("PartitionFilters")[1] or "in(" in ln.split("PartitionFilters")[1].lower() for ln in pruned), plan
+    assert adc and max(adc) < N_LISTS, parts
 
 
 def test_incremental_append_equals_full_build(spark, tmp_path_factory):

@@ -1,6 +1,6 @@
 """Persisted inverted text index: search must be row-identical to the
-in-memory bm25_rank operator, and the probe must reach the parquet scans as
-partition filters on the term-hash buckets."""
+in-memory bm25_rank operator, and the probe must prune the parquet scans to
+the query terms' hash buckets (counted as partitions read)."""
 
 from __future__ import annotations
 
@@ -8,13 +8,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from koby_s_ai_vector_db_spark.operators.corpus import bm25_rank
+from koby_s_ai_vector_db_spark.operators.dedup import words_expr
 from koby_s_ai_vector_db_spark.queries.corpus_q import BM25_QUERIES
 from koby_s_ai_vector_db_spark.sources.text_index import (
+    _bucket,
     build_text_index,
     search_text_index,
 )
 from koby_s_ai_vector_db_spark.sources.tables import load_table
-from tests.conftest import SF_DIRS, assert_all_zstd
+from tests.conftest import SF_DIRS, assert_all_zstd, partitions_read
 
 SF_DIR = SF_DIRS["t2"]
 
@@ -33,14 +35,13 @@ def idx_path(spark, tmp_path_factory):
     return path
 
 
-@pytest.mark.parametrize("prune", ["static", "dynamic"])
 @pytest.mark.parametrize("k", [10, 50])
-def test_index_search_matches_inline_bm25(spark, idx_path, prune, k):
+def test_index_search_matches_inline_bm25(spark, idx_path, k):
     # k=50 is hybrid_rrf's POOL depth: its BM25 arm reads the persisted
     # index while its oracle inlines bm25_rank, so a depth-11..50
     # divergence would surface only as an opaque hybrid_rrf parity
     # failure (ADVICE r10) — pin the equivalence at the depth relied on.
-    idx = search_text_index(spark, idx_path, _queries(spark), k=k, prune=prune)
+    idx = search_text_index(spark, idx_path, _queries(spark), k=k)
     inline = bm25_rank(
         load_table(spark, SF_DIR, "documents"), _queries(spark), k=k
     )
@@ -48,17 +49,22 @@ def test_index_search_matches_inline_bm25(spark, idx_path, prune, k):
 
 
 def test_static_prune_reaches_partition_filters(spark, idx_path):
-    """bucket IN (...) must land as PartitionFilters on the postings scan —
-    unprobed buckets' files are never opened."""
-    df = search_text_index(spark, idx_path, _queries(spark), k=10, prune="static")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
-    pruned = [
-        ln for ln in scans
-        if "PartitionFilters" in ln and "bucket" in ln.split("PartitionFilters")[1]
-        and "IN" in ln.split("PartitionFilters")[1].upper()
-    ]
-    assert pruned, plan
+    """The probe must prune both scans: postings and terms read at most
+    one partition per distinct query-term bucket — unprobed buckets'
+    files are never opened."""
+    q = _queries(spark)
+    n_buckets = spark.read.parquet(f"{idx_path}/stats").head()["n_buckets"]
+    buckets = (
+        q.select(F.explode(F.array_distinct(words_expr("query_text"))).alias("t"))
+        .select(_bucket("t", n_buckets))
+        .distinct()
+        .count()
+    )
+    assert buckets < n_buckets
+    parts = partitions_read(search_text_index(spark, idx_path, q, k=10))
+    for sub in ("postings", "terms"):
+        read = [n for (root, _), n in parts.items() if root.endswith(f"/{sub}")]
+        assert read and max(read) <= buckets, (sub, parts)
 
 
 def test_bucket_count_read_from_sidecar(spark, tmp_path_factory):
@@ -95,10 +101,7 @@ def test_incremental_append_equals_full_build(spark, tmp_path_factory):
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
-@pytest.mark.parametrize("probe_memo_key", [None, ("rebuilt",)])
-def test_rebuild_with_other_bucket_count_not_served_stale(
-    spark, tmp_path_factory, probe_memo_key
-):
+def test_rebuild_with_other_bucket_count_not_served_stale(spark, tmp_path_factory):
     """Rebuilding a path with another n_buckets in the same session must
     not leave search hashing query terms with the old count — that opens
     the wrong partitions and silently drops rows. The search after the
@@ -109,9 +112,7 @@ def test_rebuild_with_other_bucket_count_not_served_stale(
     docs = load_table(spark, SF_DIRS["t1"], "documents")
 
     def search():
-        df = search_text_index(
-            spark, path, _queries(spark), k=5, probe_memo_key=probe_memo_key
-        )
+        df = search_text_index(spark, path, _queries(spark), k=5)
         return sorted(map(tuple, df.collect()))
 
     build_text_index(docs, path, n_buckets=16)
