@@ -56,6 +56,7 @@ DIM = 64  # fixture embedding dimensionality
 M = 8  # subspaces
 SUB = DIM // M  # dims per subspace
 KS = 16  # codes per subspace (4-bit codes)
+CODEBOOK_SCHEMA = "cb array<array<array<double>>>"  # cb[s][c]: code c of subspace s
 
 
 def _md5_u32(s: str) -> int:
@@ -93,9 +94,7 @@ def codebook_df(spark) -> DataFrame:
     run on the same 2k-row scan. It is also the honest 100 TB shape: FAISS
     ships trained codebooks to workers as broadcast state, not as query
     text."""
-    return spark.createDataFrame(
-        [(pq_codebook(),)], "cb array<array<array<double>>>"
-    )
+    return spark.createDataFrame([(pq_codebook(),)], CODEBOOK_SCHEMA)
 
 
 def cb_literal_duckdb() -> str:

@@ -10,35 +10,46 @@ IndexIVFPQ (the production successor of the reference's IndexFlatIP,
 core/utils.py:203-214). Spark-first, the index IS a storage layout — the
 same stance as the IVF index (sources/ivf.py):
 
-  build (once)    encode vectors to M 4-bit codes; write ONE parquet table
-                  ``{path}/data`` with columns (id, codes, vec) — IVFPQ
-                  variant PARTITIONED BY coarse list id — plus tiny
-                  ``codebook`` (and ``centroids``) sidecars.
+  build (once)    encode the L2-normalized vectors to M 4-bit codes; write
+                  ONE parquet table ``{path}/data`` with columns (id,
+                  codes, vec) — IVFPQ variant PARTITIONED BY coarse list
+                  id — plus tiny ``codebook`` (and ``centroids``)
+                  sidecars. ``vec`` is the input vector AS GIVEN, not a
+                  normalized copy: float32 input stays ``array<float>``
+                  (FAISS IndexFlatIP rows and pgvector ``vector(n)`` are
+                  float32 too), half the bytes of a widened double copy.
   search (often)  read the codebook sidecar, build per-query ADC tables,
                   scan ``data`` selecting ONLY (id, codes): parquet
-                  COLUMN pruning means the 256-byte vec bytes are never
-                  read during the hot scan — the 64× smaller read is now
-                  real I/O, not a projection after a full-width read.
+                  COLUMN pruning means the 256-byte vec (64-d float32)
+                  is never read during the hot scan — the 64× smaller read
+                  is real I/O, not a projection after a full-width read.
                   IVFPQ adds PARTITION pruning: the probed list ids are
                   collected and pushed into the scan as ``list IN (...)``,
                   so unprobed lists' files are never opened (as ivf.py).
-                  The exact re-rank then re-reads ``data`` for the
-                  |queries|·shortlist shortlist rows only, selecting
-                  (id, vec).
+                  The exact re-rank then fetches (id, vec) of the
+                  |queries|·shortlist rows only, from the same probed
+                  lists, and normalizes just those vectors.
+                  `l2_normalize` widens to double before any arithmetic,
+                  so re-rank scores equal those of a stored normalized
+                  double copy bit for bit.
 
 One table, two prunings: column pruning separates WHAT is scanned (codes
 vs vectors), partition pruning WHICH rows (probed lists). No second copy
-of the vectors is needed for the re-rank fetch.
+of the vectors is needed for the re-rank fetch. An index stores one
+vector element type: appends cast to the type the build wrote.
 
 The deterministic md5-derived codebook (operators/pq.py) is persisted as
 data rather than recomputed: search reads whatever codebook the build
 wrote, so a learned per-subspace k-means codebook (FAISS
 ProductQuantizer training) drops in without touching the search path.
+The fixed-schema sidecars are read with their declared schema: a
+schema-less parquet read runs one schema-inference job.
 
 Checked by tests/test_pq_index.py: search over the persisted index is
 row-identical to the inline `pq_topk`/`ivfpq_topk` operators (same
-codebook, same tie-breaks), the ADC scan's parquet schema is
-plan-asserted, and its partitions read are counted from scan metrics.
+codebook, same tie-breaks), the stored vectors equal the input, the ADC
+scan's parquet schema is plan-asserted, and its partitions read are
+counted from scan metrics.
 """
 
 from __future__ import annotations
@@ -49,6 +60,7 @@ from pyspark.sql import functions as F
 from koby_s_ai_vector_db_spark.functions.partitioning import spread
 from koby_s_ai_vector_db_spark.functions.vectors import dot, l2_normalize
 from koby_s_ai_vector_db_spark.operators.pq import (
+    CODEBOOK_SCHEMA,
     codebook_df,
     pq_adc_score,
     pq_distance_table,
@@ -59,6 +71,7 @@ DATA_SUBDIR = "data"
 CODEBOOK_SUBDIR = "codebook"
 CENTROIDS_SUBDIR = "centroids"
 TOMBSTONES_SUBDIR = "tombstones"
+CENTROIDS_SCHEMA = "list int, centroid array<double>"
 
 
 def read_tombstones(spark: SparkSession, path: str) -> DataFrame | None:
@@ -168,16 +181,19 @@ def build_pq_index(
 ) -> dict:
     """Flat PQ index: ``{path}/data`` (id, codes, vec) + codebook sidecar.
 
-    Vectors are L2-normalized at build time (the reference's build-time
-    normalize, embed_pdfs.py:207) so search is a plain dot product.
+    Codes encode the L2-normalized vector (the reference's build-time
+    normalize, embed_pdfs.py:207); ``vec`` stores ``vec_col`` as given,
+    element type included, and search normalizes it in the exact re-rank.
     Returns {"n_vectors", "path"}."""
     spark = corpus.sparkSession
     _write_codebook(spark, path)
     c = spread(corpus).select(
-        F.col(corpus_id), l2_normalize(vec_col).alias("vec")
+        F.col(corpus_id),
+        F.col(vec_col).alias("vec"),
+        l2_normalize(vec_col).alias("_nv"),
     )
     data = c.join(F.broadcast(codebook_df(spark))).select(
-        corpus_id, pq_encode("vec").alias("codes"), "vec"
+        corpus_id, pq_encode("_nv").alias("codes"), "vec"
     )
     data.write.mode("overwrite").parquet(f"{path}/{DATA_SUBDIR}")
     n = spark.read.parquet(f"{path}/{DATA_SUBDIR}").count()
@@ -198,6 +214,10 @@ def build_ivfpq_index(
     """IVF+PQ index: ``{path}/data`` (id, codes, vec) PARTITIONED BY the
     coarse ``list`` id, plus ``centroids`` and ``codebook`` sidecars.
 
+    Codes, centroids and list assignment use the L2-normalized vector;
+    ``vec`` stores ``vec_col`` as given, element type included, and search
+    normalizes it in the exact re-rank.
+
     Coarse assignment: pass ``list_col`` to use an existing labeling with
     per-list mean centroids (deterministic — value-testable against the
     inline `ivfpq_topk`), or leave None to fit seeded k-means lists like
@@ -211,13 +231,14 @@ def build_ivfpq_index(
         labeled = c.select(
             F.col(corpus_id),
             F.col(list_col).cast("int").alias("list"),
-            l2_normalize(vec_col).alias("vec"),
+            F.col(vec_col).alias("vec"),
+            l2_normalize(vec_col).alias("_nv"),
         )
         centroids = (
             labeled.groupBy("list")
             .agg(
                 *[
-                    F.avg(F.element_at(F.col("vec"), i + 1)).alias(f"_c{i}")
+                    F.avg(F.element_at(F.col("_nv"), i + 1)).alias(f"_c{i}")
                     for i in range(dim)
                 ]
             )
@@ -231,9 +252,8 @@ def build_ivfpq_index(
         from pyspark.ml.clustering import KMeans
         from pyspark.ml.functions import array_to_vector
 
-        norm = c.withColumn("_nv", l2_normalize(vec_col))
-        feat = norm.withColumn(
-            "_fv", array_to_vector(F.col("_nv").cast("array<double>"))
+        feat = c.withColumn("_nv", l2_normalize(vec_col)).withColumn(
+            "_fv", array_to_vector("_nv")
         )
         model = KMeans(
             k=n_lists, maxIter=max_iter, seed=seed,
@@ -242,18 +262,19 @@ def build_ivfpq_index(
         labeled = model.transform(feat).select(
             corpus_id,
             F.col("_list").cast("int").alias("list"),
-            F.col("_nv").alias("vec"),
+            F.col(vec_col).alias("vec"),
+            "_nv",
         )
         centroids = spark.createDataFrame(
             [
                 (i, [float(x) for x in ctr])
                 for i, ctr in enumerate(model.clusterCenters())
             ],
-            schema="list int, centroid array<double>",
+            schema=CENTROIDS_SCHEMA,
         )
 
     data = labeled.join(F.broadcast(codebook_df(spark))).select(
-        "list", F.col(corpus_id), pq_encode("vec").alias("codes"), "vec"
+        "list", F.col(corpus_id), pq_encode("_nv").alias("codes"), "vec"
     )
     # repartition("list"): one writer task per list → a probe opens O(1)
     # files per probed partition instead of one per upstream task.
@@ -288,24 +309,32 @@ def append_to_ivfpq_index(
     vectors costs O(N · n_lists) centroid dots + N code encodes, never a
     corpus rescan. Centroid drift accumulates as data distribution moves —
     the rebuild knob stays `build_ivfpq_index`, exactly like pgvector's
-    REINDEX guidance. Returns {"n_appended", "path"}."""
+    REINDEX guidance.
+
+    ``vec`` is cast to the element type the index already stores, so a
+    double batch appended to a float index writes float files: one
+    directory, one file schema. Codes and the assignment use the cast
+    vector, the one the re-rank reads back. Returns {"n_appended", "path"}."""
     spark = new_corpus.sparkSession
-    cbdf = spark.read.parquet(f"{path}/{CODEBOOK_SUBDIR}")
-    centroids = spark.read.parquet(f"{path}/{CENTROIDS_SUBDIR}")
+    cbdf = spark.read.schema(CODEBOOK_SCHEMA).parquet(f"{path}/{CODEBOOK_SUBDIR}")
+    centroids = spark.read.schema(CENTROIDS_SCHEMA).parquet(
+        f"{path}/{CENTROIDS_SUBDIR}"
+    )
+    stored = spark.read.parquet(f"{path}/{DATA_SUBDIR}").schema["vec"].dataType
 
     c = spread(new_corpus).select(
-        F.col(corpus_id), l2_normalize(vec_col).alias("vec")
-    )
+        F.col(corpus_id), F.col(vec_col).cast(stored).alias("vec")
+    ).withColumn("_nv", l2_normalize("vec"))
     w = Window.partitionBy(corpus_id).orderBy(F.desc("csim"), F.asc("list"))
     assigned = (
         c.join(F.broadcast(centroids))
-        .withColumn("csim", dot("vec", "centroid"))
+        .withColumn("csim", dot("_nv", "centroid"))
         .withColumn("_r", F.row_number().over(w))
         .filter(F.col("_r") == 1)
-        .select("list", corpus_id, "vec")
+        .select("list", corpus_id, "vec", "_nv")
     )
     data = assigned.join(F.broadcast(cbdf)).select(
-        "list", F.col(corpus_id), pq_encode("vec").alias("codes"), "vec"
+        "list", F.col(corpus_id), pq_encode("_nv").alias("codes"), "vec"
     )
     data.repartition("list").write.mode("append").partitionBy("list").parquet(
         f"{path}/{DATA_SUBDIR}"
@@ -323,15 +352,15 @@ def _exact_rerank(
     query_id: str,
     round_to: int | None,
 ) -> DataFrame:
-    """Shared re-rank tail: fetch the shortlist's full vectors from the
-    index table (broadcast semi-join — |queries|·shortlist rows), exact
-    dot, top-k. Both search paths must go through here so a tie-break or
-    rounding change can never diverge them."""
+    """Shared re-rank tail: fetch the shortlist's stored vectors from the
+    index table (broadcast semi-join — |queries|·shortlist rows), normalize
+    them, exact dot, top-k. Both search paths must go through here so a
+    tie-break or rounding change can never diverge them."""
     rer = (
         F.broadcast(sl)
         .join(data.select(corpus_id, "vec"), corpus_id)
         .join(F.broadcast(q_norm), query_id)
-        .withColumn("sim", dot("vec", "qv"))
+        .withColumn("sim", dot(l2_normalize("vec"), "qv"))
     )
     w_k = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.asc(corpus_id))
     sim = F.round("sim", round_to) if round_to is not None else F.col("sim")
@@ -381,7 +410,7 @@ def pq_index_search(
     code-only scan → shortlist → exact re-rank. Row-identical to the
     inline `pq_topk` (tests/test_pq_index.py), minus the per-query encode
     cost. Returns (query_id, corpus_id, sim, rank)."""
-    cbdf = spark.read.parquet(f"{path}/{CODEBOOK_SUBDIR}")
+    cbdf = spark.read.schema(CODEBOOK_SCHEMA).parquet(f"{path}/{CODEBOOK_SUBDIR}")
     data = _read_data(spark, path, corpus_id)
     q = queries.select(F.col(query_id), l2_normalize(query_vec_col).alias("qv"))
     dtab = q.join(F.broadcast(cbdf)).select(
@@ -409,8 +438,10 @@ def ivfpq_index_search(
     re-rank. As in sources/ivf.py, the bounded probe-id set is collected
     and pushed into the scan as ``list IN (...)``; callers with a fixed
     query set memoize the returned plan."""
-    cbdf = spark.read.parquet(f"{path}/{CODEBOOK_SUBDIR}")
-    centroids = spark.read.parquet(f"{path}/{CENTROIDS_SUBDIR}")
+    cbdf = spark.read.schema(CODEBOOK_SCHEMA).parquet(f"{path}/{CODEBOOK_SUBDIR}")
+    centroids = spark.read.schema(CENTROIDS_SCHEMA).parquet(
+        f"{path}/{CENTROIDS_SUBDIR}"
+    )
     data = _read_data(spark, path, corpus_id)
 
     q = queries.select(F.col(query_id), l2_normalize(query_vec_col).alias("qv"))
@@ -439,6 +470,6 @@ def ivfpq_index_search(
         .filter(F.col("srank") <= shortlist)
         .select(query_id, corpus_id)
     )
-    # Re-rank fetch by id across all partitions (shortlist rows only). The
-    # unpartitioned-column read is fine: |queries|·shortlist lookups.
-    return _exact_rerank(data, sl, q, k, corpus_id, query_id, round_to)
+    # Re-rank fetch from the probed lists only: every shortlisted id came
+    # out of `scan` (tombstones already applied), so this is exact.
+    return _exact_rerank(scan, sl, q, k, corpus_id, query_id, round_to)

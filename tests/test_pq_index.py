@@ -1,5 +1,6 @@
 """Persisted PQ / IVF+PQ index: build-once search must be row-identical to
-the inline operators (same codebook, same tie-breaks), and the search plans
+the inline operators (same codebook, same tie-breaks), the index must store
+the input vectors as given (element type and values), and the search plans
 must show the two prunings the layout exists for — column pruning on the
 ADC scan (codes read, vectors not) and partition pruning on probed lists
 (counted as partitions read)."""
@@ -12,8 +13,11 @@ from pyspark.sql import functions as F
 from koby_s_ai_vector_db_spark.operators.ivfpq import ivfpq_topk
 from koby_s_ai_vector_db_spark.operators.pq import pq_topk
 from koby_s_ai_vector_db_spark.sources.pq_index import (
+    append_to_ivfpq_index,
     build_ivfpq_index,
     build_pq_index,
+    compact_index,
+    delete_from_index,
     ivfpq_index_search,
     pq_index_search,
 )
@@ -59,6 +63,13 @@ def ivfpq_path(spark, tmp_path_factory):
     return path
 
 
+@pytest.fixture(scope="module")
+def kmeans_path(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("pqidx") / "kmeans")
+    build_ivfpq_index(_emb(spark).select("vec_id", "embedding"), path, n_lists=10)
+    return path
+
+
 def test_pq_index_matches_inline_operator(spark, pq_path):
     idx = pq_index_search(
         spark, pq_path, _queries(spark), k=K, shortlist=SHORTLIST
@@ -93,8 +104,9 @@ def _scan_lines(df):
 
 
 def test_adc_scan_prunes_vector_column(spark, pq_path):
-    """The hot scan must read (vec_id, codes) only — if the 256-byte vec
-    column appears in the ADC scan's ReadSchema the 64x I/O win is gone."""
+    """The hot scan must read (vec_id, codes) only — if the vec column
+    (256 bytes per row at 64-d float32) appears in the ADC scan's
+    ReadSchema, the code-only read is gone."""
     df = pq_index_search(spark, pq_path, _queries(spark), k=K, shortlist=SHORTLIST)
     plan, scans = _scan_lines(df)
     code_scans = [ln for ln in scans if "codes" in ln]
@@ -105,17 +117,64 @@ def test_adc_scan_prunes_vector_column(spark, pq_path):
 
 def test_ivfpq_static_prune_reaches_partition_filters(spark, ivfpq_path):
     """The probe must prune the ADC codes scan: unprobed list partitions
-    are never opened, not filtered post-read. The re-rank fetch by id
-    reads every partition (shortlist rows only) and is not counted."""
+    are never opened, not filtered post-read. The re-rank fetch of the
+    shortlist's vectors reads only the probed lists too: every shortlisted
+    id comes from them."""
     df = ivfpq_index_search(
         spark, ivfpq_path, _queries(spark), k=K, n_probe=N_PROBE, shortlist=SHORTLIST
     )
     parts = partitions_read(df)
-    adc = [
-        n for (root, cols), n in parts.items()
-        if root.endswith("/data") and "codes" in cols
-    ]
+
+    def scans(col):
+        return [
+            n for (root, cols), n in parts.items()
+            if root.endswith("/data") and col in cols
+        ]
+
+    adc, fetch = scans("codes"), scans("vec")
     assert adc and max(adc) < N_LISTS, parts
+    assert fetch and max(fetch) <= max(adc), parts
+
+
+def _stored_vectors(spark, path):
+    data = spark.read.parquet(path + "/data")
+    return (
+        data.schema["vec"].dataType.elementType.typeName(),
+        {r.vec_id: list(r.vec) for r in data.select("vec_id", "vec").collect()},
+    )
+
+
+def _input_vectors(df):
+    return {r.vec_id: list(r.embedding) for r in df.collect()}
+
+
+def test_index_stores_input_vector_as_given(
+    spark, pq_path, ivfpq_path, kmeans_path, tmp_path
+):
+    """``vec`` is the input vector as given — element type and values, not
+    a normalized double copy — for every build path and after compaction;
+    a double input stays double."""
+    import shutil
+
+    emb = _emb(spark).select("vec_id", "embedding")
+    floats = _input_vectors(emb)
+    compacted = str(tmp_path / "compacted")
+    shutil.copytree(ivfpq_path, compacted)
+    delete_from_index(spark, compacted, emb.filter(F.col("vec_id") < 4))
+    compact_index(spark, compacted)
+    live = {i: v for i, v in floats.items() if i >= 4}
+    for path, want in [
+        (pq_path, floats), (ivfpq_path, floats), (kmeans_path, floats),
+        (compacted, live),
+    ]:
+        assert _stored_vectors(spark, path) == ("float", want), path
+
+    dbl = emb.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+    flat_dbl = str(tmp_path / "flat_double")
+    build_pq_index(dbl, flat_dbl)
+    assert _stored_vectors(spark, flat_dbl) == ("double", _input_vectors(dbl))
 
 
 def test_incremental_append_equals_full_build(spark, tmp_path_factory):
@@ -125,15 +184,21 @@ def test_incremental_append_equals_full_build(spark, tmp_path_factory):
     assignment of the appended rows equals their labels only if centroids
     are honored — instead we assert the STRUCTURAL contract: all rows
     present, appended rows encoded with the frozen codebook (self-search
-    finds them at rank 1 with exact sim 1.0)."""
-    from pyspark.sql import functions as F
+    finds them at rank 1 with exact sim 1.0).
 
-    from koby_s_ai_vector_db_spark.sources.pq_index import append_to_ivfpq_index
+    The appended half arrives as ``array<double>`` while the index stores
+    ``array<float>``: the appender casts it, so every data file keeps the
+    one vector schema the build wrote."""
+    import glob
+
+    import pyarrow.parquet as pq
 
     emb = _emb(spark).select("vec_id", "embedding")
     path = str(tmp_path_factory.mktemp("pqidx") / "incr")
     first = emb.filter(F.col("vec_id") % 2 == 0)
-    second = emb.filter(F.col("vec_id") % 2 == 1)
+    second = emb.filter(F.col("vec_id") % 2 == 1).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
     info = build_ivfpq_index(first, path, n_lists=10)
     assert info["n_vectors"] == first.count()
     app = append_to_ivfpq_index(second, path)
@@ -141,6 +206,11 @@ def test_incremental_append_equals_full_build(spark, tmp_path_factory):
     data = spark.read.parquet(path + "/data")
     assert data.count() == emb.count()
     assert data.select("vec_id").distinct().count() == emb.count()
+    assert data.schema["vec"].dataType.simpleString() == "array<float>"
+    files = glob.glob(path + "/data/**/*.parquet", recursive=True)
+    assert files and {
+        str(pq.read_schema(f).field("vec").type.value_type) for f in files
+    } == {"float"}
 
     # Appended vectors are searchable: querying an appended (odd-id) vector
     # finds itself at rank 1 with exact re-ranked sim 1.0 — its own cell is
@@ -155,16 +225,13 @@ def test_incremental_append_equals_full_build(spark, tmp_path_factory):
         assert vid == qid and sim == pytest.approx(1.0, abs=1e-6)
 
 
-def test_learned_kmeans_build_recall(spark, tmp_path_factory):
+def test_learned_kmeans_build_recall(spark, kmeans_path):
     """The k-means build path (no list_col) is engine-specific float
     iteration — recall-tested like sources/ivf.py: searching the index must
     find the query vector itself at rank 1 (sim 1.0) for every query."""
-    path = str(tmp_path_factory.mktemp("pqidx") / "kmeans")
-    build_ivfpq_index(
-        _emb(spark).select("vec_id", "embedding"), path, n_lists=10
-    )
     res = ivfpq_index_search(
-        spark, path, _queries(spark), k=K, n_probe=N_PROBE, shortlist=SHORTLIST
+        spark, kmeans_path, _queries(spark), k=K, n_probe=N_PROBE,
+        shortlist=SHORTLIST,
     ).collect()
     top1 = {r.query_id: (r.vec_id, r.sim) for r in res if r.rank == 1}
     assert set(top1) == set(range(8))
