@@ -14,9 +14,9 @@ repeated sub-expressions:
 Binding the sub-expression as a lambda VARIABLE fixes both: lambda
 variables are evaluated once and read as values. `transform(array(X),
 v -> body(v))[1]` evaluates X exactly once per row regardless of how many
-times `v` appears in `body`. Measured effect: q2_ann_pq dropped 70s -> 2s
-at sf0.1 when its 1024-reads-per-row encode loop stopped re-running an
-inlined l2_normalize (operators/pq.py), and the shingle pipeline stopped
+times `v` appears in `body`. Measured effect: the PQ encode query dropped
+70s -> 2s at sf0.1 when its 1024-reads-per-row encode loop stopped
+re-running an inlined l2_normalize (operators/pq.py), and the shingle pipeline stopped
 re-splitting the document per shingle (operators/dedup.py).
 """
 

@@ -1,4 +1,4 @@
-"""Product-quantization (PQ) ANN: compressed-code scan + exact re-rank.
+"""Product quantization (PQ): the codebook and the three ADC expressions.
 
 The reference's approximate tier is pgvector ivfflat (supabase_schema.sql:
 137-139) — coarse cells that prune WHICH vectors are scanned. PQ is the
@@ -9,23 +9,18 @@ of 8 dims; every subvector is quantized to the id of its nearest centroid
 in a 16-entry per-subspace codebook. A vector becomes 8 code ids — 4 bits
 each, 4 bytes total vs 256 bytes of float32 — a 64x smaller scan.
 
-Search is the classic ADC (asymmetric distance computation) two-phase:
+This module holds only the quantizer; the index that persists codes and
+searches them is sources/pq_index.py. Its search is the classic ADC
+(asymmetric distance computation) two-phase:
 
   1. per query, precompute a distance TABLE dtab[s][c] = <q_sub_s, cb[s][c]>
-     (M*KS = 128 dots of dim 8 — once per query, not per corpus row);
-  2. scan ONLY (vec_id, codes): approx sim = sum_s dtab[s][codes[s]] —
-     8 lookups + 8 adds per row against a broadcast table;
-  3. take a per-query shortlist by approx sim (WindowGroupLimit truncates
-     map-side, so the shuffle is |queries| x shortlist rows);
-  4. fetch full vectors for the shortlist only (broadcast semi-join back
-     to the corpus — at scale this is the "fetch from storage" step) and
-     re-rank exactly; top-k of the exact scores is the answer.
-
-At 100 TB the economics: the hot loop reads 4-byte codes instead of
-256-byte vectors (memory-bandwidth-bound scan -> 64x fewer bytes), and the
-full-precision table is touched only for |queries| x shortlist rows.
-Recall is governed by shortlist size and codebook quality; the exact
-re-rank means PRECISION of returned scores is always exact.
+     (`pq_distance_table`: M*KS = 128 dots of dim 8 — once per query, not
+     per corpus row);
+  2. scan ONLY (vec_id, codes) (`pq_encode` wrote them at build time):
+     approx sim = sum_s dtab[s][codes[s]] (`pq_adc_score`) — 8 lookups +
+     8 adds per row against a broadcast table;
+  3. take a per-query shortlist by approx sim, fetch the shortlist's full
+     vectors and re-rank exactly, so returned scores are always exact.
 
 Cross-engine oracle strategy: codebooks are Rademacher (+/-1) centroids
 derived from the portable md5 hash (functions/hashing.py) — constants, not
@@ -38,25 +33,42 @@ lower vec_id, so results are value-identical across engines.
 
 A learned codebook (k-means per subspace, like faiss.ProductQuantizer
 training) drops quantization error further but is engine-specific float
-iteration — same trade-off as kmeans_ivf_topk, which is recall-tested
-rather than value-oracled. The PQ MECHANICS here are identical either way.
+iteration — the same trade-off as the k-means lists of sources/ivf.py,
+which are recall-tested rather than value-oracled. The PQ MECHANICS here
+are identical either way.
 """
 
 from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from koby_s_ai_vector_db_spark.functions.partitioning import spread
-from koby_s_ai_vector_db_spark.functions.vectors import dot, l2_normalize
 
 DIM = 64  # fixture embedding dimensionality
 M = 8  # subspaces
 SUB = DIM // M  # dims per subspace
 KS = 16  # codes per subspace (4-bit codes)
 CODEBOOK_SCHEMA = "cb array<array<array<double>>>"  # cb[s][c]: code c of subspace s
+
+
+def dim_checked(vec_col: str) -> F.Column:
+    """`vec_col` as given, or a runtime error naming both sizes when a
+    vector is not DIM-d: codes read dims 1..DIM, so a shorter vector
+    fails deep in the encode and a longer one is silently truncated.
+    One expression in the caller's projection — it adds no Spark job.
+    NULL vectors pass through."""
+    v = F.col(vec_col)
+    return F.when(
+        v.isNotNull() & (F.size(v) != DIM),
+        F.raise_error(
+            F.concat(
+                F.lit(f"PQ index needs {DIM}-d vectors; {vec_col} has "),
+                F.size(v).cast("string"),
+                F.lit(" dims"),
+            )
+        ),
+    ).otherwise(v)
 
 
 def _md5_u32(s: str) -> int:
@@ -118,7 +130,7 @@ def cb_literal_duckdb() -> str:
 # pq_encode reads its input vector M*KS*SUB = 1024 times per row; without
 # the bind, CollapseProject inlined `l2_normalize(embedding)` into every
 # read (~500M interpreted evals at a 2k-row scale factor — the 70s
-# q2_ann_pq regression in BENCH_r03). See functions/exprs.py.
+# inline PQ encode regression in BENCH_r03). See functions/exprs.py.
 from koby_s_ai_vector_db_spark.functions.exprs import bind_once as _bind_once
 
 
@@ -159,83 +171,4 @@ def pq_adc_score(codes_col: str = "codes", dtab_col: str = "dtab") -> F.Column:
         f"aggregate(sequence(0, {M - 1}), CAST(0.0 AS DOUBLE),"
         f"  (a, s) -> a + element_at(element_at({dtab_col}, s + 1),"
         f"                           element_at({codes_col}, s + 1)))"
-    )
-
-
-def pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    shortlist: int = 64,
-    corpus_id: str = "vec_id",
-    query_id: str = "query_id",
-    vec_col: str = "embedding",
-    query_vec_col: str = "query_vec",
-    round_to: int | None = 6,
-    cache_key=None,
-) -> DataFrame:
-    """PQ ANN: compressed-code scan -> ADC shortlist -> exact re-rank.
-
-    Returns (query_id, corpus_id, sim, rank) with EXACT cosine scores
-    (re-ranked), rank in 1..k. Recall vs exact top-k is measured in
-    tests/test_ann_recall.py; it rises monotonically with `shortlist`.
-
-    `cache_key` memo-persists the encoded (id, codes) subtree per session
-    (same convention as the minhash shingle table): the encode — 1024
-    codebook reads per corpus row — then runs once per session instead of
-    once per call. The durable form of the same idea is
-    sources/pq_index.py, which persists the codes to parquet."""
-    from koby_s_ai_vector_db_spark.functions.caching import memo_persist
-
-    c = spread(corpus).select(
-        F.col(corpus_id), l2_normalize(vec_col).alias("v")
-    )
-    cbdf = codebook_df(corpus.sparkSession)
-
-    # The compressed index: at scale this projection is what you PERSIST
-    # (sources/pq_index.py does exactly that); the ADC scan then never
-    # touches the float arrays.
-    def _codes():
-        return c.join(F.broadcast(cbdf)).select(
-            corpus_id, pq_encode("v").alias("codes")
-        )
-
-    codes = (
-        memo_persist(corpus.sparkSession, ("pq_codes", cache_key), _codes)
-        if cache_key is not None
-        else _codes()
-    )
-
-    q = queries.select(
-        F.col(query_id), l2_normalize(query_vec_col).alias("qv")
-    )
-    dtab = q.join(F.broadcast(cbdf)).select(
-        query_id, pq_distance_table("qv").alias("dtab")
-    )
-
-    w_sl = Window.partitionBy(query_id).orderBy(
-        F.desc("adc"), F.asc(corpus_id)
-    )
-    sl = (
-        codes.join(F.broadcast(dtab))
-        .withColumn("adc", pq_adc_score())
-        .withColumn("srank", F.row_number().over(w_sl))
-        .filter(F.col("srank") <= shortlist)
-        .select(query_id, corpus_id)
-    )
-
-    # Fetch + exact re-rank: only |queries| x shortlist vectors leave the
-    # compressed domain.
-    rer = (
-        F.broadcast(sl)
-        .join(c, corpus_id)
-        .join(F.broadcast(q), query_id)
-        .withColumn("sim", dot("v", "qv"))
-    )
-    w_k = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.asc(corpus_id))
-    sim = F.round("sim", round_to) if round_to is not None else F.col("sim")
-    return (
-        rer.withColumn("rank", F.row_number().over(w_k))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, sim.alias("sim"), "rank")
     )

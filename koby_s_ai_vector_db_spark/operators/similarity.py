@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from koby_s_ai_vector_db_spark.functions.partitioning import spread
-from koby_s_ai_vector_db_spark.functions.vectors import dot, l2_normalize
+from koby_s_ai_vector_db_spark.functions.vectors import dot, l2_normalize, mean_vector
 
 
 def topk_cosine(
@@ -123,59 +123,6 @@ def knn_self_join(
     )
 
 
-def kmeans_ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_lists: int = 10,
-    n_probe_labels: int = 2,
-    max_iter: int = 5,
-    seed: int = 20260813,
-    corpus_id: str = "vec_id",
-    query_id: str = "query_id",
-    vec_col: str = "embedding",
-    query_vec_col: str = "query_vec",
-    round_to: int | None = 6,
-) -> DataFrame:
-    """IVF with LEARNED lists: k-means (MLlib, seeded) assigns each vector
-    to a centroid cell, then `ivf_topk` probes the query's nearest cells.
-    This is the actual pgvector-ivfflat build step (`CREATE INDEX ...
-    USING ivfflat (lists=100)` runs k-means over a sample —
-    supabase_schema.sql:137-139); the fixture's random `label` column is
-    only a partition stand-in and caps recall at the probed fraction.
-
-    At scale: the fit runs on a sample (MLlib k-means is a few passes over
-    the data), the assignment is one map, and the corpus is then written
-    partitioned/bucketed by list id so a probe is a partition-pruned scan.
-    Iterative float reductions make the centroids engine-specific, so this
-    operator is checked by recall tests (tests/test_ann_recall.py), not a
-    cross-engine value oracle."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    c = spread(corpus).withColumn(vec_col, l2_normalize(vec_col))
-    feat = c.withColumn(
-        "_fv", array_to_vector(F.col(vec_col).cast("array<double>"))
-    )
-    model = KMeans(
-        k=n_lists, maxIter=max_iter, seed=seed, featuresCol="_fv", predictionCol="_list"
-    ).fit(feat)
-    labeled = model.transform(feat).select(
-        corpus_id, F.col("_list").cast("long").alias("label"), vec_col
-    )
-    return ivf_topk(
-        labeled,
-        queries,
-        k=k,
-        n_probe_labels=n_probe_labels,
-        corpus_id=corpus_id,
-        query_id=query_id,
-        vec_col=vec_col,
-        query_vec_col=query_vec_col,
-        round_to=round_to,
-    )
-
-
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -206,31 +153,15 @@ def ivf_topk(
     c = spread(corpus).withColumn(vec_col, l2_normalize(vec_col))
     q = queries.withColumn(query_vec_col, l2_normalize(query_vec_col))
 
-    # Per-label mean vector as `dim` parallel avg() aggregates over
-    # element_at: ONE map-side-combined shuffle of n_labels × dim scalar
-    # buffers. The explode form (posexplode → groupBy(label, i) →
-    # re-collect) shuffles dim×N rows — the same sketch-fold anti-pattern
-    # eliminated from hyperplane_lsh_pairs; at 100 TB the centroid pass
-    # must stay O(corpus) map work + O(lists·dim) shuffle.
-    # Built as ONE parsed SQL string: the per-column F.avg/F.element_at
-    # loop costs ~1.3 s of driver py4j round-trips per query construction
-    # at dim=64 vs ~0.15 s for a single F.expr parse (round-13 profile);
-    # `vec[i]` (0-based getItem) ≡ element_at(vec, i+1) for the in-range
-    # indexes used here, so the aggregate values are unchanged.
     def _centroids():
         return c.groupBy(label_col).agg(
-            F.expr(
-                "array("
-                + ", ".join(f"avg(`{vec_col}`[{i}])" for i in range(dim))
-                + ")"
-            ).alias("centroid")
+            mean_vector(vec_col, dim).alias("centroid")
         )
 
     # cache_key memo-persists the lists×dim centroid table per session —
-    # the IVF "index build" analog, same convention as ivfpq_topk's
-    # centroid/codes memo: steady-state probes must not re-aggregate the
-    # corpus per query call (round 13; the persisted-index tier in
-    # sources/ivf.py stores exactly this table durably).
+    # the IVF "index build" analog: steady-state probes must not
+    # re-aggregate the corpus per query call (round 13; the
+    # persisted-index tier in sources/ivf.py stores this table durably).
     if cache_key is not None:
         from koby_s_ai_vector_db_spark.functions.caching import memo_persist
 

@@ -25,9 +25,11 @@ are never read off disk, not merely filtered after the scan. Centroid
 drift is handled the ivfflat way: rebuild (re-run `build_ivf_index`).
 
 Iterative float k-means makes centroids engine-specific, so this module is
-checked by recall/equivalence tests (tests/test_ivf_index.py) rather than
-a cross-engine value oracle; the probe SEMANTICS are oracle-checked via
-the registered `q2_ann` (operators/similarity.py `ivf_topk`).
+checked by recall/equivalence tests (tests/test_ivf_index.py, including
+recall against `ivf_topk` over the fixture's random label lists at the
+same probe budget) rather than a cross-engine value oracle; the probe
+SEMANTICS are oracle-checked via the registered `q2_ann`
+(operators/similarity.py `ivf_topk`).
 """
 
 from __future__ import annotations
@@ -40,6 +42,10 @@ from koby_s_ai_vector_db_spark.functions.vectors import dot, l2_normalize
 
 LISTS_SUBDIR = "lists"
 CENTROIDS_SUBDIR = "centroids"
+# The centroid sidecar of both IVF layouts (this module, sources/pq_index.py).
+# Read with the declared schema: a schema-less parquet read runs one
+# schema-inference Spark job.
+CENTROIDS_SCHEMA = "list int, centroid array<double>"
 
 
 def build_ivf_index(
@@ -78,7 +84,7 @@ def build_ivf_index(
     centers = [
         (i, [float(x) for x in ctr]) for i, ctr in enumerate(model.clusterCenters())
     ]
-    spark.createDataFrame(centers, schema="list int, centroid array<double>").coalesce(
+    spark.createDataFrame(centers, schema=CENTROIDS_SCHEMA).coalesce(
         1
     ).write.mode("overwrite").parquet(f"{path}/{CENTROIDS_SUBDIR}")
 
@@ -109,7 +115,9 @@ def ivf_index_search(
     search therefore runs one small job; callers with a fixed query set
     memoize the returned plan (functions/caching.py).
     Returns (query_id, corpus_id, sim, rank)."""
-    centroids = spark.read.parquet(f"{path}/{CENTROIDS_SUBDIR}")
+    centroids = spark.read.schema(CENTROIDS_SCHEMA).parquet(
+        f"{path}/{CENTROIDS_SUBDIR}"
+    )
     q = queries.withColumn(query_vec_col, l2_normalize(query_vec_col))
 
     probe_w = Window.partitionBy(query_id).orderBy(F.desc("csim"), F.asc("list"))

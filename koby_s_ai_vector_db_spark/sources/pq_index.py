@@ -1,10 +1,10 @@
 """Persisted product-quantization index — encode once, ADC-scan codes
 forever.
 
-Round-4 gap: `q2_ann_pq`/`q2_ann_ivfpq` (operators/pq.py, operators/
-ivfpq.py) re-encode the full corpus (M·KS·SUB = 1024 codebook reads per
-row) on EVERY query, which forfeits exactly the memory-bandwidth win PQ
-exists for. The reference's analogue is the one-time ``CREATE INDEX``
+Encoding a vector costs M·KS·SUB = 1024 codebook reads, so the codes are
+computed once at build time and persisted; re-encoding the corpus per
+query would forfeit exactly the memory-bandwidth win PQ exists for. The
+reference's analogue is the one-time ``CREATE INDEX``
 (supabase_schema.sql:137-139) and FAISS's trained-then-serialized
 IndexIVFPQ (the production successor of the reference's IndexFlatIP,
 core/utils.py:203-214). Spark-first, the index IS a storage layout — the
@@ -43,13 +43,16 @@ data rather than recomputed: search reads whatever codebook the build
 wrote, so a learned per-subspace k-means codebook (FAISS
 ProductQuantizer training) drops in without touching the search path.
 The fixed-schema sidecars are read with their declared schema: a
-schema-less parquet read runs one schema-inference job.
+schema-less parquet read runs one schema-inference job. Every build,
+append and search rejects a vector that is not ``pq.DIM``-d with an
+error naming both sizes, checked inside its projection (no extra job).
 
-Checked by tests/test_pq_index.py: search over the persisted index is
-row-identical to the inline `pq_topk`/`ivfpq_topk` operators (same
-codebook, same tie-breaks), the stored vectors equal the input, the ADC
-scan's parquet schema is plan-asserted, and its partitions read are
-counted from scan metrics.
+Checked two ways: the registered ``q2_ann_pq_idx``/``q2_ann_ivfpq_idx``
+match DuckDB oracles that encode, probe and re-rank in SQL (same
+codebook, same tie-breaks); tests/test_pq_index.py measures recall
+against the exact search, checks that returned scores are exact and the
+stored vectors equal the input, plan-asserts the ADC scan's parquet
+schema and counts its partitions read from scan metrics.
 """
 
 from __future__ import annotations
@@ -58,20 +61,21 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from koby_s_ai_vector_db_spark.functions.partitioning import spread
-from koby_s_ai_vector_db_spark.functions.vectors import dot, l2_normalize
+from koby_s_ai_vector_db_spark.functions.vectors import dot, l2_normalize, mean_vector
 from koby_s_ai_vector_db_spark.operators.pq import (
     CODEBOOK_SCHEMA,
+    DIM,
     codebook_df,
+    dim_checked,
     pq_adc_score,
     pq_distance_table,
     pq_encode,
 )
+from koby_s_ai_vector_db_spark.sources.ivf import CENTROIDS_SCHEMA, CENTROIDS_SUBDIR
 
 DATA_SUBDIR = "data"
 CODEBOOK_SUBDIR = "codebook"
-CENTROIDS_SUBDIR = "centroids"
 TOMBSTONES_SUBDIR = "tombstones"
-CENTROIDS_SCHEMA = "list int, centroid array<double>"
 
 
 def read_tombstones(spark: SparkSession, path: str) -> DataFrame | None:
@@ -188,10 +192,8 @@ def build_pq_index(
     spark = corpus.sparkSession
     _write_codebook(spark, path)
     c = spread(corpus).select(
-        F.col(corpus_id),
-        F.col(vec_col).alias("vec"),
-        l2_normalize(vec_col).alias("_nv"),
-    )
+        F.col(corpus_id), dim_checked(vec_col).alias("vec")
+    ).withColumn("_nv", l2_normalize("vec"))
     data = c.join(F.broadcast(codebook_df(spark))).select(
         corpus_id, pq_encode("_nv").alias("codes"), "vec"
     )
@@ -209,7 +211,6 @@ def build_ivfpq_index(
     n_lists: int = 10,
     max_iter: int = 5,
     seed: int = 20260813,
-    dim: int = 64,
 ) -> dict:
     """IVF+PQ index: ``{path}/data`` (id, codes, vec) PARTITIONED BY the
     coarse ``list`` id, plus ``centroids`` and ``codebook`` sidecars.
@@ -219,13 +220,14 @@ def build_ivfpq_index(
     normalizes it in the exact re-rank.
 
     Coarse assignment: pass ``list_col`` to use an existing labeling with
-    per-list mean centroids (deterministic — value-testable against the
-    inline `ivfpq_topk`), or leave None to fit seeded k-means lists like
-    sources/ivf.py (better recall; engine-specific floats, so recall- not
-    value-tested). Returns {"n_lists", "n_vectors", "path"}."""
+    per-list mean centroids (`mean_vector`, the centroids `ivf_topk`
+    probes; deterministic, so ``q2_ann_ivfpq_idx`` is value-checked
+    against a DuckDB oracle), or leave None to fit seeded k-means lists
+    like sources/ivf.py (better recall; engine-specific floats, so recall-
+    not value-tested). Returns {"n_lists", "n_vectors", "path"}."""
     spark = corpus.sparkSession
     _write_codebook(spark, path)
-    c = spread(corpus)
+    c = spread(corpus).withColumn(vec_col, dim_checked(vec_col))
 
     if list_col is not None:
         labeled = c.select(
@@ -234,18 +236,8 @@ def build_ivfpq_index(
             F.col(vec_col).alias("vec"),
             l2_normalize(vec_col).alias("_nv"),
         )
-        centroids = (
-            labeled.groupBy("list")
-            .agg(
-                *[
-                    F.avg(F.element_at(F.col("_nv"), i + 1)).alias(f"_c{i}")
-                    for i in range(dim)
-                ]
-            )
-            .select(
-                "list",
-                F.array(*[F.col(f"_c{i}") for i in range(dim)]).alias("centroid"),
-            )
+        centroids = labeled.groupBy("list").agg(
+            mean_vector("_nv", DIM).alias("centroid")
         )
         n_lists = None  # resolved below from the labeling
     else:
@@ -323,7 +315,7 @@ def append_to_ivfpq_index(
     stored = spark.read.parquet(f"{path}/{DATA_SUBDIR}").schema["vec"].dataType
 
     c = spread(new_corpus).select(
-        F.col(corpus_id), F.col(vec_col).cast(stored).alias("vec")
+        F.col(corpus_id), dim_checked(vec_col).cast(stored).alias("vec")
     ).withColumn("_nv", l2_normalize("vec"))
     w = Window.partitionBy(corpus_id).orderBy(F.desc("csim"), F.asc("list"))
     assigned = (
@@ -407,12 +399,14 @@ def pq_index_search(
     round_to: int | None = 6,
 ) -> DataFrame:
     """Search a flat PQ index: codebook sidecar → per-query ADC tables →
-    code-only scan → shortlist → exact re-rank. Row-identical to the
-    inline `pq_topk` (tests/test_pq_index.py), minus the per-query encode
-    cost. Returns (query_id, corpus_id, sim, rank)."""
+    code-only scan → shortlist → exact re-rank. The corpus was encoded
+    once at build time; a query pays only its own 128-dot distance table.
+    Returns (query_id, corpus_id, sim, rank)."""
     cbdf = spark.read.schema(CODEBOOK_SCHEMA).parquet(f"{path}/{CODEBOOK_SUBDIR}")
     data = _read_data(spark, path, corpus_id)
-    q = queries.select(F.col(query_id), l2_normalize(query_vec_col).alias("qv"))
+    q = queries.select(
+        F.col(query_id), l2_normalize(dim_checked(query_vec_col)).alias("qv")
+    )
     dtab = q.join(F.broadcast(cbdf)).select(
         query_id, pq_distance_table("qv").alias("dtab")
     )
@@ -444,7 +438,9 @@ def ivfpq_index_search(
     )
     data = _read_data(spark, path, corpus_id)
 
-    q = queries.select(F.col(query_id), l2_normalize(query_vec_col).alias("qv"))
+    q = queries.select(
+        F.col(query_id), l2_normalize(dim_checked(query_vec_col)).alias("qv")
+    )
     probe_w = Window.partitionBy(query_id).orderBy(F.desc("csim"), F.asc("list"))
     probes = (
         q.join(F.broadcast(centroids))

@@ -56,8 +56,6 @@ PROBE_QUERIES = [
     "vocab_stats",
     "q1_topk_cosine",
     "q2_ann",
-    # q2_ann_pq / q2_ann_ivfpq: folded round 8 (unregistered; the _idx
-    # twins below are the canonical persisted tier with the same oracle).
     "q2_ann_pq_idx",
     "q2_ann_ivfpq_idx",
     "knn_self_join",

@@ -56,42 +56,6 @@ def test_ivf_subset_of_exact_scores(spark):
     assert joined.filter(F.abs(F.col("a.sim") - F.col("e.sim")) > 1e-9).count() == 0
 
 
-def test_kmeans_ivf_beats_random_labels(spark):
-    """The learned-centroid tier (pgvector's actual ivfflat build:
-    k-means lists) must beat random-label partitioning at equal probe
-    budget. Fixture embeddings are uniform random, so the gain is modest
-    (geometrically coherent Voronoi cells vs arbitrary ones); on real
-    clustered embeddings the gap widens sharply."""
-    from koby_s_ai_vector_db_spark.operators.similarity import kmeans_ivf_topk
-
-    emb = load_table(spark, SF_DIRS["t2"], "embeddings")
-    queries = emb.filter(F.col("vec_id") < NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    exact = topk_cosine(
-        emb.select("vec_id", "embedding"), queries, k=K, threshold=-1.0
-    ).select("query_id", "vec_id")
-    exact_set = {(r.query_id, r.vec_id) for r in exact.collect()}
-
-    rand = ivf_topk(
-        emb.select("vec_id", "label", "embedding"), queries, k=K, n_probe_labels=2
-    ).select("query_id", "vec_id")
-    rand_recall = len(exact_set & {(r.query_id, r.vec_id) for r in rand.collect()}) / len(
-        exact_set
-    )
-
-    learned = kmeans_ivf_topk(
-        emb.select("vec_id", "embedding"), queries, k=K, n_probe_labels=2, max_iter=3
-    ).select("query_id", "vec_id")
-    learned_recall = len(
-        exact_set & {(r.query_id, r.vec_id) for r in learned.collect()}
-    ) / len(exact_set)
-
-    print(f"recall@{K}: random-label {rand_recall:.3f}, k-means {learned_recall:.3f}")
-    assert learned_recall >= rand_recall
-    assert learned_recall >= 0.3, learned_recall
-
-
 def test_hyperplane_lsh_recall_vs_exact(spark):
     """Angular LSH blocking (dedup_embedding_lsh): every reported pair must
     carry the exact verified cosine (precision 1.0 by construction), and
@@ -120,55 +84,6 @@ def test_hyperplane_lsh_recall_vs_exact(spark):
     assert recall >= 0.6, recall  # measured 0.82; floored for stability
 
 
-def test_pq_recall_vs_exact(spark):
-    """PQ ADC shortlist + exact re-rank (operators/pq.py). Uniform random
-    fixture vectors are the WORST case for quantization (no cluster
-    structure for the codebook to exploit); measured recall@10 = 0.59 at
-    shortlist=64, 0.85 at 128. Floors asserted well below measured."""
-    from koby_s_ai_vector_db_spark.operators.pq import pq_topk
-
-    emb = load_table(spark, SF_DIRS["t2"], "embeddings")
-    queries = emb.filter(F.col("vec_id") < NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    exact = topk_cosine(
-        emb.select("vec_id", "embedding"), queries, k=K, threshold=-1.0
-    ).select("query_id", "vec_id")
-    exact_set = {(r.query_id, r.vec_id) for r in exact.collect()}
-
-    recalls = {}
-    for sl in (64, 128):
-        approx = pq_topk(
-            emb.select("vec_id", "embedding"), queries, k=K, shortlist=sl
-        ).select("query_id", "vec_id")
-        aset = {(r.query_id, r.vec_id) for r in approx.collect()}
-        recalls[sl] = len(exact_set & aset) / len(exact_set)
-    print(f"pq recall@{K}: {recalls}")
-    assert recalls[64] >= 0.4, recalls
-    assert recalls[128] >= recalls[64]  # shortlist is a recall dial
-    assert recalls[128] >= 0.6, recalls
-
-
-def test_pq_scores_are_exact(spark):
-    """The re-rank step must return EXACT cosine scores — PQ may lose
-    rows (recall < 1), never alter a returned score."""
-    from koby_s_ai_vector_db_spark.operators.pq import pq_topk
-
-    emb = load_table(spark, SF_DIRS["t1"], "embeddings")
-    queries = emb.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    exact = topk_cosine(
-        emb.select("vec_id", "embedding"), queries, k=1000, threshold=-1.0
-    ).select("query_id", "vec_id", "sim")
-    approx = pq_topk(
-        emb.select("vec_id", "embedding"), queries, k=5, shortlist=32
-    ).select("query_id", "vec_id", "sim")
-    joined = approx.alias("a").join(exact.alias("e"), ["query_id", "vec_id"], "left")
-    assert joined.filter(F.col("e.sim").isNull()).count() == 0
-    assert joined.filter(F.abs(F.col("a.sim") - F.col("e.sim")) > 1e-9).count() == 0
-
-
 def test_pq_codebook_shape_and_determinism(spark):
     """Codebook is a pure constant: [M][KS][SUB] of +/-1.0, identical
     across calls (it feeds literals into BOTH engines' plans)."""
@@ -178,46 +93,3 @@ def test_pq_codebook_shape_and_determinism(spark):
     assert len(cb) == pq.M and len(cb[0]) == pq.KS and len(cb[0][0]) == pq.SUB
     assert cb == pq.pq_codebook()
     assert {x for sub in cb for code in sub for x in code} == {1.0, -1.0}
-
-
-def test_ivfpq_composed_tier(spark):
-    """IVF+PQ (operators/ivfpq.py): recall is bounded by the IVF probe
-    (rows outside probed cells are invisible), and within probed cells the
-    PQ shortlist + exact re-rank must (a) return only exact scores and
-    (b) recover most of what exact-within-probed-cells (q2's ivf_topk)
-    returns at the same probe budget."""
-    from koby_s_ai_vector_db_spark.operators.ivfpq import ivfpq_topk
-    from koby_s_ai_vector_db_spark.operators.similarity import ivf_topk
-
-    emb = load_table(spark, SF_DIRS["t2"], "embeddings")
-    queries = emb.filter(F.col("vec_id") < NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    ivf_exact = ivf_topk(
-        emb.select("vec_id", "label", "embedding"), queries, k=K, n_probe_labels=2
-    ).select("query_id", "vec_id")
-    ivf_set = {(r.query_id, r.vec_id) for r in ivf_exact.collect()}
-
-    composed = ivfpq_topk(
-        emb.select("vec_id", "label", "embedding"),
-        queries,
-        k=K,
-        n_probe_labels=2,
-        shortlist=64,
-    )
-    comp_rows = composed.collect()
-    comp_set = {(r.query_id, r.vec_id) for r in comp_rows}
-
-    recall_vs_ivf = len(ivf_set & comp_set) / len(ivf_set)
-    print(f"ivfpq recall vs exact-in-probed-cells: {recall_vs_ivf:.3f}")
-    assert recall_vs_ivf >= 0.5, recall_vs_ivf
-
-    # scores exact: every returned sim matches the full-precision dot
-    exact = topk_cosine(
-        emb.select("vec_id", "embedding"), queries, k=1000, threshold=-1.0
-    ).select("query_id", "vec_id", "sim")
-    joined = composed.alias("a").join(
-        exact.alias("e"), ["query_id", "vec_id"], "left"
-    )
-    assert joined.filter(F.col("e.sim").isNull()).count() == 0
-    assert joined.filter(F.abs(F.col("a.sim") - F.col("e.sim")) > 1e-9).count() == 0

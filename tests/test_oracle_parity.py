@@ -32,7 +32,6 @@ def _folded():
         analytics_q,
         corpus_q,
         fusion_q,
-        vector_q,
     )
 
     return [
@@ -55,8 +54,6 @@ def _folded():
         # query_length / search_effectiveness / recommendation columns
         ("q13_effectiveness", fusion_q.q13_effectiveness,
          fusion_q._Q13_ORACLE),
-        ("q2_ann_pq", vector_q.q2_ann_pq, vector_q._pq_oracle()),
-        ("q2_ann_ivfpq", vector_q.q2_ann_ivfpq, vector_q._ivfpq_oracle()),
     ]
 
 

@@ -200,27 +200,25 @@ def test_hyperplane_sketch_is_map_side(spark):
 
 
 def test_pq_encode_is_map_side(spark):
-    """PQ codes and ADC scores must be map-side expressions over literal
-    codebooks (operators/pq.py): no per-vector-id aggregation shuffle may
-    appear before the shortlist window, and the shortlist must pre-truncate
-    via WindowGroupLimit. The only exchanges are the broadcast of the
-    per-query distance tables and the two rank windows' query_id shuffles."""
-    from koby_s_ai_vector_db_spark.queries.vector_q import q2_ann_pq
-
-    plan = _fn_plan(spark, q2_ann_pq)
+    """The PQ search's ADC scores are map-side expressions over the
+    persisted codes and a broadcast codebook (operators/pq.py): no
+    per-vector-id shuffle may appear (the shortlist's vector fetch is a
+    broadcast join), and the shortlist must pre-truncate via
+    WindowGroupLimit. The only exchanges are the broadcasts and the two
+    rank windows' query_id shuffles."""
+    plan = _plan(spark, "q2_ann_pq_idx")
     assert "WindowGroupLimit" in plan
-    assert "hashpartitioning(vec_id" not in plan, "codes reassembled via per-id shuffle"
+    assert "hashpartitioning(vec_id" not in plan, "per-id shuffle in the search"
+    assert "CartesianProduct" not in plan
 
 
 def test_ivfpq_probe_and_encode_shapes(spark):
-    """IVF+PQ composition: the probe must ride broadcasts (no shuffle of
-    the corpus by label for the probe join), PQ encode stays map-side, and
-    the shortlist pre-truncates via WindowGroupLimit."""
-    from koby_s_ai_vector_db_spark.queries.vector_q import q2_ann_ivfpq
-
-    plan = _fn_plan(spark, q2_ann_ivfpq)
+    """IVF+PQ search: the probe and the distance tables ride broadcasts
+    (no shuffle of the corpus for the probe join), the ADC score stays
+    map-side, and the shortlist pre-truncates via WindowGroupLimit."""
+    plan = _plan(spark, "q2_ann_ivfpq_idx")
     assert "WindowGroupLimit" in plan
-    assert "hashpartitioning(vec_id" not in plan, "codes reassembled via per-id shuffle"
+    assert "hashpartitioning(vec_id" not in plan, "per-id shuffle in the search"
     assert "CartesianProduct" not in plan
 
 

@@ -1,17 +1,17 @@
-"""Persisted PQ / IVF+PQ index: build-once search must be row-identical to
-the inline operators (same codebook, same tie-breaks), the index must store
-the input vectors as given (element type and values), and the search plans
-must show the two prunings the layout exists for — column pruning on the
-ADC scan (codes read, vectors not) and partition pruning on probed lists
-(counted as partitions read)."""
+"""Persisted PQ / IVF+PQ index: recall against the exact search (the
+shortlist is the recall dial), exact returned scores, vectors stored as
+given (element type and values), non-64-d vectors rejected, and the two
+prunings the layout exists for — column pruning on the ADC scan (codes
+read, vectors not) and partition pruning on probed lists (counted as
+partitions read). Values are checked against DuckDB by the oracle parity
+of q2_ann_pq_idx / q2_ann_ivfpq_idx (tests/test_oracle_parity.py)."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from koby_s_ai_vector_db_spark.operators.ivfpq import ivfpq_topk
-from koby_s_ai_vector_db_spark.operators.pq import pq_topk
+from koby_s_ai_vector_db_spark.operators.similarity import ivf_topk, topk_cosine
 from koby_s_ai_vector_db_spark.sources.pq_index import (
     append_to_ivfpq_index,
     build_ivfpq_index,
@@ -41,10 +41,6 @@ def _queries(spark):
     )
 
 
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
 @pytest.fixture(scope="module")
 def pq_path(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("pqidx") / "flat")
@@ -70,27 +66,71 @@ def kmeans_path(spark, tmp_path_factory):
     return path
 
 
-def test_pq_index_matches_inline_operator(spark, pq_path):
-    idx = pq_index_search(
-        spark, pq_path, _queries(spark), k=K, shortlist=SHORTLIST
-    )
-    inline = pq_topk(
-        _emb(spark).select("vec_id", "embedding"), _queries(spark),
-        k=K, shortlist=SHORTLIST,
-    )
-    assert _rows(idx) == _rows(inline)
+def _pairs(df):
+    return {(r.query_id, r.vec_id) for r in df.select("query_id", "vec_id").collect()}
 
 
-def test_ivfpq_index_matches_inline_operator(spark, ivfpq_path):
-    idx = ivfpq_index_search(
-        spark, ivfpq_path, _queries(spark),
-        k=K, n_probe=N_PROBE, shortlist=SHORTLIST,
+def _assert_scores_exact(spark, approx, nq):
+    """Every returned (query, id, sim) carries the exact cosine: the index
+    may lose rows (recall < 1), never alter a returned score."""
+    emb = _emb(spark).select("vec_id", "embedding")
+    exact = topk_cosine(
+        emb, _queries(spark).filter(F.col("query_id") < nq),
+        k=emb.count(), threshold=-1.0,
+    ).select("query_id", "vec_id", "sim")
+    joined = approx.alias("a").join(exact.alias("e"), ["query_id", "vec_id"], "left")
+    assert joined.filter(F.col("e.sim").isNull()).count() == 0
+    assert joined.filter(F.abs(F.col("a.sim") - F.col("e.sim")) > 1e-9).count() == 0
+
+
+def test_pq_recall_vs_exact(spark, pq_path):
+    """PQ ADC shortlist + exact re-rank. Uniform random fixture vectors
+    are the WORST case for quantization (no cluster structure for the
+    codebook to exploit); measured recall@10 = 0.59 at shortlist=64, 0.85
+    at 128. Floors asserted well below measured."""
+    exact = _pairs(
+        topk_cosine(
+            _emb(spark).select("vec_id", "embedding"), _queries(spark),
+            k=K, threshold=-1.0,
+        )
     )
-    inline = ivfpq_topk(
-        _emb(spark).select("vec_id", "label", "embedding"), _queries(spark),
-        k=K, n_probe_labels=N_PROBE, shortlist=SHORTLIST,
+    recalls = {}
+    for sl in (64, 128):
+        hits = _pairs(pq_index_search(spark, pq_path, _queries(spark), k=K, shortlist=sl))
+        recalls[sl] = len(exact & hits) / len(exact)
+    print(f"pq recall@{K}: {recalls}")
+    assert recalls[64] >= 0.4, recalls
+    assert recalls[128] >= recalls[64]  # shortlist is a recall dial
+    assert recalls[128] >= 0.6, recalls
+
+
+def test_pq_scores_are_exact(spark, pq_path):
+    approx = pq_index_search(
+        spark, pq_path, _queries(spark).filter(F.col("query_id") < 4),
+        k=5, shortlist=32,
     )
-    assert _rows(idx) == _rows(inline)
+    _assert_scores_exact(spark, approx, 4)
+
+
+def test_ivfpq_composed_tier(spark, ivfpq_path):
+    """IVF+PQ: recall is bounded by the IVF probe (rows outside probed
+    lists are invisible); within the probed lists the PQ shortlist + exact
+    re-rank must (a) return only exact scores and (b) recover most of what
+    the exact search inside the same lists (q2's `ivf_topk` over the same
+    labels) returns at the same probe budget."""
+    ivf = _pairs(
+        ivf_topk(
+            _emb(spark).select("vec_id", "label", "embedding"), _queries(spark),
+            k=K, n_probe_labels=N_PROBE,
+        )
+    )
+    composed = ivfpq_index_search(
+        spark, ivfpq_path, _queries(spark), k=K, n_probe=N_PROBE, shortlist=SHORTLIST
+    )
+    recall_vs_ivf = len(ivf & _pairs(composed)) / len(ivf)
+    print(f"ivfpq recall vs exact-in-probed-lists: {recall_vs_ivf:.3f}")
+    assert recall_vs_ivf >= 0.5, recall_vs_ivf
+    _assert_scores_exact(spark, composed, 8)
 
 
 def test_index_files_are_zstd(pq_path, ivfpq_path):
@@ -247,3 +287,44 @@ def test_learned_kmeans_build_recall(spark, kmeans_path):
     for r in res:
         if r.vec_id == r.query_id:
             assert r.rank == 1 and r.sim == pytest.approx(1.0, abs=1e-6)
+
+
+def _vectors(spark, dim, n=40):
+    import random
+
+    rnd = random.Random(dim)
+    return spark.createDataFrame(
+        [(i, i % 4, [rnd.uniform(-1, 1) for _ in range(dim)]) for i in range(n)],
+        "vec_id long, label int, embedding array<float>",
+    )
+
+
+@pytest.mark.parametrize("dim", [32, 128])
+def test_wrong_vector_size_is_rejected(spark, pq_path, ivfpq_path, tmp_path, dim):
+    """Codes read dims 1..64, so unchecked, a 32-d vector fails deep in
+    the plan and a 128-d one is silently truncated (its list_col centroids
+    come out 64-d and every probe dot is NULL). Every build, append and
+    search raises an error naming both sizes instead."""
+    import shutil
+
+    bad = _vectors(spark, dim)
+    want = f"needs 64-d vectors; embedding has {dim} dims"
+    with pytest.raises(Exception, match=want):
+        build_pq_index(bad, str(tmp_path / "flat"))
+    with pytest.raises(Exception, match=want):
+        build_ivfpq_index(bad, str(tmp_path / "lists"), list_col="label")
+    with pytest.raises(Exception, match=want):
+        build_ivfpq_index(bad, str(tmp_path / "kmeans"), n_lists=2, max_iter=1)
+    appended = str(tmp_path / "appended")
+    shutil.copytree(ivfpq_path, appended)
+    with pytest.raises(Exception, match=want):
+        append_to_ivfpq_index(bad, appended)
+
+    qs = bad.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    ).limit(2)
+    want = f"needs 64-d vectors; query_vec has {dim} dims"
+    with pytest.raises(Exception, match=want):
+        pq_index_search(spark, pq_path, qs).collect()
+    with pytest.raises(Exception, match=want):
+        ivfpq_index_search(spark, ivfpq_path, qs).collect()
