@@ -44,6 +44,24 @@ def dot(a: Column | str, b: Column | str) -> Column:
     return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
 
 
+def dim_checked(vec_col: str, dim: int, what: str) -> Column:
+    """`vec_col` as given, or a runtime error naming both sizes when a
+    vector is not `dim`-d (``"{what} needs {dim}-d vectors; ..."``). One
+    expression in the caller's projection — it adds no Spark job. NULL
+    vectors pass through."""
+    v = F.col(vec_col)
+    return F.when(
+        v.isNotNull() & (F.size(v) != dim),
+        F.raise_error(
+            F.concat(
+                F.lit(f"{what} needs {dim}-d vectors; {vec_col} has "),
+                F.size(v).cast("string"),
+                F.lit(" dims"),
+            )
+        ),
+    ).otherwise(v)
+
+
 def mean_vector(vec_col: str, dim: int) -> Column:
     """Aggregate: the element-wise mean of `vec_col` over a group, as an
     array<double> of `dim` parallel avg() — an IVF list's centroid.

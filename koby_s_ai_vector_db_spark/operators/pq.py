@@ -45,6 +45,8 @@ import hashlib
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from koby_s_ai_vector_db_spark.functions import vectors
+
 DIM = 64  # fixture embedding dimensionality
 M = 8  # subspaces
 SUB = DIM // M  # dims per subspace
@@ -53,22 +55,8 @@ CODEBOOK_SCHEMA = "cb array<array<array<double>>>"  # cb[s][c]: code c of subspa
 
 
 def dim_checked(vec_col: str) -> F.Column:
-    """`vec_col` as given, or a runtime error naming both sizes when a
-    vector is not DIM-d: codes read dims 1..DIM, so a shorter vector
-    fails deep in the encode and a longer one is silently truncated.
-    One expression in the caller's projection — it adds no Spark job.
-    NULL vectors pass through."""
-    v = F.col(vec_col)
-    return F.when(
-        v.isNotNull() & (F.size(v) != DIM),
-        F.raise_error(
-            F.concat(
-                F.lit(f"PQ index needs {DIM}-d vectors; {vec_col} has "),
-                F.size(v).cast("string"),
-                F.lit(" dims"),
-            )
-        ),
-    ).otherwise(v)
+    """`vec_col`, checked to be DIM-d: codes read dims 1..DIM."""
+    return vectors.dim_checked(vec_col, DIM, "PQ index")
 
 
 def _md5_u32(s: str) -> int:

@@ -28,7 +28,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from koby_s_ai_vector_db_spark.functions.partitioning import spread
-from koby_s_ai_vector_db_spark.functions.vectors import dot, l2_normalize, mean_vector
+from koby_s_ai_vector_db_spark.functions.vectors import (
+    dim_checked,
+    dot,
+    l2_normalize,
+    mean_vector,
+)
 
 
 def topk_cosine(
@@ -149,9 +154,15 @@ def ivf_topk(
     is a partition-pruned scan, not a full pass (that persisted layout is
     implemented in sources/ivf.py: build_ivf_index / ivf_index_search).
     Recall < 1.0 by design; tests measure it against topk_cosine.
+    Vectors must be `dim`-d: any other size would NULL every probe dot
+    against the `dim`-d centroids, so it raises an error naming both.
     """
-    c = spread(corpus).withColumn(vec_col, l2_normalize(vec_col))
-    q = queries.withColumn(query_vec_col, l2_normalize(query_vec_col))
+    c = spread(corpus).withColumn(
+        vec_col, l2_normalize(dim_checked(vec_col, dim, "ivf_topk"))
+    )
+    q = queries.withColumn(
+        query_vec_col, l2_normalize(dim_checked(query_vec_col, dim, "ivf_topk"))
+    )
 
     def _centroids():
         return c.groupBy(label_col).agg(

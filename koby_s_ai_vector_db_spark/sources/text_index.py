@@ -10,7 +10,7 @@ supabase_schema.sql; pgvector's `CREATE INDEX` is the same bargain for
 vectors). Spark-first, the index IS a storage layout, like the IVF and PQ
 indexes (sources/ivf.py, sources/pq_index.py):
 
-  build (once)    ``{path}/postings``: (term, id, tf, dl) — document
+  build (once)    ``{path}/postings``: (term, id, tf, dl, seg) — document
                   length DENORMALIZED into each posting so search never
                   joins a doc-length table — PARTITIONED BY
                   ``bucket = hash(term) % n_buckets`` and written
@@ -20,15 +20,14 @@ indexes (sources/ivf.py, sources/pq_index.py):
                   lifebench corpus (seed 101, 16 buckets, zstd) postings
                   take 230 KB id-major, 347 KB term-major (term, id) and
                   373 KB in unsorted shuffle order;
-                  ``{path}/terms``: (term, df) with the same bucketing;
-                  ``{path}/stats``: one row (n_docs, avgdl).
+                  ``{path}/stats``: one row per segment (n_docs, sum_dl,
+                  n_buckets).
   search (often)  hash the query's terms with the same function, collect
-                  their bucket ids and filter both scans on them → the
-                  probe touches only those buckets' partitions (files of
-                  unprobed buckets are never opened); query terms and
-                  their df are broadcast; the only full shuffle is the
-                  per-(query, doc) score aggregation — the same key the
-                  top-k needs.
+                  their bucket ids and filter the postings scan on them →
+                  the probe touches only those buckets' partitions (files
+                  of unprobed buckets are never opened); query terms are
+                  broadcast into it, and a term's df is a window count of
+                  its live postings there (no df table is stored).
 
 The bucket hash is Spark's own `hash()` — it never crosses engines (both
 build and probe run in Spark), so no portable-md5 detour is needed here.
@@ -57,9 +56,32 @@ from koby_s_ai_vector_db_spark.sources.pq_index import (
 )
 
 POSTINGS_SUBDIR = "postings"
-TERMS_SUBDIR = "terms"
 STATS_SUBDIR = "stats"
 DEFAULT_BUCKETS = 64
+# Declared read schemas: a schema-less spark.read.parquet runs one
+# schema-inference job per call. ``bucket`` is the partition column.
+POSTINGS_SCHEMA = "term string, id bigint, tf bigint, dl double, seg int, bucket int"
+STATS_SCHEMA = "n_docs double, sum_dl double, n_buckets int"
+
+
+def _read_postings(spark: SparkSession, path: str) -> DataFrame:
+    return spark.read.schema(POSTINGS_SCHEMA).parquet(f"{path}/{POSTINGS_SUBDIR}")
+
+
+def _read_stats(spark: SparkSession, path: str) -> DataFrame:
+    return spark.read.schema(STATS_SCHEMA).parquet(f"{path}/{STATS_SUBDIR}")
+
+
+def _n_buckets(stats: DataFrame, path: str) -> int:
+    """The bucket count the index was built with. A stats sidecar written
+    without it reads as NULL under STATS_SCHEMA."""
+    n = stats.head()["n_buckets"]
+    if n is None:
+        raise ValueError(
+            f"{path}/{STATS_SUBDIR} has no n_buckets column — index built "
+            "by an older build_text_index; rebuild it"
+        )
+    return int(n)
 
 
 def _live(postings: DataFrame, tomb: DataFrame | None) -> DataFrame:
@@ -104,16 +126,11 @@ def build_text_index(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> dict:
-    """Tokenize + invert once; persist bucket-partitioned postings/terms
-    and the corpus-scalar sidecar. Returns {"n_docs", "n_terms", "path"}."""
-    spark = docs.sparkSession
-    _write_segment(docs, path, n_buckets, id_col, text_col, mode="overwrite")
-    n_terms = (
-        spark.read.parquet(f"{path}/{TERMS_SUBDIR}")
-        .select("term").distinct().count()
-    )
-    n_docs = int(
-        spark.read.parquet(f"{path}/{STATS_SUBDIR}").head()["n_docs"]
+    """Tokenize + invert once; persist bucket-partitioned postings and the
+    corpus-scalar sidecar. Returns {"n_docs", "n_terms", "path",
+    "n_buckets"}."""
+    n_docs, n_terms = _write_segment(
+        docs, path, n_buckets, id_col, text_col, mode="overwrite"
     )
     return {"n_docs": n_docs, "n_terms": n_terms, "path": path,
             "n_buckets": n_buckets}
@@ -127,14 +144,15 @@ def _write_segment(
     text_col: str,
     mode: str,
     seg: int = 0,
-) -> None:
-    """Write one index segment (postings + per-segment term df + one stats
-    row). Every aggregate the search needs is ADDITIVE across segments
-    (df, n_docs, sum_dl), so append-mode segments compose exactly —
-    the Lucene-segment idea without the merge daemon. ``seg`` stamps the
-    postings rows with their segment generation: deletes are scoped to
-    the generations that existed when they were issued, so an id
-    re-added by a later upsert is visible again."""
+) -> tuple[int, int]:
+    """Write one index segment (postings + one stats row) and return its
+    (n_docs, n_terms), counted on the persisted frames. Every aggregate
+    the search needs is ADDITIVE across segments (df as a count of
+    postings rows, n_docs, sum_dl), so append-mode segments compose
+    exactly — the Lucene-segment idea without the merge daemon. ``seg``
+    stamps the postings rows with their segment generation: deletes are
+    scoped to the generations that existed when they were issued, so an
+    id re-added by a later upsert is visible again."""
     post = term_postings(docs, id_col, text_col).persist()
     dl = doc_lengths(docs, id_col, text_col).persist()
     try:
@@ -151,15 +169,6 @@ def _write_segment(
         )
         _write_postings(postings, f"{path}/{POSTINGS_SUBDIR}", mode)
 
-        terms = (
-            post.groupBy("term")
-            .agg(F.count("*").cast("double").alias("df"))
-            .select(_bucket("term", n_buckets).alias("bucket"), "term", "df")
-        )
-        terms.repartition("bucket").write.mode(mode).partitionBy(
-            "bucket"
-        ).parquet(f"{path}/{TERMS_SUBDIR}")
-
         # n_buckets is part of the ON-DISK layout (it defines which
         # partition a term lives in), so it is persisted with the stats and
         # read back at search time — a caller-supplied mismatch would
@@ -169,6 +178,7 @@ def _write_segment(
             F.sum("dl").alias("sum_dl"),
         ).withColumn("n_buckets", F.lit(n_buckets))
         stats.coalesce(1).write.mode(mode).parquet(f"{path}/{STATS_SUBDIR}")
+        return dl.count(), post.select("term").distinct().count()
     finally:
         post.unpersist()
         dl.unpersist()
@@ -181,23 +191,19 @@ def append_to_text_index(
     text_col: str = "text",
 ) -> dict:
     """Incrementally add documents to an existing index as a new SEGMENT:
-    postings/terms/stats rows are parquet-appended; search sums the
-    per-segment df and corpus scalars, which is exact because every BM25
-    global (df, N, total length) is additive. No old data is rescanned —
-    the upgrade over the reference's wholesale re-embed per ingest.
-    The bucket count is read from the index (layout-frozen at build)."""
+    postings/stats rows are parquet-appended, which is exact because
+    every BM25 global (df, N, total length) is additive. No old data is
+    rescanned — the upgrade over the reference's wholesale re-embed per
+    ingest. The bucket count is read from the index (layout-frozen at
+    build)."""
     spark = docs.sparkSession
-    stats = spark.read.parquet(f"{path}/{STATS_SUBDIR}")
-    n_buckets = int(stats.head()["n_buckets"])
+    n_buckets = _n_buckets(_read_stats(spark, path), path)
     # Next generation id: one column-pruned scan of the postings table.
-    seg = int(
-        spark.read.parquet(f"{path}/{POSTINGS_SUBDIR}")
-        .agg(F.max("seg")).head()[0]
-    ) + 1
-    _write_segment(
+    seg = int(_read_postings(spark, path).agg(F.max("seg")).head()[0]) + 1
+    n_docs, _ = _write_segment(
         docs, path, n_buckets, id_col, text_col, mode="append", seg=seg
     )
-    return {"n_appended": docs.count(), "path": path, "n_buckets": n_buckets}
+    return {"n_appended": n_docs, "path": path, "n_buckets": n_buckets}
 
 
 def delete_from_text_index(
@@ -211,29 +217,28 @@ def delete_from_text_index(
     algebra. Two things are written, both tiny:
 
       1. the deleted ids append to ``{path}/tombstones`` — search
-         anti-joins them so deleted postings stop matching;
-      2. a NEGATIVE correction segment: per-(bucket, term) df rows with
-         negative counts and a stats row with negative n_docs/sum_dl,
-         derived from the deleted docs' own postings. Because every BM25
-         global is summed across segments at search time, the negative
-         segment makes idf/N/avgdl exact again with ZERO search-side
-         changes — deletes reuse the same mechanism appends do.
+         filters them out, so deleted postings stop matching and stop
+         counting toward any term's df;
+      2. a NEGATIVE stats row (n_docs/sum_dl of the deleted docs),
+         derived from their own postings. Because N and avgdl are summed
+         across segments at search time, the negative row makes them
+         exact again with ZERO search-side changes — deletes reuse the
+         same mechanism appends do.
 
     Ids already tombstoned (or never indexed) are ignored — a repeated
     delete must not double-subtract. `compact_text_index` later applies
     tombstones physically and clears them. Returns {"n_deleted", "path"}.
     """
-    stats = spark.read.parquet(f"{path}/{STATS_SUBDIR}")
-    n_buckets = int(stats.head()["n_buckets"])
+    n_buckets = _n_buckets(_read_stats(spark, path), path)
 
     del_ids = ids.select(F.col(id_col).alias("id")).distinct()
-    # The correction segment needs the deleted docs' term sets — they are
-    # IN the index; one postings pass per delete batch, not per search.
+    # The correction row needs the deleted docs' lengths — they are IN
+    # the index; one postings pass per delete batch, not per search.
     # Corrections derive from the LIVE rows only: an id already deleted
     # (no live postings) contributes nothing and gets no new tombstone,
     # so repeated deletes never double-subtract; an id re-added since an
     # earlier delete has live rows again and is deleted afresh.
-    postings = spark.read.parquet(f"{path}/{POSTINGS_SUBDIR}")
+    postings = _read_postings(spark, path)
     live = _live(postings, read_tombstones(spark, path))
     deleted_post = live.join(F.broadcast(del_ids), "id").persist()
     try:
@@ -241,12 +246,6 @@ def delete_from_text_index(
         if n_deleted == 0:
             return {"n_deleted": 0, "path": path}
         up_to = int(postings.agg(F.max("seg")).head()[0])
-        neg_terms = deleted_post.groupBy("bucket", "term").agg(
-            (-F.count("*")).cast("double").alias("df")
-        )
-        neg_terms.repartition("bucket").write.mode("append").partitionBy(
-            "bucket"
-        ).parquet(f"{path}/{TERMS_SUBDIR}")
         neg_stats = (
             deleted_post.select("id", "seg", "dl")
             .distinct()
@@ -287,15 +286,10 @@ def search_text_index(
 
     The query terms' bucket ids are collected (bounded by the number of
     distinct query terms — not a data collect) and pushed into the
-    postings and terms scans as ``bucket IN (...)``: partitions of
-    unprobed buckets are never opened. Callers with a fixed query set
-    memoize the returned plan (functions/caching.py)."""
-    seg_stats = spark.read.parquet(f"{path}/{STATS_SUBDIR}")
-    if "n_buckets" not in seg_stats.columns:
-        raise ValueError(
-            f"{path}/{STATS_SUBDIR} has no n_buckets column — index built "
-            "by an older build_text_index; rebuild it"
-        )
+    postings scan as ``bucket IN (...)``: partitions of unprobed buckets
+    are never opened. Callers with a fixed query set memoize the returned
+    plan (functions/caching.py)."""
+    seg_stats = _read_stats(spark, path)
     # The 1-row n_buckets read is memoized on the stats sidecar's file
     # list — a per-build head() was a Spark job per query construction
     # (the construction-is-action-free invariant). spark.read.parquet has
@@ -305,7 +299,7 @@ def search_text_index(
     n_buckets = memo(
         spark,
         ("textidx_n_buckets", tuple(sorted(seg_stats.inputFiles()))),
-        lambda: int(seg_stats.head()["n_buckets"]),
+        lambda: _n_buckets(seg_stats, path),
     )
     # Segments are additive: N = Σ n_docs, avgdl = Σ sum_dl / N.
     stats = seg_stats.agg(
@@ -316,30 +310,24 @@ def search_text_index(
     qterms = queries.select(
         F.col(query_id),
         F.explode(F.array_distinct(words_expr(query_text))).alias("term"),
-    ).withColumn("bucket", _bucket("term", n_buckets))
+    )
 
     buckets = sorted(
-        r["bucket"] for r in qterms.select("bucket").distinct().collect()
-    )
-    postings = spark.read.parquet(f"{path}/{POSTINGS_SUBDIR}").filter(
-        F.col("bucket").isin(buckets)
-    )
-    terms = spark.read.parquet(f"{path}/{TERMS_SUBDIR}").filter(
-        F.col("bucket").isin(buckets)
+        r[0]
+        for r in qterms.select(_bucket("term", n_buckets)).distinct().collect()
     )
     # Deleted docs: the generation-scoped tombstone filter hides their
-    # postings; the df/N/avgdl corrections already arrived through the
-    # negative segments' additive sums above (delete_from_text_index).
-    postings = _live(postings, read_tombstones(spark, path))
-
-    # df per query term, summed across segments: both sides of this join
-    # are tiny after pruning; the result (≤ distinct query terms rows) is
-    # broadcast into scoring.
-    term_df = terms.groupBy("bucket", "term").agg(F.sum("df").alias("df"))
-    q_df = qterms.join(term_df, ["bucket", "term"]).select(query_id, "term", "df")
-
+    # postings (so they leave df too); the negative stats rows summed
+    # above take them out of N/avgdl (delete_from_text_index).
+    postings = _live(
+        _read_postings(spark, path).filter(F.col("bucket").isin(buckets)),
+        read_tombstones(spark, path),
+    )
+    # df = the term's live postings: a query's terms are distinct, so the
+    # join holds each live posting of a term once per query asking it.
     scored = (
-        postings.join(F.broadcast(q_df), ["term"])
+        postings.join(F.broadcast(qterms), ["term"])
+        .withColumn("df", F.count(F.lit(1)).over(Window.partitionBy(query_id, "term")))
         .join(F.broadcast(stats.select("n_docs", "avgdl")))
         .withColumn(
             "_idf",
@@ -372,14 +360,15 @@ def search_text_index(
 
 
 def compact_text_index(spark: SparkSession, path: str) -> dict:
-    """Merge all segments into one: per-(bucket, term) df rows are summed,
-    the stats sidecar collapses to a single row, and each bucket's
-    postings are rewritten as one coherent partition (one writer task per
-    bucket) instead of one file set per appended segment. Search results
-    are unchanged — compaction only moves the additive df/stats summing
-    from query time to write time and fixes small-file proliferation:
-    after S appends a probe opens O(S) files per bucket, after compaction
-    O(1). This is Lucene's segment merge as a batch job.
+    """Merge all segments into one: the stats sidecar collapses to a
+    single row, and each bucket's postings are rewritten as one coherent
+    partition (one writer task per bucket) instead of one file set per
+    appended segment. Search results are unchanged — compaction only
+    moves the additive stats summing from query time to write time,
+    drops tombstoned postings (so df is counted over fewer rows) and
+    fixes small-file proliferation: after S appends a probe opens O(S)
+    files per bucket, after compaction O(1). This is Lucene's segment
+    merge as a batch job.
 
     Locally the swap is rewrite-to-tmp + directory rename; on a real
     cluster the same step writes a new index root and flips a manifest
@@ -389,41 +378,27 @@ def compact_text_index(spark: SparkSession, path: str) -> dict:
     import os
     import shutil
 
-    stats = spark.read.parquet(f"{path}/{STATS_SUBDIR}")
-    n_buckets = int(stats.head()["n_buckets"])
+    stats = _read_stats(spark, path)
+    n_buckets = _n_buckets(stats, path)
     n_segments = stats.count()
 
     merged_stats = stats.agg(
         F.sum("n_docs").alias("n_docs"), F.sum("sum_dl").alias("sum_dl")
     ).withColumn("n_buckets", F.lit(n_buckets))
-    # Delete correction segments sum in here: a fully-deleted term nets
-    # df <= 0 and is dropped from the compacted terms table.
-    merged_terms = (
-        spark.read.parquet(f"{path}/{TERMS_SUBDIR}")
-        .groupBy("bucket", "term")
-        .agg(F.sum("df").alias("df"))
-        .filter(F.col("df") > 0)
-    )
     # Apply tombstones physically: compaction is where Lucene reclaims
     # deleted docs; afterwards the tombstone table is empty again and
     # every surviving row restarts at generation 0.
     postings = _live(
-        spark.read.parquet(f"{path}/{POSTINGS_SUBDIR}"),
-        read_tombstones(spark, path),
+        _read_postings(spark, path), read_tombstones(spark, path)
     ).withColumn("seg", F.lit(0).cast("int"))
 
     tmp = f"{path}/.compact_tmp"
     shutil.rmtree(tmp, ignore_errors=True)
     # Materialize the new segment fully before touching the old one.
     _write_postings(postings, f"{tmp}/{POSTINGS_SUBDIR}", "errorifexists")
-    merged_terms.repartition("bucket").write.partitionBy("bucket").parquet(
-        f"{tmp}/{TERMS_SUBDIR}"
-    )
     merged_stats.coalesce(1).write.parquet(f"{tmp}/{STATS_SUBDIR}")
-    n_postings = int(
-        spark.read.parquet(f"{tmp}/{POSTINGS_SUBDIR}").count()
-    )
-    for sub in (POSTINGS_SUBDIR, TERMS_SUBDIR, STATS_SUBDIR):
+    n_postings = int(_read_postings(spark, tmp).count())
+    for sub in (POSTINGS_SUBDIR, STATS_SUBDIR):
         shutil.rmtree(f"{path}/{sub}")
         os.rename(f"{tmp}/{sub}", f"{path}/{sub}")
     shutil.rmtree(tmp, ignore_errors=True)
@@ -443,7 +418,7 @@ def upsert_to_text_index(
     text_col: str = "text",
 ) -> dict:
     """Replace-or-insert documents: delete any existing rows for these
-    ids (tombstone + negative corrections), then append the new contents
+    ids (tombstone + negative stats row), then append the new contents
     as a fresh segment — the reference's filename-keyed re-ingest
     (core/supabase_utils.py:203-248 deletes a document's chunks before
     re-inserting) expressed as index operations. Search afterwards is

@@ -133,6 +133,29 @@ def assert_all_zstd(path: str) -> None:
         assert codecs <= {"ZSTD"}, (f, codecs)
 
 
+def construction_jobs(spark, build, group: str) -> tuple[int, int]:
+    """(jobs, schema-inference jobs) Spark ran during `build()`, counted
+    under job group `group` (use a fresh name per call). A schema-less
+    ``spark.read.parquet`` runs one inference job, whose stages are all
+    ``parquet at ...`` scans."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = tracker.getJobIdsForGroup(group)
+    inference = [
+        j for j in jobs
+        if all(
+            tracker.getStageInfo(s).name.startswith("parquet at")
+            for s in tracker.getJobInfo(j).stageIds
+        )
+    ]
+    return len(jobs), len(inference)
+
+
 def partitions_read(df) -> dict[tuple[str, tuple[str, ...]], int]:
     """Collect ``df``, then count the partitions each partitioned parquet
     scan actually read, from the scans' ``numPartitions`` driver metric in

@@ -4,6 +4,7 @@ the reference documents ivfflat's recall/speed trade-off
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from koby_s_ai_vector_db_spark.operators.similarity import ivf_topk, topk_cosine
@@ -93,3 +94,33 @@ def test_pq_codebook_shape_and_determinism(spark):
     assert len(cb) == pq.M and len(cb[0]) == pq.KS and len(cb[0][0]) == pq.SUB
     assert cb == pq.pq_codebook()
     assert {x for sub in cb for code in sub for x in code} == {1.0, -1.0}
+
+
+@pytest.mark.parametrize("dim", [32, 128])
+def test_ivf_topk_rejects_wrong_vector_size(spark, dim):
+    """Label centroids are `dim`-d (64 by default): unchecked, a 128-d
+    corpus gets 64-d centroids, every probe dot is NULL and the probe
+    silently falls back to label order. Corpus and query vectors of
+    another size raise an error naming both sizes instead."""
+    import random
+
+    rnd = random.Random(dim)
+    corpus = spark.createDataFrame(
+        [(i, i % 5, [rnd.uniform(-1, 1) for _ in range(dim)]) for i in range(200)],
+        "vec_id long, label int, embedding array<float>",
+    )
+    queries = corpus.filter(F.col("vec_id") < 6).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    with pytest.raises(Exception, match=f"needs 64-d vectors; embedding has {dim} dims"):
+        ivf_topk(corpus, queries, k=1, n_probe_labels=2).collect()
+    good = load_table(spark, SF_DIRS["t1"], "embeddings").select(
+        "vec_id", "label", "embedding"
+    )
+    with pytest.raises(Exception, match=f"needs 64-d vectors; query_vec has {dim} dims"):
+        ivf_topk(good, queries, k=1, n_probe_labels=2).collect()
+    # At the right size the check passes every vector through: probing
+    # all five lists is the exact search, so each query finds itself.
+    assert ivf_topk(
+        corpus, queries, k=1, n_probe_labels=5, dim=dim
+    ).filter(F.col("query_id") == F.col("vec_id")).count() == 6

@@ -1,12 +1,12 @@
 """Index delete support (text + PQ): tombstone semantics, exact BM25
-global corrections via negative segments, idempotency, and physical
-reclaim at compaction.
+global corrections, idempotency, and physical reclaim at compaction.
 
 The strong text-index check is rebuild-equivalence: after deleting a
 third of the corpus, search over the tombstoned index is ROW-IDENTICAL
 to search over a fresh index built only on the survivors — which holds
-only if the negative correction segments make df/N/avgdl exact (dl and
-df are integer-valued doubles, so the additive corrections are exact
+only if df (counted over the live, tombstone-filtered postings) and
+N/avgdl (corrected by the negative stats row) are exact (dl is an
+integer-valued double, so the additive corrections are exact
 arithmetic, not approximations).
 
 The PQ check is compaction-equivalence under frozen sidecars: tombstone

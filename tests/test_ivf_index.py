@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from koby_s_ai_vector_db_spark.operators.similarity import ivf_topk, topk_cosine
 from koby_s_ai_vector_db_spark.sources.ivf import build_ivf_index, ivf_index_search
 from koby_s_ai_vector_db_spark.sources.tables import load_table
-from tests.conftest import SF_DIRS, partitions_read
+from tests.conftest import SF_DIRS, construction_jobs, partitions_read
 
 N_LISTS, K = 8, 10
 
@@ -86,24 +86,13 @@ def test_search_construction_reads_centroids_with_schema(spark, index_path):
     result) and ONE schema inference, for `lists` (its id and vector types
     follow the input). The `centroids` sidecar has a fixed schema and is
     read with it (CENTROIDS_SCHEMA), so it adds no inference job."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
     q2 = _queries(spark, 2)
-    group = "ivf_search_construction"
-    sc.setJobGroup(group, "ivf_index_search construction")
-    try:
-        ivf_index_search(spark, index_path, q2, k=K, n_probe=2)
-    finally:
-        sc.setJobGroup(None, None)
-    jobs = tracker.getJobIdsForGroup(group)
-    inference = [
-        j for j in jobs
-        if all(
-            tracker.getStageInfo(s).name.startswith("parquet at")
-            for s in tracker.getJobInfo(j).stageIds
-        )
-    ]
-    assert (len(jobs), len(inference)) == (5, 1), jobs
+    jobs = construction_jobs(
+        spark,
+        lambda: ivf_index_search(spark, index_path, q2, k=K, n_probe=2),
+        "ivf_search_construction",
+    )
+    assert jobs == (5, 1), jobs
 
 
 def test_kmeans_ivf_beats_random_labels(spark, tmp_path_factory):

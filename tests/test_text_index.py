@@ -4,6 +4,9 @@ the query terms' hash buckets (counted as partitions read)."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -16,7 +19,12 @@ from koby_s_ai_vector_db_spark.sources.text_index import (
     search_text_index,
 )
 from koby_s_ai_vector_db_spark.sources.tables import load_table
-from tests.conftest import SF_DIRS, assert_all_zstd, partitions_read
+from tests.conftest import (
+    SF_DIRS,
+    assert_all_zstd,
+    construction_jobs,
+    partitions_read,
+)
 
 SF_DIR = SF_DIRS["t2"]
 
@@ -49,9 +57,9 @@ def test_index_search_matches_inline_bm25(spark, idx_path, k):
 
 
 def test_static_prune_reaches_partition_filters(spark, idx_path):
-    """The probe must prune both scans: postings and terms read at most
-    one partition per distinct query-term bucket — unprobed buckets'
-    files are never opened."""
+    """The probe must prune the postings scan (the only index scan: df is
+    counted from it): it reads at most one partition per distinct
+    query-term bucket — unprobed buckets' files are never opened."""
     q = _queries(spark)
     n_buckets = spark.read.parquet(f"{idx_path}/stats").head()["n_buckets"]
     buckets = (
@@ -62,9 +70,8 @@ def test_static_prune_reaches_partition_filters(spark, idx_path):
     )
     assert buckets < n_buckets
     parts = partitions_read(search_text_index(spark, idx_path, q, k=10))
-    for sub in ("postings", "terms"):
-        read = [n for (root, _), n in parts.items() if root.endswith(f"/{sub}")]
-        assert read and max(read) <= buckets, (sub, parts)
+    read = [n for (root, _), n in parts.items() if root.endswith("/postings")]
+    assert read and max(read) <= buckets, parts
 
 
 def test_bucket_count_read_from_sidecar(spark, tmp_path_factory):
@@ -134,8 +141,8 @@ def test_unindexed_terms_return_nothing(spark, idx_path):
 
 def test_compaction_preserves_search_and_merges_segments(spark, tmp_path_factory):
     """build(half) + append(half) + compact == build(full): identical
-    search results, ONE stats row, one df row per (bucket, term), and
-    fewer files per bucket partition than the segmented index."""
+    search results, ONE stats row, no df table, and fewer files per
+    bucket partition than the segmented index."""
     import glob as _glob
 
     from koby_s_ai_vector_db_spark.sources.text_index import (
@@ -160,12 +167,9 @@ def test_compaction_preserves_search_and_merges_segments(spark, tmp_path_factory
     inline = bm25_rank(docs, _queries(spark), k=10)
     assert sorted(map(tuple, after.collect())) == sorted(map(tuple, inline.collect()))
 
-    import pyspark.sql.functions as SF
-
     stats = spark.read.parquet(f"{path}/stats")
     assert stats.count() == 1
-    terms = spark.read.parquet(f"{path}/terms")
-    assert terms.groupBy("bucket", "term").count().filter("count > 1").count() == 0
+    assert not os.path.exists(f"{path}/terms")
     files_after = len(_glob.glob(f"{path}/postings/bucket=*/*.parquet"))
     assert files_after <= files_before
 
@@ -208,3 +212,100 @@ def test_postings_id_major_and_zstd_through_segment_lifecycle(spark, tmp_path_fa
     compact_text_index(spark, path)
     _assert_postings_id_major(path)
     assert_all_zstd(path)
+
+
+def test_search_construction_reads_with_declared_schemas(spark, tmp_path):
+    """Building a search runs the bounded bucket-id collect (two jobs
+    under AQE: distinct shuffle, result) plus, on the first call over an
+    index, the memoized one-row n_buckets read. `stats` and `postings`
+    have fixed schemas and are read with them (STATS_SCHEMA,
+    POSTINGS_SCHEMA), so no read adds a schema-inference job."""
+    path = str(tmp_path / "index")
+    build_text_index(load_table(spark, SF_DIRS["t1"], "documents"), path, n_buckets=8)
+    q = spark.createDataFrame(BM25_QUERIES[:1], "query_id bigint, query_text string")
+
+    def build():
+        search_text_index(spark, path, q, k=10)
+
+    assert construction_jobs(spark, build, "text_search_first") == (3, 0)
+    assert construction_jobs(spark, build, "text_search_steady") == (2, 0)
+
+
+def test_stats_without_bucket_count_is_rejected(spark, tmp_path):
+    """An index whose stats sidecar predates the persisted n_buckets reads
+    that column as NULL under the declared schema: search, append,
+    delete and compaction refuse it by name rather than hashing terms
+    into a guessed layout."""
+    from koby_s_ai_vector_db_spark.sources.text_index import (
+        append_to_text_index,
+        compact_text_index,
+        delete_from_text_index,
+    )
+
+    path = str(tmp_path / "index")
+    docs = load_table(spark, SF_DIRS["t1"], "documents")
+    build_text_index(docs, path, n_buckets=8)
+    spark.read.parquet(f"{path}/stats").drop("n_buckets").write.parquet(
+        f"{path}/stats_old"
+    )
+    shutil.rmtree(f"{path}/stats")
+    os.rename(f"{path}/stats_old", f"{path}/stats")
+    match = "no n_buckets column"
+    with pytest.raises(ValueError, match=match):
+        search_text_index(spark, path, _queries(spark), k=10)
+    with pytest.raises(ValueError, match=match):
+        append_to_text_index(docs.limit(2), path)
+    with pytest.raises(ValueError, match=match):
+        delete_from_text_index(spark, path, docs.select("doc_id").limit(2))
+    with pytest.raises(ValueError, match=match):
+        compact_text_index(spark, path)
+
+
+def test_lifecycle_writes_no_df_table_and_matches_inline_bm25(spark, tmp_path):
+    """build → append → delete → upsert → compact: no step writes a
+    `terms` dir (df is counted from the live postings), and after every
+    step search equals inline bm25_rank over the documents live at that
+    point, at k=10 and at hybrid_rrf's pool depth k=50."""
+    from koby_s_ai_vector_db_spark.sources.text_index import (
+        append_to_text_index,
+        compact_text_index,
+        delete_from_text_index,
+        upsert_to_text_index,
+    )
+
+    path = str(tmp_path / "index")
+    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
+    q = _queries(spark)
+
+    def check(live):
+        assert not os.path.exists(f"{path}/terms")
+        for k in (10, 50):
+            got = search_text_index(spark, path, q, k=k)
+            want = bm25_rank(live, q, k=k)
+            assert sorted(map(tuple, got.collect())) == sorted(
+                map(tuple, want.collect())
+            ), k
+
+    live = docs.filter(F.col("doc_id") % 2 == 0)
+    build_text_index(live, path, n_buckets=8)
+    check(live)
+
+    append_to_text_index(docs.filter(F.col("doc_id") % 2 == 1), path)
+    live = docs
+    check(live)
+
+    delete_from_text_index(spark, path, docs.filter(F.col("doc_id") % 3 == 0))
+    live = docs.filter(F.col("doc_id") % 3 != 0)
+    check(live)
+
+    # Rewrites every fifth doc; those also divisible by 3 were deleted
+    # above, so the upsert re-adds them with their new text.
+    changed = docs.filter(F.col("doc_id") % 5 == 0).select(
+        "doc_id", F.concat(F.lit("spark hash table "), "text").alias("text")
+    )
+    upsert_to_text_index(changed, path)
+    live = live.filter(F.col("doc_id") % 5 != 0).unionByName(changed)
+    check(live)
+
+    compact_text_index(spark, path)
+    check(live)
