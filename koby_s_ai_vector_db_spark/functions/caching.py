@@ -46,9 +46,9 @@ def memo(spark: SparkSession, key: Hashable, builder: Callable[[], T]) -> T:
     driver/py4j work per ``createDataFrame``) and for bounded collects
     that would otherwise run a Spark job on EVERY query build (the
     steady-state construction-is-action-free invariant,
-    tests/test_round9_ops.py). The index sources (sources/ivf.py,
-    pq_index.py, text_index.py) collect their probe ids while building a
-    search, so a caller with a fixed query set over an index it never
+    tests/test_round9_ops.py). The index sources (sources/pq_index.py,
+    text_index.py) collect their probe ids while building a search, so a
+    caller with a fixed query set over an index it never
     rebuilds memoizes the returned search plan, keyed on its own name and
     the index path. Thread-unsafe by design (queries run on the driver
     thread); worst case a race builds twice."""

@@ -893,7 +893,7 @@ def incremental_minhash_dedup(
     with -1/0.0 sentinels for novel rows (NULL-free by convention).
 
     The base side's signature table is the thing a production pipeline
-    PERSISTS (sources/ivf.py analogue for text); in-session the memoized
+    PERSISTS (sources/pq_index.py analogue for text); in-session the memoized
     shingle table stands in via `cache_key`. Crowded base buckets keep
     their first BUCKET_CAP sorted members — a new doc landing in a viral
     bucket still meets a representative (the cap rule is mirrored in the

@@ -33,8 +33,8 @@ lower vec_id, so results are value-identical across engines.
 
 A learned codebook (k-means per subspace, like faiss.ProductQuantizer
 training) drops quantization error further but is engine-specific float
-iteration — the same trade-off as the k-means lists of sources/ivf.py,
-which are recall-tested rather than value-oracled. The PQ MECHANICS here
+iteration — the same trade-off as the index's k-means lists
+(sources/pq_index.py), which are recall-tested rather than value-oracled. The PQ MECHANICS here
 are identical either way.
 """
 

@@ -152,7 +152,7 @@ def ivf_topk(
     probe their n nearest centroids, and the exact search runs only inside
     probed cells — at scale the corpus is *partitioned by* label so a probe
     is a partition-pruned scan, not a full pass (that persisted layout is
-    implemented in sources/ivf.py: build_ivf_index / ivf_index_search).
+    sources/pq_index.py: build_ivfpq_index / ivfpq_index_search).
     Recall < 1.0 by design; tests measure it against topk_cosine.
     Vectors must be `dim`-d: any other size would NULL every probe dot
     against the `dim`-d centroids, so it raises an error naming both.
@@ -172,7 +172,7 @@ def ivf_topk(
     # cache_key memo-persists the lists×dim centroid table per session —
     # the IVF "index build" analog: steady-state probes must not
     # re-aggregate the corpus per query call (round 13; the
-    # persisted-index tier in sources/ivf.py stores this table durably).
+    # persisted index in sources/pq_index.py stores this table durably).
     if cache_key is not None:
         from koby_s_ai_vector_db_spark.functions.caching import memo_persist
 

@@ -391,7 +391,7 @@ def dedup_embedding_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup through the IVF scale tier: the perturbed copies
     probe their 2 nearest of 10 cells and exact-verify only inside probed
     cells — the partition-pruned path a 100 TB corpus would take (corpus
-    partitioned by list id, sources/ivf.py), vs dedup_embedding_cosine's
+    partitioned by list id, sources/pq_index.py), vs dedup_embedding_cosine's
     bounded brute-force tier and dedup_embedding_lsh's angular-LSH tier.
     Perturbed copies inherit their source row's cell label, as a real
     IVF assignment would co-locate near-identical vectors; recall follows

@@ -330,25 +330,33 @@ FROM ranked WHERE rank <= {K}
 
 @register("q2_ann_pq_idx", _pq_oracle())
 def q2_ann_pq_idx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ ANN over the PERSISTED codes artifact (sources/pq_index.py):
-    build-once encode, then a column-pruned (vec_id, codes)-only scan per
-    query — the hot loop reads 4-byte codes, never the 256-byte vectors.
-    Scores are exact (re-ranked); recall vs q1 is measured in
-    tests/test_pq_index.py."""
+    """Flat PQ ANN over the PERSISTED codes artifact (sources/pq_index.py,
+    one constant list probed with n_probe=1): build-once encode, then a
+    column-pruned (vec_id, codes)-only scan per query — the hot loop reads
+    4-byte codes, never the 256-byte vectors. Scores are exact
+    (re-ranked); recall vs q1 is measured in tests/test_pq_index.py."""
     from koby_s_ai_vector_db_spark.sources.pq_index import (
-        build_pq_index,
-        pq_index_search,
+        build_ivfpq_index,
+        ivfpq_index_search,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     path = scratch_index(
         spark, "pq", sf_dir,
-        lambda p: build_pq_index(emb.select("vec_id", "embedding"), p),
+        lambda p: build_ivfpq_index(
+            emb.select("vec_id", F.lit(0).alias("list"), "embedding"), p,
+            list_col="list",
+        ),
     )
     queries = emb.filter(F.col("vec_id") < NQ).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    return pq_index_search(spark, path, queries, k=K, shortlist=SHORTLIST)
+    return memo(  # memoized like q2_ann_ivfpq_idx
+        spark, ("q2_ann_pq_idx", path),
+        lambda: ivfpq_index_search(
+            spark, path, queries, k=K, n_probe=1, shortlist=SHORTLIST
+        ),
+    )
 
 
 @register("q2_ann_ivfpq_idx", _ivfpq_oracle())
@@ -387,30 +395,33 @@ def q2_ann_ivfpq_idx(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("q2_ann_ivf_idx", None)
 def q2_ann_ivf_idx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN over the persisted LEARNED k-means IVF index (sources/ivf.py):
-    seeded MLlib k-means lists written partitionBy(list), probed with
-    static partition pruning — the pgvector `CREATE INDEX ivfflat` +
-    probes analogue. Registered WITHOUT an oracle: iterative float
-    k-means is engine-specific, so the driver records the weaker
+    """IVF-flat ANN over the persisted index with LEARNED k-means lists
+    (sources/pq_index.py, ``shortlist=None``): seeded MLlib k-means lists
+    written partitionBy(list), probed with static partition pruning, and
+    every row of the probed lists scored exactly — the pgvector `CREATE
+    INDEX ivfflat` + probes analogue. Registered WITHOUT an oracle:
+    iterative float k-means is engine-specific, so it gets the weaker
     rows-only check while value-level semantics are covered by the
     deterministic q2_ann* family and tests/test_ivf_index.py (recall,
-    self-match@1, partitions-read assertions)."""
-    from koby_s_ai_vector_db_spark.sources.ivf import (
-        build_ivf_index,
-        ivf_index_search,
+    full probe = exact, partitions-read assertions)."""
+    from koby_s_ai_vector_db_spark.sources.pq_index import (
+        build_ivfpq_index,
+        ivfpq_index_search,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     path = scratch_index(
         spark, "ivf", sf_dir,
-        lambda p: build_ivf_index(emb.select("vec_id", "embedding"), p, n_lists=10),
+        lambda p: build_ivfpq_index(emb.select("vec_id", "embedding"), p, n_lists=10),
     )
     queries = emb.filter(F.col("vec_id") < NQ).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     return memo(  # memoized like q2_ann_ivfpq_idx
         spark, ("q2_ann_ivf_idx", path),
-        lambda: ivf_index_search(spark, path, queries, k=K, n_probe=N_PROBE),
+        lambda: ivfpq_index_search(
+            spark, path, queries, k=K, n_probe=N_PROBE, shortlist=None
+        ),
     )
 
 

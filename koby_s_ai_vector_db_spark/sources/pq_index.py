@@ -1,58 +1,66 @@
-"""Persisted product-quantization index — encode once, ADC-scan codes
-forever.
+"""The persisted vector index — one list-partitioned layout, three
+searches: IVF-flat, flat PQ and IVF+PQ.
 
 Encoding a vector costs M·KS·SUB = 1024 codebook reads, so the codes are
 computed once at build time and persisted; re-encoding the corpus per
 query would forfeit exactly the memory-bandwidth win PQ exists for. The
-reference's analogue is the one-time ``CREATE INDEX``
-(supabase_schema.sql:137-139) and FAISS's trained-then-serialized
-IndexIVFPQ (the production successor of the reference's IndexFlatIP,
-core/utils.py:203-214). Spark-first, the index IS a storage layout — the
-same stance as the IVF index (sources/ivf.py):
+reference persists one index: a FAISS file (core/utils.py:203-214) plus,
+on the cloud path, a pgvector ivfflat index built once by ``CREATE
+INDEX`` (supabase_schema.sql:137-139) — k-means lists probed per query.
+Spark-first, the index IS a storage layout:
 
-  build (once)    encode the L2-normalized vectors to M 4-bit codes; write
-                  ONE parquet table ``{path}/data`` with columns (id,
-                  codes, vec) — IVFPQ variant PARTITIONED BY coarse list
-                  id — plus tiny ``codebook`` (and ``centroids``)
-                  sidecars. ``vec`` is the input vector AS GIVEN, not a
-                  normalized copy: float32 input stays ``array<float>``
-                  (FAISS IndexFlatIP rows and pgvector ``vector(n)`` are
-                  float32 too), half the bytes of a widened double copy.
-  search (often)  read the codebook sidecar, build per-query ADC tables,
-                  scan ``data`` selecting ONLY (id, codes): parquet
-                  COLUMN pruning means the 256-byte vec (64-d float32)
-                  is never read during the hot scan — the 64× smaller read
-                  is real I/O, not a projection after a full-width read.
-                  IVFPQ adds PARTITION pruning: the probed list ids are
-                  collected and pushed into the scan as ``list IN (...)``,
-                  so unprobed lists' files are never opened (as ivf.py).
-                  The exact re-rank then fetches (id, vec) of the
-                  |queries|·shortlist rows only, from the same probed
-                  lists, and normalizes just those vectors.
-                  `l2_normalize` widens to double before any arithmetic,
-                  so re-rank scores equal those of a stored normalized
-                  double copy bit for bit.
+  build (once)    ONE parquet table ``{path}/data`` with columns (id,
+                  codes, vec) PARTITIONED BY coarse list id — the codes
+                  encode the L2-normalized vector to M 4-bit ids — plus
+                  tiny ``centroids`` and ``codebook`` sidecars. ``vec`` is
+                  the input vector AS GIVEN, not a normalized copy:
+                  float32 input stays ``array<float>`` (FAISS IndexFlatIP
+                  rows and pgvector ``vector(n)`` are float32 too), half
+                  the bytes of a widened double copy. Lists are seeded
+                  k-means (pgvector's ivfflat build) or an existing
+                  labeling; a flat index is one constant list.
+  search (often)  rank centroids per query, collect the probed list ids
+                  (bounded by |queries| x n_probe ints — NOT a data
+                  collect) and push them into the scan as ``list IN
+                  (...)``: unprobed lists' files are never opened. Then
+                  either
+                  - IVF+PQ / flat PQ: scan (id, codes) only — parquet
+                    COLUMN pruning means the 256-byte vec (64-d float32)
+                    is never read in the hot ADC scan — take a per-query
+                    shortlist, and fetch (id, vec) of just those
+                    |queries|·shortlist rows; or
+                  - IVF-flat (``shortlist=None``): every row of the probed
+                    lists is a candidate, with no codebook read or ADC.
+                  Both normalize the candidates' vectors and score them
+                  with one exact dot and one top-k window. `l2_normalize`
+                  widens to double before any arithmetic, so scores equal
+                  those of a stored normalized double copy bit for bit.
 
 One table, two prunings: column pruning separates WHAT is scanned (codes
-vs vectors), partition pruning WHICH rows (probed lists). No second copy
-of the vectors is needed for the re-rank fetch. An index stores one
-vector element type: appends cast to the type the build wrote.
+vs vectors), partition pruning WHICH rows (probed lists). FAISS's
+index-factory strings ``IVFn,Flat``, ``PQm`` and ``IVFn,PQm`` name the same
+family. An index stores one vector element type: appends cast to the type
+the build wrote. At 100 TB the probe win is exactly the pgvector one: a
+probe touches n_probe/n_lists of the corpus. Centroid drift is handled the
+ivfflat way: rebuild.
 
 The deterministic md5-derived codebook (operators/pq.py) is persisted as
 data rather than recomputed: search reads whatever codebook the build
 wrote, so a learned per-subspace k-means codebook (FAISS
 ProductQuantizer training) drops in without touching the search path.
-The fixed-schema sidecars are read with their declared schema: a
-schema-less parquet read runs one schema-inference job. Every build,
-append and search rejects a vector that is not ``pq.DIM``-d with an
-error naming both sizes, checked inside its projection (no extra job).
+The fixed-schema sidecars and the tombstones are read with a declared
+schema: a schema-less parquet read runs one schema-inference job. Every
+build, append and search rejects a vector that is not ``pq.DIM``-d with
+an error naming both sizes, checked inside its projection (no extra job).
 
 Checked two ways: the registered ``q2_ann_pq_idx``/``q2_ann_ivfpq_idx``
 match DuckDB oracles that encode, probe and re-rank in SQL (same
-codebook, same tie-breaks); tests/test_pq_index.py measures recall
-against the exact search, checks that returned scores are exact and the
-stored vectors equal the input, plan-asserts the ADC scan's parquet
-schema and counts its partitions read from scan metrics.
+codebook, same tie-breaks); tests/test_pq_index.py and
+tests/test_ivf_index.py measure recall against the exact search (k-means
+floats are engine-specific, so the IVF-flat ``q2_ann_ivf_idx`` is
+recall-tested, not value-oracled), check that returned scores are exact
+and the stored vectors equal the input, plan-assert the ADC scan's
+parquet schema and count partitions read from scan metrics.
 """
 
 from __future__ import annotations
@@ -71,27 +79,44 @@ from koby_s_ai_vector_db_spark.operators.pq import (
     pq_distance_table,
     pq_encode,
 )
-from koby_s_ai_vector_db_spark.sources.ivf import CENTROIDS_SCHEMA, CENTROIDS_SUBDIR
 
 DATA_SUBDIR = "data"
 CODEBOOK_SUBDIR = "codebook"
+CENTROIDS_SUBDIR = "centroids"
 TOMBSTONES_SUBDIR = "tombstones"
+CENTROIDS_SCHEMA = "list int, centroid array<double>"
 
 
-def read_tombstones(spark: SparkSession, path: str) -> DataFrame | None:
-    """The deleted-id table of the PQ or text index at ``path``, or None
-    if nothing was ever deleted. The subdir exists only after a delete
-    wrote ids (compaction removes it), so only its absence means "no
-    deletes": any other read error propagates rather than silently
-    bringing every deleted id back into search results."""
+def read_tombstones(spark: SparkSession, path: str, schema: str) -> DataFrame | None:
+    """The deleted-id table of the vector or text index at ``path``, read
+    with its declared ``schema``, or None if nothing was ever deleted. The
+    subdir exists only after a delete wrote ids (compaction removes it),
+    so only its absence means "no deletes": any other read error
+    propagates rather than silently bringing every deleted id back into
+    search results."""
     from pyspark.errors import AnalysisException
 
+    tomb_dir = f"{path}/{TOMBSTONES_SUBDIR}"
     try:
-        return spark.read.parquet(f"{path}/{TOMBSTONES_SUBDIR}")
+        tomb = spark.read.schema(schema).parquet(tomb_dir)
     except AnalysisException as e:
         if e.getCondition() == "PATH_NOT_FOUND":
             return None
         raise
+    if not tomb.inputFiles():
+        # Under a declared schema a dir without data files (a failed
+        # write's `_temporary/` leftover) reads as "nothing deleted"; the
+        # schema-less read fails on it with UNABLE_TO_INFER_SCHEMA.
+        return spark.read.parquet(tomb_dir)
+    return tomb
+
+
+def _tombstones(
+    spark: SparkSession, path: str, data: DataFrame, corpus_id: str
+) -> DataFrame | None:
+    """`read_tombstones` typed like ``data``'s id column."""
+    id_type = data.schema[corpus_id].dataType.simpleString()
+    return read_tombstones(spark, path, f"id {id_type}")
 
 
 def _read_data(spark: SparkSession, path: str, corpus_id: str) -> DataFrame:
@@ -99,7 +124,7 @@ def _read_data(spark: SparkSession, path: str, corpus_id: str) -> DataFrame:
     `remove_ids` semantics — centroids and codebook stay frozen; a
     deleted vector simply stops being a candidate)."""
     data = spark.read.parquet(f"{path}/{DATA_SUBDIR}")
-    tomb = read_tombstones(spark, path)
+    tomb = _tombstones(spark, path, data, corpus_id)
     if tomb is not None:
         data = data.join(
             F.broadcast(tomb.withColumnRenamed("id", corpus_id)),
@@ -115,21 +140,21 @@ def delete_from_index(
     ids: DataFrame,
     corpus_id: str = "vec_id",
 ) -> dict:
-    """Delete vectors from a flat-PQ or IVF+PQ index without a rewrite:
-    append the ids to ``{path}/tombstones``; every search anti-joins them
-    before the ADC scan, so a deleted vector can neither enter the
-    shortlist nor crowd one out (removing it admits the next-best
-    candidate — NOT equivalent to post-filtering search results).
-    `compact_index` reclaims the rows physically. Repeated deletes are
-    idempotent. Returns {"n_deleted", "path"}."""
-    del_ids = ids.select(F.col(corpus_id).alias("id")).distinct()
-    prior = read_tombstones(spark, path)
+    """Delete vectors from the index without a rewrite: append the ids to
+    ``{path}/tombstones``; every search anti-joins them before it scores
+    a row, so a deleted vector can neither enter a shortlist or top-k nor
+    crowd one out (removing it admits the next-best candidate — NOT
+    equivalent to post-filtering search results). `compact_index`
+    reclaims the rows physically. Repeated deletes are idempotent.
+    Returns {"n_deleted", "path"}."""
+    data = spark.read.parquet(f"{path}/{DATA_SUBDIR}")
+    id_type = data.schema[corpus_id].dataType
+    del_ids = ids.select(F.col(corpus_id).cast(id_type).alias("id")).distinct()
+    prior = _tombstones(spark, path, data, corpus_id)
     if prior is not None:
         del_ids = del_ids.join(prior, "id", "left_anti")
     # Only ids actually in the index become tombstones (bounded table).
-    present = spark.read.parquet(f"{path}/{DATA_SUBDIR}").select(
-        F.col(corpus_id).alias("id")
-    )
+    present = data.select(F.col(corpus_id).alias("id"))
     del_ids = del_ids.join(present, "id", "left_semi")
     n = del_ids.count()
     if n:
@@ -142,15 +167,14 @@ def delete_from_index(
 def compact_index(
     spark: SparkSession, path: str, corpus_id: str = "vec_id"
 ) -> dict:
-    """Physically drop tombstoned rows, preserving the layout (list
-    partitioning for IVF+PQ, flat otherwise) — FAISS's remove_ids
-    actually reclaiming memory, as a batch rewrite. Search results are
-    unchanged. Returns {"n_vectors", "path"}."""
+    """Physically drop tombstoned rows, preserving the list partitioning —
+    FAISS's remove_ids actually reclaiming memory, as a batch rewrite.
+    Search results are unchanged. Returns {"n_vectors", "path"}."""
     import os
     import shutil
 
     data = spark.read.parquet(f"{path}/{DATA_SUBDIR}")
-    tomb = read_tombstones(spark, path)
+    tomb = _tombstones(spark, path, data, corpus_id)
     if tomb is None:
         return {"n_vectors": data.count(), "path": path}
     live = data.join(
@@ -160,45 +184,11 @@ def compact_index(
     )
     tmp = f"{path}/.compact_tmp"
     shutil.rmtree(tmp, ignore_errors=True)
-    if "list" in data.columns:
-        live.repartition("list").write.partitionBy("list").parquet(tmp)
-    else:
-        live.write.parquet(tmp)
+    live.repartition("list").write.partitionBy("list").parquet(tmp)
     n = spark.read.parquet(tmp).count()
     shutil.rmtree(f"{path}/{DATA_SUBDIR}")
     os.rename(tmp, f"{path}/{DATA_SUBDIR}")
     shutil.rmtree(f"{path}/{TOMBSTONES_SUBDIR}", ignore_errors=True)
-    return {"n_vectors": n, "path": path}
-
-
-def _write_codebook(spark: SparkSession, path: str) -> None:
-    codebook_df(spark).coalesce(1).write.mode("overwrite").parquet(
-        f"{path}/{CODEBOOK_SUBDIR}"
-    )
-
-
-def build_pq_index(
-    corpus: DataFrame,
-    path: str,
-    corpus_id: str = "vec_id",
-    vec_col: str = "embedding",
-) -> dict:
-    """Flat PQ index: ``{path}/data`` (id, codes, vec) + codebook sidecar.
-
-    Codes encode the L2-normalized vector (the reference's build-time
-    normalize, embed_pdfs.py:207); ``vec`` stores ``vec_col`` as given,
-    element type included, and search normalizes it in the exact re-rank.
-    Returns {"n_vectors", "path"}."""
-    spark = corpus.sparkSession
-    _write_codebook(spark, path)
-    c = spread(corpus).select(
-        F.col(corpus_id), dim_checked(vec_col).alias("vec")
-    ).withColumn("_nv", l2_normalize("vec"))
-    data = c.join(F.broadcast(codebook_df(spark))).select(
-        corpus_id, pq_encode("_nv").alias("codes"), "vec"
-    )
-    data.write.mode("overwrite").parquet(f"{path}/{DATA_SUBDIR}")
-    n = spark.read.parquet(f"{path}/{DATA_SUBDIR}").count()
     return {"n_vectors": n, "path": path}
 
 
@@ -212,7 +202,7 @@ def build_ivfpq_index(
     max_iter: int = 5,
     seed: int = 20260813,
 ) -> dict:
-    """IVF+PQ index: ``{path}/data`` (id, codes, vec) PARTITIONED BY the
+    """Build the index: ``{path}/data`` (id, codes, vec) PARTITIONED BY the
     coarse ``list`` id, plus ``centroids`` and ``codebook`` sidecars.
 
     Codes, centroids and list assignment use the L2-normalized vector;
@@ -222,11 +212,14 @@ def build_ivfpq_index(
     Coarse assignment: pass ``list_col`` to use an existing labeling with
     per-list mean centroids (`mean_vector`, the centroids `ivf_topk`
     probes; deterministic, so ``q2_ann_ivfpq_idx`` is value-checked
-    against a DuckDB oracle), or leave None to fit seeded k-means lists
-    like sources/ivf.py (better recall; engine-specific floats, so recall-
-    not value-tested). Returns {"n_lists", "n_vectors", "path"}."""
+    against a DuckDB oracle; a constant column gives a flat index), or
+    leave None to fit seeded k-means lists (pgvector's ivfflat build;
+    better recall; engine-specific floats, so recall- not value-tested).
+    Returns {"n_lists", "n_vectors", "path"}."""
     spark = corpus.sparkSession
-    _write_codebook(spark, path)
+    codebook_df(spark).coalesce(1).write.mode("overwrite").parquet(
+        f"{path}/{CODEBOOK_SUBDIR}"
+    )
     c = spread(corpus).withColumn(vec_col, dim_checked(vec_col))
 
     if list_col is not None:
@@ -335,104 +328,29 @@ def append_to_ivfpq_index(
     return {"n_appended": n_appended, "path": path}
 
 
-def _exact_rerank(
-    data: DataFrame,
-    sl: DataFrame,
-    q_norm: DataFrame,
-    k: int,
-    corpus_id: str,
-    query_id: str,
-    round_to: int | None,
-) -> DataFrame:
-    """Shared re-rank tail: fetch the shortlist's stored vectors from the
-    index table (broadcast semi-join — |queries|·shortlist rows), normalize
-    them, exact dot, top-k. Both search paths must go through here so a
-    tie-break or rounding change can never diverge them."""
-    rer = (
-        F.broadcast(sl)
-        .join(data.select(corpus_id, "vec"), corpus_id)
-        .join(F.broadcast(q_norm), query_id)
-        .withColumn("sim", dot(l2_normalize("vec"), "qv"))
-    )
-    w_k = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.asc(corpus_id))
-    sim = F.round("sim", round_to) if round_to is not None else F.col("sim")
-    return (
-        rer.withColumn("rank", F.row_number().over(w_k))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, sim.alias("sim"), "rank")
-    )
-
-
-def _adc_rerank(
-    data: DataFrame,
-    queries_dtab: DataFrame,
-    q_norm: DataFrame,
-    k: int,
-    shortlist: int,
-    corpus_id: str,
-    query_id: str,
-    round_to: int | None,
-) -> DataFrame:
-    """Shared search tail: ADC scan on (id, codes) → per-query shortlist →
-    exact re-rank on the shortlist's (id, vec)."""
-    w_sl = Window.partitionBy(query_id).orderBy(F.desc("adc"), F.asc(corpus_id))
-    sl = (
-        data.select(corpus_id, "codes")  # column pruning: vec never read here
-        .join(F.broadcast(queries_dtab))
-        .withColumn("adc", pq_adc_score())
-        .withColumn("srank", F.row_number().over(w_sl))
-        .filter(F.col("srank") <= shortlist)
-        .select(query_id, corpus_id)
-    )
-    return _exact_rerank(data, sl, q_norm, k, corpus_id, query_id, round_to)
-
-
-def pq_index_search(
-    spark: SparkSession,
-    path: str,
-    queries: DataFrame,
-    k: int = 10,
-    shortlist: int = 64,
-    corpus_id: str = "vec_id",
-    query_id: str = "query_id",
-    query_vec_col: str = "query_vec",
-    round_to: int | None = 6,
-) -> DataFrame:
-    """Search a flat PQ index: codebook sidecar → per-query ADC tables →
-    code-only scan → shortlist → exact re-rank. The corpus was encoded
-    once at build time; a query pays only its own 128-dot distance table.
-    Returns (query_id, corpus_id, sim, rank)."""
-    cbdf = spark.read.schema(CODEBOOK_SCHEMA).parquet(f"{path}/{CODEBOOK_SUBDIR}")
-    data = _read_data(spark, path, corpus_id)
-    q = queries.select(
-        F.col(query_id), l2_normalize(dim_checked(query_vec_col)).alias("qv")
-    )
-    dtab = q.join(F.broadcast(cbdf)).select(
-        query_id, pq_distance_table("qv").alias("dtab")
-    )
-    return _adc_rerank(
-        data, dtab, q, k, shortlist, corpus_id, query_id, round_to
-    )
-
-
 def ivfpq_index_search(
     spark: SparkSession,
     path: str,
     queries: DataFrame,
     k: int = 10,
     n_probe: int = 2,
-    shortlist: int = 64,
+    shortlist: int | None = 64,
     corpus_id: str = "vec_id",
     query_id: str = "query_id",
     query_vec_col: str = "query_vec",
     round_to: int | None = 6,
 ) -> DataFrame:
-    """Search an IVF+PQ index: centroid probe → PARTITION-pruned,
-    column-pruned ADC scan of probed lists' codes → shortlist → exact
-    re-rank. As in sources/ivf.py, the bounded probe-id set is collected
-    and pushed into the scan as ``list IN (...)``; callers with a fixed
-    query set memoize the returned plan."""
-    cbdf = spark.read.schema(CODEBOOK_SCHEMA).parquet(f"{path}/{CODEBOOK_SUBDIR}")
+    """Search the index: centroid probe → PARTITION-pruned scan of the
+    probed lists → candidates → exact re-rank, top-k.
+
+    With a ``shortlist`` the candidates are the per-query ADC shortlist of
+    a column-pruned (id, codes) scan (IVF+PQ; flat PQ is one list); with
+    ``shortlist=None`` every row of the probed lists is a candidate
+    (IVF-flat: the codebook is never read). The bounded probe-id set is
+    collected and pushed into the scan as ``list IN (...)``, so building
+    a search runs one small job; callers with a fixed query set memoize
+    the returned plan (functions/caching.py).
+    Returns (query_id, corpus_id, sim, rank)."""
     centroids = spark.read.schema(CENTROIDS_SCHEMA).parquet(
         f"{path}/{CENTROIDS_SUBDIR}"
     )
@@ -453,19 +371,40 @@ def ivfpq_index_search(
     probed = sorted(r["list"] for r in probes.select("list").distinct().collect())
     scan = data.filter(F.col("list").isin(probed))
 
-    dtab = q.join(F.broadcast(cbdf)).select(
-        query_id, pq_distance_table("qv").alias("dtab")
+    if shortlist is None:
+        # Normalized once per row, not once per (query, row) pair.
+        cand = scan.select(
+            "list", corpus_id, l2_normalize("vec").alias("nv")
+        ).join(F.broadcast(probes), on="list")
+    else:
+        cbdf = spark.read.schema(CODEBOOK_SCHEMA).parquet(
+            f"{path}/{CODEBOOK_SUBDIR}"
+        )
+        dtab = q.join(F.broadcast(cbdf)).select(
+            query_id, pq_distance_table("qv").alias("dtab")
+        )
+        w_sl = Window.partitionBy(query_id).orderBy(F.desc("adc"), F.asc(corpus_id))
+        sl = (
+            scan.select("list", corpus_id, "codes")  # vec never read here
+            .join(F.broadcast(probes), on="list")
+            .join(F.broadcast(dtab), on=query_id)
+            .withColumn("adc", pq_adc_score())
+            .withColumn("srank", F.row_number().over(w_sl))
+            .filter(F.col("srank") <= shortlist)
+            .select(query_id, corpus_id)
+        )
+        # Re-rank fetch (broadcast semi-join, |queries|·shortlist rows)
+        # from the probed lists only: every shortlisted id came out of
+        # `scan` (tombstones already applied), so this is exact.
+        cand = F.broadcast(sl).join(
+            scan.select(corpus_id, "vec"), corpus_id
+        ).select(query_id, corpus_id, l2_normalize("vec").alias("nv"))
+
+    scored = cand.join(F.broadcast(q), query_id).withColumn("sim", dot("nv", "qv"))
+    w_k = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.asc(corpus_id))
+    sim = F.round("sim", round_to) if round_to is not None else F.col("sim")
+    return (
+        scored.withColumn("rank", F.row_number().over(w_k))
+        .filter(F.col("rank") <= k)
+        .select(query_id, corpus_id, sim.alias("sim"), "rank")
     )
-    w_sl = Window.partitionBy(query_id).orderBy(F.desc("adc"), F.asc(corpus_id))
-    sl = (
-        scan.select("list", corpus_id, "codes")
-        .join(F.broadcast(probes), on="list")
-        .join(F.broadcast(dtab), on=query_id)
-        .withColumn("adc", pq_adc_score())
-        .withColumn("srank", F.row_number().over(w_sl))
-        .filter(F.col("srank") <= shortlist)
-        .select(query_id, corpus_id)
-    )
-    # Re-rank fetch from the probed lists only: every shortlisted id came
-    # out of `scan` (tombstones already applied), so this is exact.
-    return _exact_rerank(scan, sl, q, k, corpus_id, query_id, round_to)

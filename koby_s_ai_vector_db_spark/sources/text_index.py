@@ -7,8 +7,8 @@ at 100 TB the tokenize+explode pass dwarfs the scoring join. Every search
 engine persists the inverted index instead (the reference's production
 analogue is Postgres' GIN index behind ILIKE/keyword search,
 supabase_schema.sql; pgvector's `CREATE INDEX` is the same bargain for
-vectors). Spark-first, the index IS a storage layout, like the IVF and PQ
-indexes (sources/ivf.py, sources/pq_index.py):
+vectors). Spark-first, the index IS a storage layout, like the vector
+index (sources/pq_index.py):
 
   build (once)    ``{path}/postings``: (term, id, tf, dl, seg) — document
                   length DENORMALIZED into each posting so search never
@@ -62,6 +62,7 @@ DEFAULT_BUCKETS = 64
 # schema-inference job per call. ``bucket`` is the partition column.
 POSTINGS_SCHEMA = "term string, id bigint, tf bigint, dl double, seg int, bucket int"
 STATS_SCHEMA = "n_docs double, sum_dl double, n_buckets int"
+TOMBSTONES_SCHEMA = "id bigint, up_to_seg int"
 
 
 def _read_postings(spark: SparkSession, path: str) -> DataFrame:
@@ -70,6 +71,10 @@ def _read_postings(spark: SparkSession, path: str) -> DataFrame:
 
 def _read_stats(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(STATS_SCHEMA).parquet(f"{path}/{STATS_SUBDIR}")
+
+
+def _read_tombstones(spark: SparkSession, path: str) -> DataFrame | None:
+    return read_tombstones(spark, path, TOMBSTONES_SCHEMA)
 
 
 def _n_buckets(stats: DataFrame, path: str) -> int:
@@ -239,7 +244,7 @@ def delete_from_text_index(
     # so repeated deletes never double-subtract; an id re-added since an
     # earlier delete has live rows again and is deleted afresh.
     postings = _read_postings(spark, path)
-    live = _live(postings, read_tombstones(spark, path))
+    live = _live(postings, _read_tombstones(spark, path))
     deleted_post = live.join(F.broadcast(del_ids), "id").persist()
     try:
         n_deleted = deleted_post.select("id").distinct().count()
@@ -321,7 +326,7 @@ def search_text_index(
     # above take them out of N/avgdl (delete_from_text_index).
     postings = _live(
         _read_postings(spark, path).filter(F.col("bucket").isin(buckets)),
-        read_tombstones(spark, path),
+        _read_tombstones(spark, path),
     )
     # df = the term's live postings: a query's terms are distinct, so the
     # join holds each live posting of a term once per query asking it.
@@ -389,7 +394,7 @@ def compact_text_index(spark: SparkSession, path: str) -> dict:
     # deleted docs; afterwards the tombstone table is empty again and
     # every surviving row restarts at generation 0.
     postings = _live(
-        _read_postings(spark, path), read_tombstones(spark, path)
+        _read_postings(spark, path), _read_tombstones(spark, path)
     ).withColumn("seg", F.lit(0).cast("int"))
 
     tmp = f"{path}/.compact_tmp"

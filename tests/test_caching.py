@@ -89,14 +89,14 @@ def test_evict_application_reruns_every_builder(spark, monkeypatch):
     # so no stub result outlives the test.
     builds = {
         "text_index": _count_calls(monkeypatch, text_index, "build_text_index"),
-        "pq_index": _count_calls(monkeypatch, pq_index, "build_pq_index"),
+        "pq_index": _count_calls(monkeypatch, pq_index, "build_ivfpq_index"),
         "bpe_state": _count_calls(monkeypatch, bpe, "learn_bpe", ([], {})),
         "pca_model": _count_calls(monkeypatch, pca, "fit_pca", object()),
         "load_table": _count_calls(
             monkeypatch, tables, "_read_table", call_through=True
         ),
     }
-    _count_calls(monkeypatch, pq_index, "pq_index_search")
+    _count_calls(monkeypatch, pq_index, "ivfpq_index_search")
 
     def build_all():
         return {

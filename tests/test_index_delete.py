@@ -19,10 +19,11 @@ from __future__ import annotations
 
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from koby_s_ai_vector_db_spark.sources.tables import load_table
-from tests.conftest import SF_DIRS
+from tests.conftest import SF_DIRS, construction_jobs
 
 SF_DIR = SF_DIRS["t1"]
 
@@ -128,7 +129,6 @@ class TestTextIndexDelete:
         back into the results."""
         import os
 
-        import pytest
         from py4j.protocol import Py4JJavaError
         from pyspark.errors import AnalysisException
 
@@ -245,6 +245,50 @@ class TestPqIndexDelete:
         assert any(
             d.startswith("list=") for d in os.listdir(f"{copy}/data")
         )
+
+
+@pytest.mark.parametrize("index", ["text", "vector"])
+def test_delete_adds_no_search_construction_job(spark, tmp_path, index):
+    """Tombstones are read with a declared schema, so after a delete a
+    search build runs the jobs it ran before: a schema-less tombstones
+    read would add one schema-inference job to every search build."""
+    from koby_s_ai_vector_db_spark.sources import pq_index, text_index
+
+    path = str(tmp_path / index)
+    if index == "text":
+        docs = load_table(spark, SF_DIR, "documents")
+        text_index.build_text_index(docs, path)
+        queries = spark.createDataFrame(
+            QUERIES, "query_id bigint, query_text string"
+        )
+
+        def search():
+            text_index.search_text_index(spark, path, queries)
+
+        def delete():
+            text_index.delete_from_text_index(
+                spark, path, docs.filter(F.col("doc_id") % 3 == 0).select("doc_id")
+            )
+    else:
+        emb = load_table(spark, SF_DIR, "embeddings")
+        pq_index.build_ivfpq_index(emb, path, list_col="label")
+        queries = emb.filter(F.col("vec_id") < 4).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("query_vec"),
+        )
+
+        def search():
+            pq_index.ivfpq_index_search(spark, path, queries)
+
+        def delete():
+            pq_index.delete_from_index(
+                spark, path, emb.filter(F.col("vec_id") % 7 == 0).select("vec_id")
+            )
+
+    before = construction_jobs(spark, search, f"{index}_search_before_delete")
+    delete()
+    after = construction_jobs(spark, search, f"{index}_search_after_delete")
+    assert after == before, (before, after)
 
 
 class TestTextIndexUpsert:

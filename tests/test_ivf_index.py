@@ -1,7 +1,8 @@
-"""Persisted IVF index (sources/ivf.py): build → partitioned parquet layout,
-search → partition-pruned probe. The Spark analogue of the reference's
-faiss_index.bin save/load (embed_pdfs.py:222-244) + pgvector ivfflat
-(supabase_schema.sql:137-139)."""
+"""IVF-flat over the persisted vector index (sources/pq_index.py, k-means
+lists, ``shortlist=None``): build → list-partitioned parquet layout,
+search → partition-pruned probe, every probed row scored exactly. The
+Spark analogue of the reference's faiss_index.bin save/load
+(embed_pdfs.py:222-244) + pgvector ivfflat (supabase_schema.sql:137-139)."""
 
 from __future__ import annotations
 
@@ -11,7 +12,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from koby_s_ai_vector_db_spark.operators.similarity import ivf_topk, topk_cosine
-from koby_s_ai_vector_db_spark.sources.ivf import build_ivf_index, ivf_index_search
+from koby_s_ai_vector_db_spark.sources.pq_index import (
+    build_ivfpq_index,
+    ivfpq_index_search,
+)
 from koby_s_ai_vector_db_spark.sources.tables import load_table
 from tests.conftest import SF_DIRS, construction_jobs, partitions_read
 
@@ -22,11 +26,17 @@ N_LISTS, K = 8, 10
 def index_path(spark, tmp_path_factory):
     emb = load_table(spark, SF_DIRS["t1"], "embeddings")
     path = str(tmp_path_factory.mktemp("ivf"))
-    stats = build_ivf_index(
+    stats = build_ivfpq_index(
         emb.select("vec_id", "embedding"), path, n_lists=N_LISTS, max_iter=3
     )
     assert stats["n_vectors"] == emb.count()
     return path
+
+
+def _ivf_flat_search(spark, path, queries, n_probe):
+    return ivfpq_index_search(
+        spark, path, queries, k=K, n_probe=n_probe, shortlist=None
+    )
 
 
 def _queries(spark, nq):
@@ -45,7 +55,7 @@ def _exact_set(spark, nq):
 
 
 def test_layout_on_disk(index_path):
-    lists = {d for d in os.listdir(f"{index_path}/lists") if d.startswith("list=")}
+    lists = {d for d in os.listdir(f"{index_path}/data") if d.startswith("list=")}
     assert lists == {f"list={i}" for i in range(N_LISTS)}
     assert os.path.isdir(f"{index_path}/centroids")
 
@@ -53,7 +63,7 @@ def test_layout_on_disk(index_path):
 def test_recall(spark, index_path):
     """Learned lists at 3-of-8 probes recover most of the exact top-10."""
     exact = _exact_set(spark, 8)
-    res = ivf_index_search(spark, index_path, _queries(spark, 8), k=K, n_probe=3)
+    res = _ivf_flat_search(spark, index_path, _queries(spark, 8), n_probe=3)
     hits = {(r.query_id, r.vec_id) for r in res.collect()}
     recall = len(exact & hits) / len(exact)
     print(f"ivf-index recall@{K} (3/{N_LISTS} probes): {recall:.3f}")
@@ -64,9 +74,7 @@ def test_full_probe_equals_exact(spark, index_path):
     """Probing every list must reproduce the exact search bit-for-bit —
     the index only prunes, never rescores."""
     exact = _exact_set(spark, 8)
-    full = ivf_index_search(
-        spark, index_path, _queries(spark, 8), k=K, n_probe=N_LISTS
-    )
+    full = _ivf_flat_search(spark, index_path, _queries(spark, 8), n_probe=N_LISTS)
     got = {(r.query_id, r.vec_id) for r in full.select("query_id", "vec_id").collect()}
     assert got == exact
 
@@ -75,21 +83,22 @@ def test_partition_pruning_in_plan(spark, index_path):
     """The probe must prune the lists scan: 2 queries x 2 probes open at
     most 4 of the 8 list partitions — unprobed lists are never read."""
     q2 = _queries(spark, 2)
-    parts = partitions_read(ivf_index_search(spark, index_path, q2, k=K, n_probe=2))
-    lists = [n for (root, _), n in parts.items() if root.endswith("/lists")]
+    parts = partitions_read(_ivf_flat_search(spark, index_path, q2, n_probe=2))
+    lists = [n for (root, _), n in parts.items() if root.endswith("/data")]
     assert lists and 0 < max(lists) <= 4, parts
 
 
 def test_search_construction_reads_centroids_with_schema(spark, index_path):
     """Building a search runs five jobs: the bounded probe-id collect (four
     under AQE: centroid broadcast, rank-window shuffle, distinct shuffle,
-    result) and ONE schema inference, for `lists` (its id and vector types
+    result) and ONE schema inference, for `data` (its id and vector types
     follow the input). The `centroids` sidecar has a fixed schema and is
-    read with it (CENTROIDS_SCHEMA), so it adds no inference job."""
+    read with it (CENTROIDS_SCHEMA), and IVF-flat never reads the
+    codebook, so neither adds an inference job."""
     q2 = _queries(spark, 2)
     jobs = construction_jobs(
         spark,
-        lambda: ivf_index_search(spark, index_path, q2, k=K, n_probe=2),
+        lambda: _ivf_flat_search(spark, index_path, q2, n_probe=2),
         "ivf_search_construction",
     )
     assert jobs == (5, 1), jobs
@@ -116,8 +125,8 @@ def test_kmeans_ivf_beats_random_labels(spark, tmp_path_factory):
         ivf_topk(emb.select("vec_id", "label", "embedding"), queries, k=K, n_probe_labels=2)
     )
     path = str(tmp_path_factory.mktemp("ivf_t2"))
-    build_ivf_index(emb.select("vec_id", "embedding"), path, n_lists=10, max_iter=3)
-    learned = pairs(ivf_index_search(spark, path, queries, k=K, n_probe=2))
+    build_ivfpq_index(emb.select("vec_id", "embedding"), path, n_lists=10, max_iter=3)
+    learned = pairs(_ivf_flat_search(spark, path, queries, n_probe=2))
 
     rand_recall = len(exact & rand) / len(exact)
     learned_recall = len(exact & learned) / len(exact)

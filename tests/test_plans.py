@@ -215,11 +215,14 @@ def test_pq_encode_is_map_side(spark):
 def test_ivfpq_probe_and_encode_shapes(spark):
     """IVF+PQ search: the probe and the distance tables ride broadcasts
     (no shuffle of the corpus for the probe join), the ADC score stays
-    map-side, and the shortlist pre-truncates via WindowGroupLimit."""
-    plan = _plan(spark, "q2_ann_ivfpq_idx")
-    assert "WindowGroupLimit" in plan
-    assert "hashpartitioning(vec_id" not in plan, "per-id shuffle in the search"
-    assert "CartesianProduct" not in plan
+    map-side, and the shortlist pre-truncates via WindowGroupLimit.
+    IVF-flat (``shortlist=None``) scores the probed lists through the same
+    broadcast probe join: the corpus is never shuffled by id either."""
+    plans = {name: _plan(spark, name) for name in ("q2_ann_ivfpq_idx", "q2_ann_ivf_idx")}
+    assert "WindowGroupLimit" in plans["q2_ann_ivfpq_idx"]
+    for name, plan in plans.items():
+        assert "hashpartitioning(vec_id" not in plan, (name, "per-id shuffle")
+        assert "CartesianProduct" not in plan, name
 
 
 def test_training_ops_exchange_budget(spark):

@@ -1,10 +1,11 @@
-"""Persisted PQ / IVF+PQ index: recall against the exact search (the
-shortlist is the recall dial), exact returned scores, vectors stored as
-given (element type and values), non-64-d vectors rejected, and the two
-prunings the layout exists for — column pruning on the ADC scan (codes
-read, vectors not) and partition pruning on probed lists (counted as
-partitions read). Values are checked against DuckDB by the oracle parity
-of q2_ann_pq_idx / q2_ann_ivfpq_idx (tests/test_oracle_parity.py)."""
+"""Persisted vector index, flat PQ (one list) and IVF+PQ: recall against
+the exact search (the shortlist is the recall dial), exact returned
+scores, vectors stored as given (element type and values), non-64-d
+vectors rejected, and the two prunings the layout exists for — column
+pruning on the ADC scan (codes read, vectors not) and partition pruning on
+probed lists (counted as partitions read). Values are checked against
+DuckDB by the oracle parity of q2_ann_pq_idx / q2_ann_ivfpq_idx
+(tests/test_oracle_parity.py); IVF-flat is tests/test_ivf_index.py."""
 
 from __future__ import annotations
 
@@ -15,11 +16,9 @@ from koby_s_ai_vector_db_spark.operators.similarity import ivf_topk, topk_cosine
 from koby_s_ai_vector_db_spark.sources.pq_index import (
     append_to_ivfpq_index,
     build_ivfpq_index,
-    build_pq_index,
     compact_index,
     delete_from_index,
     ivfpq_index_search,
-    pq_index_search,
 )
 from koby_s_ai_vector_db_spark.sources.tables import load_table
 from tests.conftest import SF_DIRS, assert_all_zstd, partitions_read
@@ -41,10 +40,21 @@ def _queries(spark):
     )
 
 
+def _build_flat(corpus, path):
+    """Flat PQ: the index over one constant list."""
+    return build_ivfpq_index(
+        corpus.withColumn("list", F.lit(0)), path, list_col="list"
+    )
+
+
+def _flat_search(spark, path, queries, **kwargs):
+    return ivfpq_index_search(spark, path, queries, n_probe=1, **kwargs)
+
+
 @pytest.fixture(scope="module")
 def pq_path(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("pqidx") / "flat")
-    info = build_pq_index(_emb(spark).select("vec_id", "embedding"), path)
+    info = _build_flat(_emb(spark).select("vec_id", "embedding"), path)
     assert info["n_vectors"] == _emb(spark).count()
     return path
 
@@ -96,7 +106,7 @@ def test_pq_recall_vs_exact(spark, pq_path):
     )
     recalls = {}
     for sl in (64, 128):
-        hits = _pairs(pq_index_search(spark, pq_path, _queries(spark), k=K, shortlist=sl))
+        hits = _pairs(_flat_search(spark, pq_path, _queries(spark), k=K, shortlist=sl))
         recalls[sl] = len(exact & hits) / len(exact)
     print(f"pq recall@{K}: {recalls}")
     assert recalls[64] >= 0.4, recalls
@@ -105,7 +115,7 @@ def test_pq_recall_vs_exact(spark, pq_path):
 
 
 def test_pq_scores_are_exact(spark, pq_path):
-    approx = pq_index_search(
+    approx = _flat_search(
         spark, pq_path, _queries(spark).filter(F.col("query_id") < 4),
         k=5, shortlist=32,
     )
@@ -147,7 +157,7 @@ def test_adc_scan_prunes_vector_column(spark, pq_path):
     """The hot scan must read (vec_id, codes) only — if the vec column
     (256 bytes per row at 64-d float32) appears in the ADC scan's
     ReadSchema, the code-only read is gone."""
-    df = pq_index_search(spark, pq_path, _queries(spark), k=K, shortlist=SHORTLIST)
+    df = _flat_search(spark, pq_path, _queries(spark), k=K, shortlist=SHORTLIST)
     plan, scans = _scan_lines(df)
     code_scans = [ln for ln in scans if "codes" in ln]
     assert code_scans, plan
@@ -213,7 +223,7 @@ def test_index_stores_input_vector_as_given(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     flat_dbl = str(tmp_path / "flat_double")
-    build_pq_index(dbl, flat_dbl)
+    _build_flat(dbl, flat_dbl)
     assert _stored_vectors(spark, flat_dbl) == ("double", _input_vectors(dbl))
 
 
@@ -267,7 +277,7 @@ def test_incremental_append_equals_full_build(spark, tmp_path_factory):
 
 def test_learned_kmeans_build_recall(spark, kmeans_path):
     """The k-means build path (no list_col) is engine-specific float
-    iteration — recall-tested like sources/ivf.py: searching the index must
+    iteration — recall-tested like IVF-flat: searching the index must
     find the query vector itself at rank 1 (sim 1.0) for every query."""
     res = ivfpq_index_search(
         spark, kmeans_path, _queries(spark), k=K, n_probe=N_PROBE,
@@ -310,7 +320,7 @@ def test_wrong_vector_size_is_rejected(spark, pq_path, ivfpq_path, tmp_path, dim
     bad = _vectors(spark, dim)
     want = f"needs 64-d vectors; embedding has {dim} dims"
     with pytest.raises(Exception, match=want):
-        build_pq_index(bad, str(tmp_path / "flat"))
+        _build_flat(bad, str(tmp_path / "flat"))
     with pytest.raises(Exception, match=want):
         build_ivfpq_index(bad, str(tmp_path / "lists"), list_col="label")
     with pytest.raises(Exception, match=want):
@@ -325,6 +335,8 @@ def test_wrong_vector_size_is_rejected(spark, pq_path, ivfpq_path, tmp_path, dim
     ).limit(2)
     want = f"needs 64-d vectors; query_vec has {dim} dims"
     with pytest.raises(Exception, match=want):
-        pq_index_search(spark, pq_path, qs).collect()
+        _flat_search(spark, pq_path, qs).collect()
     with pytest.raises(Exception, match=want):
         ivfpq_index_search(spark, ivfpq_path, qs).collect()
+    with pytest.raises(Exception, match=want):
+        ivfpq_index_search(spark, ivfpq_path, qs, shortlist=None).collect()
