@@ -82,14 +82,6 @@ def mean_vector(vec_col: str, dim: int) -> Column:
     )
 
 
-def cosine_sim(a: Column | str, b: Column | str) -> Column:
-    """Cosine for *unnormalized* inputs (pgvector path,
-    supabase_schema.sql:167). Prefer normalize-at-write + dot()."""
-    return dot(a, b) / (
-        F.greatest(l2_norm(a), F.lit(1e-10)) * F.greatest(l2_norm(b), F.lit(1e-10))
-    )
-
-
 # DuckDB-dialect renderings of the same math (sequential left-fold, DOUBLE
 # accumulation) used to build oracle_sql() strings.
 def sql_norm(expr: str) -> str:

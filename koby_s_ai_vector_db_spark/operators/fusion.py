@@ -11,7 +11,8 @@ module fuses them:
   Q10 prioritize_enhanced_results  (:325-363)
   Q11 get_enhanced_sources         (:283-322)
   Q12 _create_combined_context / _create_prioritized_context (:117-280)
-  Q13 analyze_search_effectiveness (:366-410)
+  Q13 analyze_search_effectiveness (:366-410) — its columns are
+      projected by queries/fusion_q.q7_fusion
   Q14 fallback routing             (core/views.py:277-316)
 
 Everything is batch-oriented: one row per (query, result) instead of the
@@ -240,20 +241,14 @@ def combined_context(
     vec_arm: DataFrame,
     lex_arm: DataFrame,
     meta: DataFrame,
-    skew_safe: bool = False,
 ) -> DataFrame:
     """Q12 (enhanced_search.py:117-167, 229-280): the exact context string,
     standard or prioritized per the Q8/Q9 comparison. vec_arm must carry
     (source, text). Ordered string aggregation pins determinism.
 
-    `skew_safe` routes the per-query line collection through the salted
-    two-phase aggregate (functions/skew.two_phase_collect). The DEFAULT is
-    the direct form, deliberately: both arms are top-k outputs, so a
-    query's group holds at most k (=5) lines — bounded by construction,
-    no hot key possible, and the salted form would add a shuffle for
-    nothing. Flip it when feeding UNBOUNDED line sets per key (e.g.
-    assembling context from all matches rather than top-k) — equivalence
-    is pinned by tests/test_skew_bucketing.py on a planted hot key.
+    Each query's lines are collected with one direct group-by: both arms
+    are top-k outputs, so a group holds at most k (=5) lines — no hot key
+    is possible.
     """
     flags = meta.select("query_id", "prioritized_contributions")
 
@@ -288,14 +283,9 @@ def combined_context(
         structs = lines.select(
             "query_id", F.struct(F.col(order_col).alias("o"), "txt").alias("_s")
         )
-        if skew_safe:
-            from koby_s_ai_vector_db_spark.functions.skew import two_phase_collect
-
-            arr = two_phase_collect(structs, ["query_id"], "_s", out_col="_arr")
-        else:
-            arr = structs.groupBy("query_id").agg(
-                F.array_sort(F.collect_list("_s")).alias("_arr")
-            )
+        arr = structs.groupBy("query_id").agg(
+            F.array_sort(F.collect_list("_s")).alias("_arr")
+        )
         return arr.select(
             "query_id",
             F.array_join(F.transform("_arr", lambda s: s["txt"]), "\n\n").alias("body"),
@@ -333,29 +323,6 @@ def combined_context(
         F.when(F.col("prioritized_contributions"), prioritized_ctx)
         .otherwise(standard_ctx)
         .alias("combined_context"),
-    )
-
-
-def effectiveness(meta: DataFrame) -> DataFrame:
-    """Q13 (enhanced_search.py:366-410): flags + 3-bucket CASE +
-    recommendation string."""
-    fc, cc = F.col("faiss_count"), F.col("contribution_count")
-    return meta.select(
-        "query_id",
-        F.length("query_text").alias("query_length"),
-        (fc > 0).alias("faiss_results_found"),
-        (cc > 0).alias("contributions_found"),
-        "total_sources",
-        F.when(F.col("total_sources") >= 3, F.lit("high"))
-        .when(F.col("total_sources") >= 1, F.lit("medium"))
-        .otherwise(F.lit("low"))
-        .alias("search_effectiveness"),
-        (cc > 0).alias("has_enhanced_content"),
-        F.when((fc == 0) & (cc == 0), F.lit(REC_NONE))
-        .when((fc > 0) & (cc > 0), F.lit(REC_BOTH))
-        .when(fc > 0, F.lit(REC_FAISS))
-        .otherwise(F.lit(REC_CONTRIB))
-        .alias("recommendation"),
     )
 
 

@@ -139,17 +139,3 @@ def project_pca(
     return emb.join(F.broadcast(mdf)).select(
         F.col(id_col), proj.alias(out_col)
     )
-
-
-def pca_variance_table(spark, model: PCAModel) -> DataFrame:
-    """Model summary: per-component eigenvalue + cumulative explained
-    ratio (the corpus-health readout training pipelines log)."""
-    tot = model.total_variance or 1.0
-    rows = []
-    cum = 0.0
-    for j, ev in enumerate(model.explained_variance, start=1):
-        cum += float(ev)
-        rows.append((j, round(float(ev), 6), round(float(ev) / tot, 6), round(cum / tot, 6)))
-    return spark.createDataFrame(
-        rows, "component int, eigenvalue double, explained_ratio double, cum_ratio double"
-    )

@@ -204,8 +204,7 @@ def repeated_substring_spans(
             F.count("*").alias("n_windows"),
         )
         .select(
-            # Surface the caller's id name so the output composes with
-            # substring_dup_stats / excise_spans under any id_col.
+            # Surface the caller's id name.
             F.col("doc_id").alias(id_col),
             "span_start",
             "span_end",
@@ -249,74 +248,3 @@ SELECT doc_id,
        count(*) AS n_windows
 FROM islands GROUP BY doc_id, grp
 """
-
-
-def substring_dup_stats(
-    docs: DataFrame,
-    spans: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    round_to: int = 6,
-) -> DataFrame:
-    """Per-document duplication profile from `repeated_substring_spans`
-    output: (doc_id, n_tokens, dup_tokens, dup_frac). Spans are disjoint
-    by construction (maximal islands), so dup_tokens is a plain sum; the
-    fraction is the drop/keep gate published pipelines threshold on.
-    Docs with no spans report zero. One doc_id-keyed join against the
-    (small, flagged-docs-only) span table."""
-    agg = spans.groupBy(id_col).agg(F.sum("span_tokens").alias("dup_tokens"))
-    w = _WORDS.format(col=text_col)
-    return (
-        docs.select(
-            id_col, F.expr(f"size({w})").cast("long").alias("n_tokens")
-        )
-        .join(agg, id_col, "left")
-        .select(
-            id_col,
-            "n_tokens",
-            F.coalesce("dup_tokens", F.lit(0)).alias("dup_tokens"),
-            F.round(
-                F.coalesce("dup_tokens", F.lit(0))
-                / F.greatest("n_tokens", F.lit(1)),
-                round_to,
-            ).alias("dup_frac"),
-        )
-    )
-
-
-def excise_spans(
-    docs: DataFrame,
-    spans: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Rewrite documents with the flagged token ranges removed — the
-    cleaning action on `repeated_substring_spans` output (apply it to
-    all-but-one occurrence upstream if a keep-one policy is wanted; the
-    operator itself excises whatever spans it is given).
-
-    Plan shape: spans collapse to one array<struct> row per flagged doc
-    (tiny relative to the corpus), LEFT-join on doc_id, then the rewrite
-    is a single map-side higher-order-function chain — tokenize once,
-    keep tokens whose 1-based position falls in no span, reassemble.
-    Unflagged docs pass through byte-identical; flagged docs come back
-    single-spaced and lowercased (the same normalization the span
-    positions were computed on — positions would not line up against the
-    raw string otherwise).
-    """
-    agg = spans.groupBy(id_col).agg(
-        F.collect_list(F.struct("span_start", "span_end")).alias("_spans")
-    )
-    w = _WORDS.format(col=text_col)
-    cleaned = (
-        f"concat_ws(' ', transform(filter("
-        f" transform({w}, (t, i) -> struct(t AS t, i + 1 AS p)),"
-        f" s -> NOT exists(_spans, sp -> s.p >= sp.span_start AND s.p <= sp.span_end)"
-        f"), s -> s.t))"
-    )
-    return docs.join(agg, id_col, "left").withColumn(
-        text_col,
-        F.when(F.col("_spans").isNull(), F.col(text_col)).otherwise(
-            F.expr(cleaned)
-        ),
-    ).drop("_spans")

@@ -20,7 +20,7 @@ Everything here is deterministic and engine-portable:
     per-bucket bounding-box stats hash-match.
 
 Scale shape: one map-side z/bucket projection + ONE groupBy(bucket) for
-the stats (or a partitionBy(bucket) write for the layout itself); the
+the stats (a partitionBy(z_bucket) write would persist the layout); the
 locality property tests assert the point — per-bucket spans are small in
 BOTH dimensions simultaneously, which no single-column sort achieves.
 """
@@ -53,14 +53,10 @@ def z_value_sql(u: str, v: str) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def _with_z_bucket(
-    events: DataFrame, user_col: str, ts_col: str, keep_all: bool
-) -> DataFrame:
-    """The ONE place the bucket derivation lives (stats and layout must
-    agree by construction): (u, t) projection, broadcast 1-row bounds,
+def _with_z_bucket(events: DataFrame, user_col: str, ts_col: str) -> DataFrame:
+    """The bucket derivation: (u, t) projection, broadcast 1-row bounds,
     map-side Morton interleave, fixed-prefix z_bucket."""
-    base = events if keep_all else events.select(user_col, ts_col)
-    e = base.withColumns(
+    e = events.select(user_col, ts_col).withColumns(
         {
             "u": F.col(user_col),
             "t": F.expr(
@@ -95,7 +91,7 @@ def zorder_bucket_stats(
     The stats table IS what a lakehouse stores per file; its box sizes
     are the data-skipping guarantee."""
     return (
-        _with_z_bucket(events, user_col, ts_col, keep_all=False)
+        _with_z_bucket(events, user_col, ts_col)
         .groupBy("z_bucket")
         .agg(
             F.count("*").alias("n_rows"),
@@ -105,25 +101,6 @@ def zorder_bucket_stats(
             F.max("t").alias("t_max"),
         )
         .orderBy("z_bucket")
-    )
-
-
-def write_zorder_layout(
-    events: DataFrame,
-    path: str,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> None:
-    """Persist the layout itself: partitionBy(z_bucket) parquet — each
-    partition's parquet min/max footers carry the small bounding box the
-    stats table describes, so engines with file-stat pruning skip most
-    of them for a predicate on either dimension."""
-    (
-        _with_z_bucket(events, user_col, ts_col, keep_all=True)
-        .drop("u", "t")
-        .write.partitionBy("z_bucket")
-        .mode("overwrite")
-        .parquet(path)
     )
 
 

@@ -18,10 +18,8 @@ from pyspark.sql import functions as F
 
 from koby_s_ai_vector_db_spark.operators.analytics import (
     active_sessions,
-    activity_breakdown,
     contribution_analytics,
     doc_summary,
-    live_users,
     pending_count,
     recent_qa,
     recent_users,
@@ -128,25 +126,6 @@ def a4_recent_qa(spark: SparkSession, sf_dir: str) -> DataFrame:
     return recent_qa(_feedback(spark, sf_dir), limit=20)
 
 
-_A5_ORACLE = f"""
-SELECT count(DISTINCT user_id) AS live_users
-FROM events
-WHERE ts >= {NOW} - INTERVAL 30 MINUTE AND ts <= {NOW}
-"""
-
-
-# Folded round 9 (SURVEY §9 ladder step 1): a5 is a strict projection of
-# a6_session_stats' hash-checked live_users column, so its window slot
-# folds into a6 (the q8/q9 precedent). Unregistered; the function, its
-# oracle, and the projection equality stay pytest-checked
-# (test_oracle_parity::test_folded_query_matches_oracle and
-# test_prebuilt_r9::test_a5_is_strict_projection_of_a6). The 30-min
-# STREAMING window twin a5_sliding_live_users remains registered.
-def a5_live_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A5 (session_utils.py:193-211): distinct users in the last 30 min."""
-    return live_users(_events(spark, sf_dir))
-
-
 _A6_ORACLE = f"""
 WITH gstats AS (
     SELECT count(*) AS total_events,
@@ -177,11 +156,11 @@ SELECT * FROM gstats CROSS JOIN u7row
 @register("a6_session_stats", _A6_ORACLE)
 def a6_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6+A8+A12 (session_utils.py:213-246, views.py:1600-1612,874-876):
-    one conditional-aggregate pass over all events, plus — since the
-    round-10 a7_user_activity fold (SURVEY §9 ladder step 3) — user 7's
-    7-day per-type breakdown attached as two hash-checked columns
+    one conditional-aggregate pass over all events, plus the A7 per-user
+    view (session_utils.py:271-308) — user 7's 7-day per-type breakdown
+    (`user_activity`) attached as two hash-checked columns
     (`u7_breakdown_7d` is the canonical sorted `type:count` string, so
-    the whole folded result is reconstructable; `u7_events_7d` is its
+    the whole per-user result is reconstructable; `u7_events_7d` is its
     total). The u7 arm is a second scan whose `user_id = 7` predicate
     pushes to the parquet reader (selective at any scale) and collapses
     to ONE row before the broadcast attach onto the 1-row global
@@ -209,53 +188,6 @@ def a6_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("u7_events_7d"),
     )
     return stats.crossJoin(F.broadcast(u7row))
-
-
-_A7_ORACLE = f"""
-SELECT event_type,
-       count(*) AS n_events,
-       count(DISTINCT user_id) AS n_users,
-       round(avg(value), 6) AS avg_value
-FROM events
-WHERE ts >= {NOW} - INTERVAL 7 DAY AND ts <= {NOW}
-GROUP BY event_type
-"""
-
-
-def a7_activity_breakdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A7 (session_utils.py:271-308): last-7-days per-type counts.
-
-    FOLDED (round 8, SURVEY §9 candidate 1): unregistered in favour of
-    the then-survivor `a7_user_activity` — same events aggregate at a
-    second grain. In round 10 the whole a7 family folded onward into
-    a6_session_stats' u7_* columns (ladder step 3). The function and its
-    pytest parity check against `_A7_ORACLE` remain
-    (tests/test_oracle_parity.py exercises folded queries directly)."""
-    return activity_breakdown(_events(spark, sf_dir), days=7)
-
-
-_A7U_ORACLE = f"""
-WITH per_type AS (
-    SELECT event_type, count(*) AS n_events
-    FROM events
-    WHERE user_id = 7 AND ts >= {NOW} - INTERVAL 7 DAY AND ts <= {NOW}
-    GROUP BY event_type
-)
-SELECT event_type, n_events, CAST(sum(n_events) OVER () AS BIGINT) AS total_events
-FROM per_type
-"""
-
-
-# Folded round 10 (SURVEY §9 ladder step 3): a7_user_activity's content
-# is fully reconstructable from a6_session_stats' hash-checked
-# `u7_breakdown_7d` column (per-type counts; `total_events` is their
-# sum), so its window slot folds into a6 — the a5/q8/q9 precedent.
-# Unregistered; the function, its oracle, and the subsumption equality
-# stay pytest-checked (test_oracle_parity::test_folded_query_matches_
-# oracle and test_prebuilt_r9::test_a7u_is_reconstructable_from_a6).
-def a7_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A7 per-user variant (session_utils.py:271-308, user_id=7)."""
-    return user_activity(_events(spark, sf_dir), user_id=7, days=7)
 
 
 _A9_ORACLE = feedback_cte(

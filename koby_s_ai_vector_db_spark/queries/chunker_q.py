@@ -12,7 +12,6 @@ from koby_s_ai_vector_db_spark.registry import register
 from koby_s_ai_vector_db_spark.sources.tables import load_table
 
 SIZE, OVERLAP = 100, 20
-STEP = SIZE - OVERLAP
 
 
 def chunks_cte(size: int = SIZE, overlap: int = OVERLAP) -> str:

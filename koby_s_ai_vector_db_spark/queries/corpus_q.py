@@ -336,39 +336,6 @@ GROUP BY tid, bid, n_g
 """
 
 
-# Folded round 9 into ngram_contamination_both (SURVEY §9 ladder step 2):
-# unregistered, but the function and its oracle stay parity-checked every
-# pytest run (tests/test_oracle_parity.py::test_folded_query_matches_oracle).
-def ngram_contamination_13_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """13-gram sliding-window decontamination (the published-pipeline n)
-    against a planted eval set: first-20-word excerpts of every 37th doc.
-    Reports contaminated positions AND the thresholdable fraction of each
-    train doc (operators/corpus.py::ngram_contamination_sliding)."""
-    from koby_s_ai_vector_db_spark.operators.dedup import words_expr
-
-    docs = load_table(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") % CONTAM_MOD == 0).select(
-        F.col("doc_id").alias("bench_id"),
-        F.concat_ws(
-            " ", F.slice(words_expr("text"), 1, CONTAM13_BENCH_WORDS)
-        ).alias("text"),
-    )
-    return ngram_contamination_sliding(docs, bench, n=CONTAM13_N)
-
-
-# Folded round 9 into ngram_contamination_both (see above).
-def ngram_contamination_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train/eval decontamination: flag train docs sharing ≥1 word 3-gram
-    with any benchmark doc. Shingle-postings equi-join against the
-    BROADCAST benchmark side — never all-pairs (operators/corpus.py:247)."""
-    docs = load_table(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") % CONTAM_MOD == 0).select(
-        F.col("doc_id").alias("bench_id"), "text"
-    )
-    out = ngram_contamination(docs, bench, n=CONTAM_N)
-    return out.filter(F.col("doc_id") != F.col("bench_id"))
-
-
 @register("vocab_zipf", ZIPF_ORACLE)
 def vocab_zipf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf-law corpus profile: OLS slope/r² of ln(freq) on ln(rank)

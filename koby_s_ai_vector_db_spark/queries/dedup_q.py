@@ -128,8 +128,7 @@ def dedup_exact_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact-dedup state table (batch twin): the full first-seen
     catalog — one row per distinct content hash with min-id canonical and
     copy count. The SAME function runs as a streaming aggregation over a
-    file source with identical final state (tests/test_streaming.py);
-    see streaming/dedup.py for the watermarked pass-through tier."""
+    file source with identical final state (tests/test_streaming.py)."""
     from koby_s_ai_vector_db_spark.streaming.dedup import streaming_exact_dedup
 
     return streaming_exact_dedup(_docs_dd(spark, sf_dir))

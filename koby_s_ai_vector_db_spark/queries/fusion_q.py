@@ -22,7 +22,6 @@ from koby_s_ai_vector_db_spark.operators.fusion import (
     REC_FAISS,
     REC_NONE,
     combined_context,
-    effectiveness,
     enhanced_sources,
     fallback_routing,
     fusion_metadata,
@@ -191,13 +190,12 @@ FROM meta
 def q7_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q7 (enhanced_search.py:16-114): per-query dual-search metadata.
 
-    Round-10 fold (ladder step 4): carries q13_effectiveness's three
-    non-derivable columns — query_length, search_effectiveness,
-    recommendation (enhanced_search.py:366-410). q13's remaining
-    columns are boolean views of faiss_count/contribution_count/
-    has_contributions, so the full q13 result reconstructs from this
-    hash-checked row (tests/test_round10_ops.py::
-    test_q13_is_reconstructable_from_q7)."""
+    Also carries Q13's (analyze_search_effectiveness,
+    enhanced_search.py:366-410) non-derivable columns — query_length,
+    search_effectiveness, recommendation. Q13's remaining columns are
+    boolean views of faiss_count/contribution_count/has_contributions,
+    and Q8/Q9 are the faiss_quality/contribution_quality columns, so all
+    three are read off this hash-checked row."""
     qtext, vec, _, lex = _inputs(spark, sf_dir)
     meta = fusion_metadata(qtext, vec, lex)
     fc, cc = F.col("faiss_count"), F.col("contribution_count")
@@ -217,40 +215,6 @@ def q7_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(fc > 0, F.lit(REC_FAISS))
         .otherwise(F.lit(REC_CONTRIB))
         .alias("recommendation"),
-    )
-
-
-_Q8_ORACLE = _ARMS_CTE + """
-SELECT query_id, round(faiss_quality, 6) AS faiss_quality FROM meta
-"""
-
-
-def q8_faiss_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q8 (enhanced_search.py:170-194): min(avg(sim)+min(n/5,.2), 1).
-
-    FOLDED (round 8, SURVEY §9 candidate 2): unregistered — this is a
-    strict projection of `q7_fusion`, which hash-checks the same
-    faiss_quality column (plus the rest of the fusion metadata) against
-    the shared _ARMS_CTE oracle every window it occupies."""
-    qtext, vec, _, lex = _inputs(spark, sf_dir)
-    return fusion_metadata(qtext, vec, lex).select(
-        "query_id", F.round("faiss_quality", 6).alias("faiss_quality")
-    )
-
-
-_Q9_ORACLE = _ARMS_CTE + """
-SELECT query_id, round(contribution_quality, 6) AS contribution_quality FROM meta
-"""
-
-
-def q9_contribution_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q9 (enhanced_search.py:197-226): sim + rating + count bonuses.
-
-    FOLDED (round 8, SURVEY §9 candidate 2): unregistered — strict
-    projection of `q7_fusion` (see q8_faiss_quality's note)."""
-    qtext, vec, _, lex = _inputs(spark, sf_dir)
-    return fusion_metadata(qtext, vec, lex).select(
-        "query_id", F.round("contribution_quality", 6).alias("contribution_quality")
     )
 
 
@@ -375,36 +339,6 @@ def q12_context_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     qtext, vec, vec_doc, lex = _inputs(spark, sf_dir)
     meta = fusion_metadata(qtext, vec, lex)
     return combined_context(vec_doc, lex, meta)
-
-
-_Q13_ORACLE = _ARMS_CTE + f"""
-SELECT query_id,
-       length(query_text) AS query_length,
-       faiss_count > 0 AS faiss_results_found,
-       contribution_count > 0 AS contributions_found,
-       total_sources,
-       CASE WHEN total_sources >= 3 THEN 'high'
-            WHEN total_sources >= 1 THEN 'medium'
-            ELSE 'low' END AS search_effectiveness,
-       contribution_count > 0 AS has_enhanced_content,
-       CASE WHEN faiss_count = 0 AND contribution_count = 0 THEN '{REC_NONE}'
-            WHEN faiss_count > 0 AND contribution_count > 0 THEN '{REC_BOTH}'
-            WHEN faiss_count > 0 THEN '{REC_FAISS}'
-            ELSE '{REC_CONTRIB}' END AS recommendation
-FROM meta
-"""
-
-
-def q13_effectiveness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q13 (enhanced_search.py:366-410): effectiveness buckets + advice.
-
-    FOLDED (round 10, SURVEY §9 ladder step 4): unregistered — every
-    column is either carried verbatim on `q7_fusion` (query_length,
-    search_effectiveness, recommendation, total_sources) or a boolean
-    view of q7's hash-checked counts; parity stays pinned in
-    test_oracle_parity::_folded and the reconstruction test."""
-    qtext, vec, _, lex = _inputs(spark, sf_dir)
-    return effectiveness(fusion_metadata(qtext, vec, lex))
 
 
 _Q14_ORACLE = _ARMS_CTE + f"""

@@ -40,7 +40,6 @@ from koby_s_ai_vector_db_spark.registry import register
 from koby_s_ai_vector_db_spark.sources.tables import load_tables
 
 PR_ITERS = 3
-PR_DAMP_Q6 = 850_000  # 0.85 in q6 — documented; the update uses 0.85 below
 PR_TOP = 20
 
 _PR_EDGES_CTE = """

@@ -215,7 +215,7 @@ def rel_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (merge hints on both joins) so the probe can time the plan the query
 # would actually run at 100 TB, at any local sf, without touching the
 # registered query. Value parity with rel_shipping_priority is pinned in
-# tests/test_round10_ops.py; scripts/scale_probe.py carries it as an
+# tests/test_relational.py; scripts/scale_probe.py carries it as an
 # EXTRA_PROBES entry.
 def rel_shipping_priority_shuffle(
     spark: SparkSession, sf_dir: str

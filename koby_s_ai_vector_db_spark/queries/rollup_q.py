@@ -22,9 +22,8 @@ Spark-first design:
     ORDER-INDEPENDENT, so partial-agg order can't perturb the result
     (double sums diverge between engines at 10k+ rows — see
     queries/relational_q.py, the proven pattern).
-  - At scale the OUTPUT is written `partitionBy(day)` (see
-    sources/bucketing.py for the layout helpers); a dashboard query for
-    one day is then a single-partition scan.
+  - At scale the OUTPUT is written `partitionBy(day)`; a dashboard
+    query for one day is then a single-partition scan.
 
 Rolled-up key columns use sentinels (hour = -1, event_type = 'ALL') on
 BOTH engines instead of GROUPING SETS' native NULLs — the repo's

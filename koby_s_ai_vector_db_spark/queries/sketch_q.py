@@ -539,15 +539,11 @@ def a23_theta_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- a25: the KMV synopsis table itself (streaming-maintained artifact) ------
-# VERDICT r07 item 4: the continuously-maintained per-group KMV synopsis
-# (streaming/dedup.py::streaming_kmv_sketch, applyInPandasWithState) had
-# test-only evidence. This registers its BATCH TWIN — the same synopsis
-# kmv_sample builds, which tests/test_streaming.py::
-# test_streaming_kmv_sketch_equals_batch proves the streaming operator
-# converges to exactly (k-min truncation is monotone-safe). The driver
-# gate checks the batch side; the stream ≡ batch test closes the loop —
-# the same pattern as dedup_exact_stream / a5_sliding_live_users.
+# --- a25: the KMV synopsis table itself ---------------------------------------
+# The per-group k-min synopsis kmv_sample builds — the stored artifact
+# a23_theta_overlap's set algebra runs on; an ingest stream would keep it
+# fresh by merging each batch's hashes and re-truncating (k-min truncation
+# is monotone-safe).
 # Output: per event_type, the synopsis stats (sample size, theta hash)
 # and the distinct estimate they imply, with the exact count as the
 # accuracy-exhibition arm (production keeps only the sketch columns).

@@ -3,7 +3,12 @@
 The driver's correctness gate runs batch; the SAME transformation
 functions (streaming/live.py) run in true streaming mode in
 tests/test_streaming.py, where stream output is asserted bit-identical
-to these batch results (batch-equivalence contract, SURVEY §7.6)."""
+to these batch results (batch-equivalence contract, SURVEY §7.6).
+
+Every streaming operator in the engine has a registered batch body here
+(or in dedup_q) that its stream run must equal; an operator that could
+only run as a stream would have no oracle, so the engine has none.
+"""
 
 from __future__ import annotations
 

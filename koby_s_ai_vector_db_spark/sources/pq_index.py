@@ -41,15 +41,16 @@ vs vectors), partition pruning WHICH rows (probed lists). FAISS's
 index-factory strings ``IVFn,Flat``, ``PQm`` and ``IVFn,PQm`` name the same
 family. An index stores one vector element type: appends cast to the type
 the build wrote. At 100 TB the probe win is exactly the pgvector one: a
-probe touches n_probe/n_lists of the corpus. Centroid drift is handled the
-ivfflat way: rebuild.
+probe touches n_probe/n_lists of the corpus. Builds and appends are the
+only writes: centroid drift and removed vectors are handled the ivfflat
+way, by a rebuild (the reference rebuilds its FAISS file per ingest).
 
 The deterministic md5-derived codebook (operators/pq.py) is persisted as
 data rather than recomputed: search reads whatever codebook the build
 wrote, so a learned per-subspace k-means codebook (FAISS
 ProductQuantizer training) drops in without touching the search path.
-The fixed-schema sidecars and the tombstones are read with a declared
-schema: a schema-less parquet read runs one schema-inference job. Every
+The fixed-schema sidecars are read with a declared schema: a
+schema-less parquet read runs one schema-inference job. Every
 build, append and search rejects a vector that is not ``pq.DIM``-d with
 an error naming both sizes, checked inside its projection (no extra job).
 
@@ -83,113 +84,7 @@ from koby_s_ai_vector_db_spark.operators.pq import (
 DATA_SUBDIR = "data"
 CODEBOOK_SUBDIR = "codebook"
 CENTROIDS_SUBDIR = "centroids"
-TOMBSTONES_SUBDIR = "tombstones"
 CENTROIDS_SCHEMA = "list int, centroid array<double>"
-
-
-def read_tombstones(spark: SparkSession, path: str, schema: str) -> DataFrame | None:
-    """The deleted-id table of the vector or text index at ``path``, read
-    with its declared ``schema``, or None if nothing was ever deleted. The
-    subdir exists only after a delete wrote ids (compaction removes it),
-    so only its absence means "no deletes": any other read error
-    propagates rather than silently bringing every deleted id back into
-    search results."""
-    from pyspark.errors import AnalysisException
-
-    tomb_dir = f"{path}/{TOMBSTONES_SUBDIR}"
-    try:
-        tomb = spark.read.schema(schema).parquet(tomb_dir)
-    except AnalysisException as e:
-        if e.getCondition() == "PATH_NOT_FOUND":
-            return None
-        raise
-    if not tomb.inputFiles():
-        # Under a declared schema a dir without data files (a failed
-        # write's `_temporary/` leftover) reads as "nothing deleted"; the
-        # schema-less read fails on it with UNABLE_TO_INFER_SCHEMA.
-        return spark.read.parquet(tomb_dir)
-    return tomb
-
-
-def _tombstones(
-    spark: SparkSession, path: str, data: DataFrame, corpus_id: str
-) -> DataFrame | None:
-    """`read_tombstones` typed like ``data``'s id column."""
-    id_type = data.schema[corpus_id].dataType.simpleString()
-    return read_tombstones(spark, path, f"id {id_type}")
-
-
-def _read_data(spark: SparkSession, path: str, corpus_id: str) -> DataFrame:
-    """The live index rows: ``data`` minus tombstoned ids (FAISS
-    `remove_ids` semantics — centroids and codebook stay frozen; a
-    deleted vector simply stops being a candidate)."""
-    data = spark.read.parquet(f"{path}/{DATA_SUBDIR}")
-    tomb = _tombstones(spark, path, data, corpus_id)
-    if tomb is not None:
-        data = data.join(
-            F.broadcast(tomb.withColumnRenamed("id", corpus_id)),
-            corpus_id,
-            "left_anti",
-        )
-    return data
-
-
-def delete_from_index(
-    spark: SparkSession,
-    path: str,
-    ids: DataFrame,
-    corpus_id: str = "vec_id",
-) -> dict:
-    """Delete vectors from the index without a rewrite: append the ids to
-    ``{path}/tombstones``; every search anti-joins them before it scores
-    a row, so a deleted vector can neither enter a shortlist or top-k nor
-    crowd one out (removing it admits the next-best candidate — NOT
-    equivalent to post-filtering search results). `compact_index`
-    reclaims the rows physically. Repeated deletes are idempotent.
-    Returns {"n_deleted", "path"}."""
-    data = spark.read.parquet(f"{path}/{DATA_SUBDIR}")
-    id_type = data.schema[corpus_id].dataType
-    del_ids = ids.select(F.col(corpus_id).cast(id_type).alias("id")).distinct()
-    prior = _tombstones(spark, path, data, corpus_id)
-    if prior is not None:
-        del_ids = del_ids.join(prior, "id", "left_anti")
-    # Only ids actually in the index become tombstones (bounded table).
-    present = data.select(F.col(corpus_id).alias("id"))
-    del_ids = del_ids.join(present, "id", "left_semi")
-    n = del_ids.count()
-    if n:
-        del_ids.coalesce(1).write.mode("append").parquet(
-            f"{path}/{TOMBSTONES_SUBDIR}"
-        )
-    return {"n_deleted": n, "path": path}
-
-
-def compact_index(
-    spark: SparkSession, path: str, corpus_id: str = "vec_id"
-) -> dict:
-    """Physically drop tombstoned rows, preserving the list partitioning —
-    FAISS's remove_ids actually reclaiming memory, as a batch rewrite.
-    Search results are unchanged. Returns {"n_vectors", "path"}."""
-    import os
-    import shutil
-
-    data = spark.read.parquet(f"{path}/{DATA_SUBDIR}")
-    tomb = _tombstones(spark, path, data, corpus_id)
-    if tomb is None:
-        return {"n_vectors": data.count(), "path": path}
-    live = data.join(
-        F.broadcast(tomb.withColumnRenamed("id", corpus_id)),
-        corpus_id,
-        "left_anti",
-    )
-    tmp = f"{path}/.compact_tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    live.repartition("list").write.partitionBy("list").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
-    shutil.rmtree(f"{path}/{DATA_SUBDIR}")
-    os.rename(tmp, f"{path}/{DATA_SUBDIR}")
-    shutil.rmtree(f"{path}/{TOMBSTONES_SUBDIR}", ignore_errors=True)
-    return {"n_vectors": n, "path": path}
 
 
 def build_ivfpq_index(
@@ -354,7 +249,7 @@ def ivfpq_index_search(
     centroids = spark.read.schema(CENTROIDS_SCHEMA).parquet(
         f"{path}/{CENTROIDS_SUBDIR}"
     )
-    data = _read_data(spark, path, corpus_id)
+    data = spark.read.parquet(f"{path}/{DATA_SUBDIR}")
 
     q = queries.select(
         F.col(query_id), l2_normalize(dim_checked(query_vec_col)).alias("qv")
@@ -395,7 +290,7 @@ def ivfpq_index_search(
         )
         # Re-rank fetch (broadcast semi-join, |queries|·shortlist rows)
         # from the probed lists only: every shortlisted id came out of
-        # `scan` (tombstones already applied), so this is exact.
+        # `scan`, so this is exact.
         cand = F.broadcast(sl).join(
             scan.select(corpus_id, "vec"), corpus_id
         ).select(query_id, corpus_id, l2_normalize("vec").alias("nv"))

@@ -22,12 +22,21 @@ index (sources/pq_index.py):
                   373 KB in unsorted shuffle order;
                   ``{path}/stats``: one row per segment (n_docs, sum_dl,
                   n_buckets).
+  append          one more segment: the delta's postings (``seg`` = the
+                  number of segments before it) and one stats row. It
+                  reads the delta and the stats sidecar, never the
+                  postings.
   search (often)  hash the query's terms with the same function, collect
                   their bucket ids and filter the postings scan on them →
                   the probe touches only those buckets' partitions (files
                   of unprobed buckets are never opened); query terms are
                   broadcast into it, and a term's df is a window count of
-                  its live postings there (no df table is stored).
+                  its postings there (no df table is stored).
+
+Builds and appends are the only writes. There is no delete: the
+reference rebuilds its whole FAISS file per ingest (embed_pdfs.py), and
+removing documents or merging the small files of many appends is a
+rebuild here too.
 
 The bucket hash is Spark's own `hash()` — it never crosses engines (both
 build and probe run in Spark), so no portable-md5 detour is needed here.
@@ -50,10 +59,6 @@ from koby_s_ai_vector_db_spark.operators.corpus import (
     term_postings,
 )
 from koby_s_ai_vector_db_spark.operators.dedup import words_expr
-from koby_s_ai_vector_db_spark.sources.pq_index import (
-    TOMBSTONES_SUBDIR,
-    read_tombstones,
-)
 
 POSTINGS_SUBDIR = "postings"
 STATS_SUBDIR = "stats"
@@ -62,7 +67,6 @@ DEFAULT_BUCKETS = 64
 # schema-inference job per call. ``bucket`` is the partition column.
 POSTINGS_SCHEMA = "term string, id bigint, tf bigint, dl double, seg int, bucket int"
 STATS_SCHEMA = "n_docs double, sum_dl double, n_buckets int"
-TOMBSTONES_SCHEMA = "id bigint, up_to_seg int"
 
 
 def _read_postings(spark: SparkSession, path: str) -> DataFrame:
@@ -73,14 +77,11 @@ def _read_stats(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(STATS_SCHEMA).parquet(f"{path}/{STATS_SUBDIR}")
 
 
-def _read_tombstones(spark: SparkSession, path: str) -> DataFrame | None:
-    return read_tombstones(spark, path, TOMBSTONES_SCHEMA)
-
-
-def _n_buckets(stats: DataFrame, path: str) -> int:
-    """The bucket count the index was built with. A stats sidecar written
-    without it reads as NULL under STATS_SCHEMA."""
-    n = stats.head()["n_buckets"]
+def _n_buckets(stats_row, path: str) -> int:
+    """The bucket count the index was built with, from one row of the
+    stats sidecar. A sidecar written without it reads as NULL under
+    STATS_SCHEMA."""
+    n = stats_row["n_buckets"]
     if n is None:
         raise ValueError(
             f"{path}/{STATS_SUBDIR} has no n_buckets column — index built "
@@ -89,29 +90,14 @@ def _n_buckets(stats: DataFrame, path: str) -> int:
     return int(n)
 
 
-def _live(postings: DataFrame, tomb: DataFrame | None) -> DataFrame:
-    """Postings minus tombstoned generations. ``tomb`` is the index's
-    (id, up_to_seg) deletion table (`read_tombstones`): a row hides an
-    id's postings in generations <= up_to_seg, so generations written
-    AFTER the delete (an upsert's re-add) are visible again."""
-    if tomb is None:
-        return postings
-    t = tomb.groupBy("id").agg(F.max("up_to_seg").alias("up_to_seg"))
-    return (
-        postings.join(F.broadcast(t), "id", "left")
-        .filter(F.col("up_to_seg").isNull() | (F.col("seg") > F.col("up_to_seg")))
-        .drop("up_to_seg")
-    )
-
-
 def _bucket(term_col: str, n_buckets: int) -> F.Column:
     return F.pmod(F.hash(F.col(term_col)), F.lit(n_buckets)).cast("int")
 
 
 def _write_postings(postings: DataFrame, dest: str, mode: str) -> None:
-    """The one postings writer (build, append, streaming appends and
-    compaction): one writer task per bucket, so a probed partition is
-    O(1) files, and rows sorted id-major within it (module docstring).
+    """The one postings writer (build and appends): one writer task per
+    bucket, so a probed partition is O(1) files, and rows sorted id-major
+    within it (module docstring).
     ``bucket`` must lead the sort key: the partitioned write requires
     bucket order and would otherwise re-sort on bucket alone, discarding
     the (id, term) order."""
@@ -132,13 +118,9 @@ def build_text_index(
     text_col: str = "text",
 ) -> dict:
     """Tokenize + invert once; persist bucket-partitioned postings and the
-    corpus-scalar sidecar. Returns {"n_docs", "n_terms", "path",
-    "n_buckets"}."""
-    n_docs, n_terms = _write_segment(
-        docs, path, n_buckets, id_col, text_col, mode="overwrite"
-    )
-    return {"n_docs": n_docs, "n_terms": n_terms, "path": path,
-            "n_buckets": n_buckets}
+    corpus-scalar sidecar. Returns {"n_docs", "path", "n_buckets"}."""
+    n_docs = _write_segment(docs, path, n_buckets, id_col, text_col, mode="overwrite")
+    return {"n_docs": n_docs, "path": path, "n_buckets": n_buckets}
 
 
 def _write_segment(
@@ -149,20 +131,18 @@ def _write_segment(
     text_col: str,
     mode: str,
     seg: int = 0,
-) -> tuple[int, int]:
+) -> int:
     """Write one index segment (postings + one stats row) and return its
-    (n_docs, n_terms), counted on the persisted frames. Every aggregate
-    the search needs is ADDITIVE across segments (df as a count of
-    postings rows, n_docs, sum_dl), so append-mode segments compose
-    exactly — the Lucene-segment idea without the merge daemon. ``seg``
-    stamps the postings rows with their segment generation: deletes are
-    scoped to the generations that existed when they were issued, so an
-    id re-added by a later upsert is visible again."""
-    post = term_postings(docs, id_col, text_col).persist()
+    document count. Every aggregate the search needs is ADDITIVE across
+    segments (df as a count of postings rows, n_docs, sum_dl), so
+    append-mode segments compose exactly — the Lucene-segment idea
+    without the merge daemon. ``seg`` stamps the postings rows with the
+    segment's number (0 for the build, then one per append)."""
     dl = doc_lengths(docs, id_col, text_col).persist()
     try:
         postings = (
-            post.join(dl, "_id")
+            term_postings(docs, id_col, text_col)
+            .join(dl, "_id")
             .select(
                 _bucket("term", n_buckets).alias("bucket"),
                 "term",
@@ -183,9 +163,8 @@ def _write_segment(
             F.sum("dl").alias("sum_dl"),
         ).withColumn("n_buckets", F.lit(n_buckets))
         stats.coalesce(1).write.mode(mode).parquet(f"{path}/{STATS_SUBDIR}")
-        return dl.count(), post.select("term").distinct().count()
+        return dl.count()
     finally:
-        post.unpersist()
         dl.unpersist()
 
 
@@ -197,80 +176,18 @@ def append_to_text_index(
 ) -> dict:
     """Incrementally add documents to an existing index as a new SEGMENT:
     postings/stats rows are parquet-appended, which is exact because
-    every BM25 global (df, N, total length) is additive. No old data is
-    rescanned — the upgrade over the reference's wholesale re-embed per
+    every BM25 global (df, N, total length) is additive. The append reads
+    only the delta and the stats sidecar (one row per segment), never the
+    postings — the upgrade over the reference's wholesale re-embed per
     ingest. The bucket count is read from the index (layout-frozen at
-    build)."""
+    build); the new segment's number is the count of segments so far."""
     spark = docs.sparkSession
-    n_buckets = _n_buckets(_read_stats(spark, path), path)
-    # Next generation id: one column-pruned scan of the postings table.
-    seg = int(_read_postings(spark, path).agg(F.max("seg")).head()[0]) + 1
-    n_docs, _ = _write_segment(
-        docs, path, n_buckets, id_col, text_col, mode="append", seg=seg
+    stats = _read_stats(spark, path).select("n_buckets").collect()
+    n_buckets = _n_buckets(stats[0], path)
+    n_docs = _write_segment(
+        docs, path, n_buckets, id_col, text_col, mode="append", seg=len(stats)
     )
     return {"n_appended": n_docs, "path": path, "n_buckets": n_buckets}
-
-
-def delete_from_text_index(
-    spark: SparkSession,
-    path: str,
-    ids: DataFrame,
-    id_col: str = "doc_id",
-) -> dict:
-    """Delete documents from the index WITHOUT rewriting it — Lucene's
-    tombstone semantics expressed through the index's own additive
-    algebra. Two things are written, both tiny:
-
-      1. the deleted ids append to ``{path}/tombstones`` — search
-         filters them out, so deleted postings stop matching and stop
-         counting toward any term's df;
-      2. a NEGATIVE stats row (n_docs/sum_dl of the deleted docs),
-         derived from their own postings. Because N and avgdl are summed
-         across segments at search time, the negative row makes them
-         exact again with ZERO search-side changes — deletes reuse the
-         same mechanism appends do.
-
-    Ids already tombstoned (or never indexed) are ignored — a repeated
-    delete must not double-subtract. `compact_text_index` later applies
-    tombstones physically and clears them. Returns {"n_deleted", "path"}.
-    """
-    n_buckets = _n_buckets(_read_stats(spark, path), path)
-
-    del_ids = ids.select(F.col(id_col).alias("id")).distinct()
-    # The correction row needs the deleted docs' lengths — they are IN
-    # the index; one postings pass per delete batch, not per search.
-    # Corrections derive from the LIVE rows only: an id already deleted
-    # (no live postings) contributes nothing and gets no new tombstone,
-    # so repeated deletes never double-subtract; an id re-added since an
-    # earlier delete has live rows again and is deleted afresh.
-    postings = _read_postings(spark, path)
-    live = _live(postings, _read_tombstones(spark, path))
-    deleted_post = live.join(F.broadcast(del_ids), "id").persist()
-    try:
-        n_deleted = deleted_post.select("id").distinct().count()
-        if n_deleted == 0:
-            return {"n_deleted": 0, "path": path}
-        up_to = int(postings.agg(F.max("seg")).head()[0])
-        neg_stats = (
-            deleted_post.select("id", "seg", "dl")
-            .distinct()
-            .agg(
-                (-F.count("*")).cast("double").alias("n_docs"),
-                (-F.sum("dl")).alias("sum_dl"),
-            )
-            .withColumn("n_buckets", F.lit(n_buckets))
-        )
-        neg_stats.coalesce(1).write.mode("append").parquet(
-            f"{path}/{STATS_SUBDIR}"
-        )
-        deleted_post.select("id").distinct().withColumn(
-            "up_to_seg", F.lit(up_to).cast("int")
-        ).coalesce(1).write.mode("append").parquet(
-            f"{path}/{TOMBSTONES_SUBDIR}"
-        )
-    finally:
-        deleted_post.unpersist()
-    return {"n_deleted": n_deleted, "path": path}
 
 
 def search_text_index(
@@ -299,12 +216,12 @@ def search_text_index(
     # list — a per-build head() was a Spark job per query construction
     # (the construction-is-action-free invariant). spark.read.parquet has
     # already listed those files, and any rewrite of the index (a rebuild
-    # with another n_buckets, an append, a compaction) changes the list,
-    # so a memo can never serve the bucket count of an older layout.
+    # with another n_buckets, an append) changes the list, so a memo can
+    # never serve the bucket count of an older layout.
     n_buckets = memo(
         spark,
         ("textidx_n_buckets", tuple(sorted(seg_stats.inputFiles()))),
-        lambda: _n_buckets(seg_stats, path),
+        lambda: _n_buckets(seg_stats.head(), path),
     )
     # Segments are additive: N = Σ n_docs, avgdl = Σ sum_dl / N.
     stats = seg_stats.agg(
@@ -321,15 +238,9 @@ def search_text_index(
         r[0]
         for r in qterms.select(_bucket("term", n_buckets)).distinct().collect()
     )
-    # Deleted docs: the generation-scoped tombstone filter hides their
-    # postings (so they leave df too); the negative stats rows summed
-    # above take them out of N/avgdl (delete_from_text_index).
-    postings = _live(
-        _read_postings(spark, path).filter(F.col("bucket").isin(buckets)),
-        _read_tombstones(spark, path),
-    )
-    # df = the term's live postings: a query's terms are distinct, so the
-    # join holds each live posting of a term once per query asking it.
+    postings = _read_postings(spark, path).filter(F.col("bucket").isin(buckets))
+    # df = the term's postings: a query's terms are distinct, so the join
+    # holds each posting of a term once per query asking it.
     scored = (
         postings.join(F.broadcast(qterms), ["term"])
         .withColumn("df", F.count(F.lit(1)).over(Window.partitionBy(query_id, "term")))
@@ -362,80 +273,3 @@ def search_text_index(
             "rank",
         )
     )
-
-
-def compact_text_index(spark: SparkSession, path: str) -> dict:
-    """Merge all segments into one: the stats sidecar collapses to a
-    single row, and each bucket's postings are rewritten as one coherent
-    partition (one writer task per bucket) instead of one file set per
-    appended segment. Search results are unchanged — compaction only
-    moves the additive stats summing from query time to write time,
-    drops tombstoned postings (so df is counted over fewer rows) and
-    fixes small-file proliferation: after S appends a probe opens O(S)
-    files per bucket, after compaction O(1). This is Lucene's segment
-    merge as a batch job.
-
-    Locally the swap is rewrite-to-tmp + directory rename; on a real
-    cluster the same step writes a new index root and flips a manifest
-    pointer (parquet has no transactional overwrite-in-place).
-    Returns {"n_segments_before", "n_postings", "path"}.
-    """
-    import os
-    import shutil
-
-    stats = _read_stats(spark, path)
-    n_buckets = _n_buckets(stats, path)
-    n_segments = stats.count()
-
-    merged_stats = stats.agg(
-        F.sum("n_docs").alias("n_docs"), F.sum("sum_dl").alias("sum_dl")
-    ).withColumn("n_buckets", F.lit(n_buckets))
-    # Apply tombstones physically: compaction is where Lucene reclaims
-    # deleted docs; afterwards the tombstone table is empty again and
-    # every surviving row restarts at generation 0.
-    postings = _live(
-        _read_postings(spark, path), _read_tombstones(spark, path)
-    ).withColumn("seg", F.lit(0).cast("int"))
-
-    tmp = f"{path}/.compact_tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    # Materialize the new segment fully before touching the old one.
-    _write_postings(postings, f"{tmp}/{POSTINGS_SUBDIR}", "errorifexists")
-    merged_stats.coalesce(1).write.parquet(f"{tmp}/{STATS_SUBDIR}")
-    n_postings = int(_read_postings(spark, tmp).count())
-    for sub in (POSTINGS_SUBDIR, STATS_SUBDIR):
-        shutil.rmtree(f"{path}/{sub}")
-        os.rename(f"{tmp}/{sub}", f"{path}/{sub}")
-    shutil.rmtree(tmp, ignore_errors=True)
-    # Tombstoned docs are physically gone now.
-    shutil.rmtree(f"{path}/{TOMBSTONES_SUBDIR}", ignore_errors=True)
-    return {
-        "n_segments_before": n_segments,
-        "n_postings": n_postings,
-        "path": path,
-    }
-
-
-def upsert_to_text_index(
-    docs: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> dict:
-    """Replace-or-insert documents: delete any existing rows for these
-    ids (tombstone + negative stats row), then append the new contents
-    as a fresh segment — the reference's filename-keyed re-ingest
-    (core/supabase_utils.py:203-248 deletes a document's chunks before
-    re-inserting) expressed as index operations. Search afterwards is
-    exact for the NEW contents (rebuild-equivalent, same argument as
-    delete + append). Returns {"n_replaced", "n_upserted", "path"}."""
-    spark = docs.sparkSession
-    deleted = delete_from_text_index(
-        spark, path, docs.select(id_col), id_col=id_col
-    )
-    appended = append_to_text_index(docs, path, id_col, text_col)
-    return {
-        "n_replaced": deleted["n_deleted"],
-        "n_upserted": appended["n_appended"],
-        "path": path,
-    }

@@ -2,46 +2,24 @@
 
 A 100 TB training-data pipeline ingests documents CONTINUOUSLY; exact
 dedup can't be a nightly batch job over the full corpus — it has to run
-in the ingest stream. Two tiers, both over the 16-byte md5 content hash
-(the same portable key as operators/dedup.exact_dup_groups):
+in the ingest stream. Both tiers are min/count state tables that run on
+either a batch or a streaming DataFrame:
 
-  - `streaming_exact_dedup`: per-hash canonical aggregate
-    (min doc_id + copy count), one definition that runs on EITHER a
-    batch or a streaming DataFrame. In streaming mode the state is one
+  - `streaming_exact_dedup`: per-hash canonical aggregate (min doc_id
+    + copy count) over the 16-byte md5 content hash (the same portable
+    key as operators/dedup.exact_dup_groups). In streaming mode the state is one
     row per distinct hash, updated per microbatch; the final state equals
     the batch GROUP BY bit-for-bit regardless of arrival order — this is
     the value-checkable tier (registered as `dedup_exact_stream`,
     batch-equivalence proven in tests/test_streaming.py).
-  - `emit_first_seen`: the pass-through tier —
-    `dropDuplicatesWithinWatermark` on the hash emits one representative
-    row per content hash and EVICTS hash state past the watermark, so
-    state is bounded by the dedup horizon instead of corpus cardinality.
-    Which physical row survives depends on arrival order (first wins) —
-    inherently racy across partitions, so tests assert the set of hashes
-    and the one-row-per-hash contract, not surviving ids. The reference
-    has no streaming surface; this is the Spark-native shape of its
-    upload-time "does this file already exist" check
-    (core/supabase_utils.py:150-176).
+  - `streaming_sketch_dedup`: the same shape keyed by the SimHash sketch
+    (registered as `dedup_sketch_stream`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-DOCS_SCHEMA = "doc_id bigint, text string, lang string, source string, n_chars bigint"
-
-DEDUP_HORIZON = "1 hour"
-
-
-def read_docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the fixture documents parquet (glob, not a
-    bare file path — FileStreamSource needs a directory basePath)."""
-    return (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .format("parquet")
-        .load(f"{sf_dir}/documents*.parquet")
-    )
 
 
 def streaming_exact_dedup(
@@ -80,66 +58,4 @@ def streaming_sketch_dedup(
         docs.filter(F.size(words_expr(text_col)) > 0)
         .groupBy(simhash_expr(text_col).alias("sketch"))
         .agg(F.min(id_col).alias("canonical_id"), F.count("*").alias("n_copies"))
-    )
-
-
-def emit_first_seen(
-    docs: DataFrame,
-    ts_col: str = "ingest_ts",
-    text_col: str = "text",
-    horizon: str = DEDUP_HORIZON,
-) -> DataFrame:
-    """Pass-through dedup: forward exactly one row per content hash seen
-    within the watermark horizon; duplicate arrivals are dropped in-flight
-    and hash state older than the horizon is evicted (bounded state — the
-    property a plain dropDuplicates lacks). `ts_col` is the event-time
-    column a real ingest carries; the fixture has none, so callers derive
-    a deterministic stand-in (tests use timestamp_micros(doc_id))."""
-    return (
-        docs.withColumn("_hash", F.md5(F.col(text_col)))
-        .withWatermark(ts_col, horizon)
-        .dropDuplicatesWithinWatermark(["_hash"])
-        .drop("_hash")
-    )
-
-
-def streaming_kmv_sketch(
-    df: DataFrame, group_col: str = "event_type", k: int = 64
-) -> DataFrame:
-    """Continuously-maintained KMV (theta) synopsis per group — the
-    streaming twin of operators/sketches.kmv_sample, as a CUSTOM
-    stateful operator (applyInPandasWithState). State per group is the
-    sorted array of the k smallest distinct hashes seen so far; each
-    microbatch merges its hashes in and re-truncates. Truncation is
-    safe: the true k-min over a growing stream only ever moves DOWN, so
-    a hash dropped at rank > k can never re-enter. Update mode emits the
-    refreshed synopsis per group per microbatch; the LAST emission per
-    group equals the batch kmv_sample over everything seen
-    (tests/test_streaming.py proves equality across a forced 2-batch
-    run). The hash is computed JVM-side BEFORE the Python hop (the
-    portable md5 column), so the stateful op only maintains a k-array —
-    Arrow-batched, state bounded at k longs per group.
-
-    At 100 TB this is how the set-algebra sketches stay fresh on an
-    ingest stream: the stored per-group synopsis IS the queryable
-    artifact (a23_theta_overlap's algebra runs on it unchanged), no
-    re-scan of raw history per question."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = f"{group_col} string, h bigint"
-    state_schema = "hs array<bigint>"
-
-    def update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        kept = list(state.get[0]) if state.exists else []
-        s = set(kept)
-        for pdf in pdfs:
-            s.update(int(h) for h in pdf["h"])
-        kept = sorted(s)[:k]
-        state.update((kept,))
-        yield pd.DataFrame({group_col: key[0], "h": kept})
-
-    return df.groupBy(group_col).applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )

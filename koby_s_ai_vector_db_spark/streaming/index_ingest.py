@@ -7,7 +7,9 @@ and each micro-batch is absorbed into the SAME persisted index artifacts
 the batch queries search — `foreachBatch` + the incremental appenders
 (`sources/pq_index.py::append_to_ivfpq_index`,
 `sources/text_index.py::append_to_text_index`). `availableNow` triggers
-give the catch-up/batch-backfill mode for free.
+give the catch-up/batch-backfill mode for free. Appends are the only
+streamed write: the indexes have no delete path, and removals or
+small-file growth after many appends are handled by a rebuild.
 
 Exactness: both appenders are proven segment-exact in batch tests —
 BM25 globals are additive across text-index segments, and IVF+PQ append
@@ -25,7 +27,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from koby_s_ai_vector_db_spark.sources.packed import append_to_packed_shards
 from koby_s_ai_vector_db_spark.sources.pq_index import append_to_ivfpq_index
 from koby_s_ai_vector_db_spark.sources.text_index import append_to_text_index
 
@@ -85,82 +86,6 @@ def stream_docs_into_text_index(
 
     return (
         docs.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_docs_into_packed_shards(
-    spark: SparkSession,
-    source_glob: str,
-    artifact_path: str,
-    checkpoint: str,
-    seq_len: int,
-    n_shards: int,
-    seed: int = 0,
-) -> "object":
-    """Start a stream packing arriving documents into the persisted
-    packed-shard artifact (sources/packed.py), one appended segment per
-    micro-batch. Segment semantics: each micro-batch's sequences are
-    numbered after the shard's current tail, so earlier segments are
-    never rewritten and each batch's own tail stays partial — the
-    training corpus grows append-only; a periodic `build_packed_shards`
-    re-pack is the compaction, exactly like the text-index segment
-    merge."""
-    docs = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_glob)
-    )
-
-    def absorb(batch: DataFrame, _batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        append_to_packed_shards(
-            batch, artifact_path, seq_len=seq_len, n_shards=n_shards, seed=seed
-        )
-
-    return (
-        docs.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-IDS_SCHEMA = "doc_id bigint"
-
-
-def stream_deletes_into_text_index(
-    spark: SparkSession,
-    source_glob: str,
-    index_path: str,
-    checkpoint: str,
-) -> "object":
-    """Start a stream absorbing arriving delete requests (parquet files
-    of doc ids) into an existing text index — one `delete_from_text_index`
-    per micro-batch. Micro-batch boundaries are invisible: deletes are
-    idempotent and their corrections additive, so the stream-final index
-    equals one batch delete of all the ids (asserted in
-    tests/test_streaming_ingest.py)."""
-    from koby_s_ai_vector_db_spark.sources.text_index import (
-        delete_from_text_index,
-    )
-
-    ids = (
-        spark.readStream.schema(IDS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_glob)
-    )
-
-    def absorb(batch: DataFrame, _batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        delete_from_text_index(spark, index_path, batch)
-
-    return (
-        ids.writeStream.foreachBatch(absorb)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()

@@ -180,53 +180,6 @@ def user_session_windows(events: DataFrame, gap: str = GAP) -> DataFrame:
     )
 
 
-def stateful_user_stats(events: DataFrame) -> DataFrame:
-    """A6/A7 as a CUSTOM stateful operator (applyInPandasWithState): a
-    per-user running profile — total events, purchases, errors, last-seen —
-    carried in explicit group state across microbatches. This is the shape
-    session_window/window can't express: arbitrary per-key state with
-    arbitrary update logic (the reference's per-request session bookkeeping,
-    core/session_utils.py:214-251, as a continuously-maintained profile).
-
-    Update mode emits one refreshed row per user per microbatch; the latest
-    row per user always equals the batch aggregate over everything seen so
-    far (tests/test_streaming.py proves equality across a forced 2-batch
-    run). State is a 4-tuple of longs per active user — bounded, and
-    evictable via GroupStateTimeout once a production stream sets a
-    watermark. Arrow-batched like every Python hop in this repo."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = (
-        "user_id bigint, n_events bigint, n_purchases bigint, "
-        "n_errors bigint, last_seen_us bigint"
-    )
-    state_schema = "n_events bigint, n_purchases bigint, n_errors bigint, last_seen_us bigint"
-
-    def update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        n_ev, n_pu, n_er, last = state.get if state.exists else (0, 0, 0, 0)
-        for pdf in pdfs:
-            n_ev += len(pdf)
-            n_pu += int((pdf["event_type"] == "purchase").sum())
-            n_er += int((pdf["event_type"] == "error").sum())
-            last = max(last, int(pdf["ts_us"].max()))
-        state.update((n_ev, n_pu, n_er, last))
-        yield pd.DataFrame(
-            [[key[0], n_ev, n_pu, n_er, last]],
-            columns=["user_id", "n_events", "n_purchases", "n_errors", "last_seen_us"],
-        )
-
-    return (
-        events.withColumn("ts_us", F.unix_micros(F.col("ts").cast("timestamp")))
-        .select("user_id", "event_type", "ts_us")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-        )
-    )
-
-
 # Single source of truth for the attribution window: the SQL interval
 # string and the microsecond bucket width MUST agree — drift would make
 # click_attribution_bucketed's bucket equi-join silently drop rows the

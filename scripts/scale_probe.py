@@ -327,7 +327,7 @@ def _q3_shuffle(spark, sf_dir):
     # The 100 TB-path twin of rel_shipping_priority: merge-hinted joins
     # so the probe times the shuffle plan the query runs once its
     # segment-filtered customer side stops being broadcastable
-    # (VERDICT r09 item 6; value parity in tests/test_round10_ops.py).
+    # (VERDICT r09 item 6; value parity in tests/test_relational.py).
     from koby_s_ai_vector_db_spark.queries.relational_q import (
         rel_shipping_priority_shuffle,
     )

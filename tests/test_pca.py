@@ -8,7 +8,6 @@ import pytest
 
 from koby_s_ai_vector_db_spark.operators.pca import (
     fit_pca,
-    pca_variance_table,
     project_pca,
 )
 from tests.conftest import SF_DIRS
@@ -71,15 +70,6 @@ def test_projection_matches_numpy(spark, fixture_emb):
     want = (x - model.mean) @ model.components
     for i, vid in enumerate(ids):
         np.testing.assert_allclose(got[vid], want[i], atol=1e-8)
-
-
-def test_variance_table(spark, fixture_emb):
-    df, _ = fixture_emb
-    model = fit_pca(df, k=5)
-    rows = pca_variance_table(spark, model).collect()
-    assert [r.component for r in rows] == [1, 2, 3, 4, 5]
-    assert rows[-1].cum_ratio <= 1.0 + 1e-9
-    assert all(rows[i].cum_ratio <= rows[i + 1].cum_ratio for i in range(4))
 
 
 def test_degenerate_args(spark, fixture_emb):

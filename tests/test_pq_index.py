@@ -16,8 +16,6 @@ from koby_s_ai_vector_db_spark.operators.similarity import ivf_topk, topk_cosine
 from koby_s_ai_vector_db_spark.sources.pq_index import (
     append_to_ivfpq_index,
     build_ivfpq_index,
-    compact_index,
-    delete_from_index,
     ivfpq_index_search,
 )
 from koby_s_ai_vector_db_spark.sources.tables import load_table
@@ -202,22 +200,12 @@ def test_index_stores_input_vector_as_given(
     spark, pq_path, ivfpq_path, kmeans_path, tmp_path
 ):
     """``vec`` is the input vector as given — element type and values, not
-    a normalized double copy — for every build path and after compaction;
-    a double input stays double."""
-    import shutil
-
+    a normalized double copy — for every build path; a double input stays
+    double."""
     emb = _emb(spark).select("vec_id", "embedding")
     floats = _input_vectors(emb)
-    compacted = str(tmp_path / "compacted")
-    shutil.copytree(ivfpq_path, compacted)
-    delete_from_index(spark, compacted, emb.filter(F.col("vec_id") < 4))
-    compact_index(spark, compacted)
-    live = {i: v for i, v in floats.items() if i >= 4}
-    for path, want in [
-        (pq_path, floats), (ivfpq_path, floats), (kmeans_path, floats),
-        (compacted, live),
-    ]:
-        assert _stored_vectors(spark, path) == ("float", want), path
+    for path in (pq_path, ivfpq_path, kmeans_path):
+        assert _stored_vectors(spark, path) == ("float", floats), path
 
     dbl = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")

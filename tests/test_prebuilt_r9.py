@@ -276,35 +276,30 @@ def test_pmi_known_value(spark, tmp_path):
     assert out["aa bb"]["c12"] == 10
 
 
-# --- fold ladder preparation (SURVEY §9) --------------------------------------
-# Step 2 (the contamination widths → ngram_contamination_both) was EXECUTED
-# in round 9: the fold query is registered (auto-covered by
-# test_oracle_parity) and the two widths moved to its _folded() list.
+# --- the dashboard panels without a registered query of their own ----------
+# lifebench's dashboard calls live_users and user_activity directly; their
+# values are checked here against a6_session_stats' oracle-checked columns.
 
 
 def test_a5_is_strict_projection_of_a6(spark):
-    """SURVEY §9 fold ladder step 1 evidence: a5_live_users' single value
-    equals a6_session_stats' live_users column — the same strict-
-    projection relationship that justified the executed q8/q9 folds."""
-    from koby_s_ai_vector_db_spark.queries.analytics_q import (
-        a5_live_users,
-        a6_session_stats,
-    )
+    """The A5 operator's single value (`live_users`) equals
+    a6_session_stats' oracle-checked live_users column."""
+    from koby_s_ai_vector_db_spark.operators.analytics import live_users
+    from koby_s_ai_vector_db_spark.queries.analytics_q import a6_session_stats
+    from koby_s_ai_vector_db_spark.sources.tables import load_table
 
-    (a5,) = a5_live_users(spark, SF_DIR).collect()
+    (a5,) = live_users(load_table(spark, SF_DIR, "events")).collect()
     (a6,) = a6_session_stats(spark, SF_DIR).collect()
     assert a5["live_users"] == a6["live_users"]
 
 
 def test_a7u_is_reconstructable_from_a6(spark):
-    """SURVEY §9 fold ladder step 3 evidence (executed round 10):
-    a7_user_activity's full result — per-type counts AND the windowed
-    total — reconstructs exactly from a6_session_stats' hash-checked
-    `u7_breakdown_7d` string, so the a7u window slot folds into a6."""
-    from koby_s_ai_vector_db_spark.queries.analytics_q import (
-        a6_session_stats,
-        a7_user_activity,
-    )
+    """The A7 per-user operator's full result (`user_activity`: per-type
+    counts AND the windowed total) reconstructs exactly from
+    a6_session_stats' oracle-checked `u7_breakdown_7d` string."""
+    from koby_s_ai_vector_db_spark.operators.analytics import user_activity
+    from koby_s_ai_vector_db_spark.queries.analytics_q import a6_session_stats
+    from koby_s_ai_vector_db_spark.sources.tables import load_table
 
     (a6,) = a6_session_stats(spark, SF_DIR).collect()
     decoded = {}
@@ -314,7 +309,7 @@ def test_a7u_is_reconstructable_from_a6(spark):
             decoded[t] = int(n)
     assert sum(decoded.values()) == a6["u7_events_7d"]
 
-    rows = a7_user_activity(spark, SF_DIR).collect()
+    rows = user_activity(load_table(spark, SF_DIR, "events"), user_id=7, days=7).collect()
     expect = {r["event_type"]: r["n_events"] for r in rows}
     assert decoded == expect
     for r in rows:

@@ -197,7 +197,7 @@ def test_fuzzy_pairs_lossless_with_short_strings(spark, texts_, t):
 
 
 # --- KMV truncated-merge safety ---------------------------------------------
-# The claim both the batch kmv_sample and streaming_kmv_sketch rest on:
+# The claim that keeping the kmv_sample synopsis fresh per batch rests on:
 # folding batches into a k-element state WITH truncation after every
 # batch equals the k smallest of the global distinct set — a value
 # dropped at rank > k can never re-enter, because the running k-min is

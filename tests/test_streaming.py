@@ -58,10 +58,8 @@ def test_streaming_exact_dedup_equals_batch(spark, tmp_path):
     are arrival-order independent."""
     from pyspark.sql import functions as F
 
-    from koby_s_ai_vector_db_spark.streaming.dedup import (
-        DOCS_SCHEMA,
-        streaming_exact_dedup,
-    )
+    from koby_s_ai_vector_db_spark.streaming.dedup import streaming_exact_dedup
+    from koby_s_ai_vector_db_spark.streaming.index_ingest import DOCS_SCHEMA
 
     docs = load_table(spark, SF_DIR, "documents")
     # Plant exact duplicates across the two halves so dedup state must
@@ -107,10 +105,8 @@ def test_streaming_sketch_dedup_equals_batch(spark, tmp_path):
     DIFFERENT batches must collapse into one state row."""
     from pyspark.sql import functions as F
 
-    from koby_s_ai_vector_db_spark.streaming.dedup import (
-        DOCS_SCHEMA,
-        streaming_sketch_dedup,
-    )
+    from koby_s_ai_vector_db_spark.streaming.dedup import streaming_sketch_dedup
+    from koby_s_ai_vector_db_spark.streaming.index_ingest import DOCS_SCHEMA
 
     docs = load_table(spark, SF_DIR, "documents")
     # Exact text copies under new ids: same sketch, different id. The odd
@@ -151,207 +147,6 @@ def test_streaming_sketch_dedup_equals_batch(spark, tmp_path):
     # A planted copy and its original differ by parity, so they landed in
     # different microbatches yet share a sketch row.
     assert stream_out.filter("n_copies > 1").count() > 0
-
-
-def test_docs_stream_reader_dedup_equals_batch(spark):
-    """The production docs-stream entry point (read_docs_stream over the
-    fixture glob) feeds streaming_exact_dedup to the same state table the
-    batch form computes."""
-    from koby_s_ai_vector_db_spark.streaming.dedup import (
-        read_docs_stream,
-        streaming_exact_dedup,
-    )
-
-    name = f"s_docsrd_{uuid.uuid4().hex[:8]}"
-    q = (
-        streaming_exact_dedup(read_docs_stream(spark, SF_DIR))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    stream_out = spark.sql(f"SELECT * FROM {name}")
-    batch = streaming_exact_dedup(load_table(spark, SF_DIR, "documents"))
-    assert _rows(stream_out) == _rows(batch)
-    assert stream_out.count() > 0
-
-
-def test_stateful_asof_enrich_equals_batch(spark, tmp_path):
-    """Streaming temporal join (streaming/temporal.py): over a
-    TIME-PARTITIONED source (each batch newer than the last — the append-
-    log shape) the stateful enrichment must equal the batch asof_join
-    exactly, including state carried across the batch boundary."""
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from koby_s_ai_vector_db_spark.operators.asof import asof_join
-    from koby_s_ai_vector_db_spark.queries.asof_q import _updates
-    from koby_s_ai_vector_db_spark.streaming.temporal import (
-        NO_MATCH,
-        stateful_asof_enrich,
-        tag_streams,
-    )
-
-    ev = load_table(spark, SF_DIR, "events").select(
-        "event_id", "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-    )
-    upd = _updates(spark, SF_DIR).select(
-        "user_id",
-        F.unix_micros(F.col("upd_ts").cast("timestamp")).alias("up_ts"),
-        F.col("o_totalprice").alias("price"),
-    )
-
-    tagged = tag_streams(ev, upd.withColumnRenamed("up_ts", "ts_us"))
-    cut = tagged.agg(F.expr("percentile(ts_us, 0.5)")).head()[0]
-    src = str(tmp_path / "tagged_split")
-    tagged.filter(F.col("ts_us") < cut).coalesce(1).write.parquet(f"{src}/half=0")
-    _time.sleep(0.1)  # distinct mtimes → file-source processes halves in order
-    tagged.filter(F.col("ts_us") >= cut).coalesce(1).write.parquet(f"{src}/half=1")
-
-    stream_in = (
-        spark.readStream.schema(tagged.schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .load(src)
-    )
-    name = f"s_asof_{uuid.uuid4().hex[:8]}"
-    q = (
-        stateful_asof_enrich(stream_in)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
-    assert n_batches >= 2, "temporal state was never exercised across batches"
-
-    stream_out = spark.sql(f"SELECT * FROM {name}")
-    batch = asof_join(
-        ev, upd, ["user_id"], "ts_us", "up_ts",
-        how="left", matched_ts_col="matched_ts", assume_deduped=True,
-    ).select(
-        "event_id", "user_id", "ts_us",
-        F.coalesce("price", F.lit(NO_MATCH)).alias("price"),
-        F.coalesce("matched_ts", F.lit(-1)).alias("matched_ts"),
-    )
-    assert _rows(stream_out) == _rows(batch)
-    # Non-degenerate: some events precede any update, most are enriched.
-    assert stream_out.filter(f"price = {NO_MATCH}").count() > 0
-    assert stream_out.filter(f"price != {NO_MATCH}").count() > 0
-
-
-def test_emit_first_seen_bounded_passthrough(spark, tmp_path):
-    """dropDuplicatesWithinWatermark forwards exactly one row per content
-    hash; which physical row survives is arrival-dependent, so assert the
-    hash set and the one-per-hash contract, not ids."""
-    from pyspark.sql import functions as F
-
-    from koby_s_ai_vector_db_spark.streaming.dedup import (
-        DOCS_SCHEMA,
-        emit_first_seen,
-    )
-
-    docs = load_table(spark, SF_DIR, "documents")
-    dd = docs.unionByName(
-        docs.filter(F.col("doc_id") % 5 == 0).withColumn(
-            "doc_id", F.col("doc_id") + 1_000_000
-        )
-    )
-    src = str(tmp_path / "docs_dup")
-    dd.coalesce(1).write.parquet(src)
-
-    stream_in = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .format("parquet")
-        .load(src)
-        .withColumn("ingest_ts", F.timestamp_micros(F.col("doc_id")))
-    )
-    name = f"s_first_{uuid.uuid4().hex[:8]}"
-    q = (
-        emit_first_seen(stream_in)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = spark.sql(f"SELECT md5(text) AS h FROM {name}")
-    got_hashes = sorted(r.h for r in out.collect())
-    want_hashes = sorted(
-        r.h for r in dd.select(F.md5("text").alias("h")).distinct().collect()
-    )
-    assert got_hashes == want_hashes  # one row per hash, none missing
-
-
-def test_stateful_user_stats_across_batches(spark, tmp_path):
-    """applyInPandasWithState carries per-user state across microbatches:
-    the fixture is split into two files, maxFilesPerTrigger=1 forces (at
-    least) two batches, and the LAST update emitted per user must equal
-    the batch aggregate over the whole fixture."""
-    from pyspark.sql import functions as F
-
-    from koby_s_ai_vector_db_spark.streaming.live import (
-        EVENTS_SCHEMA,
-        stateful_user_stats,
-    )
-
-    ev = load_table(spark, SF_DIR, "events")
-    src = str(tmp_path / "events_split")
-    # Write the normalized (schema-driven) events so the stream schema below
-    # matches regardless of which fixture vintage (ns-as-long vs native µs)
-    # is on disk. Cast ts to timestamp_ntz explicitly: under a legacy-nanos
-    # fixture load_table yields TIMESTAMP (LTZ), and writing that while
-    # DECLARING timestamp_ntz in readStream would only stay value-correct
-    # because the session tz is pinned UTC — make the written physical type
-    # match the declared schema instead of relying on that.
-    ev = ev.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-    ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(f"{src}/half=0")
-    ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.parquet(f"{src}/half=1")
-
-    stream_in = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .load(src)
-    )
-    name = f"s_state_{uuid.uuid4().hex[:8]}"
-    q = (
-        stateful_user_stats(stream_in)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
-    assert n_batches >= 2, "state was never exercised across batches"
-
-    # Latest update per user (n_events is monotone within a user).
-    updates = spark.sql(f"SELECT * FROM {name}")
-    w_latest = updates.groupBy("user_id").agg(
-        F.max_by(
-            F.struct("n_events", "n_purchases", "n_errors", "last_seen_us"), "n_events"
-        ).alias("s")
-    ).select("user_id", "s.*")
-
-    batch = ev.groupBy("user_id").agg(
-        F.count("*").alias("n_events"),
-        F.count_if(F.col("event_type") == "purchase").alias("n_purchases"),
-        F.count_if(F.col("event_type") == "error").alias("n_errors"),
-        F.max(F.unix_micros(F.col("ts").cast("timestamp"))).alias("last_seen_us"),
-    )
-    assert _rows(w_latest) == _rows(batch)
-    assert len(_rows(batch)) > 0
 
 
 def test_click_attribution_bucketed_equals_direct(spark):
@@ -411,72 +206,6 @@ def test_click_attribution_stream_equals_batch(spark):
     stream = spark.sql(f"SELECT * FROM {name}")
     assert _rows(stream) == _rows(batch)
     assert len(_rows(batch)) > 0
-
-
-def test_streaming_kmv_sketch_equals_batch(spark, tmp_path):
-    """The stateful KMV synopsis converges to the batch kmv_sample over
-    everything seen, across a forced multi-batch run — truncation to k
-    per microbatch loses nothing (k-min is monotone)."""
-    from pyspark.sql import functions as F
-
-    from koby_s_ai_vector_db_spark.functions.hashing import portable_hash64
-    from koby_s_ai_vector_db_spark.operators.sketches import kmv_sample
-    from koby_s_ai_vector_db_spark.streaming.dedup import streaming_kmv_sketch
-
-    ev = load_table(spark, SF_DIR, "events")
-    hashed = ev.select(
-        "event_type",
-        "event_id",
-        portable_hash64(F.col("user_id").cast("string"), seed=7).alias("h"),
-    )
-    src = str(tmp_path / "kmv_split")
-    hashed.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(
-        f"{src}/half=0"
-    )
-    hashed.filter(F.col("event_id") % 2 == 1).coalesce(1).write.parquet(
-        f"{src}/half=1"
-    )
-    stream_in = (
-        spark.readStream.schema("event_type string, event_id bigint, h bigint")
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .load(src)
-    )
-    name = f"s_kmv_{uuid.uuid4().hex[:8]}"
-    q = (
-        streaming_kmv_sketch(stream_in)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
-    assert n_batches >= 2, "state was never exercised across batches"
-
-    # Each microbatch re-emits the group's FULL refreshed synopsis; with
-    # availableNow the final state is the union's k-min, and because the
-    # synopsis only shrinks hash-wise, the distinct (group, h) pairs that
-    # are <= the group's final k-th hash form exactly the batch sample.
-    updates = spark.sql(f"SELECT * FROM {name}")
-    batch = kmv_sample(ev, F.col("user_id").cast("string"), ["event_type"])
-    got = {
-        (r.event_type, r.h)
-        for r in updates.groupBy("event_type")
-        .agg(F.collect_set("h").alias("hs"))
-        .select("event_type", F.explode("hs").alias("h"))
-        .join(
-            batch.groupBy("event_type").agg(F.max("h").alias("kth")),
-            "event_type",
-        )
-        .where(F.col("h") <= F.col("kth"))
-        .select("event_type", "h")
-        .collect()
-    }
-    want = {(r.event_type, r.h) for r in batch.collect()}
-    assert got == want and len(want) > 0
 
 
 def test_streaming_hll_registers_equal_batch(spark, tmp_path):

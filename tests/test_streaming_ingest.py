@@ -87,160 +87,6 @@ def test_stream_docs_into_text_index(spark, tmp_path_factory):
     assert sorted(map(tuple, idx.collect())) == sorted(map(tuple, inline.collect()))
 
 
-def test_stream_docs_into_packed_shards(spark, tmp_path_factory):
-    """Streamed micro-batches grow the packed artifact append-only:
-    conservation holds across all segments, (shard, seq_id) keys stay
-    unique, and one batch-append of the same data yields the same total
-    sequence count as the 3-micro-batch stream (segment boundaries align
-    because both paths append whole batches after the same base)."""
-    from koby_s_ai_vector_db_spark.sources.packed import (
-        append_to_packed_shards,
-        build_packed_shards,
-        read_packed_shards,
-    )
-    from koby_s_ai_vector_db_spark.streaming.index_ingest import (
-        stream_docs_into_packed_shards,
-    )
-
-    root = tmp_path_factory.mktemp("stream_packed")
-    docs = load_table(spark, SF_DIR, "documents")
-    first = docs.filter(F.col("doc_id") % 2 == 0)
-    second = docs.filter(F.col("doc_id") % 2 == 1)
-    kw = dict(seq_len=32, n_shards=4, seed=5)
-
-    streamed = str(root / "art_stream")
-    build_packed_shards(first, streamed, **kw)
-    src = str(root / "incoming")
-    # ONE file => one micro-batch: the batch-append twin below appends
-    # the same rows in one call, so final states must match exactly.
-    _stage_files(second, src, n_files=1)
-    q = stream_docs_into_packed_shards(
-        spark, src, streamed, checkpoint=str(root / "ckpt"), **kw
-    )
-    q.awaitTermination(120)
-
-    batched = str(root / "art_batch")
-    build_packed_shards(first, batched, **kw)
-    append_to_packed_shards(second, batched, **kw)
-
-    s_rows = read_packed_shards(spark, streamed).collect()
-    b_rows = read_packed_shards(spark, batched).collect()
-    key = lambda r: (r.shard, r.seq_id)
-    assert sorted(map(key, s_rows)) == sorted(map(key, b_rows))
-    assert len({key(r) for r in s_rows}) == len(s_rows)
-    assert {key(r): r.tokens for r in s_rows} == {
-        key(r): r.tokens for r in b_rows
-    }
-    total = docs.select(
-        F.sum(F.size(F.split("text", r"\s+"))).alias("s")
-    ).collect()[0].s
-    assert sum(len(r.tokens) for r in s_rows) == total
-
-
-class TestStreamingSelection:
-    def test_stream_equals_batch_gate(self, spark, tmp_path):
-        """Frozen-model streaming gate: the sink after the stream drains
-        equals one batch application of the same gate — micro-batch
-        boundaries are invisible because the models never re-fit."""
-        from pyspark.sql import functions as F
-
-        from koby_s_ai_vector_db_spark.operators.selection import (
-            dsir_model,
-            lm_model,
-        )
-        from koby_s_ai_vector_db_spark.sources.tables import load_table
-        from koby_s_ai_vector_db_spark.streaming.selection import (
-            select_batch,
-            stream_select_documents,
-        )
-
-        docs = load_table(spark, SF_DIRS["t1"], "documents")
-        lam = dsir_model(docs, target=F.col("source") == "src0")
-        lm = lm_model(docs.filter(F.col("source") == "src0"))
-
-        # Thresholds at the batch medians: both kept and dropped rows
-        # exist by construction, for any fixture vintage.
-        probe = select_batch(docs, lam, lm, -1e18, 1e18)
-        mid = probe.agg(
-            F.percentile("score", F.lit(0.5)).alias("s"),
-            F.percentile("ppl", F.lit(0.5)).alias("p"),
-        ).collect()[0]
-        min_score, max_ppl = float(mid["s"]), float(mid["p"])
-
-        src = str(tmp_path / "arriving")
-        for i in range(3):
-            docs.filter(F.col("doc_id") % 3 == i).write.mode(
-                "overwrite"
-            ).parquet(f"{src}/part{i}.parquet")
-        sink = str(tmp_path / "curated")
-        q = stream_select_documents(
-            spark,
-            f"{src}/part*.parquet",
-            sink,
-            str(tmp_path / "ckpt"),
-            lam,
-            lm,
-            min_score=min_score,
-            max_ppl=max_ppl,
-        )
-        q.awaitTermination()
-
-        got = sorted(map(tuple, spark.read.parquet(sink).collect()))
-        want_df = select_batch(docs, lam, lm, min_score, max_ppl)
-        want = sorted(map(tuple, want_df.select(*spark.read.parquet(sink).columns).collect()))
-        assert got == want
-        assert 0 < len(got) < docs.count()
-
-
-class TestStreamingDeletes:
-    def test_stream_deletes_equal_batch_delete(self, spark, tmp_path):
-        """Micro-batched delete requests drain into the same index state
-        as one batch delete: deletes are idempotent and their
-        corrections additive, so batch boundaries are invisible."""
-        from pyspark.sql import functions as F
-
-        from koby_s_ai_vector_db_spark.sources.tables import load_table
-        from koby_s_ai_vector_db_spark.sources.text_index import (
-            build_text_index,
-            delete_from_text_index,
-            search_text_index,
-        )
-        from koby_s_ai_vector_db_spark.streaming.index_ingest import (
-            stream_deletes_into_text_index,
-        )
-
-        docs = load_table(spark, SF_DIRS["t1"], "documents")
-        doomed = docs.filter(F.col("doc_id") % 3 == 0).select("doc_id")
-        queries = spark.createDataFrame(
-            [(0, "spark table scan"), (1, "hash merge batch")],
-            "query_id bigint, query_text string",
-        )
-
-        streamed = str(tmp_path / "streamed")
-        build_text_index(docs, streamed)
-        src = str(tmp_path / "delreqs")
-        for i in range(3):
-            doomed.filter((F.col("doc_id") / 3).cast("long") % 3 == i).write.mode(
-                "overwrite"
-            ).parquet(f"{src}/part{i}.parquet")
-        q = stream_deletes_into_text_index(
-            spark, f"{src}/part*.parquet", streamed, str(tmp_path / "ckpt")
-        )
-        q.awaitTermination()
-
-        batch = str(tmp_path / "batch")
-        build_text_index(docs, batch)
-        delete_from_text_index(spark, batch, doomed)
-
-        got = sorted(
-            map(tuple, search_text_index(spark, streamed, queries).collect())
-        )
-        want = sorted(
-            map(tuple, search_text_index(spark, batch, queries).collect())
-        )
-        assert got == want and got
-
-
 def test_stream_restart_resumes_from_checkpoint(spark, tmp_path_factory):
     """Exactly-once across RESTARTS: a second stream started on the SAME
     checkpoint after more files arrive absorbs only the new files — the

@@ -263,73 +263,6 @@ def test_pack_sequences_match_bruteforce(spark, texts, seq_len, n_shards, seed):
     assert got == _ref_pack(rows, seq_len, n_shards, seed)
 
 
-from koby_s_ai_vector_db_spark.operators.substrings import (  # noqa: E402
-    excise_spans,
-    substring_dup_stats,
-)
-
-
-class TestSpanActions:
-    def test_dup_stats_hand_computed(self, spark):
-        docs = _docs(spark, [(1, "a b c d e f"), (2, "x y a b c d z"), (3, "q w e")])
-        spans = repeated_substring_spans(docs, k=3)
-        out = {
-            r.doc_id: (r.n_tokens, r.dup_tokens, r.dup_frac)
-            for r in substring_dup_stats(docs, spans).collect()
-        }
-        assert out == {
-            1: (6, 4, round(4 / 6, 6)),
-            2: (7, 4, round(4 / 7, 6)),
-            3: (3, 0, 0.0),
-        }
-
-    def test_excise_hand_computed(self, spark):
-        docs = _docs(spark, [(1, "a b c d e f"), (2, "x y a b c d z"), (3, "q w e")])
-        spans = repeated_substring_spans(docs, k=3)
-        out = {r.doc_id: r.text for r in excise_spans(docs, spans).collect()}
-        # Span [1,4] leaves "e f" in d1; [3,6] leaves "x y z" in d2;
-        # unflagged d3 passes through byte-identical.
-        assert out == {1: "e f", 2: "x y z", 3: "q w e"}
-
-    def test_excise_keep_one_policy_composes(self, spark):
-        # The documented keep-one policy: filter the span table to
-        # non-canonical docs before excising — the canonical copy
-        # (min doc_id here) keeps its text.
-        docs = _docs(spark, [(1, "a b c d"), (2, "a b c d")])
-        spans = repeated_substring_spans(docs, k=3).filter("doc_id <> 1")
-        out = {r.doc_id: r.text for r in excise_spans(docs, spans).collect()}
-        assert out == {1: "a b c d", 2: ""}
-
-
-def _ref_excise(rows, spans):
-    by_doc: dict[int, list[tuple[int, int]]] = {}
-    for d, s, e in spans:
-        by_doc.setdefault(d, []).append((s, e))
-    out = {}
-    for d, t in rows:
-        w = [x for x in t.lower().split() if x]
-        keep = [
-            tok
-            for i, tok in enumerate(w, start=1)
-            if not any(s <= i <= e for s, e in by_doc.get(d, []))
-        ]
-        out[d] = " ".join(keep) if d in by_doc else t
-    return out
-
-
-@settings(max_examples=10, deadline=None)
-@given(texts=_doc_texts, k=st.integers(2, 3))
-def test_excise_matches_bruteforce(spark, texts, k):
-    rows = [(i, t) for i, t in enumerate(texts)]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    spans_df = repeated_substring_spans(df, k=k)
-    spans = [
-        (r.doc_id, r.span_start, r.span_end) for r in spans_df.collect()
-    ]
-    got = {r.doc_id: r.text for r in excise_spans(df, spans_df).collect()}
-    assert got == _ref_excise(rows, spans)
-
-
 def test_argument_validation(spark):
     docs = _docs(spark, [(1, "a b c")])
     import pytest as _pytest
@@ -345,30 +278,15 @@ def test_argument_validation(spark):
 
 
 def test_custom_id_col_composes(spark):
-    """Non-default id_col flows through spans -> stats -> excise."""
+    """A non-default id_col/text_col flows through to the spans output."""
     docs = spark.createDataFrame(
         [(1, "a b c d e f"), (2, "x y a b c d z")],
         "page_id bigint, body string",
     )
     spans = repeated_substring_spans(docs, k=3, id_col="page_id", text_col="body")
     assert spans.columns[0] == "page_id"
-    from koby_s_ai_vector_db_spark.operators.substrings import (
-        excise_spans,
-        substring_dup_stats,
-    )
-
-    stats = {
-        r.page_id: r.dup_tokens
-        for r in substring_dup_stats(
-            docs, spans, id_col="page_id", text_col="body"
-        ).collect()
-    }
-    assert stats == {1: 4, 2: 4}
-    out = {
-        r.page_id: r.body
-        for r in excise_spans(docs, spans, id_col="page_id", text_col="body").collect()
-    }
-    assert out == {1: "e f", 2: "x y z"}
+    got = {(r.page_id, r.span_start, r.span_end) for r in spans.collect()}
+    assert got == {(1, 1, 4), (2, 3, 6)}
 
 
 def test_pack_duplicate_ids_conserve_tokens(spark):

@@ -1,13 +1,10 @@
 """Z-order layout (operators/zorder.py): Morton bit math, bucket
-locality in BOTH dimensions, and the persisted layout round-trip."""
+locality in BOTH dimensions."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from koby_s_ai_vector_db_spark.operators.zorder import (
     Z_BITS,
-    write_zorder_layout,
     z_value_sql,
     zorder_bucket_stats,
 )
@@ -50,20 +47,3 @@ def test_bucket_locality_in_both_dimensions(spark):
     assert med_t <= 0.30, med_t
 
 
-def test_layout_write_prunes_partitions(spark, tmp_path):
-    """The persisted layout partitions by z_bucket; a read filtered on
-    z_bucket prunes partitions at the scan (PartitionFilters), and the
-    data round-trips completely."""
-    ev = spark.read.parquet(SF_DIRS["t1"] + "/events.parquet")
-    path = str(tmp_path / "zorder")
-    write_zorder_layout(ev, path)
-    back = spark.read.parquet(path)
-    assert back.count() == ev.count()
-    some = back.select("z_bucket").first().z_bucket
-    plan = (
-        back.where(F.col("z_bucket") == some)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PartitionFilters: [isnotnull(z_bucket" in plan
