@@ -66,7 +66,6 @@ def memo_persist(
     spark: SparkSession,
     key: Hashable,
     builder: Callable[[], DataFrame],
-    storage_level=None,
 ) -> DataFrame:
     """`memo` of a persisted DataFrame: build-once, persist-once per
     (application, key), so the block manager holds exactly one copy per
@@ -76,7 +75,7 @@ def memo_persist(
     return memo(
         spark,
         key,
-        lambda: builder().persist(storage_level or StorageLevel.MEMORY_AND_DISK),
+        lambda: builder().persist(StorageLevel.MEMORY_AND_DISK),
     )
 
 

@@ -67,8 +67,8 @@ def _read_steal_jiffies() -> tuple[int, int] | None:
     return vals[7], sum(vals)
 
 
-def _mem_bandwidth_gibps(passes: int = 3) -> float | None:
-    """Single-thread streaming-read bandwidth: median of `passes` sums
+def _mem_bandwidth_gibps() -> float | None:
+    """Single-thread streaming-read bandwidth: median of 3 sums
     over a 256 MiB float64 array (numpy, C-contiguous). The CPU job above
     is ALU/hash-bound and blind to memory-subsystem differences between
     VM generations; round 13 measured a quiet-host bench total 1.25×
@@ -81,7 +81,7 @@ def _mem_bandwidth_gibps(passes: int = 3) -> float | None:
     a = np.ones(33_554_432, dtype=np.float64)  # 256 MiB
     a.sum()  # touch pages once, untimed
     times = []
-    for _ in range(passes):
+    for _ in range(3):
         t0 = time.perf_counter()
         a.sum()
         times.append(time.perf_counter() - t0)
@@ -89,7 +89,7 @@ def _mem_bandwidth_gibps(passes: int = 3) -> float | None:
     return round(0.25 / med, 2) if med > 0 else None
 
 
-def calibrate(spark: SparkSession, passes: int = CALIB_PASSES) -> dict:
+def calibrate(spark: SparkSession) -> dict:
     """Time the pinned job; returns {passes, median_sec, host_factor}.
 
     One untimed warm pass first — the job's codegen JIT costs ~3 s on
@@ -100,7 +100,7 @@ def calibrate(spark: SparkSession, passes: int = CALIB_PASSES) -> dict:
 
     steal0 = _read_steal_jiffies()
     _one_pass(spark)
-    times = sorted(_one_pass(spark) for _ in range(passes))
+    times = sorted(_one_pass(spark) for _ in range(CALIB_PASSES))
     median = times[len(times) // 2]
     out = {
         "passes": [round(t, 3) for t in times],

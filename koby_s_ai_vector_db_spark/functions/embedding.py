@@ -86,11 +86,11 @@ def embed_texts(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
         yield pd.Series(model.encode(texts.tolist()))
 
 
-def sql_embed(text_expr: str, dim: int = EMBED_DIM) -> str:
+def sql_embed(text_expr: str) -> str:
     """DuckDB rendering of the hash embedder for oracle SQL."""
     comps = ", ".join(
         f"(('0x' || substr(md5('{d}:' || {text_expr}), 1, 8))::BIGINT)::DOUBLE"
         f" / {_SCALE} * 2.0 - 1.0"
-        for d in range(dim)
+        for d in range(EMBED_DIM)
     )
     return f"[{comps}]"

@@ -66,20 +66,20 @@ def top_rated(feedback: DataFrame, limit: int = 10) -> DataFrame:
     ).select("id", "question", "rating", "rank")
 
 
-def recent_qa(feedback: DataFrame, question_type: str | None = None, limit: int = 20) -> DataFrame:
-    """A4 (supabase_utils.py:338-359): recent-N approved (optional type)."""
-    df = feedback.filter(F.col("status") == "approved")
-    if question_type:
-        df = df.filter(F.col("question_type") == question_type)
+def recent_qa(feedback: DataFrame, limit: int = 20) -> DataFrame:
+    """A4 (supabase_utils.py:338-359): recent-N approved."""
     return global_top_n(
-        df, [F.desc("created_at"), F.asc("id")], limit, rank_col="rank"
+        feedback.filter(F.col("status") == "approved"),
+        [F.desc("created_at"), F.asc("id")],
+        limit,
+        rank_col="rank",
     ).select("id", "question", "question_type", "created_at", "rank")
 
 
-def live_users(events: DataFrame, window_minutes: int = 30) -> DataFrame:
+def live_users(events: DataFrame) -> DataFrame:
     """A5 (session_utils.py:193-211): distinct users active in the last
     30 minutes. Filter → pushdown; count-distinct is one partial-agg pass."""
-    lo = _now() - F.expr(f"INTERVAL {window_minutes} MINUTES")
+    lo = _now() - F.expr("INTERVAL 30 MINUTES")
     return events.filter((F.col("ts") >= lo) & (F.col("ts") <= _now())).agg(
         F.countDistinct("user_id").alias("live_users")
     )
@@ -102,9 +102,9 @@ def session_stats(events: DataFrame) -> DataFrame:
     )
 
 
-def activity_breakdown(events: DataFrame, days: int = 7) -> DataFrame:
-    """A7 (session_utils.py:271-308): last-N-days per-type counts."""
-    lo = _now() - F.expr(f"INTERVAL {days} DAYS")
+def activity_breakdown(events: DataFrame) -> DataFrame:
+    """A7 (session_utils.py:271-308): last-7-days per-type counts."""
+    lo = _now() - F.expr("INTERVAL 7 DAYS")
     return (
         events.filter((F.col("ts") >= lo) & (F.col("ts") <= _now()))
         .groupBy("event_type")

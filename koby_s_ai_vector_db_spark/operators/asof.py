@@ -19,10 +19,7 @@ window, NOT a range-condition join:
   3. keep left rows; ``how="inner"`` drops rows with no prior right match,
      ``how="left"`` keeps them with NULL payload (library keeps NULL
      semantics; registered queries sentinel at the oracle edge, repo
-     convention);
-  4. optional ``tolerance`` (an INTERVAL string, e.g. "2 hours"): matches
-     older than ``left_ts - tolerance`` are discarded — Pandas
-     merge_asof's ``tolerance``.
+     convention).
 
 Why not a join? ``left JOIN right ON key AND r.ts <= l.ts`` + max-filter
 explodes to every (event, earlier-update) pair before pruning —
@@ -53,19 +50,13 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     how: str = "inner",
-    tolerance: str | None = None,
-    matched_ts_col: str | None = None,
     assume_deduped: bool = False,
 ) -> DataFrame:
     """Attach to each left row the latest right row with
     ``right_ts <= left_ts`` per ``on`` key.
 
     Returns all left columns plus right's payload columns (everything but
-    the key and ``right_ts``), plus ``matched_ts_col`` (the matched
-    right_ts) if requested. Column names must be disjoint. ``tolerance``
-    uses INTERVAL arithmetic and therefore requires timestamp ts columns —
-    int64-epoch inputs fail loudly at analysis time (convert upstream or
-    filter on ``matched_ts_col`` arithmetic instead)."""
+    the key and ``right_ts``). Column names must be disjoint."""
     if how not in ("inner", "left"):
         raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
 
@@ -134,21 +125,11 @@ def asof_join(
 
     out = carried.filter(F.col("_is_left") == 1)
     matched = F.col("_mt").isNotNull()
-    if tolerance is not None:
-        matched = matched & (
-            F.col("_mt") >= F.col("_t") - F.expr(f"INTERVAL {tolerance}")
-        )
     if how == "inner":
         out = out.filter(matched)
     else:
         out = out.select(
             *key, "_t", *lpay,
             *[F.when(matched, F.col(c)).otherwise(F.lit(None)).alias(c) for c in rpay],
-            F.when(matched, F.col("_mt")).alias("_mt"),
         )
-
-    cols = [*key, *lpay, *rpay]
-    if matched_ts_col is not None:
-        out = out.withColumn(matched_ts_col, F.col("_mt"))
-        cols.append(matched_ts_col)
-    return out.select(*cols)
+    return out.select(*key, *lpay, *rpay)

@@ -42,17 +42,15 @@ END_OF_WORD = "</w>"
 CHECKPOINT_EVERY = 8
 
 
-def _char_syms(col: str = "word"):
+def _char_syms():
     """Zero-merge symbol sequence of a word: characters + end-of-word."""
-    return F.concat(F.split(F.col(col), ""), F.array(F.lit(END_OF_WORD)))
+    return F.concat(F.split(F.col("word"), ""), F.array(F.lit(END_OF_WORD)))
 
 
-def word_counts(
-    docs: DataFrame, text_col: str = "text"
-) -> DataFrame:
+def word_counts(docs: DataFrame) -> DataFrame:
     """(word, n) frequency table — the single corpus-sized aggregation."""
     return (
-        docs.select(F.explode(words_expr(text_col)).alias("word"))
+        docs.select(F.explode(words_expr("text")).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("n"))
     )
@@ -78,25 +76,18 @@ def _merge_pair_expr(syms_col: str, left: str, right: str):
     )
 
 
-def learn_bpe(
-    docs: DataFrame,
-    n_merges: int,
-    text_col: str = "text",
-    min_count: int = 2,
-) -> tuple[list[Row], DataFrame]:
+def learn_bpe(docs: DataFrame, n_merges: int) -> tuple[list[Row], DataFrame]:
     """Learn up to ``n_merges`` BPE merges from the corpus.
 
     Returns (merges, vocab): ``merges`` is the ordered list of learned
     rules as Rows (rank, left, right, merged, pair_count); ``vocab`` is
     the final (word, syms, n) table — the word→tokens cache an encoder
-    joins against. Stops early when no pair reaches ``min_count``.
+    joins against. Stops early when no pair occurs at least twice.
     """
     if n_merges <= 0:
         raise ValueError(f"n_merges must be positive, got {n_merges}")
-    if min_count < 1:
-        raise ValueError(f"min_count must be >= 1, got {min_count}")
 
-    wc = word_counts(docs, text_col)
+    wc = word_counts(docs)
     vocab = wc.select(
         "word", "n", _char_syms().alias("syms")
     ).localCheckpoint()
@@ -121,7 +112,7 @@ def learn_bpe(
         top = pairs.orderBy(
             F.desc("pair_count"), F.asc("left"), F.asc("right")
         ).limit(1).collect()  # bounded probe: exactly one row per round
-        if not top or top[0]["pair_count"] < min_count:
+        if not top or top[0]["pair_count"] < 2:
             break
         left, right = top[0]["left"], top[0]["right"]
         merges.append(
@@ -141,32 +132,25 @@ def learn_bpe(
     return merges, vocab.localCheckpoint()
 
 
-def bpe_encode(
-    docs: DataFrame,
-    vocab: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_encode(docs: DataFrame, vocab: DataFrame) -> DataFrame:
     """Tokenize documents under a learned vocabulary: per-doc token ids
     via a BROADCAST join of the doc's words against the word→syms cache
     (how production tokenizers amortize encoding: one merge-application
     per DISTINCT word, not per occurrence). Out-of-vocabulary words fall
     back to characters + end-of-word — the zero-merge encoding.
 
-    Output: (id, n_words, n_tokens) — the compression the tokenizer
+    Output: (doc_id, n_words, n_tokens) — the compression the tokenizer
     achieves; n_tokens = Σ len(syms) over word occurrences.
     """
-    occ = docs.select(
-        F.col(id_col), F.explode(words_expr(text_col)).alias("word")
-    )
+    occ = docs.select("doc_id", F.explode(words_expr("text")).alias("word"))
     oov_syms = _char_syms()
     return (
         occ.join(F.broadcast(vocab.select("word", "syms")), "word", "left")
         .select(
-            id_col,
+            "doc_id",
             F.size(F.coalesce(F.col("syms"), oov_syms)).alias("_k"),
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_words"),
             F.sum("_k").cast("long").alias("n_tokens"),

@@ -53,8 +53,6 @@ def chunk_documents(
     documents: DataFrame,
     chunk_size: int = CHUNK_SIZE,
     overlap: int = CHUNK_OVERLAP,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Explode documents into overlapping chunks with exact reference parity.
 
@@ -65,19 +63,19 @@ def chunk_documents(
         overlap = chunk_size // 2
     step = chunk_size - overlap
 
-    d = documents.withColumn("_len", F.length(text_col)).filter(
+    d = documents.withColumn("_len", F.length("text")).filter(
         # utils.py:78-80 empty-input guard (strip semantics, see module doc)
-        F.length(F.regexp_replace(F.col(text_col), STRIP_PATTERN, "")) > 0
+        F.length(F.regexp_replace(F.col("text"), STRIP_PATTERN, "")) > 0
     )
     i_max = F.when(F.col("_len") <= chunk_size, F.lit(0)).otherwise(
         F.floor((F.col("_len") - chunk_size - 1) / step) + 1
     )
-    win = Window.partitionBy(id_col).orderBy("_i")
+    win = Window.partitionBy("doc_id").orderBy("_i")
     return (
         d.select(
-            id_col,
+            "doc_id",
             F.explode(F.sequence(F.lit(0), i_max)).alias("_i"),
-            F.col(text_col).alias("_text"),
+            F.col("text").alias("_text"),
         )
         # substring is 1-based; window [i*step, i*step+size)
         .withColumn(
@@ -91,7 +89,7 @@ def chunk_documents(
         .filter(F.length("chunk") > 0)  # drop whitespace-only (utils.py:94)
         .withColumn("chunk_index", F.row_number().over(win) - 1)
         .select(
-            id_col,
+            "doc_id",
             "chunk_index",
             F.col("chunk").alias("text"),
             F.length("chunk").alias("char_count"),

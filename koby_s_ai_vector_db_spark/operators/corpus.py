@@ -43,9 +43,7 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 
 
-def term_postings(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def term_postings(docs: DataFrame) -> DataFrame:
     """(id, term, tf) postings with per-document term frequency.
 
     explode + groupBy(id, term) — the groupBy is map-side combinable and
@@ -58,7 +56,7 @@ def term_postings(
 
     return (
         array_rows_nonempty(
-            docs, [F.col(id_col).alias("_id")], words_expr(text_col), "_w"
+            docs, [F.col("doc_id").alias("_id")], words_expr("text"), "_w"
         )
         .select("_id", F.explode("_w").alias("term"))
         .groupBy("_id", "term")
@@ -66,27 +64,15 @@ def term_postings(
     )
 
 
-def doc_lengths(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def doc_lengths(docs: DataFrame) -> DataFrame:
     """(id, dl) token counts — map-only."""
     return docs.select(
-        F.col(id_col).alias("_id"),
-        F.size(words_expr(text_col)).cast("double").alias("dl"),
+        F.col("doc_id").alias("_id"),
+        F.size(words_expr("text")).cast("double").alias("dl"),
     )
 
 
-def bm25_scores(
-    docs: DataFrame,
-    queries: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    query_id: str = "query_id",
-    query_text: str = "query_text",
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-    round_to: int = 6,
-) -> DataFrame:
+def bm25_scores(docs: DataFrame, queries: DataFrame) -> DataFrame:
     """Per-(query, doc) Okapi BM25 scores for every matching document —
     no top-k truncation. `bm25_rank` layers ranking on top; curation-style
     consumers aggregate these into a per-doc relevance signal instead.
@@ -100,8 +86,8 @@ def bm25_scores(
     rounded at the edge: the per-(query, doc) sum folds floats in shuffle
     order, so raw doubles may differ by ~1e-15 across engines/runs.
     """
-    post = term_postings(docs, id_col, text_col)
-    dl = doc_lengths(docs, id_col, text_col)
+    post = term_postings(docs)
+    dl = doc_lengths(docs)
 
     # Corpus scalars: 1 row, broadcast into every arm.
     stats = dl.agg(
@@ -113,8 +99,8 @@ def bm25_scores(
     df_t = post.groupBy("term").agg(F.count("*").cast("double").alias("df"))
 
     qterms = queries.select(
-        F.col(query_id),
-        F.explode(F.array_distinct(words_expr(query_text))).alias("term"),
+        F.col("query_id"),
+        F.explode(F.array_distinct(words_expr("query_text"))).alias("term"),
     )
 
     scored = (
@@ -128,52 +114,35 @@ def bm25_scores(
         .withColumn(
             "_w",
             F.col("_idf")
-            * (F.col("tf") * (k1 + 1))
-            / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))),
+            * (F.col("tf") * (BM25_K1 + 1))
+            / (F.col("tf")
+               + BM25_K1 * (1 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))),
         )
-        .groupBy(query_id, "_id")
+        .groupBy("query_id", "_id")
         .agg(F.sum("_w").alias("_score"))
     )
     return scored.select(
-        query_id,
-        F.col("_id").alias(id_col),
-        F.round("_score", round_to).alias("score"),
+        "query_id",
+        F.col("_id").alias("doc_id"),
+        F.round("_score", 6).alias("score"),
     )
 
 
-def bm25_rank(
-    docs: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    query_id: str = "query_id",
-    query_text: str = "query_text",
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-    round_to: int = 6,
-) -> DataFrame:
+def bm25_rank(docs: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Okapi BM25 top-k per query (formula in `bm25_scores`).
 
     Ranks on the ROUNDED score with a doc-id tiebreak: the per-(query,
     doc) sum folds floats in shuffle order (engine- and run-dependent),
     so ranking on the raw value would make the top-k boundary
     engine-dependent."""
-    scored = bm25_scores(
-        docs, queries, id_col, text_col, query_id, query_text, k1, b, round_to
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("score"), F.asc(id_col))
+    scored = bm25_scores(docs, queries)
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= k
     )
 
 
-def bm25_oracle_sql(
-    queries_values: str,
-    k: int = 10,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-) -> str:
+def bm25_oracle_sql(queries_values: str, k: int = 10) -> str:
     """DuckDB twin of bm25_rank over `documents`. ``queries_values`` is a
     VALUES list rendering of (query_id, query_text)."""
     return f"""
@@ -199,8 +168,8 @@ qt AS (
 scored AS (
     SELECT qt.query_id, tf.doc_id,
            sum(ln(1 + (stats.n_docs - df_t.df + 0.5) / (df_t.df + 0.5))
-               * (tf.tf * ({k1} + 1))
-               / (tf.tf + {k1} * (1 - {b} + {b} * dl.dl / stats.avgdl))) AS score
+               * (tf.tf * ({BM25_K1} + 1))
+               / (tf.tf + {BM25_K1} * (1 - {BM25_B} + {BM25_B} * dl.dl / stats.avgdl))) AS score
     FROM tf JOIN qt USING (term)
             JOIN dl ON dl.doc_id = tf.doc_id
             JOIN df_t ON df_t.term = tf.term
@@ -218,18 +187,13 @@ FROM ranked WHERE rank <= {k}
 """
 
 
-def vocab_stats(
-    docs: DataFrame,
-    top: int = 100,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def vocab_stats(docs: DataFrame, top: int = 100) -> DataFrame:
     """Corpus vocabulary: per-term total count + document frequency, top-N
     by count (ties → term asc). orderBy+limit compiles to
     TakeOrderedAndProject — per-partition heaps, no global sort."""
     return (
         docs.select(
-            F.col(id_col).alias("_id"), F.explode(words_expr(text_col)).alias("term")
+            F.col("doc_id").alias("_id"), F.explode(words_expr("text")).alias("term")
         )
         .groupBy("term")
         .agg(
@@ -245,7 +209,6 @@ def stratified_sample(
     docs: DataFrame,
     rates: dict[str, float],
     strata_col: str = "lang",
-    id_col: str = "doc_id",
     default_rate: float = 0.0,
     seed: int = 7,
 ) -> DataFrame:
@@ -256,7 +219,7 @@ def stratified_sample(
     and engines (md5-derived hash). The standard shape for corpus mixing
     ("2 parts en, 1 part code, 0.1 part forums") at any scale.
     """
-    h = portable_hash32(F.col(id_col).cast("string"), seed=seed) % 1_000_000
+    h = portable_hash32(F.col("doc_id").cast("string"), seed=seed) % 1_000_000
     rate = F.lit(default_rate)
     for stratum, r in sorted(rates.items()):
         rate = F.when(F.col(strata_col) == stratum, F.lit(r)).otherwise(rate)
@@ -296,10 +259,6 @@ def ngram_contamination_sliding(
     train: DataFrame,
     benchmark: DataFrame,
     n: int = 13,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bench_id: str = "bench_id",
-    round_to: int = 6,
     words_col: str | None = None,
 ) -> DataFrame:
     """Decontamination at the published-pipeline n (13-gram sliding
@@ -323,7 +282,7 @@ def ngram_contamination_sliding(
     `words_col`: when both sides are already tokenized (a shared
     persisted (id, words) table feeding several widths — the
     contamination fold), name the array<string> column and the gram
-    expressions derive from it instead of re-splitting `text_col`.
+    expressions derive from it instead of re-splitting `text`.
     """
     from koby_s_ai_vector_db_spark.operators.dedup import (
         shingles_from_words_expr,
@@ -332,12 +291,12 @@ def ngram_contamination_sliding(
     t_grams = (
         shingles_from_words_expr(words_col, n, distinct=False)
         if words_col
-        else sliding_shingles_expr(text_col, n)
+        else sliding_shingles_expr("text", n)
     )
     b_grams = (
         shingles_from_words_expr(words_col, n, distinct=True)
         if words_col
-        else shingles_expr(text_col, n)
+        else shingles_expr("text", n)
     )
     # array_rows_nonempty binds _g as a Generate output so the gram chain
     # is built once per row — select+filter(size>0) would re-embed it into
@@ -345,20 +304,20 @@ def ngram_contamination_sliding(
     from koby_s_ai_vector_db_spark.functions.exprs import array_rows_nonempty
 
     t_post = array_rows_nonempty(
-        train, [F.col(id_col).alias("_tid")], t_grams, "_g"
+        train, [F.col("doc_id").alias("_tid")], t_grams, "_g"
     ).select("_tid", F.size("_g").alias("_n_g"), F.explode("_g").alias("g"))
     b_post = array_rows_nonempty(
-        benchmark, [F.col(bench_id).alias("_bid")], b_grams, "_g"
+        benchmark, [F.col("bench_id").alias("_bid")], b_grams, "_g"
     ).select("_bid", F.explode("_g").alias("g"))
     return (
         t_post.join(F.broadcast(b_post), "g")
         .groupBy("_tid", "_bid", "_n_g")
         .agg(F.count("*").alias("n_shared"))
         .select(
-            F.col("_tid").alias(id_col),
-            F.col("_bid").alias(bench_id),
+            F.col("_tid").alias("doc_id"),
+            F.col("_bid").alias("bench_id"),
             "n_shared",
-            F.round(F.col("n_shared") / F.col("_n_g"), round_to).alias(
+            F.round(F.col("n_shared") / F.col("_n_g"), 6).alias(
                 "contaminated_frac"
             ),
         )
@@ -369,9 +328,6 @@ def ngram_contamination(
     train: DataFrame,
     benchmark: DataFrame,
     n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bench_id: str = "bench_id",
     words_col: str | None = None,
 ) -> DataFrame:
     """Train/eval overlap check: flag train docs sharing ≥1 word n-gram
@@ -391,35 +347,30 @@ def ngram_contamination(
     grams = (
         shingles_from_words_expr(words_col, n, distinct=True)
         if words_col
-        else shingles_expr(text_col, n)
+        else shingles_expr("text", n)
     )
     # One gram-chain evaluation per row (functions/exprs.py, round 12).
     from koby_s_ai_vector_db_spark.functions.exprs import array_rows_nonempty
 
     t_post = array_rows_nonempty(
-        train, [F.col(id_col).alias("_tid")], grams, "_g"
+        train, [F.col("doc_id").alias("_tid")], grams, "_g"
     ).select("_tid", F.explode("_g").alias("g"))
     b_post = array_rows_nonempty(
-        benchmark, [F.col(bench_id).alias("_bid")], grams, "_g"
+        benchmark, [F.col("bench_id").alias("_bid")], grams, "_g"
     ).select("_bid", F.explode("_g").alias("g"))
     return (
         t_post.join(F.broadcast(b_post), "g")
         .groupBy("_tid", "_bid")
         .agg(F.count("*").alias("n_shared"))
         .select(
-            F.col("_tid").alias(id_col),
-            F.col("_bid").alias(bench_id),
+            F.col("_tid").alias("doc_id"),
+            F.col("_bid").alias("bench_id"),
             "n_shared",
         )
     )
 
 
-def vocab_zipf(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    round_to: int = 6,
-) -> DataFrame:
+def vocab_zipf(docs: DataFrame) -> DataFrame:
     """Zipf-law profile of the corpus vocabulary — the standard corpus
     health check before training (natural text has log-log slope ≈ -1;
     a flat slope flags synthetic/templated text, a cliff flags
@@ -437,7 +388,7 @@ def vocab_zipf(
     from pyspark.sql import Window
 
     counts = (
-        docs.select(F.explode(words_expr(text_col)).alias("term"))
+        docs.select(F.explode(words_expr("text")).alias("term"))
         .groupBy("term")
         .agg(F.count("*").alias("n"))
     )
@@ -472,9 +423,9 @@ def vocab_zipf(
     return agg.select(
         F.col("cnt").cast("long").alias("n_terms"),
         F.col("n_tokens").cast("long").alias("n_tokens"),
-        F.round(slope, round_to).alias("zipf_slope"),
-        F.round(r2, round_to).alias("r2"),
-        F.round(F.col("top_n") / F.col("n_tokens"), round_to).alias(
+        F.round(slope, 6).alias("zipf_slope"),
+        F.round(r2, 6).alias("r2"),
+        F.round(F.col("top_n") / F.col("n_tokens"), 6).alias(
             "top_share"
         ),
     )
@@ -538,20 +489,17 @@ TFIDF_DF_CAP = 100
 TFIDF_THRESHOLD = 0.7
 
 
-def _all_shingles(text_col: str, n: int = 3):
+def _all_shingles(text_col: str):
     """Non-distinct word n-grams (tf matters here) — the SAME
     tokenization expression as every Jaccard/MinHash tier, via
     dedup.shingles_expr(distinct=False), so the tiers cannot drift."""
     from koby_s_ai_vector_db_spark.operators.dedup import shingles_expr
 
-    return shingles_expr(text_col, n=n, distinct=False)
+    return shingles_expr(text_col, n=3, distinct=False)
 
 
 def tfidf_cosine_pairs(
     docs: DataFrame,
-    threshold: float = TFIDF_THRESHOLD,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     cache_key=None,
     hash_gram_key: bool | str = False,
 ) -> DataFrame:
@@ -576,7 +524,7 @@ def tfidf_cosine_pairs(
     at G ≈ 2e13 grams / 100 TB — exact for all practical purposes; a
     collision would MERGE two grams' postings and add false cross terms
     to the pair dots, never drop true ones)."""
-    d = docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("txt"))
+    d = docs.select(F.col("doc_id").alias("id"), F.col("text").alias("txt"))
     n_docs = d.select(F.count("*").alias("n"))
 
     def _weights() -> DataFrame:
@@ -650,14 +598,12 @@ def tfidf_cosine_pairs(
                 6,
             ).alias("sim"),
         )
-        .where(F.col("sim") >= F.lit(threshold))
+        .where(F.col("sim") >= F.lit(TFIDF_THRESHOLD))
         .orderBy("doc_id_a", "doc_id_b")
     )
 
 
-def tfidf_cosine_oracle_sql(
-    docs_cte: str, threshold: float = TFIDF_THRESHOLD
-) -> str:
+def tfidf_cosine_oracle_sql(docs_cte: str) -> str:
     """DuckDB twin over a CTE body yielding (doc_id, text) named docs_in.
     Identical quantization, df cap, and integer sums."""
     return f"""
@@ -695,6 +641,6 @@ SELECT ida AS doc_id_a, idb AS doc_id_b,
          AS sim
 FROM dots JOIN norm2 na ON na.id = ida JOIN norm2 nb ON nb.id = idb
 WHERE round(dot / sqrt(CAST(na.n2 AS DOUBLE) * CAST(nb.n2 AS DOUBLE)), 6)
-      >= {threshold}
+      >= {TFIDF_THRESHOLD}
 ORDER BY doc_id_a, doc_id_b
 """

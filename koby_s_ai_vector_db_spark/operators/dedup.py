@@ -260,21 +260,19 @@ def jaccard(a: str, b: str) -> Column:
 from koby_s_ai_vector_db_spark.functions.partitioning import spread as _spread
 
 
-def exact_dup_groups(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_dup_groups(docs: DataFrame) -> DataFrame:
     """Exact dedup: hash-groupBy on the raw text. One shuffle keyed by
     text hash; at scale group on md5(text) so the shuffle key is 16 bytes,
     not the document."""
     return (
-        docs.groupBy(F.md5(F.col(text_col)).alias("text_hash"))
-        .agg(F.min(id_col).alias("canonical_id"), F.count("*").alias("n_copies"))
+        docs.groupBy(F.md5(F.col("text")).alias("text_hash"))
+        .agg(F.min("doc_id").alias("canonical_id"), F.count("*").alias("n_copies"))
         .filter(F.col("n_copies") > 1)
     )
 
 
 def _shingle_table(
     docs: DataFrame,
-    id_col: str,
-    text_col: str,
     cache_key=None,
     persist_uncached: bool = True,
 ) -> DataFrame:
@@ -299,8 +297,8 @@ def _shingle_table(
 
         return array_rows_nonempty(
             _spread(docs),
-            [F.col(id_col).alias("_id")],
-            shingles_expr(text_col),
+            [F.col("doc_id").alias("_id")],
+            shingles_expr("text"),
             "g",
         )
 
@@ -311,8 +309,6 @@ def _shingle_table(
 
 def minhash_near_dup_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.5,
     cache_key=None,
 ) -> DataFrame:
@@ -328,7 +324,7 @@ def minhash_near_dup_pairs(
     # materialized signature table (write once, read per stage);
     # in-session the analogue is the persisted/memoized _shingle_table —
     # without it the shingle+md5 pipeline re-executes per branch.
-    grams = _shingle_table(docs, id_col, text_col, cache_key)
+    grams = _shingle_table(docs, cache_key)
     out = lsh_verified_pairs(
         minhash_bands(grams), grams.select("_id", F.col("g").alias("x")),
         jaccard, threshold,
@@ -387,12 +383,7 @@ def simhash_expr(text_col: str, bits: int = 32) -> Column:
     )
 
 
-def simhash_table(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 60,
-) -> DataFrame:
+def simhash_table(docs: DataFrame, bits: int = 60) -> DataFrame:
     """(_id, sh): DataFrame-level SimHash over word tokens — the same
     per-token md5 hash, majority bit-vote, and sign-pack as
     `simhash_expr` (value-equivalence pytest-pinned), but built as
@@ -416,8 +407,8 @@ def simhash_table(
 
     toks = array_rows_nonempty(
         _spread(docs),
-        [F.col(id_col).alias("_id")],
-        F.expr(_WORDS.format(col=text_col)),
+        [F.col("doc_id").alias("_id")],
+        F.expr(_WORDS.format(col="text")),
         "_w",
     ).select("_id", F.explode("_w").alias("t"))
     h = F.expr(f"CAST(conv(substr(md5(t), 1, {bits // 4}), 16, 10) AS BIGINT)")
@@ -437,8 +428,6 @@ def simhash_table(
 
 def simhash_near_dup_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_hamming: int = 3,
     cache_key=None,
     bits: int = 60,
@@ -480,7 +469,7 @@ def simhash_near_dup_pairs(
         )
 
     def _sigs():
-        return simhash_table(docs, id_col, text_col, bits)
+        return simhash_table(docs, bits)
 
     sigs = (
         memo_persist(docs.sparkSession, ("simhash_sigs", bits, cache_key), _sigs)
@@ -618,9 +607,6 @@ def ngram_jaccard_join(
     queries: DataFrame,
     k: int = 3,
     threshold: float = 0.3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    query_id: str = "query_id",
     cache_key=None,
 ) -> DataFrame:
     """Exact word-n-gram Jaccard top-k join via an inverted shingle index.
@@ -641,19 +627,19 @@ def ngram_jaccard_join(
     from pyspark.sql import Window
 
     c = _shingle_table(
-        corpus, id_col, text_col, cache_key, persist_uncached=False
-    ).select(F.col("_id").alias(id_col), F.col("g").alias("cg"))
+        corpus, cache_key, persist_uncached=False
+    ).select(F.col("_id").alias("doc_id"), F.col("g").alias("cg"))
     from koby_s_ai_vector_db_spark.functions.exprs import array_rows_nonempty
 
     q = array_rows_nonempty(
-        queries, [F.col(id_col).alias(query_id)], shingles_expr(text_col), "qg"
+        queries, [F.col("doc_id").alias("query_id")], shingles_expr("text"), "qg"
     )
-    c_post = c.select(id_col, F.size("cg").alias("c_n"), F.explode("cg").alias("s"))
-    q_post = q.select(query_id, F.size("qg").alias("q_n"), F.explode("qg").alias("s"))
+    c_post = c.select("doc_id", F.size("cg").alias("c_n"), F.explode("cg").alias("s"))
+    q_post = q.select("query_id", F.size("qg").alias("q_n"), F.explode("qg").alias("s"))
     inter = (
         c_post.join(F.broadcast(q_post), "s")
-        .filter(F.col(query_id) != F.col(id_col))
-        .groupBy(query_id, id_col)
+        .filter(F.col("query_id") != F.col("doc_id"))
+        .groupBy("query_id", "doc_id")
         .agg(
             F.count("*").alias("inter"),
             F.first("q_n").alias("q_n"),
@@ -664,52 +650,37 @@ def ngram_jaccard_join(
         "jaccard",
         F.col("inter").cast("double") / (F.col("q_n") + F.col("c_n") - F.col("inter")),
     )
-    w = Window.partitionBy(query_id).orderBy(F.desc("jaccard"), F.asc(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.desc("jaccard"), F.asc("doc_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .filter(F.col("jaccard") >= threshold)
-        .select(query_id, id_col, F.round("jaccard", 6).alias("jaccard"), "rank")
+        .select("query_id", "doc_id", F.round("jaccard", 6).alias("jaccard"), "rank")
     )
 
 
-def hyperplane_lsh_pairs(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_planes: int = 64,
-    band_bits: int = 8,
-    threshold: float = 0.85,
-    round_to: int = 6,
-) -> DataFrame:
+def hyperplane_lsh_pairs(embeddings: DataFrame) -> DataFrame:
     """Embedding near-dup at scale: random-hyperplane (angular/SimHash)
     LSH blocking, then exact-cosine verify on candidates only — the vector
     twin of `minhash_near_dup_pairs` and the scale path behind the
     brute-force `dedup_embedding_cosine` tier.
 
-    Each vector gets an n_planes-bit sketch: bit j = sign(<v, r_j>) for a
+    Each vector gets a 64-bit sketch: bit j = sign(<v, r_j>) for a
     fixed Rademacher (+/-1) plane r_j. P(bit agrees) = 1 - theta/pi, so for
     planted near-dups (cos 0.88-0.92, theta ~ 25 deg) an 8-bit band matches
     with p ~ 0.29 and 8 bands give ~0.94 candidate recall, while unrelated
-    dim-64 pairs (cos ~ 0) collide on ~0.4% of bands. `band_bits` tunes the
-    false-candidate rate exponentially; verify cost = candidates x dim.
+    dim-64 pairs (cos ~ 0) collide on ~0.4% of bands. The band width tunes
+    the false-candidate rate exponentially; verify cost = candidates x dim.
+    Vectors are 64-d: one 64-bit sign mask per plane.
 
     Planes are derived from the portable md5 hash (functions/hashing.py) —
     NOT an RNG — so the DuckDB oracle regenerates bit-identical planes and
     the whole pipeline is value-checked cross-engine, like MinHash.
-    Returns (vec_id_a, vec_id_b, sim), a < b, sim >= threshold."""
+    Returns (vec_id_a, vec_id_b, sim), a < b, sim >= 0.85."""
     from koby_s_ai_vector_db_spark.functions.vectors import dot, l2_normalize
 
-    if n_planes % band_bits:
-        raise ValueError(
-            f"n_planes={n_planes} not divisible into band_bits={band_bits} bands"
-        )
-    if dim > 64:
-        raise ValueError(f"dim={dim} > 64: one 64-bit sign mask per plane")
-    n_bands = n_planes // band_bits
 
-    # The whole n_planes-bit sketch is computed MAP-SIDE in one expression:
+    # The whole 64-bit sketch is computed MAP-SIDE in one expression:
     # the planes are md5-derived ±1 constants, so each plane packs into one
     # 64-bit sign mask embedded as a literal — bit i of mask j is the sign
     # of plane j, dimension i. sign(<v, r_j>) then needs no join at all:
@@ -725,14 +696,14 @@ def hyperplane_lsh_pairs(
     # sf0.1 1.49 → 4.9 s, sf1 steady 5-10 → 8.9 s, and the first sf1 pass
     # hit 93 s of JIT on the megamorphic split methods (2.3 MiB task
     # binaries). The masked-aggregate HOF below keeps the expression tree
-    # tiny (the dim × n_planes loop runs in the interpreted evaluator but
+    # tiny (the 64 × 64 loop runs in the interpreted evaluator but
     # allocates nothing per step), which empirically beats straight-line
     # codegen at this width. Reverted; the probe rows live in BASELINE.md
     # round-11.
     masks = []
-    for pid in range(n_planes):
+    for pid in range(64):
         m = 0
-        for i in range(dim):
+        for i in range(64):
             h = int(_md5_u32(f"plane:{pid}:{i}"))
             if h % 2 == 0:  # matches IF(md5_u32 % 2 = 0, 1.0, -1.0)
                 m |= 1 << i
@@ -740,37 +711,31 @@ def hyperplane_lsh_pairs(
     masks_sql = "array(" + ", ".join(f"{m}L" for m in masks) + ")"
     sketch = F.expr(
         f"concat_ws('', transform({masks_sql}, m ->"
-        f" IF(aggregate(sequence(0, {dim - 1}), CAST(0.0 AS DOUBLE),"
+        " IF(aggregate(sequence(0, 63), CAST(0.0 AS DOUBLE),"
         f" (a, i) -> a + IF(shiftright(m, i) & 1 = 1,"
         f" element_at(x, i + 1), -element_at(x, i + 1))) > 0, '1', '0')))"
     )
 
     c = (
         _spread(embeddings)
-        .select(F.col(id_col).alias("_id"), l2_normalize(vec_col).alias("x"))
+        .select(F.col("vec_id").alias("_id"), l2_normalize("embedding").alias("x"))
     )
     bands = c.withColumn("bits", sketch).select(
         "_id",
         F.posexplode(
             F.expr(
-                f"transform(sequence(0, {n_bands - 1}),"
-                f" b -> substring(bits, b * {band_bits} + 1, {band_bits}))"
+                "transform(sequence(0, 7), b -> substring(bits, b * 8 + 1, 8))"
             )
         ).alias("band_id", "band_key"),
     )
-    return lsh_verified_pairs(bands, c, dot, threshold).select(
+    return lsh_verified_pairs(bands, c, dot, 0.85).select(
         F.col("ai").alias("vec_id_a"),
         F.col("bi").alias("vec_id_b"),
-        F.round("score", round_to).alias("sim"),
+        F.round("score", 6).alias("sim"),
     )
 
 
-def near_dup_groups(
-    pairs: DataFrame,
-    a_col: str = "doc_id_a",
-    b_col: str = "doc_id_b",
-    max_iter: int = 30,
-) -> DataFrame:
+def near_dup_groups(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
     """Connected components over near-dup pairs: (doc_id, group_id) with
     group_id = min doc id reachable — the step that turns pairwise LSH
     output into dedup GROUPS a curation pipeline can act on (keep the
@@ -806,7 +771,7 @@ def near_dup_groups(
     `checkpoint()` against reliable storage — same contract, fault
     tolerant; the iteration shape is unchanged.
     """
-    und = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+    und = pairs.select(F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst"))
     edges = und.localCheckpoint(eager=True)
     # nodes derives from the CHECKPOINTED edges, not `und`: the final
     # roots anti-join below is otherwise the one consumer still chained to
@@ -879,9 +844,6 @@ def near_dup_groups(
 def incremental_minhash_dedup(
     base: DataFrame,
     new: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
     cache_key=None,
     new_key=None,
 ) -> DataFrame:
@@ -890,7 +852,8 @@ def incremental_minhash_dedup(
     new x new or base x base, so a day's crawl pays band-join work
     proportional to ITS size, not the corpus's. Returns one verdict row
     per new doc: (new_id, verdict 'duplicate'|'novel', base_id, jaccard)
-    with -1/0.0 sentinels for novel rows (NULL-free by convention).
+    with -1/0.0 sentinels for novel rows (NULL-free by convention); a
+    duplicate has Jaccard >= 0.5 to its base match.
 
     The base side's signature table is the thing a production pipeline
     PERSISTS (sources/pq_index.py analogue for text); in-session the memoized
@@ -913,7 +876,7 @@ def incremental_minhash_dedup(
             "keyed by (cache_key, new_key); omitting new_key would silently "
             "reuse a previous batch's grams for a different batch"
         )
-    bg = _shingle_table(base, id_col, text_col, cache_key)
+    bg = _shingle_table(base, cache_key)
     # The new batch's grams memoize under (cache_key, new_key), NOT a
     # per-call persist: persist_uncached created a fresh StorageLevel
     # entry on every call that nothing ever released — repeated calls
@@ -924,8 +887,6 @@ def incremental_minhash_dedup(
     # signature table is computed once per batch, then probed.
     ng = _shingle_table(
         new,
-        id_col,
-        text_col,
         ("incremental_new", cache_key, new_key) if cache_key is not None else None,
         persist_uncached=cache_key is None,
     )
@@ -977,7 +938,7 @@ def incremental_minhash_dedup(
         .join(ga, "new_id")
         .join(gb, "base_id")
         .withColumn("jac", jaccard("ga", "gb"))
-        .filter(F.col("jac") >= threshold)
+        .filter(F.col("jac") >= 0.5)
     )
     w = Window.partitionBy("new_id").orderBy(F.desc("jac"), F.asc("base_id"))
     best = (
@@ -985,7 +946,7 @@ def incremental_minhash_dedup(
         .filter(F.col("rn") == 1)
         .select("new_id", "base_id", F.round("jac", 6).alias("jaccard"))
     )
-    all_new = new.select(F.col(id_col).alias("new_id"))
+    all_new = new.select(F.col("doc_id").alias("new_id"))
     return (
         all_new.join(best, "new_id", "left")
         .select(

@@ -116,12 +116,7 @@ def probe_rows(d: DataFrame, t: int = EDIT_T) -> DataFrame:
     )
 
 
-def fuzzy_edit_pairs(
-    docs: DataFrame,
-    t: int = EDIT_T,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def fuzzy_edit_pairs(docs: DataFrame, t: int = EDIT_T) -> DataFrame:
     """All unordered near-dup pairs with levenshtein <= t.  Returns
     (doc_id_a, doc_id_b, dist) ordered.
 
@@ -138,9 +133,9 @@ def fuzzy_edit_pairs(
     if t < 1:
         raise ValueError(f"edit threshold must be >= 1, got {t}")
     d_all = docs.select(
-        F.col(id_col).alias("id"),
-        F.col(text_col).alias("txt"),
-        F.length(text_col).alias("l"),
+        F.col("doc_id").alias("id"),
+        F.col("text").alias("txt"),
+        F.length("text").alias("l"),
     )
     d = d_all.where(F.col("l") > t)
 
@@ -217,14 +212,14 @@ def fuzzy_edit_pairs(
     )
 
 
-def fuzzy_edit_oracle_sql(t: int = EDIT_T, table: str = "documents") -> str:
+def fuzzy_edit_oracle_sql(t: int = EDIT_T) -> str:
     """DuckDB twin of fuzzy_edit_pairs — identical segment/probe candidate
     generation (// is DuckDB's floor division, DIV is Spark's), identical
     filters, exact levenshtein verify."""
     k_ = _k(t)
     return f"""
 WITH d_all AS (
-    SELECT doc_id AS id, text AS txt, length(text) AS l FROM {table}
+    SELECT doc_id AS id, text AS txt, length(text) AS l FROM documents
 ),
 d AS (SELECT * FROM d_all WHERE l > {t}),
 segs AS (

@@ -42,21 +42,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def gapfill(
-    df: DataFrame,
-    series_col: str,
-    ts_col: str,
-    value_col: str,
-    grain: str = "hour",
-    step: str = "interval 1 hour",
-) -> DataFrame:
+def gapfill(df: DataFrame, series_col: str, ts_col: str, value_col: str) -> DataFrame:
     """Dense (series, bucket) grid over [min, max] of ``ts_col`` with
     n_events / is_gap / locf_value / interp_value columns (null-free;
     every series must have >= 1 observation)."""
     actual = (
         df.groupBy(
             F.col(series_col).alias("series"),
-            F.date_trunc(grain, ts_col).alias("bucket"),
+            F.date_trunc("hour", ts_col).alias("bucket"),
         ).agg(
             F.count(F.lit(1)).alias("n"),
             F.round(
@@ -67,8 +60,8 @@ def gapfill(
         )
     )
     bounds = df.agg(
-        F.date_trunc(grain, F.min(ts_col)).alias("mn"),
-        F.date_trunc(grain, F.max(ts_col)).alias("mx"),
+        F.date_trunc("hour", F.min(ts_col)).alias("mn"),
+        F.date_trunc("hour", F.max(ts_col)).alias("mx"),
     )
     spine = (
         df.select(F.col(series_col).alias("series"))
@@ -76,7 +69,7 @@ def gapfill(
         .crossJoin(F.broadcast(bounds))
         .select(
             "series",
-            F.explode(F.sequence("mn", "mx", F.expr(step))).alias("bucket"),
+            F.explode(F.sequence("mn", "mx", F.expr("interval 1 hour"))).alias("bucket"),
         )
     )
     j = spine.join(actual, ["series", "bucket"], "left").withColumn(
@@ -121,24 +114,24 @@ def gapfill(
     )
 
 
-def gapfill_oracle_sql(grain: str = "hour", step: str = "INTERVAL 1 HOUR") -> str:
+def gapfill_oracle_sql() -> str:
     """DuckDB mirror over a relation ``gf_in(series, ts, value)``;
     produces ``gf_out`` with the same six columns."""
     return f"""
 gf_actual AS (
-    SELECT series, date_trunc('{grain}', ts) AS bucket,
+    SELECT series, date_trunc('hour', ts) AS bucket,
            count(*) AS n,
            round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE)
                  / count(*), 6) AS avg_v
     FROM gf_in GROUP BY 1, 2
 ),
 gf_bounds AS (
-    SELECT date_trunc('{grain}', min(ts)) AS mn,
-           date_trunc('{grain}', max(ts)) AS mx
+    SELECT date_trunc('hour', min(ts)) AS mn,
+           date_trunc('hour', max(ts)) AS mx
     FROM gf_in
 ),
 gf_spine AS (
-    SELECT t.series, unnest(generate_series(b.mn, b.mx, {step})) AS bucket
+    SELECT t.series, unnest(generate_series(b.mn, b.mx, INTERVAL 1 HOUR)) AS bucket
     FROM (SELECT DISTINCT series FROM gf_in) t, gf_bounds b
 ),
 gf_j AS (

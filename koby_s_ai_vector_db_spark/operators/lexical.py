@@ -42,22 +42,16 @@ def _tokens(col: Column) -> Column:
     return F.array_remove(F.split(F.lower(col), r"\s+"), "")
 
 
-def contribution_search(
-    feedback: DataFrame,
-    query: str,
-    limit: int = 5,
-    min_rating: float = 0.0,
-    candidate_cap: int = 100,
-) -> DataFrame:
+def contribution_search(feedback: DataFrame, query: str, limit: int = 5) -> DataFrame:
     """Q3: token-overlap scoring with substring short-circuit."""
     q = query.lower()
     q_tokens = [t for t in q.split() if t]
     n_q = max(len(set(q_tokens)), 1)
 
     candidates = global_top_n(
-        feedback.filter((F.col("status") == "approved") & (F.col("rating") >= min_rating)),
+        feedback.filter((F.col("status") == "approved") & (F.col("rating") >= 0.0)),
         [F.desc("rating"), F.asc("id")],
-        candidate_cap,
+        100,
     )
 
     ql, al = F.lower("question"), F.lower("answer")
@@ -85,7 +79,6 @@ def contribution_search_multi(
     queries: DataFrame,
     limit: int = 5,
     min_rating: float = 0.0,
-    candidate_cap: int = 100,
 ) -> DataFrame:
     """Q3 batched over a query table (query_id, query_text).
 
@@ -101,7 +94,7 @@ def contribution_search_multi(
     candidates = global_top_n(
         feedback.filter((F.col("status") == "approved") & (F.col("rating") >= min_rating)),
         [F.desc("rating"), F.asc("id")],
-        candidate_cap,
+        100,
     )
 
     j = candidates.join(F.broadcast(queries.select("query_id", "query_text")))
@@ -132,17 +125,13 @@ def contribution_search_multi(
     )
 
 
-def keyword_search(
-    feedback: DataFrame,
-    keyword: str,
-    question_type: str | None = None,
-    recency_cap: int = 200,
-) -> DataFrame:
+def keyword_search(feedback: DataFrame, keyword: str) -> DataFrame:
     """Q4: containment filter over the 200 most recent approved rows."""
-    cand = feedback.filter(F.col("status") == "approved")
-    if question_type:
-        cand = cand.filter(F.col("question_type") == question_type)
-    cand = global_top_n(cand, [F.desc("created_at"), F.asc("id")], recency_cap)
+    cand = global_top_n(
+        feedback.filter(F.col("status") == "approved"),
+        [F.desc("created_at"), F.asc("id")],
+        200,
+    )
     needle = keyword.lower()
     hay = F.concat(F.lower("question"), F.lit(" "), F.lower("answer"))
     return cand.filter(F.instr(hay, needle) > 0).select(

@@ -36,8 +36,6 @@ def pack_sequences(
     seq_len: int,
     n_shards: int,
     seed: int = 0,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Assign every document to its training sequences.
 
@@ -55,9 +53,9 @@ def pack_sequences(
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
     toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(words_expr(text_col)).alias("_nt"),
-        (portable_hash32(F.col(id_col).cast("string"), seed=seed) % n_shards)
+        "doc_id",
+        F.size(words_expr("text")).alias("_nt"),
+        (portable_hash32(F.col("doc_id").cast("string"), seed=seed) % n_shards)
         .cast("int")
         .alias("shard"),
     ).filter(F.col("_nt") > 0)
@@ -105,9 +103,7 @@ def pack_sequences(
     )
 
 
-def pack_sequences_oracle_sql(
-    seq_len: int, n_shards: int, seed: int = 0, table: str = "documents"
-) -> str:
+def pack_sequences_oracle_sql(seq_len: int, n_shards: int, seed: int = 0) -> str:
     """DuckDB twin: same portable shard hash, same per-shard running
     offset, generate_series over the touched sequence ids."""
     h = sql_hash32("CAST(doc_id AS VARCHAR)", seed=seed)
@@ -116,7 +112,7 @@ WITH toks AS (
     SELECT doc_id,
            len(list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '')) AS nt,
            CAST({h} % {n_shards} AS INT) AS shard
-    FROM {table}
+    FROM documents
 ),
 with_off AS (
     SELECT shard, doc_id, nt,
@@ -133,14 +129,7 @@ FROM with_off,
 """
 
 
-def pack_bestfit_bins(
-    docs: DataFrame,
-    seq_len: int,
-    n_shards: int,
-    seed: int = 0,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def pack_bestfit_bins(docs: DataFrame, seq_len: int, n_shards: int) -> DataFrame:
     """Boundary-PRESERVING packing: Best-Fit-Decreasing bins per shard.
 
     The other packing mode next to pack_sequences' concat-and-chunk:
@@ -168,9 +157,9 @@ def pack_bestfit_bins(
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
     toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(words_expr(text_col)).cast("long").alias("n_tokens"),
-        (portable_hash32(F.col(id_col).cast("string"), seed=seed) % n_shards)
+        "doc_id",
+        F.size(words_expr("text")).cast("long").alias("n_tokens"),
+        (portable_hash32(F.col("doc_id").cast("string")) % n_shards)
         .cast("int")
         .alias("shard"),
     ).where(F.col("n_tokens") > 0)

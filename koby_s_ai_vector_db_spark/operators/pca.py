@@ -50,9 +50,9 @@ class PCAModel(NamedTuple):
 _PARTIALS_SCHEMA = "n long, s array<double>, g array<double>"
 
 
-def fit_pca(emb: DataFrame, vec_col: str = "embedding", k: int = 8) -> PCAModel:
+def fit_pca(emb: DataFrame, k: int = 8) -> PCAModel:
     """One corpus pass -> d x d covariance -> driver eigh -> top-k model."""
-    first = emb.select(F.size(vec_col).alias("d")).first()
+    first = emb.select(F.size("embedding").alias("d")).first()
     if first is None:
         raise ValueError("fit_pca: empty input")
     d = first["d"]
@@ -77,7 +77,7 @@ def fit_pca(emb: DataFrame, vec_col: str = "embedding", k: int = 8) -> PCAModel:
     # m.T @ m accumulator (the SURVEY §9 spread() convention).
     from koby_s_ai_vector_db_spark.functions.partitioning import spread
 
-    parts = spread(emb.select(vec_col)).mapInPandas(
+    parts = spread(emb.select("embedding")).mapInPandas(
         _partials, _PARTIALS_SCHEMA
     )
     # Tiny keyed reduce: one (idx, val) explosion per partition row,
@@ -111,13 +111,7 @@ def fit_pca(emb: DataFrame, vec_col: str = "embedding", k: int = 8) -> PCAModel:
     return PCAModel(mean, w, ev, float(np.trace(cov)), n)
 
 
-def project_pca(
-    emb: DataFrame,
-    model: PCAModel,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    out_col: str = "pc",
-) -> DataFrame:
+def project_pca(emb: DataFrame, model: PCAModel) -> DataFrame:
     """Map-side projection (v - mean) @ W via a broadcast 1-row model
     table — no literal-matrix expression, no shuffle."""
     spark = emb.sparkSession
@@ -126,7 +120,7 @@ def project_pca(
         "m array<double>, w array<array<double>>",
     )
     centered = F.zip_with(
-        F.col(vec_col).cast("array<double>"), F.col("m"), lambda x, mu: x - mu
+        F.col("embedding").cast("array<double>"), F.col("m"), lambda x, mu: x - mu
     )
     proj = F.transform(
         F.col("w"),
@@ -137,5 +131,5 @@ def project_pca(
         ),
     )
     return emb.join(F.broadcast(mdf)).select(
-        F.col(id_col), proj.alias(out_col)
+        F.col("vec_id"), proj.alias("pc")
     )

@@ -122,7 +122,7 @@ def cb_literal_duckdb() -> str:
 from koby_s_ai_vector_db_spark.functions.exprs import bind_once as _bind_once
 
 
-def pq_encode(vec_col: str = "v", cb_col: str = "cb") -> F.Column:
+def pq_encode(vec_col: str = "v") -> F.Column:
     """Map-side encode: array of M code ids (1-based), codes[s] = argmax_c
     <v_sub_s, cb[s][c]>. One expression, zero shuffles (the codebook column
     comes from a 1-row broadcast, see codebook_df) — the PQ analogue of the
@@ -130,7 +130,7 @@ def pq_encode(vec_col: str = "v", cb_col: str = "cb") -> F.Column:
     # dots[s] = 16 subspace dots; codes[s] = first index of the max.
     body = (
         f"transform("
-        f"  transform({cb_col}, (cbs, s) ->"
+        f"  transform(cb, (cbs, s) ->"
         f"    transform(cbs, c ->"
         f"      aggregate(sequence(0, {SUB - 1}), CAST(0.0 AS DOUBLE),"
         f"        (a, i) -> a + element_at(c, i + 1)"
@@ -140,11 +140,11 @@ def pq_encode(vec_col: str = "v", cb_col: str = "cb") -> F.Column:
     return F.expr(_bind_once(vec_col, body))
 
 
-def pq_distance_table(query_vec_col: str = "qv", cb_col: str = "cb") -> F.Column:
+def pq_distance_table(query_vec_col: str = "qv") -> F.Column:
     """Per-query ADC table: dtab[s][c] = <q_sub_s, cb[s][c]> — computed once
     per query row (the small broadcast side), never per corpus row."""
     body = (
-        f"transform({cb_col}, (cbs, s) ->"
+        f"transform(cb, (cbs, s) ->"
         f"  transform(cbs, c ->"
         f"    aggregate(sequence(0, {SUB - 1}), CAST(0.0 AS DOUBLE),"
         f"      (a, i) -> a + element_at(c, i + 1)"
@@ -153,10 +153,10 @@ def pq_distance_table(query_vec_col: str = "qv", cb_col: str = "cb") -> F.Column
     return F.expr(_bind_once(query_vec_col, body))
 
 
-def pq_adc_score(codes_col: str = "codes", dtab_col: str = "dtab") -> F.Column:
+def pq_adc_score() -> F.Column:
     """approx sim = sum_s dtab[s][codes[s]] — 8 lookups + 8 adds per row."""
     return F.expr(
         f"aggregate(sequence(0, {M - 1}), CAST(0.0 AS DOUBLE),"
-        f"  (a, s) -> a + element_at(element_at({dtab_col}, s + 1),"
-        f"                           element_at({codes_col}, s + 1)))"
+        f"  (a, s) -> a + element_at(element_at(dtab, s + 1),"
+        f"                           element_at(codes, s + 1)))"
     )

@@ -40,25 +40,15 @@ def range_join(
     start_col: str,
     end_col: str,
     bucket_width: int,
-    n_salt: int = 1,
 ) -> DataFrame:
     """Inner point-in-interval join: all left columns + the interval's
     non-key columns for every interval with ``start <= point < end``.
 
     Bounds must be non-negative int64 on a shared scale (``div`` truncates
     toward zero, which equals floor only for non-negative operands).
-    Column names must be disjoint apart from the keys.
-
-    ``n_salt > 1`` splits each (key, bucket) reducer ``n_salt`` ways for
-    hot keys (one user producing a large share of all points): intervals
-    REPLICATE to every salt, points scatter to one deterministic salt, so
-    the join key becomes (key, bucket, salt) and no single task owns a hot
-    key's whole bucket. Build-side cost: ×n_salt interval rows — the
-    standard skew bargain (same as functions/skew.py's salted aggregate)."""
+    Column names must be disjoint apart from the keys."""
     if bucket_width <= 0:
         raise ValueError(f"bucket_width must be positive, got {bucket_width}")
-    if n_salt < 1:
-        raise ValueError(f"n_salt must be >= 1, got {n_salt}")
     clash = (set(left.columns) & set(intervals.columns)) - set(on)
     if clash:
         raise ValueError(f"overlapping non-key columns: {sorted(clash)}")
@@ -81,18 +71,11 @@ def range_join(
             ),
         )
     )
-    keys = [*on, "_rb"]
-    if n_salt > 1:
-        l2 = l2.withColumn("_rs", F.pmod(F.hash(F.col(point_col)), F.lit(n_salt)))
-        i2 = i2.withColumn(
-            "_rs", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
-        )
-        keys.append("_rs")
     return (
-        l2.join(i2, keys)
+        l2.join(i2, [*on, "_rb"])
         .filter(
             (F.col(point_col) >= F.col(start_col))
             & (F.col(point_col) < F.col(end_col))
         )
-        .drop("_rb", *(["_rs"] if n_salt > 1 else []))
+        .drop("_rb")
     )

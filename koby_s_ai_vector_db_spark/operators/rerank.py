@@ -99,10 +99,6 @@ def mmr_rerank(
     queries: DataFrame,
     n_shortlist: int = 25,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "query_id",
-    qvec_col: str = "query_vec",
 ) -> DataFrame:
     """Top-k MMR per query. Returns (query_id, vec_id, rank, rel)."""
     if not 0 < k <= n_shortlist:
@@ -114,10 +110,10 @@ def mmr_rerank(
     # arrives as ONE partition and would compute every dot on one core
     # (the SURVEY §9 spread() convention; topk_cosine does the same).
     c = spread(corpus).select(
-        F.col(id_col).alias("vec_id"), quantized_expr(vec_col).alias("vq")
+        "vec_id", quantized_expr("embedding").alias("vq")
     )
     q = queries.select(
-        F.col(qid_col).alias("query_id"), quantized_expr(qvec_col).alias("qv")
+        "query_id", quantized_expr("query_vec").alias("qv")
     )
     rel = c.join(F.broadcast(q)).select(
         "query_id",
@@ -144,9 +140,7 @@ def mmr_rerank(
     )
 
 
-def mmr_oracle_sql(
-    nq: int, n_shortlist: int = 25, k: int = 10, table: str = "embeddings"
-) -> str:
+def mmr_oracle_sql(nq: int, n_shortlist: int = 25, k: int = 10) -> str:
     """DuckDB twin: identical quantization, integer dots, and greedy chain
     via a recursive CTE (one row appended per rank)."""
     vq = (
@@ -156,7 +150,7 @@ def mmr_oracle_sql(
     idot = "list_sum(list_transform({a}, (x, i) -> x * {b}[i]))"
     return f"""
 WITH RECURSIVE c AS (
-    SELECT vec_id, {vq} AS vq FROM {table}
+    SELECT vec_id, {vq} AS vq FROM embeddings
 ),
 q AS (SELECT vec_id AS query_id, vq AS qv FROM c WHERE vec_id < {nq}),
 rel0 AS (

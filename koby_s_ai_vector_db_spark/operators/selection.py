@@ -68,13 +68,9 @@ def ngram_feature_expr(text_col: str) -> Column:
 def dsir_scores(
     docs: DataFrame,
     target: Column,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     carry_cols: tuple[str, ...] = (),
     n_buckets: int = DSIR_BUCKETS,
     seed: int = DSIR_SEED,
-    alpha: float = SMOOTH_ALPHA,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-document DSIR importance score over hashed n-gram features.
 
@@ -91,35 +87,25 @@ def dsir_scores(
     like the average of the corpus; downstream selection keeps the top
     fraction or samples ∝ exp(score/τ).
     """
-    lam = dsir_model(
-        docs, target, text_col=text_col, n_buckets=n_buckets, seed=seed,
-        alpha=alpha,
-    )
+    lam = dsir_model(docs, target, n_buckets=n_buckets, seed=seed)
     return dsir_apply(
-        docs, lam, id_col=id_col, text_col=text_col, carry_cols=carry_cols,
-        n_buckets=n_buckets, seed=seed, round_to=round_to,
+        docs, lam, carry_cols=carry_cols, n_buckets=n_buckets, seed=seed
     )
 
 
 def _dsir_feats(
-    docs: DataFrame,
-    select_cols: list[Column],
-    text_col: str,
-    n_buckets: int,
-    seed: int,
+    docs: DataFrame, select_cols: list[Column], n_buckets: int, seed: int
 ) -> DataFrame:
     return docs.select(
-        *select_cols, F.explode(ngram_feature_expr(text_col)).alias("_f")
+        *select_cols, F.explode(ngram_feature_expr("text")).alias("_f")
     ).withColumn("_b", portable_hash32(F.col("_f"), seed=seed) % n_buckets)
 
 
 def dsir_model(
     docs: DataFrame,
     target: Column,
-    text_col: str = "text",
     n_buckets: int = DSIR_BUCKETS,
     seed: int = DSIR_SEED,
-    alpha: float = SMOOTH_ALPHA,
 ) -> DataFrame:
     """The frozen DSIR model: the per-bucket log-likelihood-ratio table
     (_b, _lam). Train once on a reference corpus, then `dsir_apply` it
@@ -134,11 +120,7 @@ def dsir_model(
     re-derives it per consumer)."""
     if n_buckets <= 0:
         raise ValueError(f"n_buckets must be positive, got {n_buckets}")
-    if alpha <= 0:
-        raise ValueError(f"alpha must be positive (smoothing), got {alpha}")
-    feats = _dsir_feats(
-        docs, [target.alias("_is_target")], text_col, n_buckets, seed
-    )
+    feats = _dsir_feats(docs, [target.alias("_is_target")], n_buckets, seed)
     cnt = feats.groupBy("_b").agg(
         F.count("*").alias("_raw"),
         F.sum(F.col("_is_target").cast("long")).alias("_tgt"),
@@ -146,13 +128,14 @@ def dsir_model(
     totals = cnt.agg(
         F.sum("_raw").alias("_n_raw"), F.sum("_tgt").alias("_n_tgt")
     )
+    a = SMOOTH_ALPHA
     return (
         cnt.join(F.broadcast(totals))
         .select(
             "_b",
             (
-                F.log((F.col("_tgt") + alpha) / (F.col("_n_tgt") + alpha * n_buckets))
-                - F.log((F.col("_raw") + alpha) / (F.col("_n_raw") + alpha * n_buckets))
+                F.log((F.col("_tgt") + a) / (F.col("_n_tgt") + a * n_buckets))
+                - F.log((F.col("_raw") + a) / (F.col("_n_raw") + a * n_buckets))
             ).alias("_lam"),
         )
     )
@@ -161,49 +144,32 @@ def dsir_model(
 def dsir_apply(
     docs: DataFrame,
     lam: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     carry_cols: tuple[str, ...] = (),
     n_buckets: int = DSIR_BUCKETS,
     seed: int = DSIR_SEED,
-    round_to: int = 6,
 ) -> DataFrame:
     """Score documents against a prebuilt λ table (`dsir_model`): feature
     explode, broadcast model join, per-doc score sum — the only
     corpus-sized shuffle. Buckets absent from the model (possible when
     scoring a stream against a frozen reference model) contribute 0."""
     feats = _dsir_feats(
-        docs,
-        [F.col(id_col), *[F.col(c) for c in carry_cols]],
-        text_col,
-        n_buckets,
-        seed,
+        docs, [F.col("doc_id"), *[F.col(c) for c in carry_cols]], n_buckets, seed
     )
     scored = (
         feats.join(F.broadcast(lam), "_b", "left")
-        .groupBy(id_col, *carry_cols)
+        .groupBy("doc_id", *carry_cols)
         .agg(
             F.count("*").alias("n_feat"),
             F.sum(F.coalesce("_lam", F.lit(0.0))).alias("_s"),
         )
     )
     return scored.select(
-        id_col,
-        *carry_cols,
-        "n_feat",
-        F.round("_s", round_to).alias("score"),
+        "doc_id", *carry_cols, "n_feat", F.round("_s", 6).alias("score")
     )
 
 
-def dsir_oracle_sql(
-    target_pred: str,
-    n_buckets: int = DSIR_BUCKETS,
-    seed: int = DSIR_SEED,
-    alpha: float = SMOOTH_ALPHA,
-    carry_cols: tuple[str, ...] = (),
-    table: str = "documents",
-) -> str:
-    """DuckDB twin of `dsir_scores` over ``table`` (doc_id, text, ...).
+def dsir_oracle_sql(target_pred: str, carry_cols: tuple[str, ...] = ()) -> str:
+    """DuckDB twin of `dsir_scores` over `documents` (doc_id, text, ...).
     ``target_pred`` is a SQL boolean over the table's columns."""
     from koby_s_ai_vector_db_spark.functions.hashing import sql_hash32
 
@@ -212,11 +178,11 @@ def dsir_oracle_sql(
 WITH words AS (
     SELECT doc_id{carry}, ({target_pred}) AS is_target,
            list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '') AS w
-    FROM {table}
+    FROM documents
 ),
 feats AS (
     SELECT doc_id{carry}, is_target,
-           {sql_hash32("f", seed=seed)} % {n_buckets} AS b
+           {sql_hash32("f", seed=DSIR_SEED)} % {DSIR_BUCKETS} AS b
     FROM (
         SELECT doc_id{carry}, is_target,
                unnest(w || [w[i] || ' ' || w[i+1] for i in range(1, len(w))]) AS f
@@ -229,8 +195,8 @@ cnt AS (
 ),
 totals AS (SELECT sum(raw_n) AS n_raw, sum(tgt_n) AS n_tgt FROM cnt),
 lam AS (
-    SELECT b, ln((tgt_n + {alpha}) / (n_tgt + {alpha} * {n_buckets}))
-            - ln((raw_n + {alpha}) / (n_raw + {alpha} * {n_buckets})) AS lam
+    SELECT b, ln((tgt_n + {SMOOTH_ALPHA}) / (n_tgt + {SMOOTH_ALPHA} * {DSIR_BUCKETS}))
+            - ln((raw_n + {SMOOTH_ALPHA}) / (n_raw + {SMOOTH_ALPHA} * {DSIR_BUCKETS})) AS lam
     FROM cnt CROSS JOIN totals
 )
 SELECT doc_id{carry}, count(*) AS n_feat, round(sum(lam), 6) AS score
@@ -242,11 +208,7 @@ GROUP BY doc_id{carry}
 def lm_perplexity(
     docs: DataFrame,
     lm_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     carry_cols: tuple[str, ...] = (),
-    alpha: float = SMOOTH_ALPHA,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-document perplexity under an add-α bigram LM trained on
     ``lm_docs`` (the CCNet quality signal, with a bigram model standing
@@ -261,55 +223,38 @@ def lm_perplexity(
     → α/(c1 + αV); unseen context → 1/V. Documents with < 2 tokens have
     no bigram events and are absent from the output.
     """
-    model = lm_model(lm_docs, text_col=text_col, alpha=alpha)
-    return lm_apply(
-        docs, model, id_col=id_col, text_col=text_col,
-        carry_cols=carry_cols, round_to=round_to,
-    )
+    return lm_apply(docs, lm_model(lm_docs), carry_cols=carry_cols)
 
 
-def _bigrams(df: DataFrame, cols: list[Column], text_col: str) -> DataFrame:
-    return df.select(
-        *cols, F.explode(sliding_shingles_expr(text_col, 2)).alias("g")
-    )
+def _bigrams(df: DataFrame, cols: list[Column]) -> DataFrame:
+    return df.select(*cols, F.explode(sliding_shingles_expr("text", 2)).alias("g"))
 
 
-def lm_model(
-    lm_docs: DataFrame,
-    text_col: str = "text",
-    alpha: float = SMOOTH_ALPHA,
-) -> tuple[DataFrame, DataFrame, DataFrame, float]:
-    """The frozen bigram LM: (c2, c1, vocab, alpha) tables trained on
+def lm_model(lm_docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The frozen bigram LM: (c2, c1, vocab) tables trained on
     ``lm_docs``. Train once, `lm_apply` anywhere — including streams,
     where the reference model must not drift with arriving batches."""
-    if alpha <= 0:
-        raise ValueError(f"alpha must be positive (smoothing), got {alpha}")
-    lm_post = _bigrams(lm_docs, [], text_col).withColumn(
+    lm_post = _bigrams(lm_docs, []).withColumn(
         "prev", F.split_part(F.col("g"), F.lit(" "), F.lit(1))
     )
     c2 = lm_post.groupBy("g").agg(F.count("*").alias("c2"))
     c1 = lm_post.groupBy("prev").agg(F.count("*").alias("c1"))
     vocab = lm_docs.select(
-        F.explode(words_expr(text_col)).alias("w")
+        F.explode(words_expr("text")).alias("w")
     ).agg((F.countDistinct("w") + 1).cast("double").alias("v"))
-    return c2, c1, vocab, alpha
+    return c2, c1, vocab
 
 
 def lm_apply(
     docs: DataFrame,
-    model: tuple[DataFrame, DataFrame, DataFrame, float],
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    model: tuple[DataFrame, DataFrame, DataFrame],
     carry_cols: tuple[str, ...] = (),
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-document perplexity under a prebuilt LM (`lm_model`): map-only
     bigram explode, broadcast model joins, one per-doc aggregation."""
-    c2, c1, vocab, alpha = model
+    c2, c1, vocab = model
     events = (
-        _bigrams(
-            docs, [F.col(id_col), *[F.col(c) for c in carry_cols]], text_col
-        )
+        _bigrams(docs, [F.col("doc_id"), *[F.col(c) for c in carry_cols]])
         .withColumn("prev", F.split_part(F.col("g"), F.lit(" "), F.lit(1)))
         .join(F.broadcast(c2), "g", "left")
         .join(F.broadcast(c1), "prev", "left")
@@ -317,31 +262,25 @@ def lm_apply(
         .withColumn(
             "_lp",
             F.log(
-                (F.coalesce("c2", F.lit(0)) + alpha)
-                / (F.coalesce("c1", F.lit(0)) + alpha * F.col("v"))
+                (F.coalesce("c2", F.lit(0)) + SMOOTH_ALPHA)
+                / (F.coalesce("c1", F.lit(0)) + SMOOTH_ALPHA * F.col("v"))
             ),
         )
     )
-    scored = events.groupBy(id_col, *carry_cols).agg(
+    scored = events.groupBy("doc_id", *carry_cols).agg(
         F.count("*").alias("n_events"), F.sum("_lp").alias("_ll")
     )
     nll = -F.col("_ll") / F.col("n_events")
     return scored.select(
-        id_col,
+        "doc_id",
         *carry_cols,
         "n_events",
-        F.round(nll, round_to).alias("nll"),
-        F.round(F.exp(nll), round_to).alias("ppl"),
+        F.round(nll, 6).alias("nll"),
+        F.round(F.exp(nll), 6).alias("ppl"),
     )
 
 
-def perplexity_buckets(
-    scored: DataFrame,
-    ppl_col: str = "ppl",
-    head_q: float = 1.0 / 3.0,
-    middle_q: float = 2.0 / 3.0,
-    round_to: int = 6,
-) -> DataFrame:
+def perplexity_buckets(scored: DataFrame) -> DataFrame:
     """CCNet's head/middle/tail split: bucket by corpus-wide perplexity
     percentiles (head = most fluent third). Thresholds are a 1-row exact
     percentile aggregate over the ROUNDED ppl (both engines interpolate
@@ -349,22 +288,14 @@ def perplexity_buckets(
     map-only. Both the threshold aggregate and the bucket join consume
     ``scored``: persist (or materialize) it so the corpus-sized scoring
     pipeline runs once, not twice."""
-    if not 0 < head_q < middle_q < 1:
-        raise ValueError(
-            f"need 0 < head_q < middle_q < 1, got {head_q}, {middle_q}"
-        )
     cuts = scored.agg(
-        F.round(
-            F.percentile(ppl_col, F.lit(head_q)), round_to
-        ).alias("_t_head"),
-        F.round(
-            F.percentile(ppl_col, F.lit(middle_q)), round_to
-        ).alias("_t_mid"),
+        F.round(F.percentile("ppl", F.lit(1.0 / 3.0)), 6).alias("_t_head"),
+        F.round(F.percentile("ppl", F.lit(2.0 / 3.0)), 6).alias("_t_mid"),
     )
     out = scored.join(F.broadcast(cuts))
     bucket = (
-        F.when(F.col(ppl_col) <= F.col("_t_head"), F.lit("head"))
-        .when(F.col(ppl_col) <= F.col("_t_mid"), F.lit("middle"))
+        F.when(F.col("ppl") <= F.col("_t_head"), F.lit("head"))
+        .when(F.col("ppl") <= F.col("_t_mid"), F.lit("middle"))
         .otherwise(F.lit("tail"))
     )
     return out.select(
@@ -373,24 +304,13 @@ def perplexity_buckets(
 
 
 def token_budget_mix(
-    docs: DataFrame,
-    weights: dict[str, float],
-    token_budget: int,
-    strata_col: str = "lang",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    seed: int = 23,
-    tokens_col: str | None = None,
-    cache_key=None,
+    docs: DataFrame, weights: dict[str, float], token_budget: int
 ) -> DataFrame:
     """Deterministic per-document copy counts hitting a target token
     mixture: stratum s should contribute weight(s)·budget tokens; with
     fewer available the data REPEATS (epochs > 1), with more it
-    downsamples — the data-constrained-training recipe.
-
-    ``tokens_col`` names a precomputed per-doc token-count column to use
-    instead of tokenizing ``text_col`` (pipeline composition: upstream
-    stages often already carry n_tokens).
+    downsamples — the data-constrained-training recipe. Strata are the
+    ``lang`` column; the copy draw is seeded with 23.
 
     n_copies(d) = ⌊epochs(s)⌋ + [hash_ppm(id) < frac(epochs(s))·10⁶]
     epochs(s) = weight(s)·budget / available_tokens(s)
@@ -402,11 +322,8 @@ def token_budget_mix(
     each stratum achieves its target exactly; a fixed corpus realizes it
     to within the Bernoulli noise of the fractional part.
     """
-    toks, plan = _mix_parts(
-        docs, weights, token_budget, strata_col, id_col, text_col,
-        tokens_col, cache_key
-    )
-    return _mix_copies(toks, plan, strata_col, id_col, seed)
+    toks, plan = _mix_parts(docs, weights, token_budget, "lang", None, None)
+    return _mix_copies(toks, plan, "lang", 23)
 
 
 def _mix_parts(
@@ -414,10 +331,8 @@ def _mix_parts(
     weights: dict[str, float],
     token_budget: int,
     strata_col: str,
-    id_col: str,
-    text_col: str,
     tokens_col: str | None,
-    cache_key=None,
+    cache_key,
 ) -> tuple[DataFrame, DataFrame]:
     """Validated shared pieces of the mix: (toks, plan). toks is the
     per-doc token-count projection (ONE corpus tokenization pass, shared
@@ -434,10 +349,10 @@ def _mix_parts(
         raise ValueError(f"negative mixture weights: {bad}")
 
     n_tok = (
-        F.col(tokens_col) if tokens_col else F.size(words_expr(text_col))
+        F.col(tokens_col) if tokens_col else F.size(words_expr("text"))
     )
     toks = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col(strata_col),
         n_tok.cast("long").alias("n_tokens"),
     )
@@ -487,13 +402,9 @@ def _mix_parts(
 
 
 def _mix_copies(
-    toks: DataFrame,
-    plan: DataFrame,
-    strata_col: str,
-    id_col: str,
-    seed: int,
+    toks: DataFrame, plan: DataFrame, strata_col: str, seed: int
 ) -> DataFrame:
-    h = portable_hash32(F.col(id_col).cast("string"), seed=seed) % 1_000_000
+    h = portable_hash32(F.col("doc_id").cast("string"), seed=seed) % 1_000_000
     frac = F.col("epochs") - F.floor("epochs")
     n_copies = F.floor("epochs").cast("long") + F.when(
         h < F.round(frac * 1_000_000, 0).cast("long"), F.lit(1)
@@ -502,7 +413,7 @@ def _mix_copies(
         toks.join(F.broadcast(plan), strata_col)
         .withColumn("n_copies", n_copies)
         .filter(F.col("n_copies") > 0)
-        .select(id_col, strata_col, "n_tokens", "n_copies")
+        .select("doc_id", strata_col, "n_tokens", "n_copies")
     )
 
 
@@ -511,10 +422,7 @@ def token_budget_mix_summary(
     weights: dict[str, float],
     token_budget: int,
     strata_col: str = "lang",
-    id_col: str = "doc_id",
-    text_col: str = "text",
     seed: int = 23,
-    round_to: int = 6,
     tokens_col: str | None = None,
     cache_key=None,
 ) -> DataFrame:
@@ -523,10 +431,9 @@ def token_budget_mix_summary(
     one row per stratum. Shares the toks/plan subtrees with the mix so
     the corpus-sized tokenization pass runs once, not twice."""
     toks, plan = _mix_parts(
-        docs, weights, token_budget, strata_col, id_col, text_col,
-        tokens_col, cache_key
+        docs, weights, token_budget, strata_col, tokens_col, cache_key
     )
-    mix = _mix_copies(toks, plan, strata_col, id_col, seed)
+    mix = _mix_copies(toks, plan, strata_col, seed)
     achieved = mix.groupBy(strata_col).agg(
         F.sum(F.col("n_tokens") * F.col("n_copies")).alias("achieved_tokens"),
         F.sum("n_copies").alias("achieved_docs"),
@@ -540,8 +447,8 @@ def token_budget_mix_summary(
             strata_col,
             "n_docs_in",
             "avail_tokens",
-            F.round("target_tokens", round_to).alias("target_tokens"),
-            F.round("epochs", round_to).alias("epochs"),
+            F.round("target_tokens", 6).alias("target_tokens"),
+            F.round("epochs", 6).alias("epochs"),
             F.coalesce("achieved_tokens", F.lit(0)).alias("achieved_tokens"),
             F.coalesce("achieved_docs", F.lit(0)).alias("achieved_docs"),
         )
@@ -551,15 +458,7 @@ def token_budget_mix_summary(
 GUMBEL_SEED = 29
 
 
-def gumbel_topk_sample(
-    scored: DataFrame,
-    k: int,
-    score_col: str = "score",
-    id_col: str = "doc_id",
-    tau: float = 1.0,
-    seed: int = GUMBEL_SEED,
-    round_to: int = 6,
-) -> DataFrame:
+def gumbel_topk_sample(scored: DataFrame, k: int, tau: float = 1.0) -> DataFrame:
     """Deterministic importance RESAMPLING — the "R" in DSIR: draw k
     items without replacement with P ∝ exp(score/τ) via the Gumbel-top-k
     trick (equivalently Efraimidis-Spirakis weighted reservoir
@@ -582,14 +481,15 @@ def gumbel_topk_sample(
     from pyspark.sql import Window
 
     u = (
-        portable_hash32(F.col(id_col).cast("string"), seed=seed) % 1_000_000
+        portable_hash32(F.col("doc_id").cast("string"), seed=GUMBEL_SEED)
+        % 1_000_000
         + F.lit(0.5)
     ) / 1_000_000.0
     keyed = scored.withColumn(
-        "skey", F.round(F.col(score_col) / tau - F.log(-F.log(u)), round_to)
+        "skey", F.round(F.col("score") / tau - F.log(-F.log(u)), 6)
     )
-    top = keyed.orderBy(F.desc("skey"), F.asc(id_col)).limit(k)
-    w = Window.orderBy(F.desc("skey"), F.asc(id_col))
+    top = keyed.orderBy(F.desc("skey"), F.asc("doc_id")).limit(k)
+    w = Window.orderBy(F.desc("skey"), F.asc("doc_id"))
     return top.withColumn("rank", F.row_number().over(w))
 
 
@@ -620,7 +520,6 @@ vocab AS (
 def ppl_scored_ctes(
     doc_rel: str,
     carry_cols: tuple[str, ...],
-    alpha: float = SMOOTH_ALPHA,
     emit_nll: bool = True,
 ) -> str:
     """CTEs ``events``/``scored`` — per-doc perplexity under the LM CTEs
@@ -635,7 +534,7 @@ def ppl_scored_ctes(
     )
     return f"""events AS (
     SELECT e.doc_id{ecarry},
-           ln((coalesce(c2.c2, 0) + {alpha}) / (coalesce(c1.c1, 0) + {alpha} * vocab.v)) AS lp
+           ln((coalesce(c2.c2, 0) + {SMOOTH_ALPHA}) / (coalesce(c1.c1, 0) + {SMOOTH_ALPHA} * vocab.v)) AS lp
     FROM (SELECT doc_id{carry},
                  unnest([w[i] || ' ' || w[i+1] for i in range(1, len(w))]) AS g
           FROM {doc_rel}) e
@@ -649,13 +548,7 @@ scored AS (
 )"""
 
 
-def mix_oracle_sql(
-    src_rel: str,
-    case_sql: str,
-    token_budget: int,
-    seed: int,
-    id_expr: str = "doc_id",
-) -> str:
+def mix_oracle_sql(src_rel: str, case_sql: str, token_budget: int, seed: int) -> str:
     """CTEs ``plan``/``mix``/``achieved`` + the final per-stratum summary
     SELECT over a relation ``src_rel`` carrying (doc_id, lang,
     n_tokens). ``case_sql`` is the per-stratum weight CASE expression
@@ -663,7 +556,7 @@ def mix_oracle_sql(
     `token_budget_mix_summary` including the zero-available guard."""
     from koby_s_ai_vector_db_spark.functions.hashing import sql_hash32
 
-    h = sql_hash32(f"CAST(t.{id_expr} AS VARCHAR)", seed=seed)
+    h = sql_hash32("CAST(t.doc_id AS VARCHAR)", seed=seed)
     return f"""plan AS (
     SELECT lang, CAST(sum(n_tokens) AS BIGINT) AS avail_tokens, count(*) AS n_docs_in,
            ({case_sql}) * {token_budget} AS target_tokens,

@@ -43,8 +43,6 @@ def topk_cosine(
     threshold: float = 0.3,
     corpus_id: str = "vec_id",
     query_id: str = "query_id",
-    vec_col: str = "embedding",
-    query_vec_col: str = "query_vec",
     pre_normalized: bool = False,
     round_to: int | None = 6,
     exclude_self: bool = False,
@@ -52,8 +50,8 @@ def topk_cosine(
 ) -> DataFrame:
     """Q1: exact top-k cosine per query, threshold applied AFTER ranking.
 
-    corpus:  (corpus_id, vec_col, ...)   — the big side, arbitrary size
-    queries: (query_id, query_vec_col)   — small; broadcast
+    corpus:  (corpus_id, embedding, ...)   — the big side, arbitrary size
+    queries: (query_id, query_vec)         — small; broadcast
     Returns (query_id, corpus_id, sim, rank), rank ∈ 1..k, sim >= threshold.
     exclude_self drops corpus rows whose id equals the query id (for query
     sets drawn from the corpus itself, e.g. the fusion family's fixtures).
@@ -65,13 +63,14 @@ def topk_cosine(
     expect from a metadata-filtered vector store.
     """
     c = spread(corpus)  # the dot-product map below is the CPU-bound stage
-    c = c if pre_normalized else c.withColumn(vec_col, l2_normalize(vec_col))
-    q = queries.withColumn(query_vec_col, l2_normalize(query_vec_col))
+    if not pre_normalized:
+        c = c.withColumn("embedding", l2_normalize("embedding"))
+    q = queries.withColumn("query_vec", l2_normalize("query_vec"))
 
     scored = c.join(F.broadcast(q), on=[match_on] if match_on else None)
     if exclude_self:
         scored = scored.filter(F.col(query_id) != F.col(corpus_id))
-    scored = scored.withColumn("sim", dot(vec_col, query_vec_col))
+    scored = scored.withColumn("sim", dot("embedding", "query_vec"))
 
     w = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.asc(corpus_id))
     ranked = (
@@ -86,45 +85,40 @@ def topk_cosine(
 def knn_self_join(
     embeddings: DataFrame,
     k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     queries: DataFrame | None = None,
-    round_to: int | None = 6,
-    allow_full_self_join: bool = False,
 ) -> DataFrame:
-    """All-pairs k-NN (each vector's top-k neighbours, self excluded
-    *before* ranking). `queries` optionally restricts the query side.
+    """k-NN of each `queries` row (vec_id, embedding) over `embeddings`,
+    self excluded *before* ranking.
 
     At fixture scale this is a broadcast O(N²) scan. At 100 TB you don't
     run exact all-pairs — use minhash/LSH blocking (operators/dedup.py) or
     ivf_topk below to cut the candidate space first; this exact variant is
     the correctness oracle for those. Because `queries=None` broadcasts the
     ENTIRE corpus (quadratic work + unbounded broadcast → executor OOM at
-    scale), the full self-join now requires an explicit opt-in.
+    scale), the full self-join is refused.
     """
-    if queries is None and not allow_full_self_join:
+    if queries is None:
         raise ValueError(
             "knn_self_join with queries=None broadcasts the full corpus — "
-            "quadratic at scale. Pass a bounded `queries` DataFrame, use "
+            "quadratic at scale. Pass a bounded `queries` DataFrame, or use "
             "operators/dedup.py (MinHash LSH blocking) or ivf_topk for the "
-            "scalable tier, or opt in with allow_full_self_join=True for "
-            "small corpora."
+            "scalable tier."
         )
-    c = spread(embeddings).withColumn(vec_col, l2_normalize(vec_col))
-    q = queries if queries is not None else embeddings
-    q = q.select(F.col(id_col).alias("query_id"), l2_normalize(vec_col).alias("query_vec"))
+    c = spread(embeddings).withColumn("embedding", l2_normalize("embedding"))
+    q = queries.select(
+        F.col("vec_id").alias("query_id"), l2_normalize("embedding").alias("query_vec")
+    )
 
     scored = (
         c.join(F.broadcast(q))
-        .filter(F.col("query_id") != F.col(id_col))
-        .withColumn("sim", dot(vec_col, "query_vec"))
+        .filter(F.col("query_id") != F.col("vec_id"))
+        .withColumn("sim", dot("embedding", "query_vec"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc(id_col))
-    sim = F.round("sim", round_to) if round_to is not None else F.col("sim")
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", id_col, sim.alias("sim"), "rank")
+        .select("query_id", "vec_id", F.round("sim", 6).alias("sim"), "rank")
     )
 
 
@@ -133,13 +127,6 @@ def ivf_topk(
     queries: DataFrame,
     k: int = 5,
     n_probe_labels: int = 2,
-    corpus_id: str = "vec_id",
-    query_id: str = "query_id",
-    vec_col: str = "embedding",
-    query_vec_col: str = "query_vec",
-    label_col: str = "label",
-    round_to: int | None = 6,
-    dim: int = 64,
     threshold: float | None = None,
     exclude_self: bool = False,
     cache_key=None,
@@ -154,59 +141,53 @@ def ivf_topk(
     is a partition-pruned scan, not a full pass (that persisted layout is
     sources/pq_index.py: build_ivfpq_index / ivfpq_index_search).
     Recall < 1.0 by design; tests measure it against topk_cosine.
-    Vectors must be `dim`-d: any other size would NULL every probe dot
-    against the `dim`-d centroids, so it raises an error naming both.
+    Vectors must be 64-d: any other size would NULL every probe dot
+    against the 64-d centroids, so it raises an error naming both.
     """
     c = spread(corpus).withColumn(
-        vec_col, l2_normalize(dim_checked(vec_col, dim, "ivf_topk"))
+        "embedding", l2_normalize(dim_checked("embedding", 64, "ivf_topk"))
     )
     q = queries.withColumn(
-        query_vec_col, l2_normalize(dim_checked(query_vec_col, dim, "ivf_topk"))
+        "query_vec", l2_normalize(dim_checked("query_vec", 64, "ivf_topk"))
     )
 
     def _centroids():
-        return c.groupBy(label_col).agg(
-            mean_vector(vec_col, dim).alias("centroid")
+        return c.groupBy("label").agg(
+            mean_vector("embedding", 64).alias("centroid")
         )
 
     # cache_key memo-persists the lists×dim centroid table per session —
     # the IVF "index build" analog: steady-state probes must not
     # re-aggregate the corpus per query call (round 13; the
     # persisted index in sources/pq_index.py stores this table durably).
+    # Today's sharers (q2_ann / q18_ann_recall on ("emb", sf_dir)) pass
+    # identical corpora.
     if cache_key is not None:
         from koby_s_ai_vector_db_spark.functions.caching import memo_persist
 
-        # dim/vec_col/label_col ride in the memo key (ADVICE r13): two
-        # callers sharing a cache_key but differing in any centroid
-        # parameter must never share a centroid table — today's sharers
-        # (q2_ann / q18_ann_recall on ("emb", sf_dir)) pass identical
-        # corpora and defaults, which this key makes structural.
         centroids = memo_persist(
-            corpus.sparkSession,
-            ("ivf_centroids", cache_key, dim, vec_col, label_col),
-            _centroids,
+            corpus.sparkSession, ("ivf_centroids", cache_key), _centroids
         )
     else:
         centroids = _centroids()
 
-    probe_w = Window.partitionBy(query_id).orderBy(F.desc("csim"), F.asc(label_col))
+    probe_w = Window.partitionBy("query_id").orderBy(F.desc("csim"), F.asc("label"))
     probes = (
         q.join(F.broadcast(centroids))
-        .withColumn("csim", dot(query_vec_col, "centroid"))
+        .withColumn("csim", dot("query_vec", "centroid"))
         .withColumn("prank", F.row_number().over(probe_w))
         .filter(F.col("prank") <= n_probe_labels)
-        .select(query_id, query_vec_col, label_col)
+        .select("query_id", "query_vec", "label")
     )
 
-    scored = c.join(F.broadcast(probes), on=label_col)
+    scored = c.join(F.broadcast(probes), on="label")
     if exclude_self:
-        scored = scored.filter(F.col(query_id) != F.col(corpus_id))
-    scored = scored.withColumn("sim", dot(vec_col, query_vec_col))
-    w = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.asc(corpus_id))
-    sim = F.round("sim", round_to) if round_to is not None else F.col("sim")
+        scored = scored.filter(F.col("query_id") != F.col("vec_id"))
+    scored = scored.withColumn("sim", dot("embedding", "query_vec"))
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
     ranked = scored.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= k
     )
     if threshold is not None:
         ranked = ranked.filter(F.col("sim") >= threshold)  # rank-then-filter
-    return ranked.select(query_id, corpus_id, sim.alias("sim"), "rank")
+    return ranked.select("query_id", "vec_id", F.round("sim", 6).alias("sim"), "rank")

@@ -53,16 +53,14 @@ W_BITS = H_BITS - P        # 30-bit sub-hash scanned for leading zeros
 ALPHA_M = 0.7213 / (1 + 1.079 / M)
 
 
-def hll_registers(
-    df: DataFrame, key: Column, group_cols: list[str], seed: str = "hll"
-) -> DataFrame:
+def hll_registers(df: DataFrame, key: Column, group_cols: list[str]) -> DataFrame:
     """Per-group HLL register table: (group_cols..., bucket, r).
 
     The mergeable artifact: union two register tables and re-aggregate
     max(r) to sketch the union of the underlying key sets.
     """
     h = F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"{seed}:"), key)), 1, H_HEX), 16, 10
+        F.substring(F.md5(F.concat(F.lit("hll:"), key)), 1, H_HEX), 16, 10
     ).cast("long")
     bucket = F.shiftright(h, W_BITS)
     w = h.bitwiseAND(F.lit((1 << W_BITS) - 1))
@@ -104,7 +102,7 @@ def hll_estimate(registers: DataFrame, group_cols: list[str]) -> DataFrame:
     )
 
 
-def hll_oracle_cte(key_sql: str, group_sql: str, seed: str = "hll") -> str:
+def hll_oracle_cte(key_sql: str, group_sql: str) -> str:
     """DuckDB rendering of hll_registers + hll_estimate as chained CTEs.
 
     ``key_sql`` / ``group_sql`` are SQL fragments over a relation named
@@ -121,7 +119,7 @@ def hll_oracle_cte(key_sql: str, group_sql: str, seed: str = "hll") -> str:
     return f"""
 hll_h AS (
     SELECT {group_sql} AS grp,
-           ('0x' || substr(md5('{seed}:' || {key_sql}), 1, {H_HEX}))::BIGINT AS h
+           ('0x' || substr(md5('hll:' || {key_sql}), 1, {H_HEX}))::BIGINT AS h
     FROM hll_in
 ),
 hll_r AS (
@@ -186,12 +184,7 @@ CM_SEEDS = (101, 102, 103, 104)   # D = 4 independent rows
 CM_W = 512                        # buckets per row
 
 
-def cm_cells(
-    df: DataFrame,
-    key: Column,
-    seeds: tuple[int, ...] = CM_SEEDS,
-    width: int = CM_W,
-) -> DataFrame:
+def cm_cells(df: DataFrame, key: Column) -> DataFrame:
     """Count-min cell table (d, bucket, c) over key OCCURRENCES (one
     increment per input row). Merge two sketches by unioning and
     summing c per (d, bucket)."""
@@ -201,9 +194,9 @@ def cm_cells(
         *[
             F.struct(
                 F.lit(i).alias("d"),
-                (portable_hash32(key, seed=s) % width).alias("bucket"),
+                (portable_hash32(key, seed=s) % CM_W).alias("bucket"),
             )
-            for i, s in enumerate(seeds)
+            for i, s in enumerate(CM_SEEDS)
         ]
     )
     return (
@@ -214,13 +207,7 @@ def cm_cells(
     )
 
 
-def cm_estimate(
-    cells: DataFrame,
-    candidates: DataFrame,
-    key_col: str,
-    seeds: tuple[int, ...] = CM_SEEDS,
-    width: int = CM_W,
-) -> DataFrame:
+def cm_estimate(cells: DataFrame, candidates: DataFrame, key_col: str) -> DataFrame:
     """Estimated occurrence count per candidate key: min over the D row
     counters. The cell table (<= D*W rows) is broadcast; a candidate
     hitting an absent cell has true count 0."""
@@ -231,9 +218,9 @@ def cm_estimate(
         *[
             F.struct(
                 F.lit(i).alias("d"),
-                (portable_hash32(k, seed=s) % width).alias("bucket"),
+                (portable_hash32(k, seed=s) % CM_W).alias("bucket"),
             )
-            for i, s in enumerate(seeds)
+            for i, s in enumerate(CM_SEEDS)
         ]
     )
     probes = candidates.select(key_col, F.explode(arr).alias("p")).select(
@@ -246,11 +233,7 @@ def cm_estimate(
     )
 
 
-def cm_oracle_cte(
-    key_sql: str,
-    seeds: tuple[int, ...] = CM_SEEDS,
-    width: int = CM_W,
-) -> str:
+def cm_oracle_cte(key_sql: str) -> str:
     """DuckDB rendering: given an upstream relation ``cm_in`` with one
     row per key occurrence (column rendered by ``key_sql``), produces
     ``cm_cells`` (d, bucket, c) and ``cm_est`` (key, est_n) over the
@@ -258,9 +241,9 @@ def cm_oracle_cte(
     from koby_s_ai_vector_db_spark.functions.hashing import sql_hash32
 
     probe_rows = " UNION ALL ".join(
-        f"SELECT {i} AS d, {sql_hash32(key_sql, seed=s)} % {width} AS bucket,"
+        f"SELECT {i} AS d, {sql_hash32(key_sql, seed=s)} % {CM_W} AS bucket,"
         f" {key_sql} AS k FROM cm_in"
-        for i, s in enumerate(seeds)
+        for i, s in enumerate(CM_SEEDS)
     )
     return f"""
 cm_probes AS ({probe_rows}),
@@ -440,7 +423,7 @@ KMV_DOMAIN = 1 << 60   # portable_hash64 draws 15 hex digits -> [0, 2^60)
 
 def kmv_sample(
     df: DataFrame, key: Column, group_cols: list[str],
-    k: int = KMV_K, seed: int = 7,
+    seed: int = 7,
 ) -> DataFrame:
     """Per-group KMV synopsis: the k smallest DISTINCT portable 60-bit
     hashes, as (group_cols..., h). Mergeable: union two synopses,
@@ -455,51 +438,47 @@ def kmv_sample(
     fin = Window.partitionBy(*group_cols).orderBy("h")
     return (
         hashed.withColumn("_rk", F.row_number().over(fin))
-        .where(F.col("_rk") <= k)
+        .where(F.col("_rk") <= KMV_K)
         .select(*group_cols, "h")
     )
 
 
-def kmv_estimate(n_sample: Column, kth_hash: Column, k: int = KMV_K) -> Column:
+def kmv_estimate(n_sample: Column, kth_hash: Column) -> Column:
     """Distinct-count estimate from a synopsis' (row count, max hash):
     exact when the sample is the complete distinct set (n < k), else the
     unbiased (k-1)/U_(k) estimator."""
     u = kth_hash.cast("double") / F.lit(KMV_DOMAIN).cast("double")
-    return F.when(n_sample < k, n_sample.cast("double")).otherwise(
-        F.lit(float(k - 1)) / u
+    return F.when(n_sample < KMV_K, n_sample.cast("double")).otherwise(
+        F.lit(float(KMV_K - 1)) / u
     )
 
 
-def kmv_est_sql(n_expr: str, kth_expr: str, k: int = KMV_K) -> str:
+def kmv_est_sql(n_expr: str, kth_expr: str) -> str:
     """DuckDB rendering of kmv_estimate (CASTs keep everything DOUBLE —
     bare decimal literals would be DECIMAL, a driver-hash hazard)."""
     u = f"(CAST({kth_expr} AS DOUBLE) / CAST({KMV_DOMAIN} AS DOUBLE))"
     return (
-        f"CASE WHEN {n_expr} < {k} THEN CAST({n_expr} AS DOUBLE) "
-        f"ELSE CAST({float(k - 1)!r} AS DOUBLE) / {u} END"
+        f"CASE WHEN {n_expr} < {KMV_K} THEN CAST({n_expr} AS DOUBLE) "
+        f"ELSE CAST({float(KMV_K - 1)!r} AS DOUBLE) / {u} END"
     )
 
 
-def kmv_intersect_sql(
-    x_expr: str, n_expr: str, kth_expr: str, k: int = KMV_K
-) -> str:
+def kmv_intersect_sql(x_expr: str, n_expr: str, kth_expr: str) -> str:
     """DuckDB rendering of the theta intersection estimator: exact when
     the union sample is complete, else x * (k-1) / (k * U_(k)) with the
     division order fixed so both engines evaluate identically."""
     u = f"(CAST({kth_expr} AS DOUBLE) / CAST({KMV_DOMAIN} AS DOUBLE))"
     return (
-        f"CASE WHEN {n_expr} < {k} THEN CAST({x_expr} AS DOUBLE) "
-        f"ELSE CAST({x_expr} AS DOUBLE) * CAST({float(k - 1)!r} AS DOUBLE) "
-        f"/ CAST({float(k)!r} AS DOUBLE) / {u} END"
+        f"CASE WHEN {n_expr} < {KMV_K} THEN CAST({x_expr} AS DOUBLE) "
+        f"ELSE CAST({x_expr} AS DOUBLE) * CAST({float(KMV_K - 1)!r} AS DOUBLE) "
+        f"/ CAST({float(KMV_K)!r} AS DOUBLE) / {u} END"
     )
 
 
-def kmv_intersect_estimate(
-    x: Column, n_sample: Column, kth_hash: Column, k: int = KMV_K
-) -> Column:
+def kmv_intersect_estimate(x: Column, n_sample: Column, kth_hash: Column) -> Column:
     """Spark twin of kmv_intersect_sql — same literals, same division
     order."""
     u = kth_hash.cast("double") / F.lit(KMV_DOMAIN).cast("double")
-    return F.when(n_sample < k, x.cast("double")).otherwise(
-        x.cast("double") * F.lit(float(k - 1)) / F.lit(float(k)) / u
+    return F.when(n_sample < KMV_K, x.cast("double")).otherwise(
+        x.cast("double") * F.lit(float(KMV_K - 1)) / F.lit(float(KMV_K)) / u
     )

@@ -100,8 +100,6 @@ def repeated_substring_spans(
     docs: DataFrame,
     k: int = 8,
     min_count: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     hash_gram_key: bool | str = False,
 ) -> DataFrame:
     """Maximal repeated token spans per document.
@@ -160,8 +158,8 @@ def repeated_substring_spans(
         )
         pos_grams = (
             docs.select(
-                F.col(id_col).alias("doc_id"),
-                positional_kgram_hash_expr(text_col, k, lanes).alias("_pg"),
+                "doc_id",
+                positional_kgram_hash_expr("text", k, lanes).alias("_pg"),
             )
             .select("doc_id", F.explode_outer("_pg").alias("_u"))
             .filter(F.col("_u").isNotNull())
@@ -170,8 +168,8 @@ def repeated_substring_spans(
     else:
         pos_grams = (
             docs.select(
-                F.col(id_col).alias("doc_id"),
-                positional_kgrams_expr(text_col, k).alias("_pg"),
+                "doc_id",
+                positional_kgrams_expr("text", k).alias("_pg"),
             )
             .select("doc_id", F.explode_outer("_pg").alias("_u"))
             .filter(F.col("_u").isNotNull())
@@ -205,7 +203,7 @@ def repeated_substring_spans(
         )
         .select(
             # Surface the caller's id name.
-            F.col("doc_id").alias(id_col),
+            "doc_id",
             "span_start",
             "span_end",
             (F.col("span_end") - F.col("span_start") + 1).alias("span_tokens"),
@@ -214,15 +212,13 @@ def repeated_substring_spans(
     )
 
 
-def repeated_substring_oracle_sql(
-    k: int = 8, min_count: int = 2, table: str = "documents"
-) -> str:
+def repeated_substring_oracle_sql(k: int = 8, min_count: int = 2) -> str:
     """DuckDB twin: struct-list comprehension for positional windows,
     the same count-over-gram filter and pos - row_number islands."""
     return f"""
 WITH words AS (
     SELECT doc_id, list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '') AS w
-    FROM {table}
+    FROM documents
 ),
 pos_grams AS (
     SELECT doc_id, u.pos AS pos, u.g AS g FROM (

@@ -103,22 +103,22 @@ def quality_score(col: str) -> Column:
     )
 
 
-def fingerprints(col: str, k: int = 8, keep_mod: int = 8) -> Column:
+def fingerprints(col: str) -> Column:
     """Mod-sampled rolling fingerprint: md5-derived 32-bit hash of every
-    char k-gram, keeping hashes ≡ 0 (mod keep_mod) — 1/keep_mod of the
+    char 8-gram, keeping hashes ≡ 0 (mod 8) — 1/8 of the
     positions survive, position-independent (the winnowing idea without
     window state). At production scale swap md5 for xxhash64; md5 keeps
     the DuckDB oracle bit-identical (functions/hashing.py).
 
     The short-row branch is an explicit CASE: Spark's sequence(1, 0)
-    yields a DESCENDING [1, 0], and substring(col, 0, k) silently aliases
-    position 1 — a sub-k-length string would emit two duplicate hashes
+    yields a DESCENDING [1, 0], and substring(col, 0, 8) silently aliases
+    position 1 — a shorter string would emit two duplicate hashes
     where the oracle's range() emits none."""
     return F.expr(
-        f"CASE WHEN length({col}) >= {k} THEN"
-        f" filter(transform(sequence(1, length({col}) - {k - 1}),"
-        f" i -> CAST(conv(substr(md5(substring({col}, i, {k})), 1, 8), 16, 10) AS BIGINT)),"
-        f" h -> h % {keep_mod} = 0)"
+        f"CASE WHEN length({col}) >= 8 THEN"
+        f" filter(transform(sequence(1, length({col}) - 7),"
+        f" i -> CAST(conv(substr(md5(substring({col}, i, 8)), 1, 8), 16, 10) AS BIGINT)),"
+        f" h -> h % 8 = 0)"
         f" ELSE CAST(array() AS array<bigint>) END"
     )
 
@@ -133,11 +133,7 @@ MAX_TOP_TOKEN_FRAC = 0.14
 MAX_TOP_BIGRAM_FRAC = 0.08
 
 
-def gopher_repetition(
-    col: str,
-    max_top_token_frac: float = MAX_TOP_TOKEN_FRAC,
-    max_top_bigram_frac: float = MAX_TOP_BIGRAM_FRAC,
-) -> dict[str, Column]:
+def gopher_repetition(col: str) -> dict[str, Column]:
     """Repetition-quality stat columns over a text column: token count,
     most-frequent-token mass fraction, most-frequent-bigram mass
     fraction, mean word length, and the keep/drop gate. Each stat binds
@@ -189,8 +185,8 @@ def gopher_repetition(
             )
         ),
     }
-    cols["keep"] = (cols["top_token_frac"] <= max_top_token_frac) & (
-        cols["top_bigram_frac"] <= max_top_bigram_frac
+    cols["keep"] = (cols["top_token_frac"] <= MAX_TOP_TOKEN_FRAC) & (
+        cols["top_bigram_frac"] <= MAX_TOP_BIGRAM_FRAC
     )
     return cols
 

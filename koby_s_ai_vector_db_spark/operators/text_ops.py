@@ -23,18 +23,20 @@ NOKEY_PREFIX = (
 NOKEY_EMPTY = "No relevant context was found."
 
 
-def preview(col: Column | str, n: int = 200) -> Column:
-    """T5: first n chars + '...' if longer."""
+def preview(col: Column | str) -> Column:
+    """T5: first 200 chars + '...' if longer."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.when(F.length(c) > n, F.concat(F.substring(c, 1, n), F.lit("..."))).otherwise(c)
+    return F.when(
+        F.length(c) > 200, F.concat(F.substring(c, 1, 200), F.lit("..."))
+    ).otherwise(c)
 
 
-def is_valid_question(col: Column | str, lo: int = 3, hi: int = 1000) -> Column:
-    """T6: non-empty after strip, length in [lo, hi] (views.py:123-130).
+def is_valid_question(col: Column | str) -> Column:
+    """T6: non-empty after strip, length in [3, 1000] (views.py:123-130).
     The reference length-checks the stripped text."""
     c = F.col(col) if isinstance(col, str) else col
     stripped = F.regexp_replace(c, STRIP_PATTERN, "")
-    return (F.length(stripped) >= lo) & (F.length(stripped) <= hi)
+    return (F.length(stripped) >= 3) & (F.length(stripped) <= 1000)
 
 
 def sanitize_filename(col: Column | str, ts_prefix: str) -> Column:

@@ -53,15 +53,14 @@ def z_value_sql(u: str, v: str) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def _with_z_bucket(events: DataFrame, user_col: str, ts_col: str) -> DataFrame:
+def _with_z_bucket(events: DataFrame) -> DataFrame:
     """The bucket derivation: (u, t) projection, broadcast 1-row bounds,
     map-side Morton interleave, fixed-prefix z_bucket."""
-    e = events.select(user_col, ts_col).withColumns(
+    e = events.select("user_id", "ts").withColumns(
         {
-            "u": F.col(user_col),
+            "u": F.col("user_id"),
             "t": F.expr(
-                f"CAST(unix_micros(CAST({ts_col} AS TIMESTAMP))"
-                f" DIV 60000000 AS BIGINT)"
+                "CAST(unix_micros(CAST(ts AS TIMESTAMP)) DIV 60000000 AS BIGINT)"
             ),
         }
     )
@@ -81,17 +80,13 @@ def _with_z_bucket(events: DataFrame, user_col: str, ts_col: str) -> DataFrame:
     )
 
 
-def zorder_bucket_stats(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def zorder_bucket_stats(events: DataFrame) -> DataFrame:
     """Per-bucket bounding boxes of the z-ordered layout: (z_bucket,
     n_rows, u_min, u_max, t_min, t_max) with ts in epoch minutes.
     The stats table IS what a lakehouse stores per file; its box sizes
     are the data-skipping guarantee."""
     return (
-        _with_z_bucket(events, user_col, ts_col)
+        _with_z_bucket(events)
         .groupBy("z_bucket")
         .agg(
             F.count("*").alias("n_rows"),
@@ -104,7 +99,7 @@ def zorder_bucket_stats(
     )
 
 
-def zorder_oracle_sql(table: str = "events") -> str:
+def zorder_oracle_sql() -> str:
     """DuckDB twin of zorder_bucket_stats over the events view."""
     un = _norm_sql("u", "u_lo", "u_hi")
     tn = _norm_sql("t", "t_lo", "t_hi")
@@ -114,7 +109,7 @@ def zorder_oracle_sql(table: str = "events") -> str:
 WITH e AS (
     SELECT user_id AS u,
            CAST(floor(epoch_us(ts) / 60000000) AS BIGINT) AS t
-    FROM {table}
+    FROM events
 ),
 b AS (
     SELECT min(u) AS u_lo, max(u) AS u_hi, min(t) AS t_lo, max(t) AS t_hi

@@ -119,10 +119,10 @@ RESIZED_SCHEMA = "media_id bigint, kind string, width int, height int, out_w int
 FRAMES_SCHEMA = "media_id bigint, frame_idx int, frame_off bigint, frame_sig int"
 
 
-def resize_media(decoded: DataFrame, max_w: int = 64, max_h: int = 64) -> DataFrame:
+def resize_media(decoded: DataFrame) -> DataFrame:
     """Thumbnail/resize stage via mapInPandas. With an imaging lib this is
     where pixels get resampled; here the geometry is real (integer
-    floor-scaling to fit max_w x max_h, never upscaling) and the payload
+    floor-scaling to fit 64 x 64, never upscaling) and the payload
     transform is the import-gated stub — so the batch shape, schema and
     scaling arithmetic are all exercised and oracle-checked."""
     use_real = _real_decode_available()
@@ -135,8 +135,8 @@ def resize_media(decoded: DataFrame, max_w: int = 64, max_h: int = 64) -> DataFr
             h = pdf["height"].astype("int64").clip(lower=0)
             pct = pd.concat(
                 [
-                    (max_w * 1000) // w.clip(lower=1),
-                    (max_h * 1000) // h.clip(lower=1),
+                    (64 * 1000) // w.clip(lower=1),
+                    (64 * 1000) // h.clip(lower=1),
                 ],
                 axis=1,
             ).min(axis=1).clip(upper=1000)
@@ -148,8 +148,8 @@ def resize_media(decoded: DataFrame, max_w: int = 64, max_h: int = 64) -> DataFr
     return decoded.mapInPandas(_resize, schema=RESIZED_SCHEMA)
 
 
-def sample_frames(decoded: DataFrame, every: int = 10) -> DataFrame:
-    """Frame-sampling stage via mapInPandas: every `every`-th frame of
+def sample_frames(decoded: DataFrame) -> DataFrame:
+    """Frame-sampling stage via mapInPandas: every 10th frame of
     each video payload, with its byte offset (uniform frame stride over
     the payload) and a deterministic per-frame signature standing in for
     the decoded-frame feature. Non-video rows and zero-frame payloads are
@@ -165,7 +165,7 @@ def sample_frames(decoded: DataFrame, every: int = 10) -> DataFrame:
             rows = []
             for m, blen, nf in zip(pdf["media_id"], pdf["byte_len"], pdf["n_frames"]):
                 stride = int(blen) // int(nf)
-                for idx in range(0, int(nf), every):
+                for idx in range(0, int(nf), 10):
                     rows.append(
                         (int(m), idx, idx * stride, (int(m) * 31 + idx) % 997)
                     )

@@ -78,7 +78,7 @@ def extract_pdf_pages(binary_files: DataFrame) -> DataFrame:
     )
 
 
-def extract_pages(documents: DataFrame, page_chars: int = PAGE_CHARS) -> DataFrame:
+def extract_pages(documents: DataFrame) -> DataFrame:
     """S3 fixture stand-in: slice each document's text into fixed-width
     'pages', 1-based page numbers, EMPTY PAGES DROPPED — the per-page
     extraction shape of supabase_utils.py:193-200. Pure Catalyst."""
@@ -87,8 +87,8 @@ def extract_pages(documents: DataFrame, page_chars: int = PAGE_CHARS) -> DataFra
             "doc_id",
             F.posexplode(
                 F.expr(
-                    f"transform(sequence(1, greatest(CAST(ceil(length(text) / {page_chars}.0) AS INT), 1)),"
-                    f" p -> substring(text, (p - 1) * {page_chars} + 1, {page_chars}))"
+                    f"transform(sequence(1, greatest(CAST(ceil(length(text) / {PAGE_CHARS}.0) AS INT), 1)),"
+                    f" p -> substring(text, (p - 1) * {PAGE_CHARS} + 1, {PAGE_CHARS}))"
                 )
             ).alias("_p", "page_text"),
         )

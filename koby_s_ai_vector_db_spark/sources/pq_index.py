@@ -90,19 +90,16 @@ CENTROIDS_SCHEMA = "list int, centroid array<double>"
 def build_ivfpq_index(
     corpus: DataFrame,
     path: str,
-    corpus_id: str = "vec_id",
-    vec_col: str = "embedding",
     list_col: str | None = None,
     n_lists: int = 10,
-    max_iter: int = 5,
-    seed: int = 20260813,
 ) -> dict:
     """Build the index: ``{path}/data`` (id, codes, vec) PARTITIONED BY the
     coarse ``list`` id, plus ``centroids`` and ``codebook`` sidecars.
 
-    Codes, centroids and list assignment use the L2-normalized vector;
-    ``vec`` stores ``vec_col`` as given, element type included, and search
-    normalizes it in the exact re-rank.
+    The corpus has (vec_id, embedding) columns. Codes, centroids and list
+    assignment use the L2-normalized vector; ``vec`` stores ``embedding``
+    as given, element type included, and search normalizes it in the
+    exact re-rank.
 
     Coarse assignment: pass ``list_col`` to use an existing labeling with
     per-list mean centroids (`mean_vector`, the centroids `ivf_topk`
@@ -110,39 +107,38 @@ def build_ivfpq_index(
     against a DuckDB oracle; a constant column gives a flat index), or
     leave None to fit seeded k-means lists (pgvector's ivfflat build;
     better recall; engine-specific floats, so recall- not value-tested).
-    Returns {"n_lists", "n_vectors", "path"}."""
+    Returns {"n_vectors", "path"}."""
     spark = corpus.sparkSession
     codebook_df(spark).coalesce(1).write.mode("overwrite").parquet(
         f"{path}/{CODEBOOK_SUBDIR}"
     )
-    c = spread(corpus).withColumn(vec_col, dim_checked(vec_col))
+    c = spread(corpus).withColumn("embedding", dim_checked("embedding"))
 
     if list_col is not None:
         labeled = c.select(
-            F.col(corpus_id),
+            F.col("vec_id"),
             F.col(list_col).cast("int").alias("list"),
-            F.col(vec_col).alias("vec"),
-            l2_normalize(vec_col).alias("_nv"),
+            F.col("embedding").alias("vec"),
+            l2_normalize("embedding").alias("_nv"),
         )
         centroids = labeled.groupBy("list").agg(
             mean_vector("_nv", DIM).alias("centroid")
         )
-        n_lists = None  # resolved below from the labeling
     else:
         from pyspark.ml.clustering import KMeans
         from pyspark.ml.functions import array_to_vector
 
-        feat = c.withColumn("_nv", l2_normalize(vec_col)).withColumn(
+        feat = c.withColumn("_nv", l2_normalize("embedding")).withColumn(
             "_fv", array_to_vector("_nv")
         )
         model = KMeans(
-            k=n_lists, maxIter=max_iter, seed=seed,
+            k=n_lists, maxIter=5, seed=20260813,
             featuresCol="_fv", predictionCol="_list",
         ).fit(feat)
         labeled = model.transform(feat).select(
-            corpus_id,
+            "vec_id",
             F.col("_list").cast("int").alias("list"),
-            F.col(vec_col).alias("vec"),
+            F.col("embedding").alias("vec"),
             "_nv",
         )
         centroids = spark.createDataFrame(
@@ -154,7 +150,7 @@ def build_ivfpq_index(
         )
 
     data = labeled.join(F.broadcast(codebook_df(spark))).select(
-        "list", F.col(corpus_id), pq_encode("_nv").alias("codes"), "vec"
+        "list", F.col("vec_id"), pq_encode("_nv").alias("codes"), "vec"
     )
     # repartition("list"): one writer task per list → a probe opens O(1)
     # files per probed partition instead of one per upstream task.
@@ -164,19 +160,11 @@ def build_ivfpq_index(
     centroids.coalesce(1).write.mode("overwrite").parquet(
         f"{path}/{CENTROIDS_SUBDIR}"
     )
-    written = spark.read.parquet(f"{path}/{DATA_SUBDIR}")
-    n_vectors = written.count()
-    if n_lists is None:
-        n_lists = written.select("list").distinct().count()
-    return {"n_lists": n_lists, "n_vectors": n_vectors, "path": path}
+    n_vectors = spark.read.parquet(f"{path}/{DATA_SUBDIR}").count()
+    return {"n_vectors": n_vectors, "path": path}
 
 
-def append_to_ivfpq_index(
-    new_corpus: DataFrame,
-    path: str,
-    corpus_id: str = "vec_id",
-    vec_col: str = "embedding",
-) -> dict:
+def append_to_ivfpq_index(new_corpus: DataFrame, path: str) -> dict:
     """Incrementally add vectors to an EXISTING IVF+PQ index without a
     rebuild: each new vector is assigned to its nearest existing coarse
     centroid (the FAISS `add` semantics — centroids and codebook are
@@ -194,7 +182,7 @@ def append_to_ivfpq_index(
     ``vec`` is cast to the element type the index already stores, so a
     double batch appended to a float index writes float files: one
     directory, one file schema. Codes and the assignment use the cast
-    vector, the one the re-rank reads back. Returns {"n_appended", "path"}."""
+    vector, the one the re-rank reads back. Returns {"path"}."""
     spark = new_corpus.sparkSession
     cbdf = spark.read.schema(CODEBOOK_SCHEMA).parquet(f"{path}/{CODEBOOK_SUBDIR}")
     centroids = spark.read.schema(CENTROIDS_SCHEMA).parquet(
@@ -203,24 +191,23 @@ def append_to_ivfpq_index(
     stored = spark.read.parquet(f"{path}/{DATA_SUBDIR}").schema["vec"].dataType
 
     c = spread(new_corpus).select(
-        F.col(corpus_id), dim_checked(vec_col).cast(stored).alias("vec")
+        F.col("vec_id"), dim_checked("embedding").cast(stored).alias("vec")
     ).withColumn("_nv", l2_normalize("vec"))
-    w = Window.partitionBy(corpus_id).orderBy(F.desc("csim"), F.asc("list"))
+    w = Window.partitionBy("vec_id").orderBy(F.desc("csim"), F.asc("list"))
     assigned = (
         c.join(F.broadcast(centroids))
         .withColumn("csim", dot("_nv", "centroid"))
         .withColumn("_r", F.row_number().over(w))
         .filter(F.col("_r") == 1)
-        .select("list", corpus_id, "vec", "_nv")
+        .select("list", "vec_id", "vec", "_nv")
     )
     data = assigned.join(F.broadcast(cbdf)).select(
-        "list", F.col(corpus_id), pq_encode("_nv").alias("codes"), "vec"
+        "list", F.col("vec_id"), pq_encode("_nv").alias("codes"), "vec"
     )
     data.repartition("list").write.mode("append").partitionBy("list").parquet(
         f"{path}/{DATA_SUBDIR}"
     )
-    n_appended = assigned.count()
-    return {"n_appended": n_appended, "path": path}
+    return {"path": path}
 
 
 def ivfpq_index_search(
@@ -230,10 +217,6 @@ def ivfpq_index_search(
     k: int = 10,
     n_probe: int = 2,
     shortlist: int | None = 64,
-    corpus_id: str = "vec_id",
-    query_id: str = "query_id",
-    query_vec_col: str = "query_vec",
-    round_to: int | None = 6,
 ) -> DataFrame:
     """Search the index: centroid probe → PARTITION-pruned scan of the
     probed lists → candidates → exact re-rank, top-k.
@@ -245,22 +228,22 @@ def ivfpq_index_search(
     collected and pushed into the scan as ``list IN (...)``, so building
     a search runs one small job; callers with a fixed query set memoize
     the returned plan (functions/caching.py).
-    Returns (query_id, corpus_id, sim, rank)."""
+    Returns (query_id, vec_id, sim, rank)."""
     centroids = spark.read.schema(CENTROIDS_SCHEMA).parquet(
         f"{path}/{CENTROIDS_SUBDIR}"
     )
     data = spark.read.parquet(f"{path}/{DATA_SUBDIR}")
 
     q = queries.select(
-        F.col(query_id), l2_normalize(dim_checked(query_vec_col)).alias("qv")
+        F.col("query_id"), l2_normalize(dim_checked("query_vec")).alias("qv")
     )
-    probe_w = Window.partitionBy(query_id).orderBy(F.desc("csim"), F.asc("list"))
+    probe_w = Window.partitionBy("query_id").orderBy(F.desc("csim"), F.asc("list"))
     probes = (
         q.join(F.broadcast(centroids))
         .withColumn("csim", dot("qv", "centroid"))
         .withColumn("prank", F.row_number().over(probe_w))
         .filter(F.col("prank") <= n_probe)
-        .select(query_id, "list")
+        .select("query_id", "list")
     )
 
     probed = sorted(r["list"] for r in probes.select("list").distinct().collect())
@@ -269,37 +252,36 @@ def ivfpq_index_search(
     if shortlist is None:
         # Normalized once per row, not once per (query, row) pair.
         cand = scan.select(
-            "list", corpus_id, l2_normalize("vec").alias("nv")
+            "list", "vec_id", l2_normalize("vec").alias("nv")
         ).join(F.broadcast(probes), on="list")
     else:
         cbdf = spark.read.schema(CODEBOOK_SCHEMA).parquet(
             f"{path}/{CODEBOOK_SUBDIR}"
         )
         dtab = q.join(F.broadcast(cbdf)).select(
-            query_id, pq_distance_table("qv").alias("dtab")
+            "query_id", pq_distance_table("qv").alias("dtab")
         )
-        w_sl = Window.partitionBy(query_id).orderBy(F.desc("adc"), F.asc(corpus_id))
+        w_sl = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("vec_id"))
         sl = (
-            scan.select("list", corpus_id, "codes")  # vec never read here
+            scan.select("list", "vec_id", "codes")  # vec never read here
             .join(F.broadcast(probes), on="list")
-            .join(F.broadcast(dtab), on=query_id)
+            .join(F.broadcast(dtab), on="query_id")
             .withColumn("adc", pq_adc_score())
             .withColumn("srank", F.row_number().over(w_sl))
             .filter(F.col("srank") <= shortlist)
-            .select(query_id, corpus_id)
+            .select("query_id", "vec_id")
         )
         # Re-rank fetch (broadcast semi-join, |queries|·shortlist rows)
         # from the probed lists only: every shortlisted id came out of
         # `scan`, so this is exact.
         cand = F.broadcast(sl).join(
-            scan.select(corpus_id, "vec"), corpus_id
-        ).select(query_id, corpus_id, l2_normalize("vec").alias("nv"))
+            scan.select("vec_id", "vec"), "vec_id"
+        ).select("query_id", "vec_id", l2_normalize("vec").alias("nv"))
 
-    scored = cand.join(F.broadcast(q), query_id).withColumn("sim", dot("nv", "qv"))
-    w_k = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.asc(corpus_id))
-    sim = F.round("sim", round_to) if round_to is not None else F.col("sim")
+    scored = cand.join(F.broadcast(q), "query_id").withColumn("sim", dot("nv", "qv"))
+    w_k = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w_k))
         .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, sim.alias("sim"), "rank")
+        .select("query_id", "vec_id", F.round("sim", 6).alias("sim"), "rank")
     )

@@ -114,34 +114,27 @@ def build_text_index(
     docs: DataFrame,
     path: str,
     n_buckets: int = DEFAULT_BUCKETS,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> dict:
     """Tokenize + invert once; persist bucket-partitioned postings and the
     corpus-scalar sidecar. Returns {"n_docs", "path", "n_buckets"}."""
-    n_docs = _write_segment(docs, path, n_buckets, id_col, text_col, mode="overwrite")
+    _write_segment(docs, path, n_buckets, mode="overwrite", seg=0)
+    n_docs = int(_read_stats(docs.sparkSession, path).head()["n_docs"])
     return {"n_docs": n_docs, "path": path, "n_buckets": n_buckets}
 
 
 def _write_segment(
-    docs: DataFrame,
-    path: str,
-    n_buckets: int,
-    id_col: str,
-    text_col: str,
-    mode: str,
-    seg: int = 0,
-) -> int:
-    """Write one index segment (postings + one stats row) and return its
-    document count. Every aggregate the search needs is ADDITIVE across
+    docs: DataFrame, path: str, n_buckets: int, mode: str, seg: int
+) -> None:
+    """Write one index segment (postings + one stats row). Every
+    aggregate the search needs is ADDITIVE across
     segments (df as a count of postings rows, n_docs, sum_dl), so
     append-mode segments compose exactly — the Lucene-segment idea
     without the merge daemon. ``seg`` stamps the postings rows with the
     segment's number (0 for the build, then one per append)."""
-    dl = doc_lengths(docs, id_col, text_col).persist()
+    dl = doc_lengths(docs).persist()
     try:
         postings = (
-            term_postings(docs, id_col, text_col)
+            term_postings(docs)
             .join(dl, "_id")
             .select(
                 _bucket("term", n_buckets).alias("bucket"),
@@ -163,17 +156,11 @@ def _write_segment(
             F.sum("dl").alias("sum_dl"),
         ).withColumn("n_buckets", F.lit(n_buckets))
         stats.coalesce(1).write.mode(mode).parquet(f"{path}/{STATS_SUBDIR}")
-        return dl.count()
     finally:
         dl.unpersist()
 
 
-def append_to_text_index(
-    docs: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> dict:
+def append_to_text_index(docs: DataFrame, path: str) -> dict:
     """Incrementally add documents to an existing index as a new SEGMENT:
     postings/stats rows are parquet-appended, which is exact because
     every BM25 global (df, N, total length) is additive. The append reads
@@ -184,10 +171,8 @@ def append_to_text_index(
     spark = docs.sparkSession
     stats = _read_stats(spark, path).select("n_buckets").collect()
     n_buckets = _n_buckets(stats[0], path)
-    n_docs = _write_segment(
-        docs, path, n_buckets, id_col, text_col, mode="append", seg=len(stats)
-    )
-    return {"n_appended": n_docs, "path": path, "n_buckets": n_buckets}
+    _write_segment(docs, path, n_buckets, mode="append", seg=len(stats))
+    return {"path": path, "n_buckets": n_buckets}
 
 
 def search_text_index(
@@ -195,12 +180,6 @@ def search_text_index(
     path: str,
     queries: DataFrame,
     k: int = 10,
-    query_id: str = "query_id",
-    query_text: str = "query_text",
-    id_col: str = "doc_id",
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-    round_to: int = 6,
 ) -> DataFrame:
     """BM25 top-k per query over the persisted index. The bucket count is
     read from the index's stats sidecar (it defines the partition layout —
@@ -230,8 +209,8 @@ def search_text_index(
     )
 
     qterms = queries.select(
-        F.col(query_id),
-        F.explode(F.array_distinct(words_expr(query_text))).alias("term"),
+        F.col("query_id"),
+        F.explode(F.array_distinct(words_expr("query_text"))).alias("term"),
     )
 
     buckets = sorted(
@@ -243,7 +222,7 @@ def search_text_index(
     # holds each posting of a term once per query asking it.
     scored = (
         postings.join(F.broadcast(qterms), ["term"])
-        .withColumn("df", F.count(F.lit(1)).over(Window.partitionBy(query_id, "term")))
+        .withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("query_id", "term")))
         .join(F.broadcast(stats.select("n_docs", "avgdl")))
         .withColumn(
             "_idf",
@@ -252,24 +231,25 @@ def search_text_index(
         .withColumn(
             "_w",
             F.col("_idf")
-            * (F.col("tf") * (k1 + 1))
-            / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))),
+            * (F.col("tf") * (BM25_K1 + 1))
+            / (F.col("tf")
+               + BM25_K1 * (1 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))),
         )
-        .groupBy(query_id, "id")
+        .groupBy("query_id", "id")
         .agg(F.sum("_w").alias("_score"))
     )
     # Rounded-score ranking: same cross-engine determinism contract as
     # operators/corpus.py::bm25_rank.
-    w = Window.partitionBy(query_id).orderBy(
-        F.desc(F.round("_score", round_to)), F.asc("id")
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc(F.round("_score", 6)), F.asc("id")
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
-            query_id,
-            F.col("id").alias(id_col),
-            F.round("_score", round_to).alias("score"),
+            "query_id",
+            F.col("id").alias("doc_id"),
+            F.round("_score", 6).alias("score"),
             "rank",
         )
     )

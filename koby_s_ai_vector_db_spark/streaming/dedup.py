@@ -22,22 +22,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def streaming_exact_dedup(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def streaming_exact_dedup(docs: DataFrame) -> DataFrame:
     """Exact-dedup state: (text_hash, canonical_id, n_copies) per distinct
     content hash — min-id canonical like exact_dup_groups, but WITHOUT the
     n_copies > 1 filter so the state table is the full first-seen catalog
     a streaming ingest consults. Arrival-order independent (min/count are
     commutative), hence batch ≡ streaming."""
-    return docs.groupBy(F.md5(F.col(text_col)).alias("text_hash")).agg(
-        F.min(id_col).alias("canonical_id"), F.count("*").alias("n_copies")
+    return docs.groupBy(F.md5(F.col("text")).alias("text_hash")).agg(
+        F.min("doc_id").alias("canonical_id"), F.count("*").alias("n_copies")
     )
 
 
-def streaming_sketch_dedup(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def streaming_sketch_dedup(docs: DataFrame) -> DataFrame:
     """NEAR-dup-capable streaming state: (sketch, canonical_id, n_copies)
     keyed by the 32-bit SimHash sketch (operators/dedup.simhash_expr)
     instead of the exact content hash — re-encodings, whitespace variants,
@@ -55,7 +51,7 @@ def streaming_sketch_dedup(
     from koby_s_ai_vector_db_spark.operators.dedup import simhash_expr, words_expr
 
     return (
-        docs.filter(F.size(words_expr(text_col)) > 0)
-        .groupBy(simhash_expr(text_col).alias("sketch"))
-        .agg(F.min(id_col).alias("canonical_id"), F.count("*").alias("n_copies"))
+        docs.filter(F.size(words_expr("text")) > 0)
+        .groupBy(simhash_expr("text").alias("sketch"))
+        .agg(F.min("doc_id").alias("canonical_id"), F.count("*").alias("n_copies"))
     )

@@ -25,6 +25,8 @@ keep the tests deterministic.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 
 from koby_s_ai_vector_db_spark.sources.pq_index import append_to_ivfpq_index
@@ -35,58 +37,50 @@ EMB_SCHEMA = "vec_id bigint, embedding array<float>, label int"
 DOCS_SCHEMA = "doc_id bigint, text string, lang string, source string, n_chars bigint"
 
 
-def stream_vectors_into_ivfpq(
+def _stream_into(
     spark: SparkSession,
+    schema: str,
+    append: Callable[[DataFrame, str], object],
     source_glob: str,
     index_path: str,
     checkpoint: str,
 ) -> "object":
-    """Start a stream appending arriving vectors into an existing IVF+PQ
-    index (one `append_to_ivfpq_index` call per micro-batch). Returns the
-    StreamingQuery; callers `awaitTermination()` (availableNow) or manage
-    the lifecycle."""
-    vecs = (
-        spark.readStream.schema(EMB_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_glob)
-    )
+    """Start an availableNow stream over ``source_glob`` (one file per
+    micro-batch) that calls ``append(batch, index_path)`` for every
+    non-empty micro-batch. Returns the StreamingQuery; callers
+    `awaitTermination()` (availableNow) or manage the lifecycle."""
 
     def absorb(batch: DataFrame, _batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        append_to_ivfpq_index(batch, index_path)
+        if not batch.isEmpty():
+            append(batch, index_path)
 
     return (
-        vecs.writeStream.foreachBatch(absorb)
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(source_glob)
+        .writeStream.foreachBatch(absorb)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
+    )
+
+
+def stream_vectors_into_ivfpq(
+    spark: SparkSession, source_glob: str, index_path: str, checkpoint: str
+) -> "object":
+    """Append arriving vectors into an existing IVF+PQ index, one
+    `append_to_ivfpq_index` call per micro-batch."""
+    return _stream_into(
+        spark, EMB_SCHEMA, append_to_ivfpq_index, source_glob, index_path, checkpoint
     )
 
 
 def stream_docs_into_text_index(
-    spark: SparkSession,
-    source_glob: str,
-    index_path: str,
-    checkpoint: str,
+    spark: SparkSession, source_glob: str, index_path: str, checkpoint: str
 ) -> "object":
-    """Start a stream appending arriving documents into an existing
-    inverted text index as one segment per micro-batch (additive BM25
-    globals make segment boundaries invisible to search)."""
-    docs = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_glob)
-    )
-
-    def absorb(batch: DataFrame, _batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        append_to_text_index(batch, index_path)
-
-    return (
-        docs.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """Append arriving documents into an existing inverted text index as
+    one segment per micro-batch (additive BM25 globals make segment
+    boundaries invisible to search)."""
+    return _stream_into(
+        spark, DOCS_SCHEMA, append_to_text_index, source_glob, index_path, checkpoint
     )

@@ -96,8 +96,8 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw
 
 
-def apply_watermark(events: DataFrame, late: str = LATE) -> DataFrame:
-    """Bound state: late events beyond `late` are dropped, closed windows
+def apply_watermark(events: DataFrame) -> DataFrame:
+    """Bound state: late events beyond `LATE` are dropped, closed windows
     evicted. Production entry point; tests compare un-watermarked
     complete-mode output against batch (the stream-stream join test uses
     this path directly).
@@ -137,14 +137,14 @@ def apply_watermark(events: DataFrame, late: str = LATE) -> DataFrame:
                     f"TIMESTAMP_NTZ cast; session has {tz!r}"
                 )
         events = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    return events.withWatermark("ts", late)
+    return events.withWatermark("ts", LATE)
 
 
-def sliding_live_users(events: DataFrame, window: str = WINDOW, slide: str = SLIDE) -> DataFrame:
+def sliding_live_users(events: DataFrame) -> DataFrame:
     """A5 streaming twin: per (window) slide, distinct users + events.
     Works identically on batch and streaming inputs."""
     return (
-        events.groupBy(F.window("ts", window, slide).alias("w"))
+        events.groupBy(F.window("ts", WINDOW, SLIDE).alias("w"))
         .agg(
             F.size(F.collect_set("user_id")).alias("live_users"),
             F.count("*").alias("n_events"),
@@ -157,12 +157,12 @@ def sliding_live_users(events: DataFrame, window: str = WINDOW, slide: str = SLI
     )
 
 
-def user_session_windows(events: DataFrame, gap: str = GAP) -> DataFrame:
+def user_session_windows(events: DataFrame) -> DataFrame:
     """M7/A6 streaming twin: 30-min inactivity sessions per user.
     session_window end = last event + gap (Spark semantics; the oracle
     mirrors it as max(ts) + gap)."""
     return (
-        events.groupBy("user_id", F.session_window("ts", gap).alias("sw"))
+        events.groupBy("user_id", F.session_window("ts", GAP).alias("sw"))
         .agg(F.count("*").alias("n_events"))
         .select(
             "user_id",
@@ -188,15 +188,13 @@ ATTRIB_WINDOW_MIN = 30
 ATTRIB_WINDOW = f"{ATTRIB_WINDOW_MIN} minutes"
 
 
-def click_attribution(
-    purchases: DataFrame, clicks: DataFrame, window: str = ATTRIB_WINDOW
-) -> DataFrame:
+def click_attribution(purchases: DataFrame, clicks: DataFrame) -> DataFrame:
     """Event-to-event attribution: each purchase joined to every click by
-    the same user within `window` BEFORE it (inclusive both ends) —
+    the same user within `ATTRIB_WINDOW` BEFORE it (inclusive both ends) —
     the classic stream-stream interval join. Works identically on batch
     and streaming inputs; in streaming, apply_watermark() both sides
     first so the join state is evicted once the watermark passes
-    purchase_ts - window (Spark derives the state bound from the
+    purchase_ts - ATTRIB_WINDOW (Spark derives the state bound from the
     time-range join condition).
 
     Scale shape: ONE equi-join shuffle on user_id with the interval as a
@@ -219,7 +217,7 @@ def click_attribution(
             & (F.col("click_ts") <= F.col("purchase_ts"))
             & (
                 F.col("click_ts")
-                >= F.col("purchase_ts") - F.expr(f"INTERVAL {window}")
+                >= F.col("purchase_ts") - F.expr(f"INTERVAL {ATTRIB_WINDOW}")
             ),
         )
         .select(

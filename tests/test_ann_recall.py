@@ -98,7 +98,7 @@ def test_pq_codebook_shape_and_determinism(spark):
 
 @pytest.mark.parametrize("dim", [32, 128])
 def test_ivf_topk_rejects_wrong_vector_size(spark, dim):
-    """Label centroids are `dim`-d (64 by default): unchecked, a 128-d
+    """Label centroids are 64-d: unchecked, a 128-d
     corpus gets 64-d centroids, every probe dot is NULL and the probe
     silently falls back to label order. Corpus and query vectors of
     another size raise an error naming both sizes instead."""
@@ -119,8 +119,38 @@ def test_ivf_topk_rejects_wrong_vector_size(spark, dim):
     )
     with pytest.raises(Exception, match=f"needs 64-d vectors; query_vec has {dim} dims"):
         ivf_topk(good, queries, k=1, n_probe_labels=2).collect()
-    # At the right size the check passes every vector through: probing
-    # all five lists is the exact search, so each query finds itself.
+    # At 64-d the check passes every vector through: probing all five
+    # lists is the exact search, so each query finds itself.
+    ok = spark.createDataFrame(
+        [(i, i % 5, [rnd.uniform(-1, 1) for _ in range(64)]) for i in range(200)],
+        "vec_id long, label int, embedding array<float>",
+    )
+    ok_queries = ok.filter(F.col("vec_id") < 6).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
     assert ivf_topk(
-        corpus, queries, k=1, n_probe_labels=5, dim=dim
+        ok, ok_queries, k=1, n_probe_labels=5
     ).filter(F.col("query_id") == F.col("vec_id")).count() == 6
+
+
+def test_ivf_topk_centroid_memo_matches_uncached(spark):
+    """cache_key must be a pure memo: same rows with and without it."""
+    emb = load_table(spark, SF_DIRS["t2"], "embeddings")
+    queries = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"),
+    )
+    corpus = emb.select("vec_id", "label", "embedding")
+    plain = ivf_topk(corpus, queries, k=4, n_probe_labels=2)
+    memod = ivf_topk(
+        corpus, queries, k=4, n_probe_labels=2,
+        cache_key=("t_ivf_memo", SF_DIRS["t2"]),
+    )
+    # second memoized call exercises the cache-hit path
+    memod2 = ivf_topk(
+        corpus, queries, k=4, n_probe_labels=2,
+        cache_key=("t_ivf_memo", SF_DIRS["t2"]),
+    )
+    rows = sorted(map(tuple, plain.collect()))
+    assert rows == sorted(map(tuple, memod.collect()))
+    assert rows == sorted(map(tuple, memod2.collect()))

@@ -48,27 +48,6 @@ def test_left_keeps_unmatched_with_nulls(spark):
     assert out[102] is None and len(out) == 4
 
 
-def test_tolerance_discards_stale_matches(spark):
-    left, right = _frames(spark)
-    out = {
-        r.ev: r.px
-        for r in asof_join(
-            left, right, ["k"], "ts", "uts", tolerance="2 HOURS"
-        ).collect()
-    }
-    # ev 200's only update is 10.5h old -> outside 2h tolerance
-    assert out == {100: 1.0, 101: 2.0}
-
-
-def test_matched_ts_exposed(spark):
-    left, right = _frames(spark)
-    rows = asof_join(
-        left, right, ["k"], "ts", "uts", matched_ts_col="m_ts"
-    ).collect()
-    for r in rows:
-        assert r.m_ts <= r.ts
-
-
 def test_duplicate_right_rows_raise(spark):
     """The guard is lazy (in-plan raise_error): building the DataFrame is
     free, executing it surfaces the violation."""

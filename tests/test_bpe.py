@@ -93,11 +93,11 @@ class TestLearn:
 
     def test_early_stop_below_min_count(self, spark):
         # All words distinct with disjoint characters → every pair has
-        # count 1 < min_count=2 → zero merges learned.
+        # count 1 < 2 → zero merges learned.
         docs = spark.createDataFrame(
             [(0, "ab cd ef")], "doc_id bigint, text string"
         )
-        merges, vocab = learn_bpe(docs, n_merges=5, min_count=2)
+        merges, vocab = learn_bpe(docs, n_merges=5)
         assert merges == []
         assert {tuple(r["syms"]) for r in vocab.collect()} == {
             ("a", "b", END_OF_WORD),
@@ -118,8 +118,6 @@ class TestLearn:
         docs = spark.createDataFrame([(0, "a")], "doc_id bigint, text string")
         with pytest.raises(ValueError, match="n_merges"):
             learn_bpe(docs, n_merges=0)
-        with pytest.raises(ValueError, match="min_count"):
-            learn_bpe(docs, n_merges=1, min_count=0)
 
 
 class TestEncode:

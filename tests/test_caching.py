@@ -8,6 +8,7 @@ from types import SimpleNamespace
 import pyspark.sql.functions as F
 
 from koby_s_ai_vector_db_spark.functions import caching
+from koby_s_ai_vector_db_spark.functions.partitioning import spread
 from tests.conftest import SF_DIRS
 
 
@@ -145,3 +146,28 @@ def test_new_application_drops_old_entries():
     assert caching.memo_keys(app_b) == ["k"]
     assert caching.memo_keys(app_a) == []
     assert caching.memo(app_a, "k", build) == 3  # app_b's entry is not app_a's
+
+
+def test_memo_returns_same_plan_object(spark):
+    built = []
+
+    def builder():
+        built.append(1)
+        return spark.createDataFrame([(1, "a")], "id bigint, s string")
+
+    a = caching.memo(spark, ("t_plan_memo", "memo"), builder)
+    b = caching.memo(spark, ("t_plan_memo", "memo"), builder)
+    assert a is b, "memo must return the identical DataFrame object"
+    assert built == [1], "builder must run exactly once per key"
+    # distinct key -> fresh build
+    c = caching.memo(spark, ("t_plan_memo", "memo", 2), builder)
+    assert c is not a and built == [1, 1]
+
+
+def test_evict_application_clears_width_memo(spark):
+    """evict_application must drop the width entries along with every
+    other memo (ADVICE r13)."""
+    spread(spark.range(0, 2000))  # ensure at least one width entry
+    assert any(k[0] == "spread_width" for k in caching.memo_keys(spark))
+    caching.evict_application(spark)
+    assert caching.memo_keys(spark) == []

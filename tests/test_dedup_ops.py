@@ -92,21 +92,6 @@ def test_duplicated_ids_emit_no_self_pairs(spark):
     assert hyperplane_lsh_pairs(emb).collect() == []
 
 
-def test_hyperplane_lsh_rejects_bad_shapes(spark):
-    """Band widths must tile the sketch, and one 64-bit sign mask per
-    plane caps dim at 64 — both are named errors, not asserts that
-    vanish under python -O (a dim > 64 sketch would reuse mask bits)."""
-    import pytest
-
-    emb = spark.createDataFrame(
-        [(1, [1.0] * 65)], "vec_id long, embedding array<float>"
-    )
-    with pytest.raises(ValueError, match="band_bits"):
-        hyperplane_lsh_pairs(emb, n_planes=60, band_bits=8)
-    with pytest.raises(ValueError, match="dim"):
-        hyperplane_lsh_pairs(emb, dim=65)
-
-
 def test_simhash60_finds_exact_copy_and_rejects_bad_bits(spark):
     """60-bit sketch: an exact copy is hamming 0; an unrelated doc is not
     paired; bits must divide into (max_hamming + 2) blocks and fit a
@@ -309,10 +294,13 @@ class TestTfidfCosine:
         from koby_s_ai_vector_db_spark.operators.corpus import tfidf_cosine_pairs
 
         boiler = "standard legal disclaimer footer text repeated verbatim"
+        body = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda"
+        body += " mu nu xi omicron pi"
         rows = [
             # a/b: same distinctive body + shared boilerplate -> high sim
-            (1, "alpha beta gamma delta epsilon zeta " + boiler),
-            (2, "alpha beta gamma delta epsilon eta " + boiler),
+            # (0.77 against the 0.7 threshold)
+            (1, body + " rho " + boiler),
+            (2, body + " sigma " + boiler),
             # c/d: share ONLY the boilerplate -> the overlap must be
             # down-weighted below threshold (idf of corpus-wide shingles
             # is low; with more distinct content dominating the norms)
@@ -322,9 +310,9 @@ class TestTfidfCosine:
         df = spark.createDataFrame(rows, "doc_id long, text string")
         got = {
             (r.doc_id_a, r.doc_id_b): r.sim
-            for r in tfidf_cosine_pairs(df, threshold=0.5).collect()
+            for r in tfidf_cosine_pairs(df).collect()
         }
-        assert (1, 2) in got and got[(1, 2)] >= 0.5
+        assert (1, 2) in got and got[(1, 2)] >= 0.7
         assert (3, 4) not in got
 
     def test_exact_copy_sim_is_one(self, spark):
@@ -349,7 +337,7 @@ class TestTfidfCosine:
         common = "the common header line"
         rows = [(i, f"{common} unique{i} filler{i} word{i}") for i in range(TFIDF_DF_CAP + 20)]
         df = spark.createDataFrame(rows, "doc_id long, text string")
-        got = tfidf_cosine_pairs(df, threshold=0.1).collect()
+        got = tfidf_cosine_pairs(df).collect()
         assert got == []
 
     def test_hash_gram_key_value_equivalent(self, spark):
@@ -357,25 +345,20 @@ class TestTfidfCosine:
         bit-identical pairs to the raw-text key on the fixture corpus —
         the hash only changes the EXCHANGE payload; a divergence would
         mean a collision (probability ~G²/2¹²⁹ for hash128) or a plan
-        bug. Runs on the sf0.001 documents table so real shingle
-        diversity is exercised, not a toy vocabulary."""
+        bug. Runs on the sf0.001 planted-duplicate corpus of
+        `dedup_tfidf_cosine` so real shingle diversity is exercised, not
+        a toy vocabulary."""
         from koby_s_ai_vector_db_spark.operators.corpus import tfidf_cosine_pairs
-        from koby_s_ai_vector_db_spark.sources.tables import load_table
+        from koby_s_ai_vector_db_spark.queries.dedup_q import _docs_dd
 
-        docs = load_table(spark, "/root/testdata/sf0.001", "documents").select(
-            "doc_id", "text"
-        )
-        base = sorted(
-            map(tuple, tfidf_cosine_pairs(docs, threshold=0.3).collect())
-        )
+        docs = _docs_dd(spark, "/root/testdata/sf0.001")
+        base = sorted(map(tuple, tfidf_cosine_pairs(docs).collect()))
         assert base, "fixture corpus must yield at least one pair"
         for variant in (True, "hash128"):
             got = sorted(
                 map(
                     tuple,
-                    tfidf_cosine_pairs(
-                        docs, threshold=0.3, hash_gram_key=variant
-                    ).collect(),
+                    tfidf_cosine_pairs(docs, hash_gram_key=variant).collect(),
                 )
             )
             assert got == base, f"hash_gram_key={variant!r} diverged"
@@ -406,7 +389,7 @@ class TestIncrementalDedup:
         )
         got = {
             r.new_id: (r.verdict, r.base_id)
-            for r in incremental_minhash_dedup(base, new, threshold=0.4).collect()
+            for r in incremental_minhash_dedup(base, new).collect()
         }
         assert got[100] == ("duplicate", 1)
         assert got[101] == ("novel", -1)

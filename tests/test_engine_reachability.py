@@ -23,6 +23,9 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parents[1]
 PKG = ROOT / "koby_s_ai_vector_db_spark"
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
+CALLERS = [ROOT / "__spark_entry__.py", ROOT / "bench.py",
+           *sorted((ROOT / "lifebench").glob("*.py")),
+           *sorted((ROOT / "scripts").glob("*.py"))]
 
 KEEP = {
     "extract_pdf_pages": "the paper's ingest step 1 (pypdf page text); "
@@ -91,10 +94,7 @@ def _scan() -> tuple[dict[str, list[str]], set[str]]:
                 continue  # an import names a definition without using it
             elif not (isinstance(st, ast.Expr) and isinstance(st.value, ast.Constant)):
                 seeds |= _refs(st)  # module-level code runs on import
-    callers = [ROOT / "__spark_entry__.py", ROOT / "bench.py",
-               *sorted((ROOT / "lifebench").glob("*.py")),
-               *sorted((ROOT / "scripts").glob("*.py"))]
-    for p in callers:
+    for p in CALLERS:
         seeds |= _refs(ast.parse(p.read_text()))
     reached: set[str] = set()
     todo = list(seeds)

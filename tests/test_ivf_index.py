@@ -27,7 +27,7 @@ def index_path(spark, tmp_path_factory):
     emb = load_table(spark, SF_DIRS["t1"], "embeddings")
     path = str(tmp_path_factory.mktemp("ivf"))
     stats = build_ivfpq_index(
-        emb.select("vec_id", "embedding"), path, n_lists=N_LISTS, max_iter=3
+        emb.select("vec_id", "embedding"), path, n_lists=N_LISTS
     )
     assert stats["n_vectors"] == emb.count()
     return path
@@ -125,7 +125,7 @@ def test_kmeans_ivf_beats_random_labels(spark, tmp_path_factory):
         ivf_topk(emb.select("vec_id", "label", "embedding"), queries, k=K, n_probe_labels=2)
     )
     path = str(tmp_path_factory.mktemp("ivf_t2"))
-    build_ivfpq_index(emb.select("vec_id", "embedding"), path, n_lists=10, max_iter=3)
+    build_ivfpq_index(emb.select("vec_id", "embedding"), path, n_lists=10)
     learned = pairs(_ivf_flat_search(spark, path, queries, n_probe=2))
 
     rand_recall = len(exact & rand) / len(exact)

@@ -42,7 +42,7 @@ def test_activity_breakdown_matches_oracle(spark, duck):
     from koby_s_ai_vector_db_spark.operators.analytics import activity_breakdown
 
     register_views(duck, SF_DIR)
-    df = activity_breakdown(load_table(spark, SF_DIR, "events"), days=7)
+    df = activity_breakdown(load_table(spark, SF_DIR, "events"))
     assert df.count() > 0
     assert_matches_oracle(df, duck, _ACTIVITY_BREAKDOWN_ORACLE)
 

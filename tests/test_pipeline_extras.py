@@ -105,3 +105,39 @@ def test_fingerprints_short_string_is_empty(spark):
     out = df.select(F.size(fingerprints("text")).alias("n")).collect()
     assert out[0].n == 0
     assert out[1].n >= 0  # executes without slice/substr aliasing
+
+
+def test_gopher_top_frac_fold_equals_brute(spark):
+    """The sorted-run fold must equal the old O(n·distinct) counting
+    expression on adversarial token layouts (ties, singletons, runs at
+    either end, empty-adjacent)."""
+    rows = [
+        (1, "a a a b c"),          # run at the start
+        (2, "x y z z z"),          # run at the end
+        (3, "m n m n m n"),        # tie between two tokens
+        (4, "solo"),               # single token
+        (5, "a b c d e f"),        # all distinct
+        (6, "t t t t t t"),        # one token only
+        (7, "b a b a c c c a b"),  # interleaved, sort regroups
+    ]
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    cols = gopher_repetition("text")
+    got = {
+        r["doc_id"]: (r["tf"], r["bf"])
+        for r in df.select(
+            "doc_id",
+            cols["top_token_frac"].alias("tf"),
+            cols["top_bigram_frac"].alias("bf"),
+        ).collect()
+    }
+    # brute force in Python
+    for doc_id, text in rows:
+        toks = [t for t in text.lower().split() if t]
+        top = max(toks.count(t) for t in set(toks))
+        exp_tf = round(top / len(toks), 6)
+        if len(toks) >= 2:
+            bgs = [" ".join(toks[i : i + 2]) for i in range(len(toks) - 1)]
+            exp_bf = round(max(bgs.count(b) for b in set(bgs)) / len(bgs), 6)
+        else:
+            exp_bf = 0.0
+        assert got[doc_id] == (exp_tf, exp_bf), (doc_id, got[doc_id])

@@ -292,7 +292,7 @@ def test_simhash_blocked_pairs_equal_bruteforce(spark, data, n_docs, max_hamming
     df = spark.createDataFrame(docs, "doc_id long, text string")
     sigs = {
         r._id: r.sh
-        for r in simhash_table(df, "doc_id", "text", bits=60).collect()
+        for r in simhash_table(df, bits=60).collect()
     }
     expected = sorted(
         (a, b, bin(sigs[a] ^ sigs[b]).count("1"))
@@ -303,7 +303,7 @@ def test_simhash_blocked_pairs_equal_bruteforce(spark, data, n_docs, max_hamming
     got = sorted(
         (r.doc_id_a, r.doc_id_b, r.hamming)
         for r in simhash_near_dup_pairs(
-            df, "doc_id", "text", max_hamming=max_hamming, bits=60
+            df, max_hamming=max_hamming, bits=60
         ).collect()
     )
     assert got == expected

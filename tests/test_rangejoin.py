@@ -49,22 +49,6 @@ def test_every_event_assigned_exactly_once(spark):
     assert out.select("event_id").distinct().count() == events.count()
 
 
-def test_salted_join_is_row_identical(spark):
-    """Hot-key salting must not change results — intervals replicate,
-    points scatter, same (point, interval) matches come out."""
-    events, sessions = _inputs(spark)
-    base = range_join(
-        events, sessions, ["user_id"], "ts_us",
-        "session_start_us", "session_end_us", 6 * 3600 * 1_000_000,
-    )
-    salted = range_join(
-        events, sessions, ["user_id"], "ts_us",
-        "session_start_us", "session_end_us", 6 * 3600 * 1_000_000, n_salt=8,
-    )
-    assert salted.columns == base.columns
-    assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, base.collect()))
-
-
 def test_overlapping_intervals_yield_multiple_rows(spark):
     left = spark.createDataFrame([(1, 50)], "k bigint, p bigint")
     iv = spark.createDataFrame(

@@ -59,7 +59,6 @@ class TestDsir:
                 target=F.col("src") == "tgt",
                 n_buckets=B,
                 seed=seed,
-                alpha=alpha,
             ).collect()
         }
 
@@ -95,8 +94,6 @@ class TestDsir:
         docs = _docs(spark, [(0, "a b", "tgt")])
         with pytest.raises(ValueError, match="n_buckets"):
             dsir_scores(docs, target=F.lit(True), n_buckets=0)
-        with pytest.raises(ValueError, match="alpha"):
-            dsir_scores(docs, target=F.lit(True), alpha=0.0)
 
 
 class TestPerplexity:
@@ -170,13 +167,6 @@ class TestPerplexity:
         # head ppl <= middle ppl <= tail ppl pointwise by construction
         by = {b: [r["ppl"] for r in out if r["bucket"] == b] for b in buckets}
         assert max(by["head"]) <= min(by["tail"])
-        with pytest.raises(ValueError, match="head_q"):
-            perplexity_buckets(scored, head_q=0.7, middle_q=0.3)
-
-    def test_degenerate_args(self, spark):
-        docs = _docs(spark, [(0, "a b", "x")])
-        with pytest.raises(ValueError, match="alpha"):
-            lm_perplexity(docs, docs, alpha=-1.0)
 
 
 class TestTokenBudgetMix:
@@ -193,7 +183,7 @@ class TestTokenBudgetMix:
         docs = self._corpus(spark)  # ~670 tokens per lang
         # en target 2000 (epochs ~3), de target 300 (epochs ~0.45), fr w=0
         mix = token_budget_mix(
-            docs, {"en": 0.8, "de": 0.12}, 2500, strata_col="lang"
+            docs, {"en": 0.8, "de": 0.12}, 2500
         ).collect()
         langs = {r["lang"] for r in mix}
         assert langs == {"en", "de"}  # fr dropped
@@ -207,7 +197,7 @@ class TestTokenBudgetMix:
         summary = {
             r["lang"]: r
             for r in token_budget_mix_summary(
-                docs, {"en": 0.6, "de": 0.4}, 3000, strata_col="lang"
+                docs, {"en": 0.6, "de": 0.4}, 3000
             ).collect()
         }
         for lang in ("en", "de"):
@@ -229,13 +219,13 @@ class TestTokenBudgetMix:
         a = sorted(
             map(
                 tuple,
-                token_budget_mix(docs, {"en": 1.0}, 500, strata_col="lang").collect(),
+                token_budget_mix(docs, {"en": 1.0}, 500).collect(),
             )
         )
         b = sorted(
             map(
                 tuple,
-                token_budget_mix(docs, {"en": 1.0}, 500, strata_col="lang").collect(),
+                token_budget_mix(docs, {"en": 1.0}, 500).collect(),
             )
         )
         assert a == b
@@ -249,13 +239,13 @@ class TestTokenBudgetMix:
             "doc_id bigint, text string, lang string",
         )
         mix = token_budget_mix(
-            docs, {"en": 0.5, "de": 0.5}, 100, strata_col="lang"
+            docs, {"en": 0.5, "de": 0.5}, 100
         ).collect()
         assert {r["lang"] for r in mix} == {"de"}
         summary = {
             r["lang"]: r
             for r in token_budget_mix_summary(
-                docs, {"en": 0.5, "de": 0.5}, 100, strata_col="lang"
+                docs, {"en": 0.5, "de": 0.5}, 100
             ).collect()
         }
         assert summary["en"]["avail_tokens"] == 0
@@ -266,11 +256,11 @@ class TestTokenBudgetMix:
     def test_degenerate_args(self, spark):
         docs = self._corpus(spark, n=3)
         with pytest.raises(ValueError, match="token_budget"):
-            token_budget_mix(docs, {"en": 1.0}, 0, strata_col="lang")
+            token_budget_mix(docs, {"en": 1.0}, 0)
         with pytest.raises(ValueError, match="non-empty"):
-            token_budget_mix(docs, {}, 100, strata_col="lang")
+            token_budget_mix(docs, {}, 100)
         with pytest.raises(ValueError, match="negative"):
-            token_budget_mix(docs, {"en": -0.5}, 100, strata_col="lang")
+            token_budget_mix(docs, {"en": -0.5}, 100)
 
 
 class TestPretrainPipeline:

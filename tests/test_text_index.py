@@ -99,8 +99,11 @@ def test_incremental_append_equals_full_build(spark, tmp_path_factory):
     incr = str(tmp_path_factory.mktemp("textidx") / "incr")
     full = str(tmp_path_factory.mktemp("textidx") / "full")
     build_text_index(docs.filter(F.col("doc_id") % 2 == 0), incr)
-    app = append_to_text_index(docs.filter(F.col("doc_id") % 2 == 1), incr)
-    assert app["n_appended"] == docs.filter("doc_id % 2 = 1").count()
+    append_to_text_index(docs.filter(F.col("doc_id") % 2 == 1), incr)
+    postings = spark.read.parquet(f"{incr}/postings")
+    assert postings.filter("seg = 1").select("id").distinct().count() == (
+        docs.filter("doc_id % 2 = 1").count()
+    )
     build_text_index(docs, full)
     a = search_text_index(spark, incr, _queries(spark), k=10)
     b = search_text_index(spark, full, _queries(spark), k=10)

@@ -277,15 +277,16 @@ def test_argument_validation(spark):
         pack_sequences(docs, seq_len=4, n_shards=0)
 
 
-def test_custom_id_col_composes(spark):
-    """A non-default id_col/text_col flows through to the spans output."""
+def test_spans_shared_across_docs_hand_computed(spark):
+    """A 4-token run shared by two documents is one maximal span in each,
+    at its own token offsets."""
     docs = spark.createDataFrame(
         [(1, "a b c d e f"), (2, "x y a b c d z")],
-        "page_id bigint, body string",
+        "doc_id bigint, text string",
     )
-    spans = repeated_substring_spans(docs, k=3, id_col="page_id", text_col="body")
-    assert spans.columns[0] == "page_id"
-    got = {(r.page_id, r.span_start, r.span_end) for r in spans.collect()}
+    spans = repeated_substring_spans(docs, k=3)
+    assert spans.columns[0] == "doc_id"
+    got = {(r.doc_id, r.span_start, r.span_end) for r in spans.collect()}
     assert got == {(1, 1, 4), (2, 3, 6)}
 
 
