@@ -38,6 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from koby_s_ai_vector_db_spark.sources.tables import local_frame
+
 
 class PCAModel(NamedTuple):
     mean: np.ndarray  # (d,)
@@ -114,8 +116,8 @@ def fit_pca(emb: DataFrame, k: int = 8) -> PCAModel:
 def project_pca(emb: DataFrame, model: PCAModel) -> DataFrame:
     """Map-side projection (v - mean) @ W via a broadcast 1-row model
     table — no literal-matrix expression, no shuffle."""
-    spark = emb.sparkSession
-    mdf = spark.createDataFrame(
+    mdf = local_frame(
+        emb.sparkSession,
         [(model.mean.tolist(), [c.tolist() for c in model.components.T])],
         "m array<double>, w array<array<double>>",
     )

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from koby_s_ai_vector_db_spark.functions import vectors
+from koby_s_ai_vector_db_spark.sources.tables import local_frame
 
 DIM = 64  # fixture embedding dimensionality
 M = 8  # subspaces
@@ -87,14 +88,14 @@ def pq_codebook() -> list[list[list[float]]]:
 def codebook_df(spark) -> DataFrame:
     """The codebook as a 1-row DataFrame — the index's shipped artifact.
 
-    Shipped as DATA (createDataFrame -> broadcast join), never as a SQL
+    Shipped as DATA (a `local_frame` -> broadcast join), never as a SQL
     literal: a 1024-double nested-array literal embedded in an expression
     makes whole-stage codegen emit (and Janino recompile, erratically
     cache-missing) a multi-second giant method — measured 0.4s vs 2-3s per
     run on the same 2k-row scan. It is also the honest 100 TB shape: FAISS
     ships trained codebooks to workers as broadcast state, not as query
     text."""
-    return spark.createDataFrame([(pq_codebook(),)], CODEBOOK_SCHEMA)
+    return local_frame(spark, [(pq_codebook(),)], CODEBOOK_SCHEMA)
 
 
 def cb_literal_duckdb() -> str:

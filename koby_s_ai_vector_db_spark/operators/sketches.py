@@ -344,11 +344,12 @@ def qh_quantiles(
         "n", F.sum("cnt").over(w_all)
     )
     from koby_s_ai_vector_db_spark.functions.caching import memo
+    from koby_s_ai_vector_db_spark.sources.tables import local_frame
 
     qdf = memo(
         spark,
         ("qh_quantiles_qdf", tuple(qs)),
-        lambda: spark.createDataFrame([(float(q),) for q in qs], "q double"),
+        lambda: local_frame(spark, [(float(q),) for q in qs], "q double"),
     )
     rank = F.expr("CAST(ceil(q * n) AS BIGINT)")
     return (

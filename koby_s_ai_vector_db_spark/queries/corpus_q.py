@@ -30,7 +30,7 @@ from koby_s_ai_vector_db_spark.operators.corpus import (
     vocab_zipf,
 )
 from koby_s_ai_vector_db_spark.registry import register
-from koby_s_ai_vector_db_spark.sources.tables import load_table
+from koby_s_ai_vector_db_spark.sources.tables import load_table, local_frame
 
 # Query set: fixture-vocabulary terms (same convention as fusion_q.QUERIES;
 # q2 is all out-of-vocabulary and must return zero rows).
@@ -54,14 +54,12 @@ SELECT CAST(query_id AS BIGINT) AS query_id, doc_id, score, rank FROM base
 
 def bm25_queries_df(spark: SparkSession) -> DataFrame:
     """The 4-row literal BM25 query table, plan-memoized per application:
-    five query families rebuild it per call and `createDataFrame` on a
-    literal costs ~130 ms of driver work (functions/caching.memo)."""
+    five query families rebuild it per call and building a literal frame
+    costs driver work (functions/caching.memo)."""
     return memo(
         spark,
         "bm25_queries_df",
-        lambda: spark.createDataFrame(
-            BM25_QUERIES, "query_id bigint, query_text string"
-        ),
+        lambda: local_frame(spark, BM25_QUERIES, "query_id bigint, query_text string"),
     )
 
 

@@ -34,6 +34,7 @@ from koby_s_ai_vector_db_spark.sources.tables import (
     FEEDBACK_SQL_DUCKDB,
     feedback_view,
     load_table,
+    local_frame,
 )
 
 QUERIES = [
@@ -68,9 +69,7 @@ def _inputs(spark: SparkSession, sf_dir: str):
     qtext = memo(
         spark,
         "fusion_qtext",
-        lambda: spark.createDataFrame(
-            QUERIES, "query_id bigint, query_text string"
-        ),
+        lambda: local_frame(spark, QUERIES, "query_id bigint, query_text string"),
     )
     qvec = emb.filter(F.col("vec_id") < NQ).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")

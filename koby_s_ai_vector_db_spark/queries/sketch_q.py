@@ -24,7 +24,7 @@ from koby_s_ai_vector_db_spark.operators.sketches import (
     qh_oracle_cte,
 )
 from koby_s_ai_vector_db_spark.registry import register
-from koby_s_ai_vector_db_spark.sources.tables import load_table
+from koby_s_ai_vector_db_spark.sources.tables import load_table, local_frame
 
 _HLL_ORACLE = f"""
 WITH hll_in AS (
@@ -199,7 +199,7 @@ def a20_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     qdf = memo(
         spark,
         ("qh_qdf", tuple(QH_QS)),
-        lambda: spark.createDataFrame([(float(q),) for q in QH_QS], "q double"),
+        lambda: local_frame(spark, [(float(q),) for q in QH_QS], "q double"),
     )
     exact = (
         ranked.join(F.broadcast(qdf))
@@ -324,7 +324,7 @@ def a22_hll_daily_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = memo(
         spark,
         "a22_labels",
-        lambda: spark.createDataFrame([("MERGED",), ("GLOBAL",)], "grp string"),
+        lambda: local_frame(spark, [("MERGED",), ("GLOBAL",)], "grp string"),
     )
     exact_all = labels.crossJoin(
         F.broadcast(ev.agg(F.countDistinct("user_id").alias("exact_distinct")))

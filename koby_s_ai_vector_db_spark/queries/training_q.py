@@ -26,7 +26,7 @@ from koby_s_ai_vector_db_spark.operators.substrings import (
     repeated_substring_spans,
 )
 from koby_s_ai_vector_db_spark.registry import register
-from koby_s_ai_vector_db_spark.sources.tables import load_table
+from koby_s_ai_vector_db_spark.sources.tables import load_table, local_frame
 
 # 8 tokens ≈ the 50-token published threshold scaled to the 31-word
 # fixture vocabulary: random 8-grams (31^8 combinations) never collide,
@@ -125,7 +125,8 @@ def bpe_train_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return memo(
         spark,
         ("bpe_train_df", sf_dir),
-        lambda: spark.createDataFrame(
+        lambda: local_frame(
+            spark,
             merges,
             "rank int, left string, right string, merged string, pair_count bigint",
         ),

@@ -18,6 +18,13 @@ def get_spark(app_name: str = "koby-spark-engine", shuffle_partitions: int | Non
     Master resolves from SPARK_GRAFT_CPUS (driver contract) or local[*].
     AQE is on so shuffle partition counts coalesce at runtime and skewed
     joins split automatically — both essential at 100 TB, free locally.
+
+    DataFrame debugging is off: with it on (pyspark's default), every
+    ``pyspark.sql.functions`` call and Column method walks the Python
+    stack and sends its call site to the JVM, ~10 py4j round trips per
+    call. pyspark reads the setting once per process, from the first
+    active session, so a session the caller built itself (the external
+    driver's ``entry(spark)``) keeps its own setting.
     """
     # Python workers (pandas_udf / mapInPandas) import this package by name
     # at deserialization time, resolving against the worker's PYTHONPATH —
@@ -45,6 +52,7 @@ def get_spark(app_name: str = "koby-spark-engine", shuffle_partitions: int | Non
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")

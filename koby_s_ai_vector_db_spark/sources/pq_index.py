@@ -39,11 +39,12 @@ Spark-first, the index IS a storage layout:
 One table, two prunings: column pruning separates WHAT is scanned (codes
 vs vectors), partition pruning WHICH rows (probed lists). FAISS's
 index-factory strings ``IVFn,Flat``, ``PQm`` and ``IVFn,PQm`` name the same
-family. An index stores one vector element type: appends cast to the type
-the build wrote. At 100 TB the probe win is exactly the pgvector one: a
-probe touches n_probe/n_lists of the corpus. Builds and appends are the
-only writes: centroid drift and removed vectors are handled the ivfflat
-way, by a rebuild (the reference rebuilds its FAISS file per ingest).
+family. An index stores one vector element type: the build records it in
+the centroids sidecar and appends cast to it. At 100 TB the probe win is
+exactly the pgvector one: a probe touches n_probe/n_lists of the corpus.
+Builds and appends are the only writes: centroid drift and removed
+vectors are handled the ivfflat way, by a rebuild (the reference rebuilds
+its FAISS file per ingest).
 
 The deterministic md5-derived codebook (operators/pq.py) is persisted as
 data rather than recomputed: search reads whatever codebook the build
@@ -69,6 +70,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from koby_s_ai_vector_db_spark.functions.caching import memo
 from koby_s_ai_vector_db_spark.functions.partitioning import spread
 from koby_s_ai_vector_db_spark.functions.vectors import dot, l2_normalize, mean_vector
 from koby_s_ai_vector_db_spark.operators.pq import (
@@ -80,11 +82,45 @@ from koby_s_ai_vector_db_spark.operators.pq import (
     pq_distance_table,
     pq_encode,
 )
+from koby_s_ai_vector_db_spark.sources.tables import local_frame
 
 DATA_SUBDIR = "data"
 CODEBOOK_SUBDIR = "codebook"
 CENTROIDS_SUBDIR = "centroids"
-CENTROIDS_SCHEMA = "list int, centroid array<double>"
+# ``elem_type`` is the element type ``data.vec`` was written with, and
+# appends cast to it. One value per index, so it is the centroids'
+# partition directory (``elem_type=float``): recorded at no cost in bytes.
+CENTROIDS_SCHEMA = "list int, centroid array<double>, elem_type string"
+
+
+def _read_centroids(spark: SparkSession, path: str) -> DataFrame:
+    return spark.read.schema(CENTROIDS_SCHEMA).parquet(f"{path}/{CENTROIDS_SUBDIR}")
+
+
+def _elem_type(centroids: DataFrame, path: str, written: str | None = None) -> str:
+    """The element type of the stored ``vec`` of the index at ``path``,
+    from one row of its centroids sidecar (read under CENTROIDS_SCHEMA),
+    memoized on the sidecar's file list: only a rebuild rewrites it, with
+    new file names. The build passes the type it has ``written``, so an
+    append later in the same application reads nothing. A sidecar written
+    without the column reads as NULL and is refused."""
+
+    def read() -> str:
+        if written is not None:
+            return written
+        row = centroids.select("elem_type").head()
+        if row is None or row["elem_type"] is None:
+            raise ValueError(
+                f"{path}/{CENTROIDS_SUBDIR} has no elem_type — index built "
+                "by an older build_ivfpq_index; rebuild it"
+            )
+        return row["elem_type"]
+
+    return memo(
+        centroids.sparkSession,
+        ("pqidx_elem_type", tuple(sorted(centroids.inputFiles()))),
+        read,
+    )
 
 
 def build_ivfpq_index(
@@ -141,12 +177,13 @@ def build_ivfpq_index(
             F.col("embedding").alias("vec"),
             "_nv",
         )
-        centroids = spark.createDataFrame(
+        centroids = local_frame(
+            spark,
             [
                 (i, [float(x) for x in ctr])
                 for i, ctr in enumerate(model.clusterCenters())
             ],
-            schema=CENTROIDS_SCHEMA,
+            "list int, centroid array<double>",
         )
 
     data = labeled.join(F.broadcast(codebook_df(spark))).select(
@@ -157,10 +194,15 @@ def build_ivfpq_index(
     data.repartition("list").write.mode("overwrite").partitionBy("list").parquet(
         f"{path}/{DATA_SUBDIR}"
     )
-    centroids.coalesce(1).write.mode("overwrite").parquet(
-        f"{path}/{CENTROIDS_SUBDIR}"
-    )
-    n_vectors = spark.read.parquet(f"{path}/{DATA_SUBDIR}").count()
+    elem_type = c.schema["embedding"].dataType.elementType.simpleString()
+    centroids.withColumn("elem_type", F.lit(elem_type)).coalesce(1).write.mode(
+        "overwrite"
+    ).partitionBy("elem_type").parquet(f"{path}/{CENTROIDS_SUBDIR}")
+    # Seed the append's memo: an append later in this application reads
+    # no sidecar row.
+    _elem_type(_read_centroids(spark, path), path, written=elem_type)
+    # The partition column alone, declared: no schema-inference job.
+    n_vectors = spark.read.schema("list int").parquet(f"{path}/{DATA_SUBDIR}").count()
     return {"n_vectors": n_vectors, "path": path}
 
 
@@ -179,16 +221,15 @@ def append_to_ivfpq_index(new_corpus: DataFrame, path: str) -> dict:
     the rebuild knob stays `build_ivfpq_index`, exactly like pgvector's
     REINDEX guidance.
 
-    ``vec`` is cast to the element type the index already stores, so a
-    double batch appended to a float index writes float files: one
-    directory, one file schema. Codes and the assignment use the cast
-    vector, the one the re-rank reads back. Returns {"path"}."""
+    ``vec`` is cast to the element type the index already stores (the
+    centroids sidecar's ``elem_type``, so no schema-inference read of
+    ``data``), and a double batch appended to a float index writes float
+    files: one directory, one file schema. Codes and the assignment use
+    the cast vector, the one the re-rank reads back. Returns {"path"}."""
     spark = new_corpus.sparkSession
     cbdf = spark.read.schema(CODEBOOK_SCHEMA).parquet(f"{path}/{CODEBOOK_SUBDIR}")
-    centroids = spark.read.schema(CENTROIDS_SCHEMA).parquet(
-        f"{path}/{CENTROIDS_SUBDIR}"
-    )
-    stored = spark.read.parquet(f"{path}/{DATA_SUBDIR}").schema["vec"].dataType
+    centroids = _read_centroids(spark, path)
+    stored = f"array<{_elem_type(centroids, path)}>"
 
     c = spread(new_corpus).select(
         F.col("vec_id"), dim_checked("embedding").cast(stored).alias("vec")
@@ -229,9 +270,7 @@ def ivfpq_index_search(
     a search runs one small job; callers with a fixed query set memoize
     the returned plan (functions/caching.py).
     Returns (query_id, vec_id, sim, rank)."""
-    centroids = spark.read.schema(CENTROIDS_SCHEMA).parquet(
-        f"{path}/{CENTROIDS_SUBDIR}"
-    )
+    centroids = _read_centroids(spark, path)
     data = spark.read.parquet(f"{path}/{DATA_SUBDIR}")
 
     q = queries.select(

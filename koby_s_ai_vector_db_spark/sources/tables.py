@@ -10,6 +10,8 @@ vectors and metadata live in the same table.
 
 from __future__ import annotations
 
+from typing import Iterable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -78,6 +80,29 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
     return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
+
+
+def local_frame(spark: SparkSession, rows: Iterable[tuple], schema: str) -> DataFrame:
+    """A driver-side constant table (query texts, quantile levels, a
+    codebook, centroids, a learned model) as a DataFrame of the declared
+    DDL ``schema``, built from a ``pyarrow.Table``.
+
+    pyspark turns an Arrow table under
+    ``spark.sql.execution.arrow.localRelationThreshold`` into a
+    ``LocalRelation``: the rows live in the plan and scanning them starts
+    no Python worker. ``spark.createDataFrame(<python list>)`` instead
+    parallelizes a Python RDD (``LogicalRDD``), and the first such scan in
+    a process forks the ``pyspark.daemon`` worker."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(schema)
+    names = struct.fieldNames()
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(struct)
+    )
+    return spark.createDataFrame(table, struct)
 
 
 # ---------------------------------------------------------------------------

@@ -327,14 +327,17 @@ class TestTfidfCosine:
         assert got == {(1, 2): 1.0}
 
     def test_df_cap_drops_viral_shingles(self, spark):
-        """A shingle present in EVERY doc of a >cap corpus contributes
-        nothing: two docs sharing only that shingle produce no pair."""
+        """Shingles present in EVERY doc of a >cap corpus contribute
+        nothing: docs sharing only those shingles produce no pair. The
+        shared header is long enough that, with the cap removed, every
+        pair would score ~0.79 >= TFIDF_THRESHOLD (298 header shingles at
+        idf 1 against 3 unique ones at idf ~5.1)."""
         from koby_s_ai_vector_db_spark.operators.corpus import (
             TFIDF_DF_CAP,
             tfidf_cosine_pairs,
         )
 
-        common = "the common header line"
+        common = " ".join(f"header{j}" for j in range(300))
         rows = [(i, f"{common} unique{i} filler{i} word{i}") for i in range(TFIDF_DF_CAP + 20)]
         df = spark.createDataFrame(rows, "doc_id long, text string")
         got = tfidf_cosine_pairs(df).collect()

@@ -264,6 +264,40 @@ def test_incremental_append_equals_full_build(spark, tmp_path_factory):
         assert vid == qid and sim == pytest.approx(1.0, abs=1e-6)
 
 
+def test_append_reads_element_type_from_the_sidecar(spark, tmp_path):
+    """The append casts to the element type the build recorded in the
+    centroids sidecar. In a copy of the index (a file list no memo has
+    seen) it reads the type from there; a sidecar without it, as an older
+    build wrote, is refused by name."""
+    import glob
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    corpus = _vectors(spark, 64)
+    built, copy = str(tmp_path / "built"), str(tmp_path / "copy")
+    build_ivfpq_index(
+        corpus.withColumn("embedding", F.col("embedding").cast("array<double>")),
+        built, list_col="label",
+    )
+    shutil.copytree(built, copy)
+    append_to_ivfpq_index(corpus.withColumn("vec_id", F.col("vec_id") + 100), copy)
+    files = glob.glob(copy + "/data/**/*.parquet", recursive=True)
+    assert {str(pq.read_schema(f).field("vec").type.value_type) for f in files} == {
+        "double"
+    }
+
+    old = str(tmp_path / "old")
+    shutil.copytree(built, old)
+    spark.read.parquet(old + "/centroids").select("list", "centroid").write.parquet(
+        old + "/centroids_old"
+    )
+    shutil.rmtree(old + "/centroids")
+    shutil.move(old + "/centroids_old", old + "/centroids")
+    with pytest.raises(ValueError, match="centroids has no elem_type"):
+        append_to_ivfpq_index(corpus, old)
+
+
 def test_learned_kmeans_build_recall(spark, kmeans_path):
     """The k-means build path (no list_col) is engine-specific float
     iteration — recall-tested like IVF-flat: searching the index must

@@ -8,6 +8,7 @@ import os
 import shutil
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from koby_s_ai_vector_db_spark.operators.corpus import bm25_rank
@@ -260,11 +261,21 @@ def _input_records(spark, group: str, fn) -> int:
         if not (grp.isDefined() and grp.get() == group):
             continue
         sit = j.stageIds().iterator()
+        missing = 0
         while sit.hasNext():
             sid = sit.next()
             if sid not in seen:
                 seen.add(sid)
-                total += store.lastStageAttempt(sid).inputRecords()
+                try:
+                    total += store.lastStageAttempt(sid).inputRecords()
+                except Py4JJavaError as e:
+                    if "NoSuchElementException" not in str(e.java_exception):
+                        raise
+                    missing += 1
+        # Trimming to spark.ui.retainedStages drops skipped stages first
+        # (they never ran, so read no records); a long session trims the
+        # job's own skipped stages. Any other missing stage is an error.
+        assert missing <= j.numSkippedStages(), (missing, j.numSkippedStages())
     return total
 
 
