@@ -50,8 +50,9 @@ The deterministic md5-derived codebook (operators/pq.py) is persisted as
 data rather than recomputed: search reads whatever codebook the build
 wrote, so a learned per-subspace k-means codebook (FAISS
 ProductQuantizer training) drops in without touching the search path.
-The fixed-schema sidecars are read with a declared schema: a
-schema-less parquet read runs one schema-inference job. Every
+The fixed-schema sidecars are read with a declared schema, and
+``data`` under the types the centroids sidecar records: a schema-less
+parquet read runs one schema-inference job. Every
 build, append and search rejects a vector that is not ``pq.DIM``-d with
 an error naming both sizes, checked inside its projection (no extra job).
 
@@ -87,38 +88,44 @@ from koby_s_ai_vector_db_spark.sources.tables import local_frame
 DATA_SUBDIR = "data"
 CODEBOOK_SUBDIR = "codebook"
 CENTROIDS_SUBDIR = "centroids"
-# ``elem_type`` is the element type ``data.vec`` was written with, and
-# appends cast to it. One value per index, so it is the centroids'
-# partition directory (``elem_type=float``): recorded at no cost in bytes.
-CENTROIDS_SCHEMA = "list int, centroid array<double>, elem_type string"
+# ``elem_type`` and ``id_type`` are the types ``data.vec``'s elements and
+# ``data.vec_id`` were written with; appends cast to them, and search reads
+# ``data`` under the schema they give. One value each per index, so they
+# are the centroids' partition directories (``elem_type=float/
+# id_type=bigint``): recorded at no cost in bytes.
+CENTROIDS_SCHEMA = "list int, centroid array<double>, elem_type string, id_type string"
 
 
 def _read_centroids(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(CENTROIDS_SCHEMA).parquet(f"{path}/{CENTROIDS_SUBDIR}")
 
 
-def _elem_type(centroids: DataFrame, path: str, written: str | None = None) -> str:
-    """The element type of the stored ``vec`` of the index at ``path``,
-    from one row of its centroids sidecar (read under CENTROIDS_SCHEMA),
-    memoized on the sidecar's file list: only a rebuild rewrites it, with
-    new file names. The build passes the type it has ``written``, so an
-    append later in the same application reads nothing. A sidecar written
-    without the column reads as NULL and is refused."""
+def _stored_types(
+    centroids: DataFrame, path: str, written: tuple[str, str] | None = None
+) -> tuple[str, str]:
+    """(elem_type, id_type) of the stored ``vec`` and ``vec_id`` of the
+    index at ``path``, from one row of its centroids sidecar (read under
+    CENTROIDS_SCHEMA), memoized on the sidecar's file list: only a rebuild
+    rewrites it, with new file names. The build passes the types it has
+    ``written``, so an append or search later in the same application
+    reads nothing. A sidecar written without a column reads it as NULL
+    and is refused."""
 
-    def read() -> str:
+    def read() -> tuple[str, str]:
         if written is not None:
             return written
-        row = centroids.select("elem_type").head()
-        if row is None or row["elem_type"] is None:
-            raise ValueError(
-                f"{path}/{CENTROIDS_SUBDIR} has no elem_type — index built "
-                "by an older build_ivfpq_index; rebuild it"
-            )
-        return row["elem_type"]
+        row = centroids.select("elem_type", "id_type").head()
+        for col in ("elem_type", "id_type"):
+            if row is None or row[col] is None:
+                raise ValueError(
+                    f"{path}/{CENTROIDS_SUBDIR} has no {col} — index built "
+                    "by an older build_ivfpq_index; rebuild it"
+                )
+        return row["elem_type"], row["id_type"]
 
     return memo(
         centroids.sparkSession,
-        ("pqidx_elem_type", tuple(sorted(centroids.inputFiles()))),
+        ("pqidx_stored_types", tuple(sorted(centroids.inputFiles()))),
         read,
     )
 
@@ -194,13 +201,18 @@ def build_ivfpq_index(
     data.repartition("list").write.mode("overwrite").partitionBy("list").parquet(
         f"{path}/{DATA_SUBDIR}"
     )
-    elem_type = c.schema["embedding"].dataType.elementType.simpleString()
-    centroids.withColumn("elem_type", F.lit(elem_type)).coalesce(1).write.mode(
-        "overwrite"
-    ).partitionBy("elem_type").parquet(f"{path}/{CENTROIDS_SUBDIR}")
-    # Seed the append's memo: an append later in this application reads
+    types = (
+        c.schema["embedding"].dataType.elementType.simpleString(),
+        c.schema["vec_id"].dataType.simpleString(),
+    )
+    centroids.withColumn("elem_type", F.lit(types[0])).withColumn(
+        "id_type", F.lit(types[1])
+    ).coalesce(1).write.mode("overwrite").partitionBy("elem_type", "id_type").parquet(
+        f"{path}/{CENTROIDS_SUBDIR}"
+    )
+    # Seed the memo: an append or search later in this application reads
     # no sidecar row.
-    _elem_type(_read_centroids(spark, path), path, written=elem_type)
+    _stored_types(_read_centroids(spark, path), path, written=types)
     # The partition column alone, declared: no schema-inference job.
     n_vectors = spark.read.schema("list int").parquet(f"{path}/{DATA_SUBDIR}").count()
     return {"n_vectors": n_vectors, "path": path}
@@ -221,18 +233,20 @@ def append_to_ivfpq_index(new_corpus: DataFrame, path: str) -> dict:
     the rebuild knob stays `build_ivfpq_index`, exactly like pgvector's
     REINDEX guidance.
 
-    ``vec`` is cast to the element type the index already stores (the
-    centroids sidecar's ``elem_type``, so no schema-inference read of
-    ``data``), and a double batch appended to a float index writes float
-    files: one directory, one file schema. Codes and the assignment use
-    the cast vector, the one the re-rank reads back. Returns {"path"}."""
+    ``vec`` and ``vec_id`` are cast to the types the index already stores
+    (the centroids sidecar's ``elem_type`` and ``id_type``, so no
+    schema-inference read of ``data``), and a double batch appended to a
+    float index writes float files: one directory, one file schema. Codes
+    and the assignment use the cast vector, the one the re-rank reads
+    back. Returns {"path"}."""
     spark = new_corpus.sparkSession
     cbdf = spark.read.schema(CODEBOOK_SCHEMA).parquet(f"{path}/{CODEBOOK_SUBDIR}")
     centroids = _read_centroids(spark, path)
-    stored = f"array<{_elem_type(centroids, path)}>"
+    elem_type, id_type = _stored_types(centroids, path)
 
     c = spread(new_corpus).select(
-        F.col("vec_id"), dim_checked("embedding").cast(stored).alias("vec")
+        F.col("vec_id").cast(id_type).alias("vec_id"),
+        dim_checked("embedding").cast(f"array<{elem_type}>").alias("vec"),
     ).withColumn("_nv", l2_normalize("vec"))
     w = Window.partitionBy("vec_id").orderBy(F.desc("csim"), F.asc("list"))
     assigned = (
@@ -267,11 +281,15 @@ def ivfpq_index_search(
     ``shortlist=None`` every row of the probed lists is a candidate
     (IVF-flat: the codebook is never read). The bounded probe-id set is
     collected and pushed into the scan as ``list IN (...)``, so building
-    a search runs one small job; callers with a fixed query set memoize
+    a search runs one small job (``data`` is read under the schema the
+    centroids sidecar records); callers with a fixed query set memoize
     the returned plan (functions/caching.py).
     Returns (query_id, vec_id, sim, rank)."""
     centroids = _read_centroids(spark, path)
-    data = spark.read.parquet(f"{path}/{DATA_SUBDIR}")
+    elem_type, id_type = _stored_types(centroids, path)
+    data = spark.read.schema(
+        f"list int, vec_id {id_type}, codes array<int>, vec array<{elem_type}>"
+    ).parquet(f"{path}/{DATA_SUBDIR}")
 
     q = queries.select(
         F.col("query_id"), l2_normalize(dim_checked("query_vec")).alias("qv")

@@ -18,7 +18,7 @@ from koby_s_ai_vector_db_spark.queries.corpus_q import (
     SAMPLE_RATES,
 )
 from koby_s_ai_vector_db_spark.sources.tables import load_table
-from tests.conftest import SF_DIRS
+from tests.conftest import SF_DIRS, _q
 
 SF_DIR = SF_DIRS["t2"]
 
@@ -213,3 +213,45 @@ class TestVocabZipf:
         )
         row = vocab_zipf(single).collect()[0]
         assert (row["zipf_slope"], row["r2"]) == (0.0, 0.0)
+
+
+def test_decontaminate_flags_every_eval_source(spark):
+    """Every eval item is a perturbation of a known corpus vector, so the
+    source doc must be flagged and must attribute to ITS eval item; and
+    no random pair may sneak over the 0.8 gate with a higher sim than a
+    planted pair's source."""
+    from koby_s_ai_vector_db_spark.queries.vector_q import (
+        DECON_MOD,
+        DECON_OFFSET,
+        DECON_SEED_CAP,
+        DECON_T_Q6,
+    )
+
+    out = {r.vec_id: r for r in _q("emb_decontaminate")(spark, SF_DIRS["t1"]).collect()}
+    assert out, "planted eval items must produce flags"
+    n_eval = (
+        spark.read.parquet(f"{SF_DIRS['t1']}/embeddings.parquet")
+        .filter(
+            (F.col("vec_id") % DECON_MOD == 0)
+            & (F.col("vec_id") < DECON_SEED_CAP)
+        )
+        .count()
+    )
+    flagged_sources = 0
+    for vec_id, r in out.items():
+        assert r.max_sim_q6 >= DECON_T_Q6, r
+        if vec_id % DECON_MOD == 0 and r.eval_id == vec_id + DECON_OFFSET:
+            flagged_sources += 1
+    assert flagged_sources == n_eval, (flagged_sources, n_eval)
+
+
+def test_decontaminate_plan_shape(spark):
+    """Scale shape: the eval side rides a broadcast (no corpus shuffle
+    for the join), the threshold prunes BEFORE the rank window, and the
+    window pre-truncates via WindowGroupLimit."""
+    df = _q("emb_decontaminate")(spark, SF_DIRS["t1"])
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan, plan
+    assert "SortMergeJoin" not in plan
+    assert "WindowGroupLimit" in plan
+    assert "CartesianProduct" not in plan

@@ -15,7 +15,10 @@ The two round-3 scale guards at the OPERATOR level:
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
+import pytest
 
 from koby_s_ai_vector_db_spark.operators.dedup import (
     BUCKET_CAP,
@@ -474,3 +477,38 @@ class TestIncrementalDedup:
         new = spark.createDataFrame([(2, "a b c")], "doc_id long, text string")
         with _pytest.raises(ValueError, match="new_key"):
             incremental_minhash_dedup(base, new, cache_key="k_only")
+
+
+def test_source_matrix_builds_lazily(spark):
+    """ADVICE r08: the PLANT_OFFSET guard used to run an eager
+    src.agg(max).first() at query-construction time, so every plan build
+    (test_plans sweeps, registry enumeration) launched a real Spark job.
+    The guard now lives IN the plan (broadcast scalar attach wrapping the
+    output column); building the DataFrame must schedule zero jobs."""
+    sc = spark.sparkContext
+    _q("dedup_source_matrix")(spark, SF)  # warm-up: parquet footer reads
+    sc.setJobGroup("source_matrix_build_probe", "construction must be action-free")
+    try:
+        df = _q("dedup_source_matrix")(spark, SF)
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup("source_matrix_build_probe")
+    assert not jobs, f"query construction launched Spark jobs: {jobs}"
+
+
+def test_source_matrix_guard_fires_past_plant_offset(spark, tmp_path):
+    """The in-plan guard must still fail loudly when base doc ids cross
+    PLANT_OFFSET (modular attribution would silently misattribute
+    sources). Shift the fixture corpus past the offset and execute."""
+    from koby_s_ai_vector_db_spark.queries.dedup_q import PLANT_OFFSET
+
+    docs = spark.read.parquet(os.path.join(SF, "documents.parquet"))
+    shifted = docs.withColumn(
+        "doc_id", (F.col("doc_id") + F.lit(2 * PLANT_OFFSET)).cast("long")
+    )
+    bad_dir = str(tmp_path / "past_offset")
+    shifted.write.parquet(os.path.join(bad_dir, "documents.parquet"))
+
+    df = _q("dedup_source_matrix")(spark, bad_dir)  # build stays lazy
+    with pytest.raises(Exception, match="PLANT_OFFSET"):
+        df.collect()

@@ -89,19 +89,19 @@ def test_partition_pruning_in_plan(spark, index_path):
 
 
 def test_search_construction_reads_centroids_with_schema(spark, index_path):
-    """Building a search runs five jobs: the bounded probe-id collect (four
+    """Building a search runs only the bounded probe-id collect (four jobs
     under AQE: centroid broadcast, rank-window shuffle, distinct shuffle,
-    result) and ONE schema inference, for `data` (its id and vector types
-    follow the input). The `centroids` sidecar has a fixed schema and is
-    read with it (CENTROIDS_SCHEMA), and IVF-flat never reads the
-    codebook, so neither adds an inference job."""
+    result). The `centroids` sidecar has a fixed schema and is read with
+    it (CENTROIDS_SCHEMA); `data` is read under the schema its
+    `elem_type`/`id_type` record (memoized by the build); IVF-flat never
+    reads the codebook. So no schema-inference job."""
     q2 = _queries(spark, 2)
     jobs = construction_jobs(
         spark,
         lambda: _ivf_flat_search(spark, index_path, q2, n_probe=2),
         "ivf_search_construction",
     )
-    assert jobs == (5, 1), jobs
+    assert jobs == (4, 0), jobs
 
 
 def test_kmeans_ivf_beats_random_labels(spark, tmp_path_factory):

@@ -19,7 +19,12 @@ from koby_s_ai_vector_db_spark.sources.pq_index import (
     ivfpq_index_search,
 )
 from koby_s_ai_vector_db_spark.sources.tables import load_table
-from tests.conftest import SF_DIRS, assert_all_zstd, partitions_read
+from tests.conftest import (
+    SF_DIRS,
+    assert_all_zstd,
+    construction_jobs,
+    partitions_read,
+)
 
 SF_DIR = SF_DIRS["t2"]
 K = 10
@@ -296,6 +301,34 @@ def test_append_reads_element_type_from_the_sidecar(spark, tmp_path):
     shutil.move(old + "/centroids_old", old + "/centroids")
     with pytest.raises(ValueError, match="centroids has no elem_type"):
         append_to_ivfpq_index(corpus, old)
+
+
+def test_search_construction_runs_only_the_probe_collect(spark, ivfpq_path, tmp_path):
+    """Building an IVF+PQ search runs the probe-id collect (four jobs
+    under AQE) and no schema-inference job: `data` is read under the
+    schema the centroids sidecar records, the codebook under
+    CODEBOOK_SCHEMA. In a copy of the index (a file list no memo has
+    seen) one more job reads the sidecar's one row, still no inference.
+    The declared schema reads the values the build wrote."""
+    import shutil
+
+    copy = str(tmp_path / "copy")
+    shutil.copytree(ivfpq_path, copy)
+    qs = _queries(spark)
+    found = {}
+    for name, path, want in (("built", ivfpq_path, (4, 0)), ("copy", copy, (5, 0))):
+        jobs = construction_jobs(
+            spark,
+            lambda: found.__setitem__(name, ivfpq_index_search(
+                spark, path, qs, k=K, n_probe=N_PROBE, shortlist=SHORTLIST
+            )),
+            f"ivfpq_search_construction_{name}",
+        )
+        assert jobs == want, (name, jobs)
+    rows = {
+        name: sorted(tuple(r) for r in df.collect()) for name, df in found.items()
+    }
+    assert rows["built"] and rows["built"] == rows["copy"]
 
 
 def test_learned_kmeans_build_recall(spark, kmeans_path):

@@ -389,3 +389,29 @@ def test_click_attribution_state_bounded_under_hot_user(spark, tmp_path):
         ev.filter(F.col("event_type") == "click"),
     )
     assert _rows(spark.sql(f"SELECT * FROM {name}")) == _rows(batch)
+
+
+def test_watermark_tz_guard_rejects_dst_zones(spark):
+    """ADVICE r07: Europe/London has a ZERO standard offset, so a single
+    winter-instant probe passes it — yet the NTZ cast shifts summer events
+    by an hour. The guard must probe both seasons and reject it."""
+    import datetime
+
+    import pytest
+
+    from koby_s_ai_vector_db_spark.streaming.live import apply_watermark
+
+    df = spark.createDataFrame(
+        [(1, datetime.datetime(2026, 7, 1, 12, 0))], "user_id: long, ts: timestamp_ntz"
+    )
+    tz_key = "spark.sql.session.timeZone"
+    old = spark.conf.get(tz_key)
+    try:
+        spark.conf.set(tz_key, "Europe/London")
+        with pytest.raises(ValueError, match="zero-UTC-offset"):
+            apply_watermark(df)
+        # a year-round zero-offset zone still passes
+        spark.conf.set(tz_key, "Etc/UTC")
+        apply_watermark(df)
+    finally:
+        spark.conf.set(tz_key, old)

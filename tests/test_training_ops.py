@@ -9,6 +9,7 @@ from koby_s_ai_vector_db_spark.operators.packing import pack_sequences
 from koby_s_ai_vector_db_spark.operators.substrings import (
     repeated_substring_spans,
 )
+from tests.conftest import SF_DIRS, _q
 
 
 def _docs(spark, rows):
@@ -389,3 +390,35 @@ def test_pack_bestfit_matches_reference_bfd(spark):
         vol = sum(r.n_tokens for r in got if r.shard == shard)
         n_bins = len({r.bin_id for r in got if r.shard == shard})
         assert n_bins >= math.ceil(vol / seq_len)
+
+
+def test_pack_bestfit_audit_agrees_with_manifest(spark):
+    """The audit arm and the rows-only manifest must describe the same
+    packing: per shard, identical doc counts, token totals, truncation
+    counts, and a bin count that meets the audited lower bound."""
+    audit = {r.shard: r for r in _q("pack_bestfit_audit")(spark, SF_DIRS["t1"]).collect()}
+    manifest = {r.shard: r for r in _q("pack_bestfit")(spark, SF_DIRS["t1"]).collect()}
+    assert set(audit) == set(manifest) and audit
+    for s, a in audit.items():
+        m = manifest[s]
+        assert a.n_docs == m.n_docs, (a, m)
+        assert a.packed_tokens == m.used_tokens, (a, m)
+        assert a.n_truncated == m.n_truncated, (a, m)
+        assert a.lb_bins <= m.n_bins, (a, m)
+        assert a.overfull_bins == 0 and a.halfempty_excess == 0
+        assert a.lb_violation == 0
+
+
+def test_bestfit_halfempty_invariant_is_not_vacuous(spark):
+    """The pinned-zero half-empty invariant must be computed from real
+    bin fills: a deliberately broken packing (every doc its own bin)
+    would report a nonzero halfempty_excess on this corpus."""
+    from koby_s_ai_vector_db_spark.operators.dedup import words_expr
+    from koby_s_ai_vector_db_spark.queries.training_q import BESTFIT_SEQ
+
+    docs = spark.read.parquet(f"{SF_DIRS['t1']}/documents.parquet")
+    toks = docs.select(
+        F.least(F.size(words_expr("text")).cast("long"), F.lit(BESTFIT_SEQ)).alias("fill")
+    ).filter(F.col("fill") > 0)
+    n_half = toks.filter(F.col("fill") * 2 <= BESTFIT_SEQ).count()
+    assert n_half > 1, "fixture must contain >1 short doc for the invariant to bite"
